@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: the changelog projection is pure narrow work (no shuffle,
   * predicate/column pushdown reaches the parquet scan); compaction is one
-  * hash aggregate on (table, rid); the snapshot write partitions by table so
+  * hash exchange on (table, rid), a sort by (table, rid, seq, cdc_action)
+  * and one streaming fold pass; the snapshot write partitions by table so
   * per-table reads (S5) prune partitions.
   */
 object CdcBatch {

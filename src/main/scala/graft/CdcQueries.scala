@@ -55,12 +55,13 @@ object CdcQueries extends QueryRegistry {
   /** The SPLIT changelog — changeLog × broadcast midpoint k — that four
     * gates (evolving sink, TWS sink, CSV quarantine replay, schema
     * evolve) derive identically as their two-version input. Built ONCE
-    * per (session, corpus fingerprint) as a parquet artifact
-    * (TrainedCache.sharedPath: session-scoped, first-build seconds
-    * attributed in the bench's shared_builds, NEVER persisted across
-    * runs) instead of each gate re-scanning + re-materializing the same
-    * frame; each call reads the artifact back on ITS session, so the
-    * scoped-session gates share it too (the path registry keys on the
+    * per (application, corpus fingerprint) as a parquet artifact
+    * (TrainedCache.sharedPath: memoized in the JVM, first-build seconds
+    * attributed in the bench's shared_builds; when the trained store is
+    * enabled, the store serves it across runs, keyed by the corpus
+    * fingerprint and the code digest) instead of each gate re-scanning +
+    * re-materializing the same frame; each call reads the artifact back
+    * on ITS session, so the scoped-session gates share it too (the path registry keys on the
     * shared SparkContext's applicationId). Deterministic projection of
     * events.parquet; every consumer is row-order-insensitive.
     */

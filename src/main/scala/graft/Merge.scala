@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Types._
@@ -26,15 +26,14 @@ import Types._
   * restores it, so every compaction here sorts by seq within the (table, rid)
   * group before folding.
   *
-  * Scale design: `compact` is ONE hash-aggregate shuffle on (table, rid) with
-  * map-side partial aggregation — the per-key point-lookup join the reference
-  * does against Redis (rcache.py:247, one HGETALL round-trip per row) becomes
-  * a single distributed aggregation. Groups are per-row-id and therefore tiny,
-  * so `collect_list` per group is bounded by per-key change cardinality, not
-  * table size; hot keys are still only as large as their change count. The
-  * whole fold is Catalyst expressions (higher-order `aggregate`), so it stays
-  * inside whole-stage codegen — no UDF, no typed deserialization in the hot
-  * path.
+  * Scale design: `compact` is ONE hash exchange on (table, rid), one sort
+  * by (table, rid, seq, cdc_action), and a single streaming pass — the
+  * per-key point-lookup join the reference does against Redis
+  * (rcache.py:247, one HGETALL round-trip per row) becomes one distributed
+  * sorted fold (`org.apache.spark.sql.graft.CompactFold`). The pass holds
+  * only the current key's state and last row, so a hot key costs sort
+  * time, not memory; its transitions are table lookups filled from
+  * `mergeAction`, the only definition of the state machine.
   */
 object Merge {
 
@@ -56,20 +55,6 @@ object Merge {
   /** Fold a seq-ordered action sequence to the net action (None = no row). */
   def foldActions(actions: Seq[String]): Option[String] =
     actions.foldLeft(Option.empty[String])((acc, a) => mergeAction(acc, a))
-
-  /** The same fold as a Catalyst expression over `array<struct<seq,action>>`
-    * — codegen-friendly, used by the declarative `compact`.
-    */
-  private def foldActionsCol(sortedPairs: Column, actionField: String): Column =
-    aggregate(
-      sortedPairs,
-      lit(None_),
-      (acc, x) => {
-        val a = x.getField(actionField)
-        when(acc === None_, a)
-          .when(acc === Insert, when(a === Delete, lit(None_)).otherwise(lit(Insert)))
-          .otherwise(when(a === Insert, lit(Update)).otherwise(a))
-      })
 
   /** Last row per key by a monotone sequence (A3 set semantics: at most one
     * live row per rid, latest wins).
@@ -93,8 +78,11 @@ object Merge {
     * carrying their high-water max(seq) and NULL payload (there is no
     * after-image for a row that no longer exists). The evolving sink's
     * foldBatch persists exactly these rows as its replay guard: emitting
-    * them from THIS aggregate saves the separate anti-join + high-water
+    * them from THIS fold saves the separate anti-join + high-water
     * union + re-join the r12 shape paid per micro-batch.
+    *
+    * Ties on seq fold in action order, as in [[MergeActionAgg]]; the seq
+    * and payload come from the key's last change in (seq, action) order.
     */
   def compact(
       changes: DataFrame,
@@ -106,22 +94,8 @@ object Merge {
     val payload =
       if (payloadCols.nonEmpty) payloadCols
       else changes.columns.toSeq.diff(keyCols :+ seqCol :+ actionCol)
-    val folded = foldActionsCol(
-      sort_array(collect_list(struct(col(seqCol), col(actionCol)))), actionCol)
-    val aggs =
-      folded.as(actionCol) +:
-      max(col(seqCol)).as(seqCol) +:
-      payload.map(c => max_by(col(c), col(seqCol)).as(c))
-    val agg = changes
-      .groupBy(keyCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-    val out =
-      if (!keepNone) agg.filter(col(actionCol) =!= None_)
-      else agg.select((keyCols :+ actionCol :+ seqCol).map(col) ++
-        payload.map(c => when(col(actionCol) === None_, lit(null))
-          .otherwise(col(c)).as(c)): _*)
-    out.select(
-      (keyCols :+ actionCol :+ seqCol).map(col) ++ payload.map(col): _*)
+    org.apache.spark.sql.graft.CompactFold(
+      changes, keyCols, seqCol, actionCol, payload, keepNone)
   }
 }
 
@@ -129,8 +103,8 @@ object Merge {
   * `Aggregator` → `udaf(...)` surface). Partial aggregation is a
   * commutative buffer union; the seq-sorted fold runs once in `finish`,
   * so shuffled/partitioned inputs give the same answer as ordered arrival
-  * — mirrors `Merge.compact`'s collect-then-fold shape. Register with
-  * `GraftExtensions.register(spark)` and use as
+  * — the same (seq, action) order `Merge.compact`'s sorted pass folds in.
+  * Register with `GraftExtensions.register(spark)` and use as
   * `graft_merge(seq, cdc_action)` in SQL; returns 'none' for annihilated
   * keys.
   */

@@ -23,6 +23,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.bloomAggFunction)
     ext.injectFunction(GraftExtensions.mightContainFunction)
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.TopKStrategy)
+    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.CompactFoldStrategy)
     // rank-limit windows → bounded-heap top-k (strategy above plans it)
     ext.injectOptimizerRule(_ => org.apache.spark.sql.graft.WindowToTopK)
   }
@@ -97,14 +98,16 @@ object GraftExtensions {
   }
 
   /** rank-limit windows → bounded-heap top-k: the rule needs its
-    * planning strategy registered alongside it (idempotent adds).
+    * planning strategy registered alongside it; the compact fold's
+    * strategy rides along (idempotent adds).
     */
   private def registerPlanRules(
       spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.graft.{TopKStrategy, WindowToTopK}
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
+    import org.apache.spark.sql.graft.{CompactFoldStrategy, TopKStrategy, WindowToTopK}
+    for (st <- Seq(TopKStrategy, CompactFoldStrategy)
+        if !spark.experimental.extraStrategies.contains(st))
       spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+        spark.experimental.extraStrategies :+ st
     if (!spark.experimental.extraOptimizations.contains(WindowToTopK))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ WindowToTopK

@@ -1247,7 +1247,7 @@ object CdcStream {
         batch.join(hw, keys, "left")
           .filter(col("_hw").isNull || col("seq") > col("_hw")).drop("_hw")
     }
-    // keepNone: the SAME aggregate that folds the live rows emits each
+    // keepNone: the SAME fold pass that folds the live rows emits each
     // annihilated key as a `none` row carrying its high-water max(seq) —
     // the tombstone the sink persists. (The r12 shape re-derived those
     // rows per batch via a touched-keys anti-join + a stored∪batch
@@ -1469,7 +1469,7 @@ object CdcStream {
     val spark = batchDf.sparkSession
     // preDeduped: foldBatch's compact already emits ≤ 1 row per key, so
     // the latest-per-key window (a full sort shuffle per micro-batch)
-    // would re-derive what the aggregate guarantees
+    // would re-derive what the compact fold guarantees
     val deduped =
       if (preDeduped) batchDf
       else Merge.latestPerKey(batchDf, Seq("table", "rid"), "seq")

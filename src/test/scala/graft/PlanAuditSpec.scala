@@ -144,13 +144,30 @@ class PlanAuditSpec extends SparkSuite {
       s"plan grows with dims: ${p8.length} -> ${p128.length}")
   }
 
+  test("cdc_compact is one exchange into the sorted streaming fold, " +
+    "no object/sort aggregate, no window") {
+    val plan = SparkEntry.queries("cdc_compact")(spark, sf0001)
+      .queryExecution.executedPlan.toString
+    // the net change per key is one (table, rid) hash exchange, a sort by
+    // (table, rid, seq, cdc_action), and one pass of the fold operator —
+    // a collect_list/max_by aggregate would plan ObjectHashAggregate and
+    // fall back to SortAggregate-style sorting past 128 keys per task
+    val exchanges = plan.linesIterator
+      .count(l => l.contains("Exchange hashpartitioning"))
+    assert(exchanges === 1, s"expected 1 exchange, plan:\n${plan.take(3000)}")
+    assert(plan.contains("CompactFold"), plan.take(3000))
+    assert(!plan.contains("ObjectHashAggregate"), plan.take(3000))
+    assert(!plan.contains("SortAggregate"), plan.take(3000))
+    assert(!plan.contains("Window"), plan.take(3000))
+  }
+
   test("additive evolution is plan surgery: the evolved compact keeps " +
     "cdc_compact's single exchange") {
     val plan = SparkEntry.queries("cdc_schema_evolve")(spark, sf0001)
       .queryExecution.executedPlan.toString
     // additiveUnion is unionByName — missing columns become null literals
     // inside the projection, so the widened compact must still be ONE
-    // (table, rid) hash-aggregate shuffle, no sort, no extra data motion
+    // (table, rid) hash shuffle into the sorted fold, no extra data motion
     val exchanges = plan.linesIterator
       .count(l => l.contains("Exchange hashpartitioning"))
     assert(exchanges === 1, s"expected 1 exchange, plan:\n${plan.take(3000)}")
