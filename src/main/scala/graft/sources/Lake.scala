@@ -347,13 +347,11 @@ object Lake {
     // per-partition accounting calls manifest(s"$root/v=$next") after
     val (toWrite, expectObs, quarantine) =
       expectationGate(df, expect, onViolation)
-    // in-write digest rides the write job's metrics (zero extra jobs);
-    // zOrder publishes keep the read-back path — withZ's quantile pass
-    // is a second action over the observed plan, which would race the
-    // observation
-    val inw = if (digest && zOrderCols.isEmpty)
-      inWriteDigest(toWrite, partitionCols) else None
-    writeLayout(inw.map(_._2).getOrElse(toWrite), s"$rootDir/v=$next",
+    // the in-write digest and the ledger's row count ride the write
+    // job's metrics (zero extra jobs)
+    val obs = new WriteObs(toWrite, partitionCols, digest,
+      zOrder = zOrderCols.nonEmpty)
+    writeLayout(obs.frame, s"$rootDir/v=$next",
       partitionCols, sortCols,
       maxRecordsPerFile, zOrderCols, bloomFilterCols)
     for (o <- expectObs) enforceExpectations(fs,
@@ -414,8 +412,7 @@ object Lake {
       new org.apache.hadoop.fs.Path(root, s"v=$next"), df.schema)
     if (digest) writeDigest(spark, fs, root,
       new org.apache.hadoop.fs.Path(root, s"v=$next"), Map.empty,
-      precomputedOwn = inw.map { case (obs, _, fp) =>
-        (fp, obsDigestEntries(obs)) })
+      precomputedOwn = obs.ownDigest)
     // the caller's provenance marker (e.g. [[publishStream]]'s batch id)
     // lands INSIDE the generation before the high-water flip, so a
     // generation counted published always carries it — the replay-dedup
@@ -428,7 +425,8 @@ object Lake {
       finally os.close()
     }
     // size ledger inside the generation before it counts as published
-    writeSizeFile(spark, fs, new org.apache.hadoop.fs.Path(root, s"v=$next"))
+    writeSizeFile(spark, fs, new org.apache.hadoop.fs.Path(root, s"v=$next"),
+      obs.rows)
     // high-water first: from here v=next is complete-and-published even
     // if the _CURRENT flip below never runs (it just never became
     // current — the next publish allocates above it)
@@ -499,9 +497,9 @@ object Lake {
     // quarantined is not rewritten and keeps inheriting its old content
     val (toWrite, expectObs, quarantine) =
       expectationGate(df, expect, onViolation)
-    // in-write digest rides the write job (see publishVersion)
-    val inw = if (digest) inWriteDigest(toWrite, partitionCols) else None
-    writeLayout(inw.map(_._2).getOrElse(toWrite), s"$rootDir/v=$next",
+    // in-write digest and row count ride the write job (see publishVersion)
+    val obs = new WriteObs(toWrite, partitionCols, digest, zOrder = false)
+    writeLayout(obs.frame, s"$rootDir/v=$next",
       partitionCols, sortCols, maxRecordsPerFile)
     for (o <- expectObs) enforceExpectations(fs, nextPath, o)
     for (q <- quarantine) {
@@ -528,8 +526,7 @@ object Lake {
     val inherited = baseMap -- changed -- replaced
     writeRefs(fs, nextPath, inherited)
     if (digest) writeDigest(spark, fs, root, nextPath, inherited,
-      precomputedOwn = inw.map { case (obs, _, fp) =>
-        (fp, obsDigestEntries(obs)) })
+      precomputedOwn = obs.ownDigest)
     // the delta's RESOLVED schema = its own columns plus what it still
     // inherits (the policy check proved compatibility); recordable only
     // when the old schema was consulted — under policy "any" the
@@ -550,7 +547,8 @@ object Lake {
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally os.close()
     }
-    writeSizeFile(spark, fs, nextPath) // size ledger — see publishVersion
+    // size ledger — see publishVersion
+    writeSizeFile(spark, fs, nextPath, obs.rows)
     flipPointer(fs, root, HighPointer, next)
     flipPointer(fs, root, CurrentPointer, next)
     pruneRetained(fs, root, next, keep)
@@ -585,6 +583,12 @@ object Lake {
     * `replaced` discipline of [[publishDelta]]), not inherited back.
     * Additive schema drift rides the delta reader: upserts may carry
     * new columns; inherited/surviving rows read them as NULL.
+    *
+    * Cost model per merge: the netted changelog is materialized once
+    * and its partition tuples collected; the base read is driver
+    * metadata (its `_SCHEMA` is the reader schema — no inference job);
+    * the write job lands the touched partitions and observes their row
+    * count (and digest) for the `_SIZE` ledger — no footer reads.
     *
     * Partition-stability contract: a change row's partition value names
     * the partition the key LIVES in. With the default
@@ -1624,10 +1628,13 @@ object Lake {
     * columns (everything except `exclude` — partition cols on the
     * in-write path, the `_rel` tag on the read-back path): ONE shared
     * construction so the two digest paths are bit-identical by
-    * construction. Returns (fp, rowHash).
+    * construction. Types come from the normalized schema (char/varchar
+    * as string), so the same rows digest alike whether the publishing
+    * session types a column varchar or string. Returns (fp, rowHash).
     */
-  private def digestHash(schema: org.apache.spark.sql.types.StructType,
+  private def digestHash(written: org.apache.spark.sql.types.StructType,
       exclude: Set[String]): (String, Column) = {
+    val schema = normalizedSchema(written)
     val dataCols = schema.fieldNames.filterNot(exclude).sorted.toSeq
     val fp = DigestAlgVersion + dataCols.map(c =>
       s"$c:${schema(c).dataType.simpleString}").mkString(",")
@@ -1716,14 +1723,45 @@ object Lake {
     */
   private def obsDigestEntries(obs: org.apache.spark.sql.Observation)
       : Seq[(String, (Long, Long))] =
-    obs.get("digest") match {
-      case m: scala.collection.Map[_, _] =>
+    obs.get.get("digest") match {
+      case Some(m: scala.collection.Map[_, _]) =>
         m.toSeq.map { case (k, v) =>
           val r = v.asInstanceOf[org.apache.spark.sql.Row]
           (k.toString, (r.getLong(0), r.getLong(1)))
         }.sortBy(_._1)
       case _ => Nil
     }
+
+  /** What a publish observes on its own write job: the in-write digest
+    * ([[inWriteDigest]]) and the written row count for the `_SIZE`
+    * ledger — the digest map's `n` summed when there is a digest, else
+    * a count observation — so the ledger needs no footer reads. A
+    * zOrder publish observes neither: withZ's quantile pass is a second
+    * action over the observed plan, which would race the observation
+    * (its digest takes the read-back path, its ledger the footers).
+    * Write `frame`; read `ownDigest`/`rows` only after the write.
+    */
+  private final class WriteObs(toWrite: DataFrame,
+      partitionCols: Seq[String], digest: Boolean, zOrder: Boolean) {
+    private val inw =
+      if (digest && !zOrder) inWriteDigest(toWrite, partitionCols) else None
+    private val counter = if (inw.isEmpty && !zOrder) Some(
+      new org.apache.spark.sql.Observation(
+        "graft_rows_" + java.util.UUID.randomUUID())) else None
+    val frame: DataFrame = inw.map(_._2)
+      .orElse(counter.map(o => toWrite.observe(o, count(lit(1)).as("n"))))
+      .getOrElse(toWrite)
+    lazy val ownDigest: Option[(String, Seq[(String, (Long, Long))])] =
+      inw.map { case (o, _, fp) => (fp, obsDigestEntries(o)) }
+    // no metric at all = the optimizer removed the observed subtree (an
+    // empty input); unknown, so the ledger falls back to the footers
+    lazy val rows: Option[Long] = inw match {
+      case Some((o, _, _)) =>
+        o.get.get("digest").map(_ => ownDigest.get._2.map(_._2._1).sum)
+      case None => counter.flatMap(_.get.get("n"))
+        .map(_.asInstanceOf[Number].longValue())
+    }
+  }
 
   private def writeDigest(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
@@ -1882,6 +1920,78 @@ object Lake {
         .asInstanceOf[org.apache.spark.sql.types.StructType])
     } catch { case _: java.io.FileNotFoundException => None }
 
+  /** `schema` as parquet reports it back: every field nullable (file
+    * sources read everything nullable) and char/varchar as string (the
+    * file stores a plain string). Shared by the digest fingerprint and
+    * the recorded-schema reader so both paths name one type per column.
+    */
+  private def normalizedSchema(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    def norm(dt: DataType): DataType = dt match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = norm(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(norm(e), containsNull = true)
+      case MapType(k, v, _) => MapType(norm(k), norm(v), valueContainsNull = true)
+      case _: CharType | _: VarcharType => StringType
+      case other => other
+    }
+    norm(schema).asInstanceOf[StructType]
+  }
+
+  /** A parquet reader for files physically owned by generation
+    * `genPath`, with that generation's recorded `_SCHEMA` as the reader
+    * schema — Spark then runs no schema-inference job (a one-task
+    * footer job per read). Partition columns (`partNames`) are left
+    * out so their types stay path-inferred, exactly as an inferring
+    * read types them (a long published as `bucket=5` reads back int).
+    * An owner's `_SCHEMA` is its files' own column list under the
+    * additive/enforce policies (a publish carries every old column), so
+    * each read — and any union of owners — has the inferred field
+    * order and types. Without a `_SCHEMA` (pre-`_SCHEMA` generations,
+    * deltas published under policy "any") the reader infers — as it
+    * does for char/varchar columns in a session that preserves those
+    * types: inference reads them back as char/varchar there, and a
+    * reader schema cannot carry them.
+    */
+  private def ownerReader(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, genPath: org.apache.hadoop.fs.Path,
+      partNames: Set[String]): org.apache.spark.sql.DataFrameReader = {
+    def keepsCharVarchar(s: org.apache.spark.sql.types.StructType) =
+      org.apache.spark.sql.catalyst.util.CharVarcharUtils.hasCharVarchar(s) &&
+        spark.conf.get("spark.sql.preserveCharVarcharTypeInfo", "false")
+          .toBoolean
+    readSchemaFile(fs, genPath).filterNot(keepsCharVarchar) match {
+      case Some(s) => spark.read.schema(org.apache.spark.sql.types.StructType(
+        normalizedSchema(s).fields.filterNot(f => partNames(f.name))))
+      case None => spark.read
+    }
+  }
+
+  /** The partition column names a relative leaf path (`a=1/b=2`) carries. */
+  private def partNamesOf(rels: Iterable[String]): Set[String] =
+    rels.headOption.toSet[String].flatMap(
+      _.split('/').filter(_.contains('=')).map(_.takeWhile(_ != '=')))
+
+  /** The partition column names of a generation's own layout: the
+    * `name=` dirs along its first partition path (one listing per
+    * partition level, not a walk of every dir).
+    */
+  private def layoutPartNames(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Set[String] = {
+    @scala.annotation.tailrec
+    def down(d: org.apache.hadoop.fs.Path, acc: Set[String]): Set[String] =
+      fs.listStatus(d).find { st =>
+        val n = st.getPath.getName
+        st.isDirectory && graft.GenSwap.isDataName(n) && n.contains('=')
+      } match {
+        case Some(st) =>
+          down(st.getPath, acc + st.getPath.getName.takeWhile(_ != '='))
+        case None => acc
+      }
+    down(dir, Set.empty)
+  }
+
   private val SizeFile = "_SIZE"
 
   /** A generation's OWN physical data files (underscore/dot metadata and
@@ -1934,19 +2044,22 @@ object Lake {
     * accounting was O(generations × files) listings plus one Spark
     * count() job per generation per history() call (r17 verdict #2); the
     * ledger makes both O(generations) tiny reads. Generations without a
-    * ledger (pre-upgrade) fall back to the walk. The row count comes
-    * from driver-side footer reads ([[footerRowCount]]) — the stamp adds
-    * zero Spark jobs to the publish critical section; a footer a parquet
-    * reader cannot open falls back to one footer-only count() job. */
+    * ledger (pre-upgrade) fall back to the walk. The row count is the
+    * publish write's own observation (`observedRows`, [[WriteObs]]) when
+    * there is one, else driver-side footer reads ([[footerRowCount]]) —
+    * either way the stamp adds zero Spark jobs to the publish critical
+    * section; a footer a parquet reader cannot open falls back to one
+    * footer-only count() job. */
   private def writeSizeFile(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
-      genPath: org.apache.hadoop.fs.Path): Unit = {
+      genPath: org.apache.hadoop.fs.Path,
+      observedRows: Option[Long] = None): Unit = {
     val files = physicalFiles(fs, genPath)
     val nf = files.size.toLong
     val nb = files.map(_.getLen).sum
     val nRows =
       if (nf == 0) 0L
-      else footerRowCount(fs, files).getOrElse(
+      else observedRows.orElse(footerRowCount(fs, files)).getOrElse(
         spark.read.parquet(genPath.toString).count())
     writeSizeEntries(fs, genPath, nf, nb, nRows)
   }
@@ -1978,6 +2091,13 @@ object Lake {
     * `version` (time travel — reproduce exactly what a past training run
     * consumed, within the retention horizon). Fails loudly on a version
     * that was never published or has been pruned.
+    *
+    * Cost model: driver metadata only until the caller's action — the
+    * pointer/`_REFS` reads, a listing down to the first partition dir
+    * (full generations) or of the generation's own leaves (deltas), and
+    * one `_SCHEMA` read per physical owner, which is the reader schema
+    * ([[ownerReader]]), so no schema-inference job runs (one per owner
+    * branch before; pre-`_SCHEMA` generations still infer).
     */
   def readVersion(spark: SparkSession, rootDir: String,
       version: Option[Long] = None): DataFrame = {
@@ -1999,7 +2119,9 @@ object Lake {
       s"Lake: version $v of $rootDir was never published or has been " +
         s"pruned (current=${currentVersion(spark, rootDir).orNull})")
     val refs = readRefs(fs, dir)
-    if (refs.isEmpty) spark.read.parquet(dir.toString)
+    if (refs.isEmpty)
+      ownerReader(spark, fs, dir, layoutPartNames(fs, dir))
+        .parquet(dir.toString)
     else {
       // delta generation: one pruning-intact parquet branch per physical
       // owner (its explicit leaf dirs + basePath recover the partition
@@ -2019,7 +2141,8 @@ object Lake {
           s"Lake: version $v of $rootDir inherits partitions from " +
             s"v=$o, which has been pruned — v=$v is outside the " +
             "retention horizon")
-        spark.read.option("basePath", base.toString)
+        ownerReader(spark, fs, base, partNamesOf(rels))
+          .option("basePath", base.toString)
           .parquet(rels.sorted.map(r =>
             new org.apache.hadoop.fs.Path(base, r).toString): _*)
       }.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -2061,6 +2184,9 @@ object Lake {
     * partitions twice (old + new side of the hash), document bodies
     * reduce to md5 map-side before the one id-keyed shuffle
     * ([[snapshotDiff]]'s shape).
+    *
+    * Side reads use each owner's `_SCHEMA` as the reader schema, so a
+    * step runs no schema-inference job.
     *
     * Every generation in `[fromVersion, toVersion]` must be published
     * and within the retention horizon — a pruned step fails loudly in
@@ -2133,7 +2259,7 @@ object Lake {
       digestMemo.getOrElseUpdate(v,
         readDigest(fs, new org.apache.hadoop.fs.Path(root, s"v=$v")))
     def step(v: Long): DataFrame =
-      stepChanges(spark, root, rootDir, v - 1, v, idCol, contentCol,
+      stepChanges(spark, fs, root, rootDir, v - 1, v, idCol, contentCol,
           resolvedOf, digestOf)
         .withColumn("v", lit(v))
         .select(col("v"), col(idCol), col("change"),
@@ -2189,6 +2315,7 @@ object Lake {
     * dirs whose physical owner differs between the two resolved maps.
     */
   private def stepChanges(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
       rootDir: String, a: Long, b: Long,
       idCol: String, contentCol: String,
@@ -2222,7 +2349,8 @@ object Lake {
           if (mine.isEmpty) None
           else Some(mine.groupBy(_._2).toSeq.map { case (owner, rels) =>
             val base = new org.apache.hadoop.fs.Path(root, s"v=$owner")
-            spark.read.option("basePath", base.toString)
+            ownerReader(spark, fs, base, partNamesOf(rels.map(_._1)))
+              .option("basePath", base.toString)
               .parquet(rels.map(r =>
                 new org.apache.hadoop.fs.Path(base, r._1).toString): _*)
           }.reduce(_.unionByName(_, allowMissingColumns = true))

@@ -295,6 +295,63 @@ class LakeDigestSpec extends SparkSuite {
     } finally { cleanup(rootA); cleanup(rootB) }
   }
 
+  test("varchar fingerprints as string: a session that keeps varchar " +
+      "types and one that reads them as string publish identical digests " +
+      "through either digest path, so an identical republish skips; " +
+      "reads and merges keep the session's own varchar typing") {
+    def digestBody(root: String, v: Long): String = {
+      val fs = new Path(root).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      val in = fs.open(new Path(root, s"v=$v/_DIGEST"))
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    }
+    // on: DataFrame schemas and parquet inference keep varchar(20);
+    // off (the default): both see string
+    val key = "spark.sql.preserveCharVarcharTypeInfo"
+    val prior = spark.conf.getOption(key)
+    def corpus() = (0 until 40).map(j => (s"d-$j", s"g${j % 2}", s"t $j"))
+      .toDF("id", "k", "text")
+      .withColumn("text", col("text").cast("varchar(20)"))
+    // policy "any": the schema policy itself calls varchar -> string a
+    // type change
+    def publish(root: String, inWrite: Boolean): Long = {
+      Lake.inWriteDigestEnabled = inWrite
+      try Lake.publishVersion(corpus(), root, Seq("k"), Seq("id"), 1000L,
+        keep = 10, schemaPolicy = "any", digest = true)
+      finally Lake.inWriteDigestEnabled = true
+    }
+    val rootA = tmp(); val rootB = tmp()
+    try {
+      spark.conf.set(key, "true")
+      assert(corpus().schema("text").dataType ===
+        org.apache.spark.sql.types.VarcharType(20))
+      publish(rootA, inWrite = true) // v0
+      publish(rootB, inWrite = false) // read-back path, varchar inferred
+      spark.conf.set(key, "false")
+      assert(corpus().schema("text").dataType ===
+        org.apache.spark.sql.types.StringType)
+      publish(rootA, inWrite = true) // v1: the same rows, typed string
+      assert(digestBody(rootA, 1L) === digestBody(rootA, 0L))
+      assert(digestBody(rootB, 0L) === digestBody(rootA, 0L))
+      assert(feedRows(rootA, 0L, 1L).isEmpty)
+      assert(Lake.readVersion(spark, rootA, Some(0L)).schema("text")
+        .dataType === org.apache.spark.sql.types.StringType)
+      // a varchar-keeping session reads varchar back and merges varchar
+      // upserts against the recorded varchar schema
+      spark.conf.set(key, "true")
+      assert(Lake.readVersion(spark, rootB).schema("text").dataType ===
+        org.apache.spark.sql.types.VarcharType(20))
+      Lake.mergeDelta(corpus().filter(col("k") === "g0")
+          .withColumn("op", lit("upsert")), rootB, Seq("id"), Seq("k"),
+        Seq("id"), 1000L, keep = 10)
+      assert(feedRows(rootB, 0L, 1L).isEmpty)
+    } finally {
+      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      cleanup(rootA); cleanup(rootB)
+    }
+  }
+
   test("additive schema drift disables cross-generation skipping " +
       "conservatively — the feed stays correct") {
     val root = tmp()

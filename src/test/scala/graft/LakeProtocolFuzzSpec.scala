@@ -2,19 +2,21 @@ package graft
 
 import graft.sources.Lake
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** Model-based fuzz of the composed versioned-lake protocol: a seeded
-  * random sequence of publish-full / publish-delta / merge / rollback /
-  * vacuum ops runs against both the real lake and an in-memory model
-  * (per-version content, physical-owner maps, pointer, high-water,
-  * on-disk set). After EVERY op the suite checks: the current read, a
-  * pinned read of a random readable version, and the change feed over a
-  * random readable range all equal the model; every vacuum's decision
-  * ledger equals the model's protection rule. The per-op specs pin each
-  * operator alone; this pins their COMPOSITION — rollback-then-publish
-  * numbering, delta chains over merged generations, vacuum under a
-  * rolled-back pointer, feeds spanning mixed full/delta/merge steps —
-  * where protocol bugs actually live.
+  * random sequence of publish-full / publish-delta / merge / drop-mode
+  * merge / compact / rollback / vacuum ops runs against both the real
+  * lake and an in-memory model (per-version content, physical-owner
+  * maps, pointer, high-water, on-disk set). After EVERY op the suite
+  * checks: the current read, a pinned read of a random readable
+  * version, and the change feed over a random readable range all equal
+  * the model; every vacuum's decision ledger equals the model's
+  * protection rule. The per-op specs pin each operator alone; this pins
+  * their COMPOSITION — rollback-then-publish numbering, delta chains
+  * over merged generations, vacuum under a rolled-back pointer, feeds
+  * spanning mixed full/delta/merge steps — where protocol bugs actually
+  * live.
   *
   * Readability note: a donor delta retained by vacuum ONLY as a
   * referenced physical holder may legitimately be un-pinnable (its own
@@ -81,8 +83,52 @@ class LakeProtocolFuzzSpec extends SparkSuite {
       // bootstrap: the base every delta/merge path needs
       fullPublish((0 until 30).map(_ => freshId() -> randText()).toMap)
 
+      // merge: random upserts/deletes/inserts. Drop mode quarantines
+      // every row of a TOUCHED partition (survivors too) whose text ends
+      // in 7 — rows the changelog never named leave the generation
+      def mergeOp(drop: Boolean): Unit = {
+        val cur = contents(current)
+        val ids = cur.keys.toVector
+        val ups = (0 until rng.nextInt(5))
+          .map(_ => ids(rng.nextInt(ids.size))).distinct
+          .map(id => (id, randText(), "upsert"))
+        val dels = (0 until rng.nextInt(3))
+          .map(_ => ids(rng.nextInt(ids.size))).distinct
+          .filterNot(id => ups.exists(_._1 == id))
+          .map(id => (id, null: String, "delete"))
+        val ins = (0 until rng.nextInt(3))
+          .map(_ => (freshId(), randText(), "upsert"))
+        val ch = ups ++ dels ++ ins
+        if (ch.nonEmpty) {
+          val df = ch.map { case (id, t, op) => (id, partOf(id), t, op) }
+            .toDF("id", "k", "text", "op")
+          val v = Lake.mergeDelta(df, root, Seq("id"), Seq("k"),
+            Seq("id"), 1000000L, keep = 100, digest = rng.nextBoolean(),
+            expect = if (drop) Seq("no7" -> !col("text").endsWith("7"))
+              else Nil,
+            onViolation = if (drop) "drop" else "fail")
+          assert(v === high + 1)
+          val touched = ch.map(t => partOf(t._1)).toSet
+          contents(v) = (cur -- dels.map(_._1) ++
+            (ups ++ ins).map(t => t._1 -> t._2)).filterNot { case (id, t) =>
+              drop && touched(partOf(id)) && t.endsWith("7")
+            }
+          // a touched partition owns its dir in v — unless the merge
+          // emptied it, in which case the dir VANISHES (the replaced
+          // discipline) and the owner map must drop it
+          val emptied = touched.filter(p =>
+            !contents(v).keysIterator.exists(partOf(_) == p))
+          owners(v) =
+            owners(current) ++ touched.map(_ -> v) -- emptied
+          onDisk += v; high = v; current = v
+        }
+      }
+
+      val ran = scala.collection.mutable.Set.empty[Int]
       for (step <- 1 to 30) {
-        rng.nextInt(6) match {
+        val op = rng.nextInt(8)
+        ran += op
+        op match {
           case 0 => // full publish: mutate ~1/3 of keys, add a few
             val cur = contents(current)
             val next = cur.map { case (id, t) =>
@@ -107,37 +153,7 @@ class LakeProtocolFuzzSpec extends SparkSuite {
               onDisk += v; high = v; current = v
             }
 
-          case 3 => // merge: random upserts/deletes/inserts
-            val cur = contents(current)
-            val ids = cur.keys.toVector
-            val ups = (0 until rng.nextInt(5))
-              .map(_ => ids(rng.nextInt(ids.size))).distinct
-              .map(id => (id, randText(), "upsert"))
-            val dels = (0 until rng.nextInt(3))
-              .map(_ => ids(rng.nextInt(ids.size))).distinct
-              .filterNot(id => ups.exists(_._1 == id))
-              .map(id => (id, null: String, "delete"))
-            val ins = (0 until rng.nextInt(3))
-              .map(_ => (freshId(), randText(), "upsert"))
-            val ch = ups ++ dels ++ ins
-            if (ch.nonEmpty) {
-              val df = ch.map { case (id, t, op) => (id, partOf(id), t, op) }
-                .toDF("id", "k", "text", "op")
-              val v = Lake.mergeDelta(df, root, Seq("id"), Seq("k"),
-                Seq("id"), 1000000L, keep = 100, digest = rng.nextBoolean())
-              assert(v === high + 1)
-              contents(v) = cur -- dels.map(_._1) ++
-                (ups ++ ins).map(t => t._1 -> t._2)
-              // a touched partition owns its dir in v — unless the merge
-              // emptied it, in which case the dir VANISHES (the replaced
-              // discipline) and the owner map must drop it
-              val touched = ch.map(t => partOf(t._1)).toSet
-              val emptied = touched.filter(p =>
-                !contents(v).keysIterator.exists(partOf(_) == p))
-              owners(v) =
-                owners(current) ++ touched.map(_ -> v) -- emptied
-              onDisk += v; high = v; current = v
-            }
+          case 3 => mergeOp(drop = false)
 
           case 4 => // rollback to a random on-disk version
             val target = onDisk.toVector(rng.nextInt(onDisk.size))
@@ -163,6 +179,15 @@ class LakeProtocolFuzzSpec extends SparkSuite {
                 s"step $step: vacuum(keep=$keep) disagreed on v=$v " +
                   s"(cur=$current high=$high protected=$protected_)")
             onDisk = protected_
+
+          case 6 => // compact the current generation in place: files
+            // rewritten, content and partition owners unchanged
+            Lake.guarded(spark, root) {
+              Lake.compact(spark, s"$root/v=$current", Seq("k"), Seq("id"),
+                targetBytes = 256L).collect()
+            }: Unit
+
+          case 7 => mergeOp(drop = true)
         }
 
         // ---- invariants after every op ----
@@ -195,6 +220,7 @@ class LakeProtocolFuzzSpec extends SparkSuite {
             s"step $step: feed $from..$to != model")
         }
       }
+      assert(ran === (0 until 8).toSet, "the seed must exercise every op")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root).getParentFile)
   }
