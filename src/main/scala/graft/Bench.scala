@@ -342,13 +342,6 @@ object Bench {
       .filter(_._2 >= 0.05).sortBy { case (_, v) => -v }
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    // artifacts served from the cross-JVM trained store this run (name →
-    // load seconds; ~0 for path hand-offs): a warm-store bench names what
-    // it did NOT build, so shared_builds shrinking is self-explaining
-    val prebuiltJson = graft.operators.TrainedCache.reuseTimes.toSeq
-      .sortBy { case (_, v) => -v }
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
     // bounded by outliers' cap=8; present even when empty so the artifact is
     // self-describing ("no outliers" vs "feature absent")
     val recheckedJson = rechecked
@@ -359,7 +352,7 @@ object Bench {
         if (rest > 0) entries :+ ("_rest" -> rest) else entries
       val qs = withRest.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calib":${fmt(calib)},"failed":$failedJson,"rechecked":$recheckedJson,"shared_builds":$sharedBuildsJson,"prebuilt":$prebuiltJson,"passes":$passJson,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calib":${fmt(calib)},"failed":$failedJson,"rechecked":$recheckedJson,"shared_builds":$sharedBuildsJson,"passes":$passJson,"queries":$qs,"sf":"$sfDir"}"""
     }
     var keep = sorted.length
     var out = line(sorted, 0.0)

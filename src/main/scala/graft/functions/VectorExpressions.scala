@@ -392,8 +392,9 @@ case class Top2Cells(first: Expression, second: Expression, third: Expression)
       else if (s > s2) { s2 = s; c2 = cids.getLong(i) }
       i += 1
     }
-    val out = if (c1 < 0L) Array.empty[Long]
-      else if (c2 < 0L) Array(c1) else Array(c1, c2)
+    // "no winner yet" is a -∞ score, never a cid sign: any cid may win
+    val out = if (s1 == Double.NegativeInfinity) Array.empty[Long]
+      else if (s2 == Double.NegativeInfinity) Array(c1) else Array(c1, c2)
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
   }
 
@@ -432,8 +433,9 @@ case class Top2Cells(first: Expression, second: Expression, third: Expression)
          |  if ($s > $s1) { $s2 = $s1; $c2 = $c1; $s1 = $s; $c1 = $b.getLong($i); }
          |  else if ($s > $s2) { $s2 = $s; $c2 = $b.getLong($i); }
          |}
-         |long[] $out = $c1 < 0L ? new long[0]
-         |  : ($c2 < 0L ? new long[]{$c1} : new long[]{$c1, $c2});
+         |long[] $out = $s1 == Double.NEGATIVE_INFINITY ? new long[0]
+         |  : ($s2 == Double.NEGATIVE_INFINITY ? new long[]{$c1}
+         |    : new long[]{$c1, $c2});
          |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
        """.stripMargin
     })

@@ -45,12 +45,11 @@ object AnalyticsQueries extends QueryRegistry {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(k.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
       val (ot, lt) = (s"graft_bkt_orders_$tag", s"graft_bkt_lineitem_$tag")
-      // the bucketed FILES are store-served (deterministic layout of the
-      // fact corpus; the bucket count is compile-time code, covered by
-      // the store's code digest); saveAsTable only exists to WRITE them,
-      // so the store build goes through throwaway catalog names. Each
-      // session then re-registers its own tables over the files —
-      // straight over the store copy, since consumers only JOIN these.
+      // the bucketed FILES are session-shared (deterministic layout of
+      // the fact corpus); saveAsTable only exists to WRITE them, so the
+      // shared build goes through throwaway catalog names. Each session
+      // then registers its own tables straight over the shared files,
+      // since consumers only JOIN these.
       val stored = TrainedCache.sharedPath(s, "bucketed_facts",
         Seq(s"$dir/orders.parquet", s"$dir/lineitem.parquet")) { tmp =>
         val (bo, bl) = (s"${ot}_sb", s"${lt}_sb")

@@ -86,14 +86,13 @@ object LshIndex {
     spark.sql(s"DROP TABLE IF EXISTS ${tombstoneTable(table)}")
   }
 
-  /** [[build]] with the banded FILES served from the cross-JVM trained
-    * store when `storeFixtures` names the corpus files: the store keeps
-    * one immutable settled-index snapshot per (corpus fingerprint, code
-    * digest) — the settled split rule and every hyperparameter are
-    * compile-time code, which the digest covers — and each session
-    * COPIES it to its own `path` before mounting, because [[ingest]]
-    * appends in place and the store artifact must stay read-only. With
-    * no fixtures (or a disabled store) this is exactly a fresh [[build]].
+  /** [[build]] with the banded FILES shared through
+    * [[TrainedCache.sharedPath]] when `storeFixtures` names the corpus
+    * files: one immutable settled-index snapshot per (application,
+    * corpus fingerprint), which each caller COPIES to its own `path`
+    * before mounting, because [[ingest]] appends in place and the shared
+    * artifact must stay read-only. With no fixtures this is exactly a
+    * fresh [[build]].
     */
   def buildOrServe(
       settled: DataFrame, idCol: String, textCol: String,

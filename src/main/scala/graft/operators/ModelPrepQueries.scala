@@ -126,9 +126,8 @@ object ModelPrepQueries extends QueryRegistry {
     * string) round-trips exactly, so consumers keep unchanged oracles.
     */
   private def sharedBpeSeg(s: SparkSession, dir: String): DataFrame = {
-    // store-served: the trained segmentation is deterministic files
-    // derived from the documents corpus (bpeMerges is a compile-time
-    // constant, so the store's code digest re-keys a merge-count change)
+    // session-shared: the trained segmentation is deterministic files
+    // derived from the documents corpus
     val path = TrainedCache.sharedPath(s, "bpe_segmentation",
       Seq(s"$dir/documents.parquet")) { tmp =>
       val p = s"$tmp/seg"

@@ -75,9 +75,8 @@ object SimilarityQueries extends QueryRegistry {
     * sharing bitwise-invisible to the unchanged oracle.
     */
   private def sharedKnnEdges(s: SparkSession, dir: String): DataFrame = {
-    // store-served like the codebooks (k=3 and the cell geometry are
-    // compile-time constants, so the store's code digest re-keys any
-    // hyperparameter change); consumers treat the artifact read-only
+    // session-shared like the codebooks; consumers treat the artifact
+    // read-only
     val path = TrainedCache.sharedPath(s, "knn_edges",
       Seq(s"$dir/embeddings.parquet")) { tmp =>
       val p = s"$tmp/edges"
@@ -101,7 +100,7 @@ object SimilarityQueries extends QueryRegistry {
     }
 
   private def sharedVecIndex(s: SparkSession, dir: String): String =
-    // store-served: the index is pure deterministic files (centroids,
+    // session-shared: the index is pure deterministic files (centroids,
     // codebooks, codes, meta) derived from the embeddings corpus — the
     // production shape where an indexing batch job publishes once and
     // every probe job mounts the artifact. Probes are read-only; the

@@ -92,218 +92,15 @@ object TrainedCache {
     * results that are small by construction (trained artifacts) — never
     * for data-sized tables. `name` (optional) attributes the first-build
     * cost in [[buildTimes]].
-    *
-    * When the OPT-IN cross-JVM [[storeRoot]] is enabled (off by
-    * default — see its doc), a key first built in ANY JVM persists
-    * (schema.json + one parquet file) and later JVMs LOAD it instead of
-    * retraining — loads are attributed in [[reuseTimes]] (Bench's
-    * "prebuilt"), never in [[buildTimes]].
     */
   def memoDf(spark: SparkSession, key: String, name: String = "")(
       f: => DataFrame): DataFrame = {
-    val (schema, rows) = cache.computeIfAbsent(key, _ =>
-      loadRows(spark, key, name).getOrElse(recordBuild(name) {
-        val df = f
-        val sr = (df.schema, df.collect())
-        saveRows(spark, key, sr)
-        sr
-      }))
+    val (schema, rows) = cache.computeIfAbsent(key, _ => recordBuild(name) {
+      val df = f
+      (df.schema, df.collect())
+    })
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
-
-  // ------------------------------------------------ cross-JVM store
-
-  /** Cross-JVM artifact STORE — OPT-IN ONLY, off by default: every
-    * artifact this object memoizes is a deterministic function of
-    * (corpus bytes, hyperparameters, code), so a production deployment
-    * that trains per corpus snapshot can point GRAFT_TRAINED_STORE at
-    * shared scratch and serve every job from the store instead of
-    * retraining per driver. It is DISABLED unless that variable (or the
-    * `graft.trained.store` system property — the test seam) names a
-    * root, because the bench/oracle contract requires every run to
-    * compute its artifacts from the parquet inputs: a store that
-    * warm-starts a later JVM from a previous run's training would make
-    * the measured numbers describe the store, not the engine. With the
-    * store off, artifacts are still memoized within the session (the
-    * production per-job cost model the r17 review blessed) — only the
-    * cross-run persistence is opt-in.
-    *
-    * Invalidation is structural, never TTL:
-    *  - the disk key carries the caller's full memo key with the
-    *    session's applicationId stripped (the artifact does not depend
-    *    on the session) — that key embeds [[fingerprint]] of the corpus
-    *    files (length + mtime per file: a regenerated fixture re-keys)
-    *    and every hyperparameter;
-    *  - and [[codeDigest]], an md5 over the compiled graft class BYTES,
-    *    so ANY code change re-keys the whole store — an artifact trained
-    *    by older logic can never silently serve newer queries.
-    * Writes are atomic: build lands in a dot-temp sibling and a single
-    * rename publishes it; a lost race deletes its temp and serves the
-    * winner. Store growth is bounded by (code versions × corpus
-    * snapshots) actually exercised on the machine, a few MB each, under
-    * OS-reclaimed scratch.
-    */
-  private def storeRoot: Option[java.io.File] =
-    // NO default root: unset ⇒ store off, session-only memoization.
-    // (A def, not a lazy val, so the test seam can flip it per suite —
-    // but validation is memoized PER CONFIGURED PATH below, so the
-    // createDirectory/getOwner syscalls and the squatted-root WARNING
-    // run once per distinct root, not on every slotOf/memoDf access;
-    // r18 advice.)
-    sys.props.get("graft.trained.store")
-      .orElse(sys.env.get("GRAFT_TRAINED_STORE"))
-      .filter(p => p.nonEmpty && p != "off")
-      .flatMap(p => validatedRoots.computeIfAbsent(p, validateRoot))
-
-  private val validatedRoots = new java.util.concurrent
-    .ConcurrentHashMap[String, Option[java.io.File]]()
-
-  private def validateRoot(p: String): Option[java.io.File] =
-    Some(p).flatMap { p =>
-        if (codeDigest.isEmpty) None
-        else try {
-          val d = new java.io.File(p)
-          try java.nio.file.Files.createDirectory(d.toPath,
-            java.nio.file.attribute.PosixFilePermissions.asFileAttribute(
-              java.nio.file.attribute.PosixFilePermissions
-                .fromString("rwx------"))): Unit
-          catch { case _: java.nio.file.FileAlreadyExistsException => () }
-          // refuse a squatted root: a pre-created dir (or symlink target)
-          // owned by someone else would serve attacker-planted artifacts
-          // and fail every publish rename — trained data only loads from
-          // a root THIS user owns (r18 review-2 #4)
-          val owner = java.nio.file.Files.getOwner(d.toPath).getName
-          if (owner != scala.util.Properties.userName) {
-            System.err.println(s"[trained-store] WARNING: $p is owned by " +
-              s"'$owner', not '${scala.util.Properties.userName}' — store " +
-              "DISABLED (squatted or misconfigured root)")
-            None
-          } else Some(d)
-        } catch { case scala.util.control.NonFatal(_) => None }
-      }
-
-  /** md5 over the compiled graft class bytes (classes dir or jar) —
-    * the code half of the store key. None (store disabled) when the
-    * code source is unresolvable. */
-  private lazy val codeDigest: Option[String] =
-    try {
-      val src = getClass.getProtectionDomain.getCodeSource
-      if (src == null || src.getLocation == null) None
-      else {
-        val root = new java.io.File(src.getLocation.toURI)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def feed(file: java.io.File, rel: String): Unit = {
-          md.update(rel.getBytes("UTF-8"))
-          md.update(java.nio.file.Files.readAllBytes(file.toPath))
-        }
-        if (root.isFile) feed(root, root.getName) // assembled jar
-        else {
-          def walk(d: java.io.File, rel: String): Unit =
-            Option(d.listFiles()).getOrElse(Array.empty)
-              .sortBy(_.getName).foreach { c =>
-                val r = if (rel.isEmpty) c.getName else rel + "/" + c.getName
-                if (c.isDirectory) walk(c, r)
-                else if (c.getName.endsWith(".class")) feed(c, r)
-              }
-          walk(root, "")
-        }
-        Some(md.digest().map("%02x".format(_)).mkString)
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  /** The store slot for a memo key — applicationId stripped, code digest
-    * folded in. None when the store is disabled. */
-  private def slotOf(appId: String, key: String): Option[java.io.File] =
-    storeRoot.map(r => new java.io.File(r,
-      md5hex(codeDigest.get + "|" + key.replace(appId, ""))))
-
-  /** Wall-seconds spent LOADING store-served artifacts this JVM, by name
-    * — the reuse twin of [[buildTimes]]; Bench emits it as "prebuilt" so
-    * a warm-store run is self-describing. */
-  private val reusedSecs =
-    new java.util.concurrent.ConcurrentHashMap[String, Double]()
-
-  def reuseTimes: Map[String, Double] = {
-    val b = Map.newBuilder[String, Double]
-    reusedSecs.forEach((k, v) => b += (k -> v))
-    b.result()
-  }
-
-  /** The store lives on DRIVER-LOCAL disk and moves rows through Spark
-    * parquet jobs, so it is only usable when the executors share the
-    * driver's filesystem — i.e. a local master (r18 review-3 #4: on a
-    * cluster the bare paths would resolve against fs.defaultFS /
-    * executor-local disks while the `_OK`/rename protocol runs on the
-    * driver's /tmp, publishing slots whose rows live elsewhere). On a
-    * non-local master the store disables itself with one warning and
-    * every artifact stays session-memoized — a cluster deployment
-    * serves trained artifacts from a shared filesystem one layer up
-    * (DEPLOY.md), not from this scratch cache. Spark-side reads/writes
-    * below use explicit `file:` URIs so a local master with a
-    * non-local fs.defaultFS still lands on the store root. */
-  private val warnedNonLocal =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def usableStore(spark: SparkSession): Option[java.io.File] =
-    storeRoot.filter { _ =>
-      val ok = spark.sparkContext.isLocal
-      if (!ok && warnedNonLocal.compareAndSet(false, true))
-        System.err.println("[trained-store] store disabled: non-local " +
-          "master — driver-local artifacts are invisible to executors; " +
-          "artifacts stay session-only (serve them from a shared " +
-          "filesystem instead on clusters)")
-      ok
-    }
-
-  private def saveRows(spark: SparkSession, key: String,
-      sr: (StructType, Array[Row])): Unit =
-    for (_ <- usableStore(spark);
-        home <- slotOf(spark.sparkContext.applicationId, key)) {
-      val tmp = new java.io.File(home.getParentFile,
-        "." + home.getName + "-" + java.util.UUID.randomUUID.toString.take(8))
-      try {
-        spark.createDataFrame(java.util.Arrays.asList(sr._2: _*), sr._1)
-          .coalesce(1) // one file: collect order == file order on load
-          .write.mode("overwrite")
-          .parquet(new java.io.File(tmp, "rows").toURI.toString)
-        java.nio.file.Files.writeString(
-          new java.io.File(tmp, "schema.json").toPath, sr._1.json)
-        java.nio.file.Files.writeString(
-          new java.io.File(tmp, "_OK").toPath, "ok")
-        if (!tmp.renameTo(home)) // lost the publish race: winner serves
-          org.apache.commons.io.FileUtils.deleteQuietly(tmp): Unit
-      } catch { case scala.util.control.NonFatal(t) =>
-        // the dot-temp is junk on ANY failure — without this delete a
-        // repeating persist failure (disk-full) would accumulate one
-        // orphan slot dir per attempt forever (r18 review-3 #5)
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp): Unit
-        System.err.println(s"[trained-store] WARNING: persist failed " +
-          s"($t) — artifact stays session-only")
-      }
-    }
-
-  private def loadRows(spark: SparkSession, key: String,
-      name: String): Option[(StructType, Array[Row])] =
-    usableStore(spark)
-      .flatMap(_ => slotOf(spark.sparkContext.applicationId, key))
-      .filter(d => new java.io.File(d, "_OK").exists)
-      .flatMap { d =>
-        try {
-          val t0 = System.nanoTime()
-          val schema = org.apache.spark.sql.types.DataType.fromJson(
-            java.nio.file.Files.readString(
-              new java.io.File(d, "schema.json").toPath))
-            .asInstanceOf[StructType]
-          val rows = spark.read.schema(schema)
-            .parquet(new java.io.File(d, "rows").toURI.toString).collect()
-          if (name.nonEmpty)
-            reusedSecs.merge(name, (System.nanoTime() - t0) / 1e9, _ + _)
-          Some((schema, rows))
-        } catch { case scala.util.control.NonFatal(_) => None }
-      }
 
   /** Cheap corpus identity for cache keys: (path, length, mtime) of every
     * file under the given paths, digested. Catches the fixture-
@@ -343,63 +140,23 @@ object TrainedCache {
     sharedPaths.computeIfAbsent(
       name + "|" + spark.sparkContext.applicationId + "|" +
         fingerprint(fixturePaths: _*),
-      _ => usableStore(spark).flatMap(_ =>
-        slotOf("", s"path|$name|${fingerprint(fixturePaths: _*)}")) match {
-        case Some(home) if new java.io.File(home, "_OK").exists =>
-          // served from the cross-JVM store — a path hand-off, ~0 cost;
-          // recorded so Bench's "prebuilt" names it
-          reusedSecs.merge(name, 0.0, _ + _)
-          new java.io.File(home, java.nio.file.Files.readString(
-            new java.io.File(home, "_PAYLOAD").toPath).trim).getPath
-        case Some(home) => recordBuild(name) {
-          val tmp = new java.io.File(home.getParentFile, "." + home.getName +
-            "-" + java.util.UUID.randomUUID.toString.take(8))
-          try {
-            java.nio.file.Files.createDirectories(tmp.toPath)
-            val out = build(tmp.getPath)
-            require(out.startsWith(tmp.getPath),
-              s"sharedPath($name): builder must build inside its tmp dir")
-            val rel = out.substring(tmp.getPath.length).stripPrefix("/")
-            java.nio.file.Files.writeString(
-              new java.io.File(tmp, "_PAYLOAD").toPath, rel)
-            java.nio.file.Files.writeString(
-              new java.io.File(tmp, "_OK").toPath, "ok")
-            if (tmp.renameTo(home)) new java.io.File(home, rel).getPath
-            else {
-              // lost the publish race to a concurrent JVM: serve the winner
-              org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-              if (!new java.io.File(home, "_OK").exists)
-                throw new IllegalStateException(
-                  s"sharedPath($name): could not publish to $home and no " +
-                    "winner present — remove the store dir and retry")
-              new java.io.File(home, java.nio.file.Files.readString(
-                new java.io.File(home, "_PAYLOAD").toPath).trim).getPath
-            }
-          } catch { case t: Throwable =>
-            // a throwing builder (or a failed payload write) must not
-            // leave its dot-temp in the store forever (r18 review-3 #5);
-            // the caller still sees the real error
-            org.apache.commons.io.FileUtils.deleteQuietly(tmp): Unit
-            throw t
-          }
-        }
-        case None => recordBuild(name) { // store disabled: session-only
-          val tmp = java.nio.file.Files
-            .createTempDirectory(s"graft_${name}_shared").toString
-          Runtime.getRuntime.addShutdownHook(new Thread(() =>
-            org.apache.commons.io.FileUtils
-              .deleteQuietly(new java.io.File(tmp)): Unit))
-          build(tmp)
-        }
+      _ => recordBuild(name) {
+        val tmp = java.nio.file.Files
+          .createTempDirectory(s"graft_${name}_shared").toString
+        Runtime.getRuntime.addShutdownHook(new Thread(() =>
+          org.apache.commons.io.FileUtils
+            .deleteQuietly(new java.io.File(tmp)): Unit))
+        build(tmp)
       })
 
   private val sharedPaths =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Register `table` in THIS session's catalog over pre-written
-    * bucketed parquet files at `path` — the mount half of store-serving
-    * a bucketed artifact (`saveAsTable` writes files + catalog entry
-    * together; a later JVM has the files but not the entry). The files
+    * bucketed parquet files at `path` — the mount half of serving a
+    * [[sharedPath]] bucketed artifact (`saveAsTable` writes files +
+    * catalog entry together; a later session has the files but not the
+    * entry). The files
     * must come from a bucketBy writer with the SAME spec: the bucket id
     * rides the file name (`..._NNNNN.c000...`), which copy/rename
     * preserve, so the re-registered table keeps the zero-exchange join
@@ -418,11 +175,9 @@ object TrainedCache {
     }
 
   /** Test seam: drop every memoized artifact (a spec that rewrites a
-    * corpus in place needs the next call to retrain). In-memory only —
-    * the disk store self-invalidates by corpus fingerprint + code
-    * digest and needs no clearing.
+    * corpus in place needs the next call to retrain).
     */
   private[graft] def clear(): Unit = {
-    cache.clear(); buildSecs.clear(); sharedPaths.clear(); reusedSecs.clear()
+    cache.clear(); buildSecs.clear(); sharedPaths.clear()
   }
 }

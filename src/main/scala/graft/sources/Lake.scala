@@ -2375,16 +2375,6 @@ object Lake {
     }
   }
 
-  /** Cursor form of the change feed — what a polling consumer calls with
-    * the last version it processed: returns `(changes, newCursor)` where
-    * `changes` is [[changesBetween]]`(lastSeen, current)` and the cursor
-    * to persist is the current version. After a ROLLBACK the pointer is
-    * BELOW the consumer's cursor: the feed then returns one catch-down
-    * step — the direct diff from the consumer's version to the current
-    * one, labeled with the current version — so the consumer un-applies
-    * the rolled-back-over content the same way it applies forward
-    * changes, and its cursor moves to the rolled-back-to version.
-    */
   /** Cursor form of the paged drain — [[changesSince]] for a consumer
     * that may be arbitrarily far behind: pages of at most `maxPlanSteps`
     * steps plus the new cursor to persist AFTER draining every page.
@@ -2539,6 +2529,16 @@ object Lake {
     }
   }
 
+  /** Cursor form of the change feed — what a polling consumer calls with
+    * the last version it processed: returns `(changes, newCursor)` where
+    * `changes` is [[changesBetween]]`(lastSeen, current)` and the cursor
+    * to persist is the current version. After a ROLLBACK the pointer is
+    * BELOW the consumer's cursor: the feed then returns one catch-down
+    * step — the direct diff from the consumer's version to the current
+    * one, labeled with the current version — so the consumer un-applies
+    * the rolled-back-over content the same way it applies forward
+    * changes, and its cursor moves to the rolled-back-to version.
+    */
   def changesSince(spark: SparkSession, rootDir: String, lastSeen: Long,
       idCol: String, contentCol: String): (DataFrame, Long) = {
     val cur = currentVersion(spark, rootDir).getOrElse(

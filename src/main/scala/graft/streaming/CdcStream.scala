@@ -77,130 +77,80 @@ object CdcStream {
       .as[Ch]
   }
 
-  /** Keyed merge: per (table, rid), fold the batch's seq-sorted changes
-    * into the carried state. Emits the new merged row per key per batch —
-    * or a `cdc_action='none'` tombstone when the key annihilates.
+  /** The one per-key merge step both streaming operators run: fold one
+    * key's micro-batch, sorted by `seq`, into its carried state through
+    * the action state machine ([[Merge.mergeAction]], rcache.py:196-259).
+    *
+    * `prior` is the stored row: a live row, or a `cdc_action='none'`
+    * tombstone whose seq is the replay guard. Changes at or below the
+    * prior seq are an at-least-once re-delivery and are skipped, so a
+    * stale replay can never resurrect an annihilated key. A tombstone
+    * guards but does not seed the fold: the key holds no action state
+    * after an annihilation, so a later insert folds as a plain insert.
+    *
+    * Returns `(stored, emitted)`. A live outcome is both stored and
+    * emitted. An annihilation stores and emits a tombstone at the
+    * batch's max seq, so update-mode sinks can delete downstream. A
+    * batch that changes nothing past a tombstone (or an absent key)
+    * emits nothing and leaves `prior` as the stored row.
     */
-  def merged(ch: Dataset[Ch]): Dataset[Ch] = merged(ch, tombstoneTtlMs = None)
-
-  /** The shared per-key fold. `state.hasTimedOut` can only be true on the
-    * TTL variant below — only tombstones arm a timeout (live keys never
-    * call setTimeoutDuration, and Spark clears any armed timeout on every
-    * data invocation for the key), so a fired timeout is always a
-    * tombstone past the replay horizon: drop it silently — downstream saw
-    * the tombstone row when the key annihilated.
-    */
-  private def mergeFold(arm: Option[GroupState[Ch] => Unit])(
-      key: (String, String), it: Iterator[Ch],
-      state: GroupState[Ch]): Iterator[Ch] = {
-    val (table, rid) = key
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
+  private[graft] def step(key: (String, String), prior: Option[Ch],
+      batch: Iterator[Ch]): (Option[Ch], Option[Ch]) = {
+    val seen = prior.fold(Long.MinValue)(_.seq)
+    var acc = prior.filter(_.cdc_action != Types.None_)
+    var maxSeq = seen
+    for (e <- batch.toArray.sortBy(_.seq) if e.seq > seen) {
+      maxSeq = e.seq
+      acc = Merge.mergeAction(acc.map(_.cdc_action), e.cdc_action)
+        .map(a => e.copy(cdc_action = a))
+    }
+    if (acc.isDefined) (acc, acc)
+    else if (maxSeq == seen) (prior, None)
     else {
-      val sorted = it.toArray.sortBy(_.seq)
-      val seen = if (state.exists) state.get.seq else Long.MinValue
-      var acc: Option[Ch] =
-        if (state.exists && state.get.cdc_action != Types.None_)
-          Some(state.get)
-        else None
-      var maxSeq = seen
-      for (e <- sorted if e.seq > seen) {
-        maxSeq = e.seq
-        acc = Merge.mergeAction(acc.map(_.cdc_action), e.cdc_action)
-          .map(a => e.copy(cdc_action = a))
-      }
-      acc match {
-        case Some(st) =>
-          state.update(st)
-          Iterator.single(st)
-        case None =>
-          // annihilated: KEEP a tombstone in state (not remove) — the
-          // tombstone's seq is the replay guard: an at-least-once
-          // re-delivery of the dead key's stale changes (seq ≤ seen)
-          // must not resurrect it, exactly as the untyped fold path
-          // persists tombstones until sweepTombstones ages them out.
-          // On the TTL variant, re-arm on EVERY invocation that leaves a
-          // tombstone in state — including the pure-stale-replay branch,
-          // where the data invocation just cleared the previous arm
-          // (re-arming requires a state write first: Spark rejects
-          // setTimeoutDuration without one). On the NoTimeout variant
-          // the stale branch stays a pure no-op — rewriting an unchanged
-          // tombstone row per replayed batch would be state-store commit
-          // churn for nothing.
-          val stale = maxSeq == seen
-          if (stale && !state.exists) Iterator.empty // degenerate: no-op
-          else if (stale) {
-            arm.foreach { a => state.update(state.get); a(state) }
-            Iterator.empty
-          } else {
-            val tomb = Ch(table, rid, Types.None_, 0L, maxSeq, 0.0, null)
-            state.update(tomb)
-            arm.foreach(_(state))
-            Iterator.single(tomb)
-          }
-      }
+      val tomb = Some(Ch(key._1, key._2, Types.None_, 0L, maxSeq, 0.0, null))
+      (tomb, tomb)
     }
   }
 
-  /** Keyed merge with an optional tombstone replay horizon.
-    *
-    * `tombstoneTtlMs = None` (the plain [[merged]] overload): NoTimeout —
-    * tombstones live for the stream's lifetime. This is the gate/demo
-    * surface, whose drains are bounded (AvailableNow / a few test
-    * batches), so growth is bounded by the drain, and — decisive —
-    * a timeout conf makes FlatMapGroupsWithStateExec report
-    * `shouldRunAnotherBatch = true` on every batch, which keeps a
-    * ProcessingTime-trigger query running empty batches forever and hangs
-    * `processAllAvailable()` (measured: StreamSpec deadlocked when this
-    * path defaulted to ProcessingTimeTimeout).
-    *
-    * `tombstoneTtlMs = Some(ms)`: the standing-stream variant — ages
-    * annihilation tombstones out `ms` after their last touch, exactly as
-    * the durable path's [[sweepTombstones]] ages its tombstones out at the
-    * replayed batch's low-water seq. The at-least-once window the
-    * tombstone guards is bounded by the source checkpoint: once offsets
-    * past the delete commit, the stale changes that could resurrect the
-    * key can never be re-delivered — so a TTL comfortably above the
-    * micro-batch replay horizon (minutes, not days) keeps state ≈ live
-    * keys under delete churn with the guard intact while it matters.
-    * Under this variant the engine schedules batches even without new
-    * data, so expired tombstones are swept without a heartbeat.
+  /** Keyed merge on flatMapGroupsWithState: per (table, rid), [[step]]
+    * the batch against the `GroupState` row and emit ≤ 1 row per key per
+    * batch — the new merged row, or a `none` tombstone when the key
+    * annihilates. The tombstone stays in state as the replay guard, so
+    * state holds one row per key ever seen. NoTimeout: tombstones live
+    * for the stream's lifetime, which suits these bounded drains
+    * (AvailableNow / a few test batches). A timeout conf would make the
+    * engine report `shouldRunAnotherBatch = true` on every batch and hang
+    * `processAllAvailable()`; a standing stream that must age tombstones
+    * out runs [[mergedTws]].
     */
-  def merged(ch: Dataset[Ch], tombstoneTtlMs: Option[Long]): Dataset[Ch] = {
+  def merged(ch: Dataset[Ch]): Dataset[Ch] = {
     import ch.sparkSession.implicits._
-    val grouped = ch.groupByKey(e => (e.table, e.rid))
-    tombstoneTtlMs match {
-      case None =>
-        grouped.flatMapGroupsWithState[Ch, Ch](
-          OutputMode.Update, GroupStateTimeout.NoTimeout)(
-          mergeFold(arm = None))
-      case Some(ttl) =>
-        grouped.flatMapGroupsWithState[Ch, Ch](
-          OutputMode.Update, GroupStateTimeout.ProcessingTimeTimeout)(
-          mergeFold(arm = Some(_.setTimeoutDuration(ttl))))
-    }
+    ch.groupByKey(e => (e.table, e.rid))
+      .flatMapGroupsWithState[Ch, Ch](
+        OutputMode.Update, GroupStateTimeout.NoTimeout) {
+        (key: (String, String), it: Iterator[Ch], state: GroupState[Ch]) =>
+          // a stale tombstone replay emits nothing and skips the write:
+          // rewriting an unchanged row would be state-commit churn
+          val (_, emitted) = step(key, state.getOption, it)
+          emitted.foreach(state.update)
+          emitted.iterator
+      }
   }
 
-  /** The keyed merge on Spark 4's `transformWithState` — the THIRD
-    * standing-stream answer to tombstone growth, and the cleanest: state
-    * splits into two variables, `live` (no TTL — a live key must never
-    * be evicted for idleness) and `tomb` (native per-variable TTL —
-    * exactly the knob transformWithState adds over
-    * flatMapGroupsWithState), so annihilation tombstones age out at the
-    * replay horizon via the state store's OWN TTL machinery: expired
-    * values vanish on read and are reclaimed by store maintenance, with
-    * no timers registered and none of the timeout bookkeeping the fMGWS
-    * TTL variant needs (per-invocation re-arming, hasTimedOut plumbing).
-    * Fold semantics are IDENTICAL to [[merged]] — same emissions, same
-    * replay guard within the horizon (the spec pins parity batch by
-    * batch).
+  /** The keyed merge on Spark 4's `transformWithState` — the
+    * standing-stream form that ages annihilation tombstones out. State
+    * splits into two variables: `live` (no TTL — a live key must never
+    * be evicted for idleness) and `tomb` (native per-variable TTL), so
+    * tombstones age out at the replay horizon through the state store's
+    * own TTL machinery: expired values vanish on read and are reclaimed
+    * by store maintenance, with no timers registered. Fold semantics are
+    * [[merged]]'s — the same [[step]] — within the horizon (the spec
+    * pins parity batch by batch).
     *
-    * TimeMode is ProcessingTime (TTL requires it), which — like the
-    * fMGWS timeout conf — makes the engine schedule batches
-    * continuously; measured: an AvailableNow drain of this operator
-    * does NOT terminate (the engine keeps scheduling batches after the
-    * data is exhausted), so bounded drains must keep using [[merged]]'s
-    * default NoTimeout form — this variant is for genuinely standing
-    * streams stopped by their owner.
+    * TimeMode is ProcessingTime (TTL requires it), which makes the engine
+    * schedule batches continuously: an AvailableNow drain of this
+    * operator does NOT terminate, so bounded drains poll for the input
+    * row count instead ([[drainTws]]).
     */
   def mergedTws(ch: Dataset[Ch], tombstoneTtl: java.time.Duration)
       : Dataset[Ch] = {
@@ -230,37 +180,16 @@ object CdcStream {
 
     override def handleInputRows(key: (String, String), rows: Iterator[Ch],
         timers: org.apache.spark.sql.streaming.TimerValues): Iterator[Ch] = {
-      val (table, rid) = key
-      val sorted = rows.toArray.sortBy(_.seq)
-      // the guard seq comes from whichever variable holds the key: a
-      // live row, or a not-yet-expired tombstone (an EXPIRED tombstone
-      // reads as absent — precisely the aging-out semantics)
+      // an EXPIRED tombstone reads as absent — the aging-out semantics
       val prior = Option(live.get()).orElse(Option(tomb.get()))
-      val seen = prior.map(_.seq).getOrElse(Long.MinValue)
-      var acc: Option[Ch] = prior.filter(_.cdc_action != Types.None_)
-      var maxSeq = seen
-      for (e <- sorted if e.seq > seen) {
-        maxSeq = e.seq
-        acc = Merge.mergeAction(acc.map(_.cdc_action), e.cdc_action)
-          .map(a => e.copy(cdc_action = a))
+      val (stored, emitted) = step(key, prior, rows)
+      // a stale replay stores the prior tombstone again: each touch
+      // restarts its TTL
+      stored.foreach { st =>
+        if (st.cdc_action == Types.None_) { live.clear(); tomb.update(st) }
+        else { live.update(st); tomb.clear() }
       }
-      acc match {
-        case Some(st) =>
-          live.update(st)
-          tomb.clear()
-          Iterator.single(st)
-        case None =>
-          val stale = maxSeq == seen
-          if (stale && prior.isEmpty) Iterator.empty // degenerate no-op
-          else {
-            val t = Ch(table, rid, Types.None_, 0L, maxSeq, 0.0, null)
-            live.clear()
-            // write (or refresh, on stale replays) the tombstone — each
-            // touch restarts its TTL, mirroring the fMGWS re-arm
-            tomb.update(if (stale) prior.get else t)
-            if (stale) Iterator.empty else Iterator.single(t)
-          }
-      }
+      emitted.iterator
     }
   }
 
@@ -270,77 +199,45 @@ object CdcStream {
     */
   def compactStreamed(spark: SparkSession, sfDir: String): DataFrame = {
     val s = stateScopedSession(spark)
-    // the update ledger is O(live keys × batches) — data-sized at scale:
-    // drain through the parquet ledger (update mode → per-batch append),
-    // never a memory sink (guide §5)
-    val updates = drainToParquet(s,
-      merged(changeLogStream(s, sfDir)).toDF(), mode = "update")
-    // collapse multi-batch updates: last update per key wins, drop tombstones
-    Merge.latestPerKey(updates, Seq("table", "rid"), "seq")
-      .filter(col("cdc_action") =!= Types.None_)
-      .select("table", "rid", "cdc_action", "seq", "cdc_ts", "value", "props")
+    streamedSnapshot(s, merged(changeLogStream(s, sfDir)).toDF(), None)
   }
 
-  /** [[compactStreamed]] on the transformWithState merge ([[mergedTws]]) —
-    * the bounded OBSERVABLE drain the TWS variant needs (r16 verdict #6).
-    * TimeMode.ProcessingTime makes the engine schedule batches forever, so
-    * `Trigger.AvailableNow` never terminates and `processAllAvailable`
-    * hangs; this drain instead runs a ProcessingTime trigger and polls the
-    * query's progress until every input row has been processed — all data
-    * is on disk before the stream starts, so cumulative `numInputRows`
-    * reaching the batch count of the same file IS quiescence (a progress
-    * event fires only after its batch, sink commit included) — then stops
-    * the query. Cumulative count is accumulated by batchId, immune to
-    * `recentProgress`'s bounded retention. Wired into the oracle gate as
-    * `cdc_compact_stream_tws` with the SAME oracle as `cdc_compact_stream`,
-    * so the third tombstone strategy carries the same evidence grade as
-    * the fMGWS NoTimeout and ProcessingTimeTimeout forms.
+  /** [[compactStreamed]] on the transformWithState merge ([[mergedTws]]),
+    * wired into the oracle gate as `cdc_compact_stream_tws` with the SAME
+    * oracle as `cdc_compact_stream`. Its ProcessingTime TimeMode never
+    * lets AvailableNow terminate, so the drain polls until every input
+    * row has been processed ([[drainTws]]); all data is on disk before
+    * the stream starts, so reaching the file's row count IS quiescence.
     */
   def compactStreamedTws(spark: SparkSession, sfDir: String,
-      tombstoneTtl: java.time.Duration = java.time.Duration.ofDays(1),
-      deadlineMs: Long = 120000L): DataFrame = {
+      tombstoneTtl: java.time.Duration = java.time.Duration.ofDays(1))
+      : DataFrame = {
     val s = stateScopedSession(spark)
     useRocksDBStateStore(s) // transformWithState needs the RocksDB provider
-    // no-data micro-batches buy nothing here (the TWS tomb TTL is
-    // enforced by the state store's TTL config at access time, not by
-    // timer batches) and each one costs a full state commit — the r18
-    // restart profile showed ~1.4 s replaying an empty batch. Scoped to
-    // this gate session; fMGWS TTL gates keep the default (their
-    // ProcessingTimeTimeout eviction DOES fire on no-data batches).
+    // no-data micro-batches buy nothing here (the tomb TTL is enforced by
+    // the state store at access time, not by timer batches) and each one
+    // costs a full state commit — the r18 restart profile showed ~1.4 s
+    // replaying an empty batch. Scoped to this gate session.
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val expected = s.read.parquet(s"$sfDir/events.parquet").count()
-    // the update ledger is O(live keys × batches) — data-sized at scale:
-    // land each batch in a parquet ledger via foreachBatch (drainToParquet
-    // cannot serve here — its AvailableNow trigger never terminates under
-    // TimeMode.ProcessingTime, hence the polling drain), then reduce the
-    // read-back. The driver holds file paths, never rows (guide §5).
-    val root = java.nio.file.Files.createTempDirectory("graft_tws").toString
-    val outDir = s"$root/out"
-    val merged0 = mergedTws(changeLogStream(s, sfDir), tombstoneTtl).toDF()
-    // seed the out dir so a zero-row drain still reads back as empty
-    s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], merged0.schema)
-      .write.mode("overwrite").parquet(outDir)
-    try {
-      val q = merged0.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          b.write.mode("append").parquet(outDir); ()
-        }
-        .trigger(Trigger.ProcessingTime(50))
-        .start()
-      try drainTws(q, expected, deadlineMs) finally q.stop()
-      Merge.latestPerKey(
-          s.read.schema(merged0.schema).parquet(outDir),
-          Seq("table", "rid"), "seq")
-        .filter(col("cdc_action") =!= Types.None_)
-        .select("table", "rid", "cdc_action", "seq", "cdc_ts", "value", "props")
-        .materializeForced() // the temp ledger is deleted in the finally
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    }
+    streamedSnapshot(s,
+      mergedTws(changeLogStream(s, sfDir), tombstoneTtl).toDF(),
+      Some(expected))
   }
+
+  /** Shared body of the two streamed compactions: drain the merge's
+    * update ledger (O(live keys × batches) — data-sized at scale, so a
+    * parquet drain, never a memory sink; guide §5), then collapse it:
+    * last update per key wins, tombstones drop.
+    */
+  private def streamedSnapshot(s: SparkSession, mergedDf: DataFrame,
+      untilInputRows: Option[Long]): DataFrame =
+    Merge.latestPerKey(
+        drainToParquet(s, mergedDf, mode = "update",
+          untilInputRows = untilInputRows),
+        Seq("table", "rid"), "seq")
+      .filter(col("cdc_action") =!= Types.None_)
+      .select("table", "rid", "cdc_action", "seq", "cdc_ts", "value", "props")
 
   /** Bounded observable drain for a TimeMode.ProcessingTime query (TWS
     * schedules batches forever, so `Trigger.AvailableNow` never
@@ -377,24 +274,11 @@ object CdcStream {
     * retains all window state, NO watermark is declared (one would be
     * inert here; a standing update/append deployment adds one and accepts
     * that rows later than the delay are dropped relative to this batch
-    * semantics). At scale this is the standing micro-batch job; the
-    * memory sink stands in for the real one (window count is bounded by
-    * the time range, not event volume).
+    * semantics). Window count is bounded by the time range, not event
+    * volume.
     */
-  def windowedStreamed(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = stateScopedSession(spark)
-    val name = "evt_win_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = rawEventStream(s, sfDir)
-      .withColumn("ets", timestamp_micros(expr("ts div 1000")))
-      .groupBy(window(col("ets"), "1 day").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum("value").as("sv"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(name)
-      .select(col("w.start").cast("long").as("day_start"), col("event_type"),
-        col("n_events"), round(col("sv"), 2).as("sum_value"))
-  }
+  def windowedStreamed(spark: SparkSession, sfDir: String): DataFrame =
+    windowedCounts(spark, sfDir, watermark = None)
 
   /** §2.8 ext: the APPEND-MODE twin of [[windowedStreamed]] — the form a
     * standing deployment runs. Complete mode re-emits every window each
@@ -410,18 +294,21 @@ object CdcStream {
     * AvailableNow micro-batch emits windows closed by the last watermark
     * advance; without it the drain would end with zero rows).
     */
-  def windowedAppendStreamed(spark: SparkSession, sfDir: String): DataFrame = {
+  def windowedAppendStreamed(spark: SparkSession, sfDir: String): DataFrame =
+    windowedCounts(spark, sfDir, watermark = Some("1 day"))
+
+  /** Per-(day, event_type) counts drained through the parquet ledger:
+    * complete mode without a watermark, append mode with one. */
+  private def windowedCounts(spark: SparkSession, sfDir: String,
+      watermark: Option[String]): DataFrame = {
     val s = stateScopedSession(spark)
-    val name = "evt_winA_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = rawEventStream(s, sfDir)
+    val events = rawEventStream(s, sfDir)
       .withColumn("ets", timestamp_micros(expr("ts div 1000")))
-      .withWatermark("ets", "1 day")
-      .groupBy(window(col("ets"), "1 day").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum("value").as("sv"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(name)
+    drainToParquet(s,
+      watermark.fold(events)(events.withWatermark("ets", _))
+        .groupBy(window(col("ets"), "1 day").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"), sum("value").as("sv")),
+      mode = if (watermark.isEmpty) "complete" else "append")
       .select(col("w.start").cast("long").as("day_start"), col("event_type"),
         col("n_events"), round(col("sv"), 2).as("sum_value"))
   }
@@ -822,11 +709,18 @@ object CdcStream {
     * durable ledger (the checkpoint too, for restart forensics). The
     * temp fallback cleans up after itself — the result is materialized
     * (lineage severed) and the root deleted before returning.
+    *
+    * `untilInputRows` picks how the drain terminates: `None` runs
+    * AvailableNow to completion; `Some(n)` is for a ProcessingTime
+    * TimeMode plan, which never lets AvailableNow terminate — it runs a
+    * ProcessingTime trigger and polls until `n` input rows have been
+    * processed ([[drainTws]]), then stops the query.
     */
   private[graft] def drainToParquet(
       spark: SparkSession, result: DataFrame,
       workDir: Option[String] = None,
-      mode: String = "append"): DataFrame = {
+      mode: String = "append",
+      untilInputRows: Option[Long] = None): DataFrame = {
     import org.apache.hadoop.fs.Path
     require(workDir.isDefined || spark.sparkContext.isLocal,
       "drainToParquet: the default workDir puts the sink and checkpoint " +
@@ -837,47 +731,46 @@ object CdcStream {
       .createTempDirectory("graft_ssj").toString))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def drained(): DataFrame = {
-      val outPath = new Path(root, "out").toString
+      val out = new Path(root, "out")
+      // a drain whose batches all carried zero rows still reads back as
+      // an empty frame of the right schema
+      fs.mkdirs(out)
       val base = result.writeStream
         .option("checkpointLocation", new Path(root, "ckpt").toString)
-        .outputMode(mode).trigger(Trigger.AvailableNow())
+        .outputMode(mode)
+        .trigger(untilInputRows.fold(Trigger.AvailableNow())(
+          _ => Trigger.ProcessingTime(50)))
       val q = mode match {
         // append: the native parquet streaming sink (exactly-once via its
         // own file-manifest log)
-        case "append" => base.format("parquet").option("path", outPath).start()
-        // update/complete: the parquet sink cannot express them — land
-        // each batch via foreachBatch (update appends the batch's update
-        // rows, exactly the rows a memory sink would accumulate; complete
-        // overwrites with the batch's full snapshot, the memory sink's
-        // replace semantics). These gate drains are bounded AvailableNow
-        // runs; a standing deployment keys on batchId for replay dedup.
+        case "append" =>
+          base.format("parquet").option("path", out.toString).start()
+        // update: the parquet sink cannot express it — land each batch's
+        // update rows via foreachBatch under its own batchId-keyed dir,
+        // overwritten, so a batch replayed against the same checkpoint
+        // replaces its earlier attempt instead of duplicating it
         case "update" =>
-          // seed the out dir so a drain whose batches all carried zero
-          // rows still reads back as an empty frame of the right schema
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              result.schema)
-            .write.mode("overwrite").parquet(outPath)
-          base.foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("append").parquet(outPath); ()
+          base.foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
+            b.write.mode("overwrite")
+              .parquet(new Path(out, s"$BatchCol=$id").toString); ()
           }.start()
+        // complete: overwrite with the batch's full snapshot
         case "complete" =>
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              result.schema)
-            .write.mode("overwrite").parquet(outPath)
           base.foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("overwrite").parquet(outPath); ()
+            b.write.mode("overwrite").parquet(out.toString); ()
           }.start()
         case other => throw new IllegalArgumentException(
           s"drainToParquet: unsupported output mode '$other'")
       }
-      q.awaitTermination()
+      untilInputRows match {
+        case None => q.awaitTermination()
+        case Some(n) => try drainTws(q, n, 120000L) finally q.stop()
+      }
       // read back with the stream's OWN schema: no footer inference, so
       // a drain that committed zero rows (a legitimately empty join
       // result) reads as an empty frame instead of crashing on
       // "unable to infer schema"
-      spark.read.schema(result.schema).parquet(outPath)
+      spark.read.schema(result.schema).parquet(out.toString).drop(BatchCol)
     }
     if (workDir.isDefined) drained()
     else {
@@ -889,6 +782,9 @@ object CdcStream {
       finally { fs.delete(root, true): Unit }
     }
   }
+
+  /** Partition column of the update drain's batchId-keyed ledger dirs. */
+  private val BatchCol = "graft_batch"
 
   /** §2.8 ext: the LEFT-OUTER form of [[intervalJoinStreamed]] — errors
     * with NO same-user activity in the window must still appear,
@@ -1002,25 +898,12 @@ object CdcStream {
       checkpointDir: String, nBuckets: Int = 64,
       trigger: Trigger = Trigger.ProcessingTime(0L))
       : org.apache.spark.sql.streaming.StreamingQuery =
-    merged(source).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      // the reference's blocking tail mode (cdc.py:19-25,100) is a standing
-      // ProcessingTime deployment — the default here; AvailableNow gives
-      // the run-to-completion parity mode (StandingStreamSpec pins the
-      // standing shape against live file drops)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Ch], _: Long) =>
-        // preDeduped: flatMapGroupsWithState invokes the fold once per
-        // key per micro-batch and mergeFold emits ≤ 1 row from it, so
-        // the batch can never carry two rows of one (table, rid) — the
-        // latest-per-key window (a full exchange + per-key sort of the
-        // batch, every micro-batch) would re-derive what the operator
-        // already guarantees (MergeSpec pins the ≤1-row-per-key-per-
-        // batch invariant; optimization guide §2.4).
-        upsertBatch(batch.toDF(), stateDir, nBuckets, preDeduped = true)
-      }
-      .start()
+    // the reference's blocking tail mode (cdc.py:19-25,100) is a standing
+    // ProcessingTime deployment — the default here; AvailableNow gives
+    // the run-to-completion parity mode (StandingStreamSpec pins the
+    // standing shape against live file drops)
+    startBucketSink(merged(source), stateDir, checkpointDir, nBuckets,
+      trigger)
 
   /** [[run]] on the transformWithState merge ([[mergedTws]]) — the THIRD
     * tombstone strategy wired through the SAME production foreachBatch
@@ -1043,15 +926,26 @@ object CdcStream {
       tombstoneTtl: java.time.Duration = java.time.Duration.ofDays(1),
       trigger: Trigger = Trigger.ProcessingTime(50L))
       : org.apache.spark.sql.streaming.StreamingQuery =
-    mergedTws(source, tombstoneTtl).writeStream
+    startBucketSink(mergedTws(source, tombstoneTtl), stateDir,
+      checkpointDir, nBuckets, trigger)
+
+  /** The bucket sink both typed merges feed: per micro-batch, upsert the
+    * emitted rows into the bucketed state dir ([[upsertBatch]]).
+    * preDeduped: [[step]] runs once per key per micro-batch and emits
+    * ≤ 1 row, so the batch can never carry two rows of one (table, rid) —
+    * the latest-per-key window (a full exchange + per-key sort of the
+    * batch, every micro-batch) would re-derive what the operator already
+    * guarantees (MergeSpec pins the ≤1-row-per-key-per-batch invariant;
+    * optimization guide §2.4).
+    */
+  private def startBucketSink(mergedDs: Dataset[Ch], stateDir: String,
+      checkpointDir: String, nBuckets: Int, trigger: Trigger)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    mergedDs.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Ch], _: Long) =>
-        // preDeduped: transformWithState's handleInputRows runs once per
-        // key per micro-batch and emits ≤ 1 row (see MergeProcessor), so
-        // the per-batch latest-per-key window is redundant — same
-        // argument as [[run]]'s sink (guide §2.4: remove the exchange).
         upsertBatch(batch.toDF(), stateDir, nBuckets, preDeduped = true)
       }
       .start()
@@ -1105,37 +999,6 @@ object CdcStream {
       }
       .start()
 
-  /** One micro-batch of the untyped evolving path: fold the batch's
-    * changes into stored state THROUGH the action state machine.
-    *
-    * Stored touched-key rows are unioned (additively — the schema may
-    * differ across the evolution boundary) BELOW the batch's fresh
-    * changes and refolded by [[Merge.compact]]: the stored row's action
-    * seeds the fold exactly like `GroupState` seeds the typed one, so
-    * cross-batch transitions match. Replay-idempotent: a batch change
-    * at-or-below the stored high-water `seq` is dropped (the typed fold's
-    * `e.seq > seen` guard).
-    *
-    * Annihilated keys keep a PERSISTENT `none` tombstone row carrying the
-    * key's high-water seq. The typed path doesn't need one — its
-    * checkpointed `GroupState` remembers the seen-seq across replays —
-    * but here the parquet sink IS the only state: dropping the row would
-    * drop the replay guard with it, and re-running an annihilating batch
-    * after a crash would refold the delete as a fresh bare delete. A
-    * stored tombstone contributes its seq to the guard but does NOT seed
-    * the fold (the typed machine holds no action state after an
-    * annihilation, so a later insert folds as a plain insert). Consumers
-    * read live rows as `cdc_action != 'none'`; tombstones are one row per
-    * annihilated key and [[sweepTombstones]] drops those older than the
-    * source's replay horizon.
-    *
-    * Cost per batch is O(touched-bucket rows + batch) — the stored side
-    * is bucket-pruned then key-semi-joined, never a full state scan.
-    *
-    * Returns the batch's smallest seq (None for an empty batch) — the
-    * replay low-water [[runEvolving]]'s auto-sweep feeds to
-    * [[sweepTombstones]].
-    */
   /** Run `f` with a Spark job description — the sink's per-batch jobs
     * otherwise all report the stream's `.start()` callsite, which makes
     * the UI (and any job-census profiling) unable to attribute the
@@ -1187,6 +1050,37 @@ object CdcStream {
     }
   }
 
+  /** One micro-batch of the untyped evolving path: fold the batch's
+    * changes into stored state THROUGH the action state machine.
+    *
+    * Stored touched-key rows are unioned (additively — the schema may
+    * differ across the evolution boundary) BELOW the batch's fresh
+    * changes and refolded by [[Merge.compact]]: the stored row's action
+    * seeds the fold exactly like `GroupState` seeds the typed one, so
+    * cross-batch transitions match. Replay-idempotent: a batch change
+    * at-or-below the stored high-water `seq` is dropped (the typed fold's
+    * `e.seq > seen` guard).
+    *
+    * Annihilated keys keep a PERSISTENT `none` tombstone row carrying the
+    * key's high-water seq. The typed path doesn't need one — its
+    * checkpointed `GroupState` remembers the seen-seq across replays —
+    * but here the parquet sink IS the only state: dropping the row would
+    * drop the replay guard with it, and re-running an annihilating batch
+    * after a crash would refold the delete as a fresh bare delete. A
+    * stored tombstone contributes its seq to the guard but does NOT seed
+    * the fold (the typed machine holds no action state after an
+    * annihilation, so a later insert folds as a plain insert). Consumers
+    * read live rows as `cdc_action != 'none'`; tombstones are one row per
+    * annihilated key and [[sweepTombstones]] drops those older than the
+    * source's replay horizon.
+    *
+    * Cost per batch is O(touched-bucket rows + batch) — the stored side
+    * is bucket-pruned then key-semi-joined, never a full state scan.
+    *
+    * Returns the batch's smallest seq (None for an empty batch) — the
+    * replay low-water [[runEvolving]]'s auto-sweep feeds to
+    * [[sweepTombstones]].
+    */
   private[graft] def foldBatch(batchDf: DataFrame, stateDir: String,
       nBuckets: Int): Option[Long] = {
     val spark = batchDf.sparkSession

@@ -172,4 +172,40 @@ class StreamSimSpec extends SparkSuite {
     assert(dropped.value === expDrops,
       s"expected $expDrops drops, got ${dropped.value}")
   }
+
+  test("Top2Cells returns a winning negative cid, interpreted and " +
+      "codegen'd (no-winner is a -inf score, not a cid sign)") {
+    // (v, cids, flat centroids, expected top-2 in rank order)
+    val cases = Seq(
+      (Seq(1.0, 0.0), Seq(-5L, 3L, -7L),
+        Seq(1.0, 0.0, 0.0, 1.0, -1.0, 0.0), Seq(-5L, 3L)),
+      (Seq(1.0, 0.0), Seq(4L, -9L), Seq(0.0, 1.0, 1.0, 0.0), Seq(-9L, 4L)),
+      (Seq(0.0, 1.0), Seq(-2L), Seq(0.0, 1.0), Seq(-2L)),
+      (Seq(0.0, 1.0), Seq.empty[Long], Seq.empty[Double], Seq.empty[Long]))
+    val dir = java.nio.file.Files.createTempDirectory("graft_top2").toString
+    try {
+      val s0 = spark
+      import s0.implicits._
+      // a parquet scan, so no optimizer rule folds the expression away
+      cases.zipWithIndex.map { case ((v, c, f, _), i) => (i, v, c, f) }
+        .toDF("i", "v", "cids", "flat")
+        .write.mode("overwrite").parquet(dir)
+      for ((label, confs) <- Seq(
+          "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+            "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
+          "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+            "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+            "spark.sql.codegen.fallback" -> "false"))) {
+        val s = spark.newSession()
+        confs.foreach { case (k, v) => s.conf.set(k, v) }
+        val got = s.read.parquet(dir)
+          .select(col("i"), org.apache.spark.sql.graft.VectorFunctions
+            .top2Cells(col("v"), col("cids"), col("flat")).as("top2"))
+          .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
+        for (((_, _, _, want), i) <- cases.zipWithIndex)
+          assert(got(i) === want, s"$label, case $i")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(dir))
+  }
 }

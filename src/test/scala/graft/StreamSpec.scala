@@ -50,6 +50,66 @@ class StreamSpec extends SparkSuite {
     assert(streamFinal.toMap === batch)
   }
 
+  test("step: every action sequence up to length 5, split into every " +
+      "batch partition, with stale replays == compact(keepNone)") {
+    import spark.implicits._
+    val acts = Vector(Types.Insert, Types.Update, Types.Delete)
+    val seqs = (1 to 5).flatMap(n =>
+      (0 until math.pow(3, n).toInt).map(i =>
+        (0 until n).map(j => acts(i / math.pow(3, j).toInt % 3))))
+    assert(seqs.size === 363)
+    // one key per sequence, change j at seq j + 1
+    def changes(k: Int): Vector[Ch] = seqs(k).zipWithIndex.map {
+      case (a, j) => ch(s"x$k", a, j + 1L, j + 1.0) }.toVector
+    val want = Merge.compact(
+        seqs.indices.flatMap(changes).toDF(), Seq("table", "rid"),
+        keepNone = true)
+      .collect().map(r => r.getAs[String]("rid") ->
+        ((r.getAs[String]("cdc_action"), r.getAs[Long]("seq"),
+          r.getAs[Any]("props"))))
+      .toMap
+    assert(want.size === seqs.size)
+    // contiguous splits (batches arrive in seq order), each batch handed
+    // to step in reverse so the sort is exercised too
+    def splits(cs: Vector[Ch]): Seq[Vector[Vector[Ch]]] =
+      if (cs.isEmpty) Seq(Vector.empty)
+      else (1 to cs.size).flatMap(i =>
+        splits(cs.drop(i)).map(rest => cs.take(i) +: rest))
+    var runs = 0
+    for (k <- seqs.indices) {
+      val cs = changes(k)
+      val key = ("db.t", s"x$k")
+      for (batches <- splits(cs);
+          // None, or (batch j re-delivered after batch t ≥ j)
+          replay <- None +: (for (t <- batches.indices; j <- 0 to t)
+            yield Some((j, t)))) {
+        runs += 1
+        var stored: Option[Ch] = None
+        for (t <- batches.indices) {
+          val (st, em) = CdcStream.step(key, stored, batches(t).reverseIterator)
+          assert(em.size <= 1)
+          em.foreach(e => assert(st.contains(e)))
+          val hw = batches(t).last.seq
+          if (st.exists(_.cdc_action == Types.None_))
+            assert(st.get.seq === hw, s"tombstone below max seq: $st")
+          stored = st
+          replay.filter(_._2 == t).foreach { case (j, _) =>
+            val (st2, em2) = CdcStream.step(key, stored, batches(j).iterator)
+            assert(st2 === stored, s"stale replay changed state: $k $batches")
+            if (stored.exists(_.cdc_action == Types.None_))
+              assert(em2.isEmpty, s"stale replay resurrected: $k $batches")
+            else assert(em2 === stored)
+          }
+        }
+        val got = stored.get
+        val (a, sq, props) = want(s"x$k")
+        assert((got.cdc_action, got.seq) === ((a, sq)), s"$k $batches")
+        if (a != Types.None_) assert(got.props === props)
+      }
+    }
+    assert(runs > 10000)
+  }
+
   test("update-mode merge emits at most ONE row per key per micro-batch " +
       "— the invariant the bucket sink's preDeduped fast path rides on " +
       "(no per-batch latest-per-key window)") {

@@ -14,8 +14,9 @@ import org.apache.spark.sql.streaming.Trigger
   * happen in a correctly-configured deployment).
   *
   * Polling (not processAllAvailable): TimeMode.ProcessingTime makes the
-  * engine schedule batches continuously, the same no-quiescent-point
-  * behavior as the fMGWS timeout conf.
+  * engine schedule batches continuously, so there is no quiescent point.
+  * The state-growth bound under churn (state shrinks to the live keys
+  * past the horizon) is pinned here too.
   */
 class TwsMergeSpec extends SparkSuite {
 
@@ -98,9 +99,15 @@ class TwsMergeSpec extends SparkSuite {
     assert(tws === fmgws)
     // an impossible deadline fails LOUDLY, never hangs: the drain is
     // bounded by construction
-    val e = intercept[IllegalStateException] {
-      CdcStream.compactStreamedTws(spark, dir, deadlineMs = 1L)
-    }
+    import rdb.implicits._
+    implicit val sqlCtx = rdb.sqlContext
+    val q = CdcStream.mergedTws(MemoryStream[Ch].toDS(),
+        java.time.Duration.ofDays(1))
+      .writeStream.format("noop").outputMode("update")
+      .trigger(Trigger.ProcessingTime(50)).start()
+    val e = try intercept[IllegalStateException] {
+      CdcStream.drainTws(q, expected = 1L, deadlineMs = 1L)
+    } finally q.stop()
     assert(e.getMessage.contains("did not quiesce"), e.getMessage)
   }
 
@@ -143,5 +150,57 @@ class TwsMergeSpec extends SparkSuite {
         s"tombstone did not age out: ${rdb.table(name).as[Ch].collect()
           .filter(_.rid == "a").toSeq}")
     } finally q.stop()
+  }
+
+  test("tombstones age out at the TTL horizon under 8-key churn: state " +
+      "shrinks to the live keys, live keys survive, and an insert after " +
+      "the sweep revives the key") {
+    import rdb.implicits._
+    implicit val sqlCtx = rdb.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_twsttl").toString
+    val name = "twschurn_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    val mem = MemoryStream[Ch]
+    val q = CdcStream.mergedTws(mem.toDS(), java.time.Duration.ofMillis(500))
+      .writeStream.format("memory").queryName(name).outputMode("update")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(50)).start()
+    // (rid, action) per stored row of both state variables, as of the
+    // last committed batch (a TTL'd variable nests the row beside its
+    // `ttlExpirationMs`)
+    def stateRows(): Seq[(String, String)] =
+      Seq("live" -> "value", "tomb" -> "value.value").flatMap {
+        case (v, row) =>
+          rdb.read.format("statestore").option("path", ckpt)
+            .option("stateVarName", v).load()
+            .selectExpr(s"$row.rid", s"$row.cdc_action").collect()
+            .map(r => r.getString(0) -> r.getString(1)).toSeq
+      }
+    try {
+      // churn: 8 keys annihilated, 2 stay live
+      mem.addData((1 to 8).map(i => ch(s"c$i", "insert", i)) ++
+        Seq(ch("live1", "insert", 9), ch("live2", "insert", 10)): _*)
+      assert(pollUntil() { rdb.table(name).count() >= 10 },
+        "insert batch never drained")
+      mem.addData((1 to 8).map(i => ch(s"c$i", "delete", 10L + i)): _*)
+      assert(pollUntil() {
+        rdb.table(name).as[Ch].collect()
+          .count(_.cdc_action == Types.None_) >= 8
+      }, "annihilation tombstones never emitted")
+      // past the horizon the store must shrink to the live keys only —
+      // ProcessingTime TimeMode keeps batches running, so the TTL sweep
+      // needs no heartbeat data
+      assert(pollUntil() { stateRows().length == 2 },
+        s"tombstones not swept: ${stateRows().sorted.mkString(", ")}")
+      assert(stateRows().toMap === Map("live1" -> "insert",
+        "live2" -> "insert"), "sweep removed a LIVE key")
+      // post-sweep revival: a genuinely new insert re-creates the key
+      mem.addData(ch("c1", "insert", 30))
+      assert(pollUntil() { stateRows().toMap.get("c1").contains("insert") },
+        "post-sweep insert did not revive the key")
+    } finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+    }
   }
 }
