@@ -327,13 +327,17 @@ object ScaleSmoke {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     graft.functions.GraftExtensions.register(spark)
 
-    // per-query shuffle-write accounting via stage metrics; the listener
-    // bus is async, so drain with a short settle after each query
+    // per-query shuffle-write and input-byte accounting via stage
+    // metrics, one listener for every leg; the listener bus is async, so
+    // drain with a short settle after each query
     val shuffleWrite = new java.util.concurrent.atomic.AtomicLong()
+    val bytesRead = new java.util.concurrent.atomic.AtomicLong()
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        shuffleWrite.addAndGet(
-          s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        val m = s.stageInfo.taskMetrics
+        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        bytesRead.addAndGet(m.inputMetrics.bytesRead): Unit
+      }
     })
 
     def runOne(name: String, dir: String): (Seq[Double], Long) = {
@@ -539,11 +543,6 @@ object ScaleSmoke {
     for (_ <- evolvingTargets.headOption) {
       import graft.streaming.CdcStream
       import org.apache.spark.sql.streaming.Trigger
-      val bytesRead = new java.util.concurrent.atomic.AtomicLong()
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-          bytesRead.addAndGet(s.stageInfo.taskMetrics.inputMetrics.bytesRead)
-      })
       for ((dir, lbl) <- Seq((base, "sf0.1"), (sf1, s"${nReps}x"))) {
         val root =
           java.nio.file.Files.createTempDirectory("graft_evsm").toString
@@ -603,11 +602,6 @@ object ScaleSmoke {
     val compactTargets = targets.filter(_ == "lake_compact@touched")
     for (_ <- compactTargets.headOption) {
       import graft.sources.Lake
-      val bytesRead = new java.util.concurrent.atomic.AtomicLong()
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-          bytesRead.addAndGet(s.stageInfo.taskMetrics.inputMetrics.bytesRead)
-      })
       for ((dir, lbl) <- Seq((base, "sf0.1"), (sf1, s"${nReps}x"))) {
         val root =
           java.nio.file.Files.createTempDirectory("graft_cptsm").toString

@@ -388,7 +388,7 @@ object CdcStream {
   def sessionStreamed(spark: SparkSession, sfDir: String): DataFrame = {
     val s = stateScopedSession(spark)
     // the session table is O(users × sessions) — data-sized: drain via
-    // the parquet ledger (complete mode → per-batch snapshot overwrite),
+    // the parquet ledger (complete mode → the last batch's snapshot dir),
     // not a driver-memory sink (guide §5)
     drainToParquet(s,
       rawEventStream(s, sfDir)
@@ -730,8 +730,14 @@ object CdcStream {
     val root = new Path(workDir.getOrElse(java.nio.file.Files
       .createTempDirectory("graft_ssj").toString))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = new Path(root, "out")
+    def batchDirs(): Seq[(Long, Path)] =
+      fs.listStatus(out).toSeq.collect {
+        case st if st.isDirectory &&
+            st.getPath.getName.startsWith(s"$BatchCol=") =>
+          st.getPath.getName.stripPrefix(s"$BatchCol=").toLong -> st.getPath
+      }
     def drained(): DataFrame = {
-      val out = new Path(root, "out")
       // a drain whose batches all carried zero rows still reads back as
       // an empty frame of the right schema
       fs.mkdirs(out)
@@ -745,19 +751,20 @@ object CdcStream {
         // own file-manifest log)
         case "append" =>
           base.format("parquet").option("path", out.toString).start()
-        // update: the parquet sink cannot express it — land each batch's
-        // update rows via foreachBatch under its own batchId-keyed dir,
-        // overwritten, so a batch replayed against the same checkpoint
-        // replaces its earlier attempt instead of duplicating it
-        case "update" =>
+        // update and complete: the parquet sink cannot express them —
+        // each batch lands via foreachBatch in its own batchId-keyed dir,
+        // overwritten, so a replayed batch replaces its earlier attempt.
+        // A complete batch is the whole result: every other snapshot is
+        // deleted only after it is written, so the read-back never meets
+        // a torn one
+        case "update" | "complete" =>
           base.foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
             b.write.mode("overwrite")
-              .parquet(new Path(out, s"$BatchCol=$id").toString); ()
-          }.start()
-        // complete: overwrite with the batch's full snapshot
-        case "complete" =>
-          base.foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.mode("overwrite").parquet(out.toString); ()
+              .parquet(new Path(out, s"$BatchCol=$id").toString)
+            if (mode == "complete")
+              for ((other, dir) <- batchDirs() if other != id)
+                fs.delete(dir, true)
+            ()
           }.start()
         case other => throw new IllegalArgumentException(
           s"drainToParquet: unsupported output mode '$other'")
@@ -769,8 +776,10 @@ object CdcStream {
       // read back with the stream's OWN schema: no footer inference, so
       // a drain that committed zero rows (a legitimately empty join
       // result) reads as an empty frame instead of crashing on
-      // "unable to infer schema"
-      spark.read.schema(result.schema).parquet(out.toString).drop(BatchCol)
+      // "unable to infer schema". Complete mode reads its latest snapshot
+      val from = if (mode != "complete") out
+        else batchDirs().maxByOption(_._1).fold(out)(_._2)
+      spark.read.schema(result.schema).parquet(from.toString).drop(BatchCol)
     }
     if (workDir.isDefined) drained()
     else {
@@ -783,7 +792,8 @@ object CdcStream {
     }
   }
 
-  /** Partition column of the update drain's batchId-keyed ledger dirs. */
+  /** Partition column of the update and complete drains' batchId-keyed
+    * ledger dirs. */
   private val BatchCol = "graft_batch"
 
   /** §2.8 ext: the LEFT-OUTER form of [[intervalJoinStreamed]] — errors

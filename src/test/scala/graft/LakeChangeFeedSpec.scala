@@ -5,14 +5,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Change-data-feed contract ([[Lake.changesBetween]] /
-  * [[Lake.changesSince]]): the feed emits one (v, key, change) row per
-  * change a version introduced vs its predecessor; each step equals the
-  * full snapshot diff of its two generations; the read side prices
-  * O(physically changed partitions), not O(corpus); range validation
-  * fails loudly above the high-water and across pruned generations; the
-  * cursor API advances, reports no-news, and catches DOWN across a
-  * rollback.
+/** Change-data-feed contract of the three readers — [[Lake.changesBetween]]
+  * (one frame), [[Lake.changesBetweenPaged]] (lazy pages from the
+  * caller's cursor) and [[Lake.followChanges]] (pages against a persisted
+  * cursor): the feed emits one (v, key, change) row per change a version
+  * introduced vs its predecessor; each step equals the full snapshot diff
+  * of its two generations; the read side prices O(physically changed
+  * partitions), not O(corpus); range validation fails loudly above the
+  * high-water and across pruned generations; a cursor advances, reports
+  * no-news, and catches DOWN across a rollback.
   */
 class LakeChangeFeedSpec extends SparkSuite {
   import spark.implicits._
@@ -28,8 +29,10 @@ class LakeChangeFeedSpec extends SparkSuite {
   private def tmp() = java.nio.file.Files
     .createTempDirectory("graft_lakecdf").toString + "/lake"
 
-  private def rows(df: DataFrame): Set[(Long, String, String,
-      Option[String], Option[String])] =
+  private type FeedRow =
+    (Long, String, String, Option[String], Option[String])
+
+  private def rows(df: DataFrame): Set[FeedRow] =
     df.collect().map(r => (r.getLong(r.fieldIndex("v")),
       r.getString(r.fieldIndex("id")),
       r.getString(r.fieldIndex("change")),
@@ -127,30 +130,50 @@ class LakeChangeFeedSpec extends SparkSuite {
     } finally cleanup(root)
   }
 
-  test("changesSince: advances the cursor, reports no-news as empty, and " +
-      "catches DOWN across a rollback with one reverse step") {
+  test("a cursor advances to the current version, reports no-news as " +
+      "one empty page, and catches DOWN across a rollback with one " +
+      "reverse page") {
     val root = tmp()
+    val cursor = s"${new java.io.File(root).getParent}/cursor"
     try {
       Lake.publishVersion(corpus("a", Seq("g0")), root,
         Seq("k"), Seq("id"), 1000L) // v0
+      assert(Lake.followChanges(spark, root, cursor, "id", "text") {
+        (_, _) => fail("tail-from-now delivered a page") } === 0)
       Lake.publishDelta(
         Seq(("g0-0", "g0", "edited")).toDF("id", "k", "text")
           .unionByName(corpus("a", Seq("g0"))
             .filter(col("id") =!= "g0-0")),
         root, Seq("k"), Seq("id"), 1000L) // v1
-      val (adv, c1) = Lake.changesSince(spark, root, 0L, "id", "text")
-      assert(c1 === 1L)
-      assert(rows(adv).map(t => (t._1, t._2, t._3)) ===
+      val adv = Lake.changesBetweenPaged(spark, root, 0L, 1L, "id", "text")
+        .toSeq
+      assert(adv.length === 1)
+      assert(rows(adv.head).map(t => (t._1, t._2, t._3)) ===
         Set((1L, "g0-0", "changed")))
-      val (none, c2) = Lake.changesSince(spark, root, 1L, "id", "text")
-      assert(c2 === 1L && none.count() === 0L)
+      val delivered =
+        scala.collection.mutable.ArrayBuffer[(Long, Set[FeedRow])]()
+      assert(Lake.followChanges(spark, root, cursor, "id", "text") {
+        (df, end) => delivered += end -> rows(df) } === 1)
+      assert(delivered.toSeq === Seq(1L -> rows(adv.head)))
+      val none = Lake.changesBetweenPaged(spark, root, 1L, 1L, "id", "text")
+        .toSeq
+      assert(none.length === 1 && none.head.count() === 0L)
+      assert(Lake.followChanges(spark, root, cursor, "id", "text") {
+        (_, _) => fail("caught-up consumer got a page") } === 0)
       Lake.rollbackTo(spark, root, 0L)
-      val (down, c3) = Lake.changesSince(spark, root, 1L, "id", "text")
-      assert(c3 === 0L)
-      // the reverse step un-applies v1's edit, labeled with the
-      // rolled-back-to version the cursor lands on
-      assert(rows(down).map(t => (t._1, t._2, t._3)) ===
+      val down = Lake.changesBetweenPaged(spark, root, 1L, 0L, "id", "text")
+        .toSeq
+      assert(down.length === 1)
+      // the reverse page un-applies v1's edit: diffVersions(1, 0),
+      // labeled with the rolled-back-to version the cursor lands on
+      assert(rows(down.head) === rows(
+        Lake.diffVersions(spark, root, 1L, 0L, "id", "text")
+          .withColumn("v", lit(0L))))
+      assert(rows(down.head).map(t => (t._1, t._2, t._3)) ===
         Set((0L, "g0-0", "changed")))
+      assert(Lake.followChanges(spark, root, cursor, "id", "text") {
+        (df, end) => delivered += end -> rows(df) } === 1)
+      assert(delivered.last === (0L -> rows(down.head)))
     } finally cleanup(root)
   }
 
@@ -238,9 +261,15 @@ class LakeChangeFeedSpec extends SparkSuite {
       // rollback: one catch-down page, cursor moves DOWN with it
       Lake.rollbackTo(spark, root, 3L)
       var down = -1L
+      var downRows = Set.empty[FeedRow]
       assert(Lake.followChanges(spark, root, cursor, "id", "text") {
-        (df, end) => down = end; assert(df.count() > 0) } === 1)
-      assert(down === 3L)
+        (df, end) => down = end; downRows = rows(df) } === 1)
+      assert(down === 3L && downRows.nonEmpty)
+      // the catch-down page is the direct diff from the cursor's v6 to
+      // the rolled-back-to v3, labeled 3
+      assert(downRows === rows(
+        Lake.diffVersions(spark, root, 6L, 3L, "id", "text")
+          .withColumn("v", lit(3L))))
       assert(Lake.followChanges(spark, root, cursor, "id", "text") {
         (_, _) => fail("post-catch-down consumer got a page") } === 0)
     } finally {
@@ -294,9 +323,12 @@ class LakeChangeFeedSpec extends SparkSuite {
       "feed equals the one-plan feed, and its final plan holds only " +
       "materialized scans — no O(steps) live diff branches") {
     val root = tmp()
+    val cursor = s"${new java.io.File(root).getParent}/cursor"
     try {
       Lake.publishVersion(corpus("base", Seq("g0"), rows = 4), root,
         Seq("k"), Seq("id"), 1000L) // v0
+      assert(Lake.followChanges(spark, root, cursor, "id", "text") {
+        (_, _) => fail("tail-from-now delivered a page") } === 0)
       // 18 delta steps, each touching its own key (keep = wide horizon)
       for (v <- 1 to 18)
         Lake.publishDelta(
@@ -332,15 +364,16 @@ class LakeChangeFeedSpec extends SparkSuite {
       } finally mode.fold(
         spark.conf.unset("spark.graft.materialize"))(
         spark.conf.set("spark.graft.materialize", _))
-      // cursor form of the paged drain: same pages, cursor = current;
-      // a caught-up consumer gets an empty single page and no cursor move
-      val (pagedSince, cursor) = Lake.changesSincePaged(
-        spark, root, 0L, "id", "text", maxPlanSteps = 4)
-      assert(cursor === 18L)
-      assert(pagedSince.map(rows).reduce(_ ++ _) === rows(onePlan))
-      val (noNews, same) = Lake.changesSincePaged(
-        spark, root, 18L, "id", "text")
-      assert(same === 18L && noNews.map(_.count()).sum === 0L)
+      // the persisted-cursor drain: the same pages, the cursor lands on
+      // the current version, and a caught-up consumer gets nothing
+      val followed = scala.collection.mutable.ArrayBuffer[Set[FeedRow]]()
+      assert(Lake.followChanges(spark, root, cursor, "id", "text",
+          maxPlanSteps = 4) { (df, _) => followed += rows(df) } === 5)
+      assert(followed.reduce(_ ++ _) === rows(onePlan))
+      assert(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(cursor)).trim === "18")
+      assert(Lake.followChanges(spark, root, cursor, "id", "text") {
+        (_, _) => fail("caught-up consumer got a page") } === 0)
       // paged drain: lazy bounded plans, nothing pinned — the DR shape.
       // Concatenated pages equal the one-plan feed; every page plan is
       // live (no materialized scans) and bounded

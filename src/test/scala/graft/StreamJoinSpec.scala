@@ -262,6 +262,43 @@ class StreamJoinSpec extends SparkSuite {
       .deleteDirectory(new java.io.File(root))
   }
 
+  test("drainToParquet complete mode: a batch replayed against the same " +
+      "checkpoint rewrites its own snapshot — one snapshot dir is left") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_cmpr").toString
+    // three files → three micro-batches, each changing the running counts
+    Seq(Seq(("a", 1L), ("b", 2L)), Seq(("a", 3L), ("c", 4L)),
+        Seq(("b", 5L), ("c", 6L), ("d", 7L)))
+      .zipWithIndex.foreach { case (rows, i) =>
+        rows.toDF("k", "x").coalesce(1).write.parquet(s"$root/src/f$i") }
+    def drain(): Seq[(String, Long, Long)] =
+      streaming.CdcStream.drainToParquet(spark,
+          spark.readStream.schema("k STRING, x LONG")
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(s"$root/src")
+            .groupBy("k").agg(count(lit(1)).as("n"), sum("x").as("sx")),
+          workDir = Some(s"$root/run"), mode = "complete")
+        .as[(String, Long, Long)].collect().toSeq.sorted
+    def snapshotDirs(): Seq[String] =
+      new java.io.File(s"$root/run/out").listFiles()
+        .map(_.getName).filter(_.startsWith("graft_batch=")).toSeq
+    try {
+      val first = drain()
+      assert(first === Seq(("a", 2L, 4L), ("b", 2L, 7L), ("c", 2L, 10L),
+        ("d", 1L, 7L)))
+      assert(snapshotDirs() === Seq("graft_batch=2"))
+      // crash after batch 2's snapshot write, before its commit: the
+      // restart re-runs batch 2 from the offset log
+      val commits = new java.io.File(s"$root/run/ckpt/commits")
+      assert(new java.io.File(commits, "2").delete(), "no commit for batch 2")
+      new java.io.File(commits, ".2.crc").delete()
+      assert(drain() === first)
+      assert(snapshotDirs() === Seq("graft_batch=2"))
+    } finally org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(root))
+  }
+
   test("checkpoint recovery: a restarted join pairs new arrivals against " +
       "state buffered by the PREVIOUS run") {
     import spark.implicits._
