@@ -976,7 +976,7 @@ object ScaleSmoke {
         // nothing materialized, nothing pinned
         val (nPaged, tPaged) = timed {
           Lake.changesBetweenPaged(spark, lake, 0L, 50L, "doc_id", "text")
-            .map(_.count()).sum
+            .map(_._1.count()).sum
         }
         require(nPaged == n50,
           s"paged vs windowed feed disagree: $nPaged vs $n50")
@@ -999,7 +999,7 @@ object ScaleSmoke {
         val expected =
           if (rows050 >= 0) rows050
           else Lake.changesBetweenPaged(
-            spark, lake, 0L, 50L, "doc_id", "text").map(_.count()).sum
+            spark, lake, 0L, 50L, "doc_id", "text").map(_._1.count()).sum
         val cursor = s"$root/follow_cursor"
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(cursor), "0")

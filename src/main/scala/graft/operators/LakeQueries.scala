@@ -185,7 +185,7 @@ object LakeQueries extends QueryRegistry {
       import graft.Materialize.Ops
       Lake.changesBetweenPaged(s, root, 0L, 2L, "doc_id", "text",
           maxPlanSteps = 1)
-        .map(_.materializeForced())
+        .map(_._1.materializeForced())
         .reduce(_.unionByName(_))
     }),
     // [EXT] standing consumer loop (r16): followChanges drives the

@@ -48,7 +48,7 @@ object Lake {
   }
 
   /** The layout write alone (no manifest read-back): the shared write
-    * path of [[writeCurated]] and [[publishVersion]] — the latter must
+    * path of [[writeCurated]] and [[commitGeneration]] — the latter must
     * not silently pay a full generation scan per publish just to discard
     * the accounting ([[manifest]] counts rows by READING them; call it
     * explicitly when the accounting is wanted).
@@ -169,28 +169,39 @@ object Lake {
     * resolution is one level and retention reachability is one pass.
     */
   private def readRefs(fs: org.apache.hadoop.fs.FileSystem,
-      genPath: org.apache.hadoop.fs.Path): Map[String, Long] = {
-    val p = new org.apache.hadoop.fs.Path(genPath, RefsManifest)
-    try {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      s.linesIterator.filter(_.nonEmpty).map { l =>
+      genPath: org.apache.hadoop.fs.Path): Map[String, Long] =
+    readUtf8(fs, new org.apache.hadoop.fs.Path(genPath, RefsManifest))
+      .iterator.flatMap(_.linesIterator).filter(_.nonEmpty).map { l =>
         val i = l.lastIndexOf('\t')
         l.substring(0, i) -> l.substring(i + 1).toLong
       }.toMap
-    } catch { case _: java.io.FileNotFoundException => Map.empty }
-  }
 
   private def writeRefs(fs: org.apache.hadoop.fs.FileSystem,
-      genPath: org.apache.hadoop.fs.Path, refs: Map[String, Long]): Unit = {
-    val os = fs.create(
-      new org.apache.hadoop.fs.Path(genPath, RefsManifest), true)
-    try os.write(refs.toSeq.sortBy(_._1)
-      .map { case (rel, o) => s"$rel\t$o" }.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      genPath: org.apache.hadoop.fs.Path, refs: Map[String, Long]): Unit =
+    writeUtf8(fs, new org.apache.hadoop.fs.Path(genPath, RefsManifest),
+      refs.toSeq.sortBy(_._1).map { case (rel, o) => s"$rel\t$o" }
+        .mkString("\n"))
+
+  /** The one writer of the lake's small metadata files (pointers, `_REFS`,
+    * `_SCHEMA`, `_DIGEST`, `_BATCH`, `_SIZE`): `text` as UTF-8, replacing
+    * any file already at `p`. */
+  private def writeUtf8(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, text: String): Unit = {
+    val os = fs.create(p, true)
+    try os.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally os.close()
   }
+
+  /** [[writeUtf8]]'s reader: `p`'s text, None when it does not exist —
+    * absent, or renamed away between a caller's exists and open. Parsing
+    * and every other error are the caller's. */
+  private def readUtf8(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[String] =
+    try {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
 
   /** Retention with reference reachability: prune a generation at or
     * below the horizon ONLY if no retained generation's manifest
@@ -215,14 +226,7 @@ object Lake {
 
   private def readLong(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Option[Long] =
-    try {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      Some(s.toLong)
-    } catch { // absent, or renamed away between a caller's exists and open
-      case _: java.io.FileNotFoundException => None
-    }
+    readUtf8(fs, p).map(_.trim.toLong)
 
   /** Resolve pointer `name`: the committed file, else — during the two-
     * metadata-op rename window of a concurrent flip — its tmp, which is
@@ -297,10 +301,7 @@ object Lake {
   private def flipPointer(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, name: String, version: Long): Unit = {
     val tmp = new org.apache.hadoop.fs.Path(root, "." + name + ".tmp")
-    val os = fs.create(tmp, true)
-    try os.write(version.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
+    writeUtf8(fs, tmp, version.toString)
     val ptr = new org.apache.hadoop.fs.Path(root, name)
     if (fs.exists(ptr)) fs.delete(ptr, false) // local FS rename won't clobber
     if (!fs.rename(tmp, ptr)) throw new IllegalStateException(
@@ -332,108 +333,9 @@ object Lake {
     guarded(spark, rootDir) {
     val (fs, root) = fsOf(spark, rootDir)
     recoverPointers(fs, root)
-    checkSchemaPolicy(spark, rootDir, df, schemaPolicy, partitionCols): Unit
-    val high = highWater(fs, root)
-    // a generation above the high-water is a crashed publish that never
-    // committed — its files were never readable (pinned reads are capped
-    // at the high-water; the pointer never reached it), so deleting is
-    // safe under the single-writer contract. Generations BETWEEN the
-    // current pointer and the high-water (rolled-back-over) were
-    // published and stay until retention prunes them.
-    for ((v, p) <- genDirs(fs, root) if v > high.getOrElse(-1L))
-      fs.delete(p, true)
-    val next = high.getOrElse(-1L) + 1
-    // layout write only — no manifest read-back; a publisher wanting the
-    // per-partition accounting calls manifest(s"$root/v=$next") after
-    val (toWrite, expectObs, quarantine) =
-      expectationGate(df, expect, onViolation)
-    // the in-write digest and the ledger's row count ride the write
-    // job's metrics (zero extra jobs)
-    val obs = new WriteObs(toWrite, partitionCols, digest,
-      zOrder = zOrderCols.nonEmpty)
-    writeLayout(obs.frame, s"$rootDir/v=$next",
-      partitionCols, sortCols,
-      maxRecordsPerFile, zOrderCols, bloomFilterCols)
-    for (o <- expectObs) enforceExpectations(fs,
-      new org.apache.hadoop.fs.Path(root, s"v=$next"), o)
-    for (q <- quarantine) {
-      val qDir = new org.apache.hadoop.fs.Path(root,
-        s"v=$next/$QuarantineDir")
-      q.write.mode(SaveMode.Overwrite).parquet(qDir.toString)
-      // a clean publish carries NO quarantine (readQuarantine's loud
-      // "nothing was dropped" contract) — footer count, no column read
-      if (spark.read.parquet(qDir.toString).count() == 0L)
-        fs.delete(qDir, true): Unit
-    }
-    // refuse to ship a zero-data-file FULL generation — from an empty
-    // input OR a drop mode that quarantined every row: the pointer
-    // would serve an unreadable dir to every reader (deltas are exempt:
-    // an empty delta legitimately inherits everything through _REFS)
-    if (graft.GenSwap.leaves(fs,
-        new org.apache.hadoop.fs.Path(root, s"v=$next")).isEmpty) {
-      // the quarantine rows are the AUDIT of why the publish was
-      // refused — deleting them with the refused generation would
-      // destroy exactly the evidence drop mode exists to keep. Re-home
-      // them under the root's _QUARANTINE_REFUSED before the delete:
-      // keyed by the caller's genMarker when present (a streaming
-      // batch's replay overwrites its own copy — idempotent), else by
-      // a free attempt counter (v=next can repeat across refusals —
-      // a refused publish never bumps the high-water).
-      val qSrc = new org.apache.hadoop.fs.Path(root,
-        s"v=$next/$QuarantineDir")
-      val refusedAt = if (fs.exists(qSrc)) {
-        val home = new org.apache.hadoop.fs.Path(root, RefusedQuarantineDir)
-        fs.mkdirs(home)
-        val dst = genMarker match {
-          case Some(m) =>
-            val p = new org.apache.hadoop.fs.Path(home, s"m=$m")
-            if (fs.exists(p)) fs.delete(p, true): Unit
-            p
-          case None =>
-            Iterator.from(0).map(k =>
-              new org.apache.hadoop.fs.Path(home, s"v=${next}_a$k"))
-              .find(!fs.exists(_)).get
-        }
-        if (!fs.rename(qSrc, dst)) throw new java.io.IOException(
-          s"Lake: could not preserve the refused publish's quarantine " +
-            s"($qSrc -> $dst)")
-        Some(dst)
-      } else None
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"v=$next"), true): Unit
-      throw new RefusedPublishException(
-        "Lake: publish produced no data files (empty input, or every " +
-          "row quarantined by drop-mode expectations) — refusing to " +
-          "publish an unreadable empty generation; the pointer is " +
-          "unchanged" + refusedAt.fold("")(p =>
-            s"; the quarantined rows are preserved at $p"))
-    }
-    // a full generation's resolved schema is exactly its input's
-    writeSchemaFile(fs,
-      new org.apache.hadoop.fs.Path(root, s"v=$next"), df.schema)
-    if (digest) writeDigest(spark, fs, root,
-      new org.apache.hadoop.fs.Path(root, s"v=$next"), Map.empty,
-      precomputedOwn = obs.ownDigest)
-    // the caller's provenance marker (e.g. [[publishStream]]'s batch id)
-    // lands INSIDE the generation before the high-water flip, so a
-    // generation counted published always carries it — the replay-dedup
-    // protocol reads it through the same pointer ordering it writes
-    for (m <- genMarker) {
-      val os = fs.create(
-        new org.apache.hadoop.fs.Path(root, s"v=$next/$BatchMarker"), true)
-      try os.write(m.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally os.close()
-    }
-    // size ledger inside the generation before it counts as published
-    writeSizeFile(spark, fs, new org.apache.hadoop.fs.Path(root, s"v=$next"),
-      obs.rows)
-    // high-water first: from here v=next is complete-and-published even
-    // if the _CURRENT flip below never runs (it just never became
-    // current — the next publish allocates above it)
-    flipPointer(fs, root, HighPointer, next)
-    flipPointer(fs, root, CurrentPointer, next)
-    pruneRetained(fs, root, next, keep)
-    next
+    commitGeneration(df, rootDir, Full, partitionCols, sortCols,
+      maxRecordsPerFile, keep, genMarker, zOrderCols, bloomFilterCols,
+      schemaPolicy, digest, expect, onViolation)
     }
   }
 
@@ -451,23 +353,19 @@ object Lake {
     * References are flattened (each names the dir's physical owner), so
     * a read resolves in one level and retention keeps exactly the
     * ancestors still reachable from retained generations
-    * ([[pruneRetained]]). An absent partition means "inherit", so plain
-    * deltas cannot REMOVE a partition; `replaced` lists base partition
-    * dirs (relative paths) whose old content must NOT be inherited even
-    * if this delta wrote nothing there — the replacement semantics
-    * [[mergeDelta]] needs for delete-to-empty partitions. Crash windows
-    * are publishVersion's: the manifest lands inside the generation
-    * before the high-water flip, so an interrupted delta is an
-    * unpublished orphan.
+    * ([[pruneRetained]]). An absent partition means "inherit", so a
+    * delta cannot REMOVE a partition: the replacement rule for
+    * delete-to-empty partitions is [[mergeDelta]]'s. Crash windows are
+    * publishVersion's: the manifest lands inside the generation before
+    * the high-water flip, so an interrupted delta is an unpublished
+    * orphan.
     */
   def publishDelta(
       df: DataFrame, rootDir: String,
       partitionCols: Seq[String], sortCols: Seq[String],
       maxRecordsPerFile: Long, keep: Int = 3,
       genMarker: Option[Long] = None,
-      replaced: Set[String] = Set.empty,
       schemaPolicy: String = "additive",
-      baseMapHint: Option[(Long, Map[String, Long])] = None,
       digest: Boolean = false,
       expect: Seq[(String, Column)] = Nil,
       onViolation: String = "fail"): Long = {
@@ -481,76 +379,162 @@ object Lake {
     guarded(spark, rootDir) {
     val (fs, root) = fsOf(spark, rootDir)
     recoverPointers(fs, root)
-    val oldSchema =
-      checkSchemaPolicy(spark, rootDir, df, schemaPolicy, partitionCols)
-    val high = highWater(fs, root)
     val cur = readPointer(fs, root, CurrentPointer).getOrElse(
       throw new IllegalStateException(
         s"Lake: publishDelta needs a published base in $rootDir — " +
           "publish a full version first"))
-    for ((v, p) <- genDirs(fs, root) if v > high.getOrElse(-1L))
-      fs.delete(p, true)
-    val next = high.getOrElse(-1L) + 1
+    commitGeneration(df, rootDir,
+      Delta(resolved(fs, root, cur).getOrElse(Map.empty), Set.empty),
+      partitionCols, sortCols, maxRecordsPerFile, keep, genMarker, Nil, Nil,
+      schemaPolicy, digest, expect, onViolation)
+    }
+  }
+
+  /** What a [[commitGeneration]] records beside its own rows. A `Full`
+    * generation owns every dir it has. A `Delta` inherits `baseMap` (the
+    * base's resolved map: its own leaf dirs plus what it already
+    * inherited, each naming its physical owner) minus the dirs it writes
+    * and minus `replaced`: base dirs it must not inherit even where it
+    * wrote nothing.
+    */
+  private sealed trait GenKind
+  private case object Full extends GenKind
+  private final case class Delta(baseMap: Map[String, Long],
+      replaced: Set[String]) extends GenKind
+
+  /** The one generation commit behind [[publishVersion]],
+    * [[publishDelta]] and [[mergeDelta]], in the order the "Versioned
+    * publishing" crash windows rely on: the schema-policy check, orphan
+    * cleanup above the high-water, the layout write (expectations, the
+    * digest and the row count ride it), the quarantine, then `_SCHEMA`,
+    * `_DIGEST`, `_BATCH` and `_SIZE` inside the generation, and only then
+    * the `_HIGH` and `_CURRENT` flips and retention. The caller holds the
+    * root's guard and has recovered its pointers. Returns the new
+    * version.
+    */
+  private def commitGeneration(df: DataFrame, rootDir: String, kind: GenKind,
+      partitionCols: Seq[String], sortCols: Seq[String],
+      maxRecordsPerFile: Long, keep: Int, genMarker: Option[Long],
+      zOrderCols: Seq[String], bloomFilterCols: Seq[String],
+      schemaPolicy: String, digest: Boolean,
+      expect: Seq[(String, Column)], onViolation: String): Long = {
+    val spark = df.sparkSession
+    val (fs, root) = fsOf(spark, rootDir)
+    val oldSchema =
+      checkSchemaPolicy(spark, rootDir, df, schemaPolicy, partitionCols)
+    val high = highWater(fs, root).getOrElse(-1L)
+    // a generation above the high-water is a crashed publish that never
+    // committed — its files were never readable (pinned reads are capped
+    // at the high-water; the pointer never reached it), so deleting is
+    // safe under the single-writer contract. Generations BETWEEN the
+    // current pointer and the high-water (rolled-back-over) were
+    // published and stay until retention prunes them.
+    for ((v, p) <- genDirs(fs, root) if v > high) fs.delete(p, true)
+    val next = high + 1
     val nextPath = new org.apache.hadoop.fs.Path(root, s"v=$next")
-    // expectations see the delta's own rows; note drop mode publishes
-    // the clean subset — a partition whose EVERY delta row was
-    // quarantined is not rewritten and keeps inheriting its old content
+    // layout write only — no manifest read-back; a publisher wanting the
+    // per-partition accounting calls manifest(s"$root/v=$next") after.
+    // Expectations see the generation's own rows: a delta's drop mode
+    // publishes the clean subset, so a partition whose EVERY delta row
+    // was quarantined is not rewritten and keeps inheriting its old content
     val (toWrite, expectObs, quarantine) =
       expectationGate(df, expect, onViolation)
-    // in-write digest and row count ride the write job (see publishVersion)
-    val obs = new WriteObs(toWrite, partitionCols, digest, zOrder = false)
-    writeLayout(obs.frame, s"$rootDir/v=$next",
-      partitionCols, sortCols, maxRecordsPerFile)
+    // the in-write digest and the ledger's row count ride the write
+    // job's metrics (zero extra jobs)
+    val obs = new WriteObs(toWrite, partitionCols, digest,
+      zOrder = zOrderCols.nonEmpty)
+    writeLayout(obs.frame, s"$rootDir/v=$next", partitionCols, sortCols,
+      maxRecordsPerFile, zOrderCols, bloomFilterCols)
     for (o <- expectObs) enforceExpectations(fs, nextPath, o)
     for (q <- quarantine) {
       val qDir = new org.apache.hadoop.fs.Path(nextPath, QuarantineDir)
       q.write.mode(SaveMode.Overwrite).parquet(qDir.toString)
+      // a clean publish carries NO quarantine (readQuarantine's loud
+      // "nothing was dropped" contract) — footer count, no column read
       if (spark.read.parquet(qDir.toString).count() == 0L)
         fs.delete(qDir, true): Unit
     }
-    val changed = graft.GenSwap.leaves(fs, nextPath)
-      .collect { case (rel, true) => rel }.toSet
-    // the base's resolved partition map: its own physical leaves plus
-    // what it already inherited — minus what this delta rewrites
-    // the caller (mergeDelta) may have just walked the same generation
-    // to plan its replacements — reuse that listing instead of a second
-    // recursive walk, but only if it names THIS base version (defensive
-    // under the single-writer contract, free to check)
-    val baseMap = baseMapHint match {
-      case Some((v, m)) if v == cur => m
-      case _ => resolved(fs, root, cur).getOrElse(Map.empty)
-    }
-    val inherited = baseMap -- changed -- replaced
-    writeRefs(fs, nextPath, inherited)
-    if (digest) writeDigest(spark, fs, root, nextPath, inherited,
-      precomputedOwn = obs.ownDigest)
-    // the delta's RESOLVED schema = its own columns plus what it still
-    // inherits (the policy check proved compatibility); recordable only
-    // when the old schema was consulted — under policy "any" the
-    // resolution is the reader's business and later checks fall back to
-    // readVersion
-    for (old <- oldSchema) {
-      val ownNames = df.schema.fieldNames.toSet
-      writeSchemaFile(fs, nextPath,
-        org.apache.spark.sql.types.StructType(
+    val (schema, refs) = kind match {
+      case Full =>
+        // refuse to ship a zero-data-file FULL generation — from an empty
+        // input OR a drop mode that quarantined every row: the pointer
+        // would serve an unreadable dir to every reader (deltas are
+        // exempt: an empty delta legitimately inherits everything
+        // through _REFS)
+        if (graft.GenSwap.leaves(fs, nextPath).isEmpty) {
+          // the quarantine rows are the AUDIT of why the publish was
+          // refused — deleting them with the refused generation would
+          // destroy exactly the evidence drop mode exists to keep.
+          // Re-home them under the root's _QUARANTINE_REFUSED before the
+          // delete: keyed by the caller's genMarker when present (a
+          // streaming batch's replay overwrites its own copy —
+          // idempotent), else by a free attempt counter (v=next can
+          // repeat across refusals — a refused publish never bumps the
+          // high-water).
+          val qSrc = new org.apache.hadoop.fs.Path(nextPath, QuarantineDir)
+          val refusedAt = if (fs.exists(qSrc)) {
+            val home =
+              new org.apache.hadoop.fs.Path(root, RefusedQuarantineDir)
+            fs.mkdirs(home)
+            val dst = genMarker match {
+              case Some(m) =>
+                val p = new org.apache.hadoop.fs.Path(home, s"m=$m")
+                if (fs.exists(p)) fs.delete(p, true): Unit
+                p
+              case None =>
+                Iterator.from(0).map(k =>
+                  new org.apache.hadoop.fs.Path(home, s"v=${next}_a$k"))
+                  .find(!fs.exists(_)).get
+            }
+            if (!fs.rename(qSrc, dst)) throw new java.io.IOException(
+              s"Lake: could not preserve the refused publish's quarantine " +
+                s"($qSrc -> $dst)")
+            Some(dst)
+          } else None
+          fs.delete(nextPath, true): Unit
+          throw new RefusedPublishException(
+            "Lake: publish produced no data files (empty input, or every " +
+              "row quarantined by drop-mode expectations) — refusing to " +
+              "publish an unreadable empty generation; the pointer is " +
+              "unchanged" + refusedAt.fold("")(p =>
+                s"; the quarantined rows are preserved at $p"))
+        }
+        // a full generation's resolved schema is exactly its input's
+        (Some(df.schema), Map.empty[String, Long])
+      case Delta(baseMap, replaced) =>
+        val changed = graft.GenSwap.leaves(fs, nextPath)
+          .collect { case (rel, true) => rel }.toSet
+        val inherited = baseMap -- changed -- replaced
+        writeRefs(fs, nextPath, inherited)
+        // the delta's RESOLVED schema = its own columns plus what it
+        // still inherits (the policy check proved compatibility);
+        // recordable only when the old schema was consulted — under
+        // policy "any" the resolution is the reader's business and later
+        // checks fall back to readVersion
+        val ownNames = df.schema.fieldNames.toSet
+        (oldSchema.map(old => org.apache.spark.sql.types.StructType(
           df.schema.fields ++ old.fields.filterNot(f =>
-            ownNames.contains(f.name))))
+            ownNames.contains(f.name)))), inherited)
     }
-    // provenance marker before the high-water flip — see publishVersion
-    for (m <- genMarker) {
-      val os = fs.create(
-        new org.apache.hadoop.fs.Path(nextPath, BatchMarker), true)
-      try os.write(m.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally os.close()
-    }
-    // size ledger — see publishVersion
+    for (s <- schema) writeSchemaFile(fs, nextPath, s)
+    // digest donors: the inherited dirs' entries copy from their owners
+    if (digest) writeDigest(spark, fs, root, nextPath, refs,
+      precomputedOwn = obs.ownDigest)
+    // the caller's provenance marker (e.g. [[publishStream]]'s batch id)
+    // lands INSIDE the generation before the high-water flip, so a
+    // generation counted published always carries it — the replay-dedup
+    // protocol reads it through the same pointer ordering it writes
+    for (m <- genMarker) writeUtf8(fs,
+      new org.apache.hadoop.fs.Path(nextPath, BatchMarker), m.toString)
+    // size ledger inside the generation before it counts as published
     writeSizeFile(spark, fs, nextPath, obs.rows)
+    // high-water first: from here v=next is complete-and-published even
+    // if the _CURRENT flip below never runs (it just never became
+    // current — the next publish allocates above it)
     flipPointer(fs, root, HighPointer, next)
     flipPointer(fs, root, CurrentPointer, next)
     pruneRetained(fs, root, next, keep)
     next
-    }
   }
 
   /** MERGE a keyed changelog into the versioned lake — the CDC-to-lake
@@ -576,8 +560,10 @@ object Lake {
     * absent from the changelog is untouched; `upsert` inserts or fully
     * replaces the row; `delete` removes it (a delete for an absent key
     * is a no-op, matching the CDC state machine). A partition whose
-    * every row is deleted is REMOVED from the new generation (the
-    * `replaced` discipline of [[publishDelta]]), not inherited back.
+    * every row is deleted is REMOVED from the new generation, not
+    * inherited back: the merge owns the replacement rule — every base
+    * dir of a touched partition is replaced by what the merge wrote
+    * there, possibly nothing.
     * Additive schema drift rides the delta reader: upserts may carry
     * new columns; inherited/surviving rows read them as NULL.
     *
@@ -609,6 +595,7 @@ object Lake {
       digest: Boolean = false,
       expect: Seq[(String, Column)] = Nil,
       onViolation: String = "fail"): Long = {
+    require(keep >= 1, "keep must retain at least the current generation")
     require(pkCols.nonEmpty, "mergeDelta needs the changelog's key columns")
     require(partitionCols.nonEmpty,
       "mergeDelta's replacement unit is the partition dir — " +
@@ -662,7 +649,7 @@ object Lake {
         .map(r => partitionCols.indices.map(i =>
           Option(r.getString(i))).toSeq)
     // the base's resolved map, listed once: it plans the base read here
-    // and the replaced dirs below, and rides to publishDelta as its hint
+    // and the replaced dirs below, and is the commit's delta base
     val baseMap = resolved(fs, root, cur)
     val baseAll = readResolved(spark, fs, root, cur, baseMap)
     val touched: Seq[Seq[Option[String]]] =
@@ -756,10 +743,10 @@ object Lake {
     val touchedSet = touched.toSet
     val replaced = baseDirs.keySet.filter(rel =>
       relPartitionValues(rel, partitionCols).exists(touchedSet.contains))
-    publishDelta(merged, rootDir, partitionCols, sortCols,
-      maxRecordsPerFile, keep, genMarker, replaced,
-      baseMapHint = Some(cur -> baseDirs), digest = digest,
-      expect = expect, onViolation = onViolation)
+    if (digest) validateDigestArgs(partitionCols, merged.columns.toSeq)
+    commitGeneration(merged, rootDir, Delta(baseDirs, replaced),
+      partitionCols, sortCols, maxRecordsPerFile, keep, genMarker, Nil, Nil,
+      "additive", digest, expect, onViolation)
     }
   }
 
@@ -1839,10 +1826,7 @@ object Lake {
         case (rel, (n, x), _) =>
           s"$n\t$x\t${java.net.URLEncoder.encode(rel, "UTF-8")}"
       }).mkString("\n")
-      val os = fs.create(
-        new org.apache.hadoop.fs.Path(genPath, DigestFile), true)
-      try os.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally os.close()
+      writeUtf8(fs, new org.apache.hadoop.fs.Path(genPath, DigestFile), body)
     }
   }
 
@@ -1868,23 +1852,16 @@ object Lake {
   private def readDigest(fs: org.apache.hadoop.fs.FileSystem,
       genPath: org.apache.hadoop.fs.Path)
       : Option[(String, Map[String, (Long, Long)])] =
-    try {
-      val in = fs.open(new org.apache.hadoop.fs.Path(genPath, DigestFile))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val lines = s.linesIterator.toSeq
-      if (lines.length < 2) None
-      else {
+    try readUtf8(fs, new org.apache.hadoop.fs.Path(genPath, DigestFile))
+      .map(_.linesIterator.toSeq).filter(_.length >= 2).map { lines =>
         val fp = java.net.URLDecoder.decode(lines(0), "UTF-8")
-        val entries = lines.drop(1).filter(_.nonEmpty).map { l =>
+        fp -> lines.drop(1).filter(_.nonEmpty).map { l =>
           val f = l.split('\t')
           java.net.URLDecoder.decode(f(2), "UTF-8") ->
             (f(0).toLong, f(1).toLong)
         }.toMap
-        Some((fp, entries))
       }
-    } catch {
-      case _: java.io.FileNotFoundException => None
+    catch {
       // an unparseable digest (pre-rel-format writer, corruption) must
       // degrade to "no digest" — the skip is an optimization, never a
       // correctness dependency
@@ -1898,24 +1875,16 @@ object Lake {
     */
   private def writeSchemaFile(fs: org.apache.hadoop.fs.FileSystem,
       genPath: org.apache.hadoop.fs.Path,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val os = fs.create(
-      new org.apache.hadoop.fs.Path(genPath, SchemaFile), true)
-    try os.write(schema.json
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-  }
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    writeUtf8(fs, new org.apache.hadoop.fs.Path(genPath, SchemaFile),
+      schema.json)
 
   private def readSchemaFile(fs: org.apache.hadoop.fs.FileSystem,
       genPath: org.apache.hadoop.fs.Path)
       : Option[org.apache.spark.sql.types.StructType] =
-    try {
-      val in = fs.open(new org.apache.hadoop.fs.Path(genPath, SchemaFile))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(s)
+    readUtf8(fs, new org.apache.hadoop.fs.Path(genPath, SchemaFile))
+      .map(org.apache.spark.sql.types.DataType.fromJson(_)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
-    } catch { case _: java.io.FileNotFoundException => None }
 
   /** `schema` as parquet reports it back: every field nullable (file
     * sources read everything nullable) and char/varchar as string (the
@@ -2063,26 +2032,20 @@ object Lake {
 
   private def writeSizeEntries(fs: org.apache.hadoop.fs.FileSystem,
       genPath: org.apache.hadoop.fs.Path,
-      nf: Long, nb: Long, nRows: Long): Unit = {
-    val os = fs.create(new org.apache.hadoop.fs.Path(genPath, SizeFile), true)
-    try os.write(s"$nf $nb $nRows\n"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-  }
+      nf: Long, nb: Long, nRows: Long): Unit =
+    writeUtf8(fs, new org.apache.hadoop.fs.Path(genPath, SizeFile),
+      s"$nf $nb $nRows\n")
 
   private def readSizeFile(fs: org.apache.hadoop.fs.FileSystem,
       genPath: org.apache.hadoop.fs.Path): Option[(Long, Long, Long)] =
-    try {
-      val in = fs.open(new org.apache.hadoop.fs.Path(genPath, SizeFile))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      s.trim.split("\\s+") match {
+    try readUtf8(fs, new org.apache.hadoop.fs.Path(genPath, SizeFile))
+      .flatMap(_.trim.split("\\s+") match {
         case Array(a, b, c) =>
           for (x <- a.toLongOption; y <- b.toLongOption; z <- c.toLongOption)
             yield (x, y, z)
         case _ => None
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+      })
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** Read one immutable generation: the pointer's (default) or a pinned
     * `version` (time travel — reproduce exactly what a past training run
@@ -2260,22 +2223,24 @@ object Lake {
   }
 
   /** The feed as a LAZY page iterator for a consumer that keeps its own
-    * cursor: one DataFrame per `maxPlanSteps`-wide window of feed steps,
-    * each a bounded fresh plan over live files — no materialization, no
-    * pinned blocks, no eager compute at construction. This is the
-    * DR/catch-up shape: process a page, commit your cursor, next(). The
-    * concatenation of all pages equals `changesBetween(from, to)`
-    * row-for-row (pages partition the same per-step diffs); `from ==
-    * to` is one empty page. `from > to` — the cursor is above the
-    * pointer after a [[rollbackTo]] — is the one catch-down page
-    * [[followChanges]] delivers.
+    * cursor: one `(page, endVersion)` per `maxPlanSteps`-wide window of
+    * feed steps, each page a bounded fresh plan over live files — no
+    * materialization, no pinned blocks, no eager compute at
+    * construction. This is the DR/catch-up shape: process a page, commit
+    * its `endVersion` as your cursor, next(). The concatenation of all
+    * pages equals `changesBetween(from, to)` row-for-row (pages
+    * partition the same per-step diffs); a forward page ends at
+    * `min(lo + maxPlanSteps, to)`. `from == to` is one empty page ending
+    * at `to`. `from > to` — the cursor is above the pointer after a
+    * [[rollbackTo]] — is the one catch-down page [[followChanges]]
+    * delivers, also ending at `to`.
     */
   def changesBetweenPaged(spark: SparkSession, rootDir: String,
       fromVersion: Long, toVersion: Long,
       idCol: String, contentCol: String,
-      maxPlanSteps: Int = 16): Iterator[DataFrame] =
+      maxPlanSteps: Int = 16): Iterator[(DataFrame, Long)] =
     feedPages(spark, rootDir, fromVersion, toVersion, idCol, contentCol,
-      maxPlanSteps).map(_._1)
+      maxPlanSteps)
 
   /** The one change-feed reader behind [[changesBetween]],
     * [[changesBetweenPaged]] and [[followChanges]]: lazy pages of
@@ -2791,70 +2756,66 @@ object Lake {
       maxRecordsPerFile: Long, keep: Int, batchId: Long,
       delta: Boolean = false, digest: Boolean = false,
       expect: Seq[(String, Column)] = Nil,
-      onViolation: String = "fail"): Unit = {
-    val spark = batch.sparkSession
-    // the guard spans the replay check AND the publish (the replay check
-    // recovers/flips pointers); the inner acquire is reentrant
-    guarded(spark, rootDir) {
-      val (fs, root) = fsOf(spark, rootDir)
-      recoverPointers(fs, root)
-      // AvailableNow ends with a trailing empty batch — an empty drop is
-      // not a dataset version, skip it (the marker is untouched, so a
-      // replayed empty batch skips again)
-      if (!replayedBatch(fs, root, batchId) && !batch.isEmpty) {
-        // expectation note for streams: fail-mode rejection throws inside
-        // foreachBatch and FAILS THE QUERY (a poison batch must not be
-        // silently skipped — the checkpoint keeps the offset, so the fixed
-        // producer replays the same batch); drop-mode quarantines per drop
-        if (delta)
-          publishDelta(batch, rootDir, partitionCols, sortCols,
+      onViolation: String = "fail"): Unit =
+    unlessReplayed(batch, rootDir, batchId) {
+      // expectation note for streams: fail-mode rejection throws inside
+      // foreachBatch and FAILS THE QUERY (a poison batch must not be
+      // silently skipped — the checkpoint keeps the offset, so the fixed
+      // producer replays the same batch); drop-mode quarantines per drop
+      if (delta)
+        publishDelta(batch, rootDir, partitionCols, sortCols,
+          maxRecordsPerFile, keep, genMarker = Some(batchId),
+          digest = digest, expect = expect, onViolation = onViolation): Unit
+      else
+        try
+          publishVersion(batch, rootDir, partitionCols, sortCols,
             maxRecordsPerFile, keep, genMarker = Some(batchId),
             digest = digest, expect = expect, onViolation = onViolation): Unit
-        else
-          try
-            publishVersion(batch, rootDir, partitionCols, sortCols,
-              maxRecordsPerFile, keep, genMarker = Some(batchId),
-              digest = digest, expect = expect, onViolation = onViolation): Unit
-          catch {
-            // drop mode's contract is PROGRESS past bad rows. A full
-            // publish whose EVERY row was quarantined is refused (an
-            // empty full generation is unreadable), and without this
-            // guard the refusal would fail the query and replay the
-            // same poison batch forever — despite drop mode being
-            // chosen precisely to keep going. The quarantine audit is
-            // preserved under _QUARANTINE_REFUSED/m=<batchId> (replay-
-            // idempotent) by publishVersion itself; skip the batch
-            // LOUDLY and let the stream advance. Fail mode keeps the
-            // poison-batch stop semantics. Matched by TYPE (r16 advice):
-            // a reworded refusal message cannot break drop-mode progress.
-            case e: RefusedPublishException if onViolation == "drop" =>
-              System.err.println(
-                s"[lake] publishStream batch $batchId: every row " +
-                  s"quarantined — batch skipped, audit preserved " +
-                  s"(${e.getMessage})")
-          }
-      }
+        catch {
+          // drop mode's contract is PROGRESS past bad rows. A full
+          // publish whose EVERY row was quarantined is refused (an
+          // empty full generation is unreadable), and without this
+          // guard the refusal would fail the query and replay the
+          // same poison batch forever — despite drop mode being
+          // chosen precisely to keep going. The quarantine audit is
+          // preserved under _QUARANTINE_REFUSED/m=<batchId> (replay-
+          // idempotent) by publishVersion itself; skip the batch
+          // LOUDLY and let the stream advance. Fail mode keeps the
+          // poison-batch stop semantics. Matched by TYPE (r16 advice):
+          // a reworded refusal message cannot break drop-mode progress.
+          case e: RefusedPublishException if onViolation == "drop" =>
+            System.err.println(
+              s"[lake] publishStream batch $batchId: every row " +
+                s"quarantined — batch skipped, audit preserved " +
+                s"(${e.getMessage})")
+        }
     }
-  }
 
-  /** Replay guard shared by every streaming lake writer: true iff this
-    * batch's generation already committed before a crash (or this is an
-    * older batch's replay) — in which case nothing republishes and at
-    * most the interrupted `_CURRENT` flip completes so the committed
-    * drop is actually current.
+  /** Replay guard shared by every streaming lake writer: runs `publish`
+    * under the root's guard — spanning the replay check AND the publish,
+    * since the check recovers and flips pointers; the publish's inner
+    * acquire is reentrant — unless the batch is a replay or empty. A
+    * replay is a batch whose generation already committed before a crash
+    * (or an older batch's): nothing republishes, and at most the
+    * interrupted `_CURRENT` flip completes so the committed drop is
+    * actually current. AvailableNow ends with a trailing empty batch —
+    * an empty drop is not a dataset version, so it is skipped (the
+    * marker is untouched, so a replayed empty batch skips again).
     */
-  private def replayedBatch(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, batchId: Long): Boolean = {
-    val high = highWater(fs, root)
-    val highStamp = high.flatMap(v => readLong(fs,
-      new org.apache.hadoop.fs.Path(root, s"v=$v/$BatchMarker")))
-    if (highStamp.exists(_ >= batchId)) {
-      if (highStamp.contains(batchId) &&
-          readPointer(fs, root, CurrentPointer) != high)
-        flipPointer(fs, root, CurrentPointer, high.get)
-      true
-    } else false
-  }
+  private def unlessReplayed(batch: DataFrame, rootDir: String,
+      batchId: Long)(publish: => Unit): Unit =
+    guarded(batch.sparkSession, rootDir) {
+      val (fs, root) = fsOf(batch.sparkSession, rootDir)
+      recoverPointers(fs, root)
+      val high = highWater(fs, root)
+      val highStamp = high.flatMap(v => readLong(fs,
+        new org.apache.hadoop.fs.Path(root, s"v=$v/$BatchMarker")))
+      if (highStamp.exists(_ >= batchId)) {
+        if (highStamp.contains(batchId) &&
+            readPointer(fs, root, CurrentPointer) != high)
+          flipPointer(fs, root, CurrentPointer, high.get)
+      } else if (!batch.isEmpty) publish
+    }
 
   /** Continuous MERGE: every non-empty micro-batch of `changes` (a
     * STREAMING changelog — the CDC pipeline's netted actions) applies
@@ -2904,17 +2865,11 @@ object Lake {
       digest: Boolean = false,
       expect: Seq[(String, Column)] = Nil,
       onViolation: String = "fail"): Unit =
-    // the guard spans the replay check AND the merge: the replay check
-    // itself recovers/flips pointers, and the reentrant inner acquire in
-    // mergeDelta is free
-    guarded(batch.sparkSession, rootDir) {
-      val (fs, root) = fsOf(batch.sparkSession, rootDir)
-      recoverPointers(fs, root)
-      if (!replayedBatch(fs, root, batchId) && !batch.isEmpty)
-        mergeDelta(batch, rootDir, pkCols, partitionCols, sortCols,
-          maxRecordsPerFile, keep, opCol, seqCol, probeMovers = false,
-          genMarker = Some(batchId), digest = digest,
-          expect = expect, onViolation = onViolation): Unit
+    unlessReplayed(batch, rootDir, batchId) {
+      mergeDelta(batch, rootDir, pkCols, partitionCols, sortCols,
+        maxRecordsPerFile, keep, opCol, seqCol, probeMovers = false,
+        genMarker = Some(batchId), digest = digest,
+        expect = expect, onViolation = onViolation): Unit
     }
 
   /** Per-partition accounting of what landed: file/row/byte counts from

@@ -145,9 +145,9 @@ class LakeChangeFeedSpec extends SparkSuite {
           .unionByName(corpus("a", Seq("g0"))
             .filter(col("id") =!= "g0-0")),
         root, Seq("k"), Seq("id"), 1000L) // v1
-      val adv = Lake.changesBetweenPaged(spark, root, 0L, 1L, "id", "text")
-        .toSeq
-      assert(adv.length === 1)
+      val (adv, advEnds) = Lake.changesBetweenPaged(spark, root, 0L, 1L,
+        "id", "text").toSeq.unzip
+      assert(adv.length === 1 && advEnds === Seq(1L))
       assert(rows(adv.head).map(t => (t._1, t._2, t._3)) ===
         Set((1L, "g0-0", "changed")))
       val delivered =
@@ -157,13 +157,15 @@ class LakeChangeFeedSpec extends SparkSuite {
       assert(delivered.toSeq === Seq(1L -> rows(adv.head)))
       val none = Lake.changesBetweenPaged(spark, root, 1L, 1L, "id", "text")
         .toSeq
-      assert(none.length === 1 && none.head.count() === 0L)
+      assert(none.length === 1 && none.head._1.count() === 0L)
+      assert(none.head._2 === 1L, "the from == to page ends at to")
       assert(Lake.followChanges(spark, root, cursor, "id", "text") {
         (_, _) => fail("caught-up consumer got a page") } === 0)
       Lake.rollbackTo(spark, root, 0L)
-      val down = Lake.changesBetweenPaged(spark, root, 1L, 0L, "id", "text")
-        .toSeq
-      assert(down.length === 1)
+      val (down, downEnds) = Lake.changesBetweenPaged(spark, root, 1L, 0L,
+        "id", "text").toSeq.unzip
+      assert(down.length === 1 && downEnds === Seq(0L),
+        "the rollback page ends at to")
       // the reverse page un-applies v1's edit: diffVersions(1, 0),
       // labeled with the rolled-back-to version the cursor lands on
       assert(rows(down.head) === rows(
@@ -377,9 +379,11 @@ class LakeChangeFeedSpec extends SparkSuite {
       // paged drain: lazy bounded plans, nothing pinned — the DR shape.
       // Concatenated pages equal the one-plan feed; every page plan is
       // live (no materialized scans) and bounded
-      val pages = Lake.changesBetweenPaged(spark, root, 0L, 18L,
-        "id", "text", maxPlanSteps = 4).toSeq
+      val (pages, ends) = Lake.changesBetweenPaged(spark, root, 0L, 18L,
+        "id", "text", maxPlanSteps = 4).toSeq.unzip
       assert(pages.length === 5)
+      // each forward page ends at min(lo + maxPlanSteps, to)
+      assert(ends === (0L until 18L by 4L).map(lo => math.min(lo + 4L, 18L)))
       assert(pages.map(rows).reduce(_ ++ _) === rows(onePlan))
       for (p <- pages) {
         val ls = p.queryExecution.optimizedPlan.collectLeaves()

@@ -11,12 +11,13 @@ import org.apache.spark.sql.functions._
   * maps, pointer, high-water, on-disk set). After EVERY op the suite
   * checks: the current read, a pinned read of a random readable
   * version, and the change feed over a random readable range all equal
-  * the model; every vacuum's decision ledger equals the model's
-  * protection rule. The per-op specs pin each operator alone; this pins
-  * their COMPOSITION — rollback-then-publish numbering, delta chains
-  * over merged generations, vacuum under a rolled-back pointer, feeds
-  * spanning mixed full/delta/merge steps — where protocol bugs actually
-  * live.
+  * the model; every on-disk generation's `history` row carries the
+  * model's inherited-dir count and own row count; every vacuum's
+  * decision ledger equals the model's protection rule. The per-op
+  * specs pin each operator alone; this pins their COMPOSITION —
+  * rollback-then-publish numbering, delta chains over merged
+  * generations, vacuum under a rolled-back pointer, feeds spanning
+  * mixed full/delta/merge steps — where protocol bugs actually live.
   *
   * Readability note: a donor delta retained by vacuum ONLY as a
   * referenced physical holder may legitimately be un-pinnable (its own
@@ -218,6 +219,24 @@ class LakeProtocolFuzzSpec extends SparkSuite {
               .map { case (id, c) => (v, id, c) }).toSet
           assert(feed === want,
             s"step $step: feed $from..$to != model")
+        }
+        // every on-disk generation's recorded metadata equals the model:
+        // `_REFS` (n_refs = partitions another generation owns) and
+        // `_SIZE` (n_rows = rows of the partitions it owns itself), for
+        // full, delta, merge and drop-mode merge generations and after
+        // compact's ledger refresh
+        val hist = Lake.history(spark, root)
+          .select("v", "n_refs", "n_rows").collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+        assert(hist.keySet === onDisk,
+          s"step $step: history covers ${hist.keySet}, model expects $onDisk")
+        for (v <- onDisk) {
+          val own = owners(v)
+          val want = (own.count(_._2 != v).toLong,
+            contents(v).keysIterator
+              .count(id => own.get(partOf(id)).contains(v)).toLong)
+          assert(hist(v) === want,
+            s"step $step: history (n_refs, n_rows) of v=$v != model")
         }
       }
       assert(ran === (0 until 8).toSet, "the seed must exercise every op")
