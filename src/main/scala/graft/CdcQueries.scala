@@ -1,6 +1,5 @@
 package graft
 
-import graft.Materialize.Ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,20 +30,12 @@ object CdcQueries extends QueryRegistry {
 
   /** Shared roundtrip verification aggregate: the changelog written to a
     * format and read back must reproduce these per-(table, action) sums.
-    * The aggregate is materialized eagerly (localCheckpoint) so the temp
-    * files can be deleted before the query result is consumed — no
-    * accumulating changelog copies under the temp root across runs.
     */
-  private def roundtripAgg(back: DataFrame, tmp: String): DataFrame = {
-    val agg = back.groupBy("table", "cdc_action")
+  private def roundtripAgg(back: DataFrame): DataFrame =
+    back.groupBy("table", "cdc_action")
       .agg(count(lit(1)).as("n"),
         sum(col("seq").cast("long")).as("sum_seq"),
         round(sum(col("value").cast("double")), 2).as("sum_value"))
-      .materializeForced() // tmp is deleted next line — lineage must sever
-                           // in EVERY mode, including none
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    agg
-  }
 
   private val roundtripOracle =
     s"""SELECT "table", cdc_action, count(*) AS n,
@@ -160,14 +151,9 @@ object CdcQueries extends QueryRegistry {
     // A1/K6 ext: offline state-store introspection — the merge fold's
     // persisted state read back through the `statestore` data source
     // must equal the batch compact (same oracle text as cdc_compact)
-    "cdc_state_inspect" -> ((s, dir) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_insp").toString
-      val res = streaming.CdcStream.stateInspect(s, dir, ckpt)
-        .materializeForced()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
-      res
-    }),
+    "cdc_state_inspect" -> ((s, dir) =>
+      Materialize.scratch("graft_insp")(
+        streaming.CdcStream.stateInspect(s, dir, _))),
     // §2.8 ext: STREAM-STREAM interval join (watermark-bounded join
     // state) — errors paired with same-user activity in the preceding 6 h;
     // oracle = the equivalent batch interval self-join
@@ -205,39 +191,33 @@ object CdcQueries extends QueryRegistry {
     "events_burst_warm" -> ((s, dir) =>
       streaming.CdcStream.burstAlertsWarmStreamed(s, dir)),
     // K2+S8+F8: CSV sink → source roundtrip preserves the changelog
-    "csv_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_csv").toString
+    "csv_roundtrip" -> ((s, dir) => Materialize.scratch("graft_csv") { tmp =>
       val ch = CdcBatch.changeLog(s, dir).withColumn("dt", lit("20260812"))
       sources.Csv.dumpCsv(ch, tmp, 1000000L)
-      roundtripAgg(sources.Csv.loadCsv(s, tmp), tmp)
+      roundtripAgg(sources.Csv.loadCsv(s, tmp))
     }),
     // S8-class format width: JSON-lines sink → source roundtrip preserves
     // the changelog (schema given explicitly on read — a JSON lake never
     // relies on inference at 100 TB). Oracle = the same aggregate straight
     // from the parquet-backed changelog.
-    "json_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_json").toString
+    "json_roundtrip" -> ((s, dir) => Materialize.scratch("graft_json") { tmp =>
       val ch = CdcBatch.changeLog(s, dir)
       ch.write.mode("overwrite").json(tmp)
-      roundtripAgg(s.read.schema(ch.schema).json(tmp), tmp)
+      roundtripAgg(s.read.schema(ch.schema).json(tmp))
     }),
     // S8-class format width: columnar ORC sink → source roundtrip (the
     // other native columnar format next to parquet; schema travels in the
     // file footer like parquet's)
-    "orc_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_orc").toString
+    "orc_roundtrip" -> ((s, dir) => Materialize.scratch("graft_orc") { tmp =>
       CdcBatch.changeLog(s, dir).write.mode("overwrite").orc(tmp)
-      roundtripAgg(s.read.orc(tmp), tmp)
+      roundtripAgg(s.read.orc(tmp))
     }),
     // K1 end-to-end: the PRODUCTION sink path — stream → keyed merge →
     // bucketed parquet state with dynamic partition overwrite — run to
     // completion; the final state-dir contents must equal the batch
     // compact (same oracle as cdc_compact). This puts the deploy-shape
     // pipeline, not just its operators, under the hash gate.
-    "cdc_state_sink" -> ((s, dir) => {
+    "cdc_state_sink" -> ((s, dir) => Materialize.scratch("graft_sink") { tmp =>
       // state geometry: the fMGWS merge's state is O(live keys) — size
       // its shuffle to spark.graft.statePartitions via the scoped
       // session (every other stateful gate's discipline), instead of
@@ -246,19 +226,13 @@ object CdcQueries extends QueryRegistry {
       // (64 buckets was ~2× file-op overhead at sf0.1; layout is
       // invisible to the read-back).
       val ss = streaming.CdcStream.stateScopedSession(s)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sink").toString
       val q = streaming.CdcStream.run(ss,
         streaming.CdcStream.changeLogStream(ss, dir),
         s"$tmp/state", s"$tmp/ckpt", nBuckets = 16)
       q.processAllAvailable(); q.stop()
-      val res = ss.read.parquet(s"$tmp/state")
+      ss.read.parquet(s"$tmp/state")
         .select("table", "rid", "cdc_action", "seq", "cdc_ts", "value",
           "props")
-        .materializeForced() // the temp state dir is deleted next —
-                             // required in every mode, including none
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      res
     }),
     // K1/A7 end-to-end UNDER THE HASH GATE: the untyped EVOLVING sink
     // path across a real checkpoint restart straddling an additive schema
@@ -270,41 +244,37 @@ object CdcQueries extends QueryRegistry {
     // sim_neardup/stream pattern). Restart-resume, per-batch stored-state
     // seeding, high-water replay guard, and none-tombstone filtering are
     // all on the hash path here, not just in specs.
-    "cdc_state_sink_evolving" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sink_ev").toString
-      val src = s"$tmp/src"
-      val ch = changelogWithK(s, dir) // session-shared split-changelog
-                                      // artifact (see its scaladoc)
-      val v1 = ch.filter(col("seq") <= col("k"))
-        .select("table", "rid", "cdc_action", "cdc_ts", "seq", "value")
-      val v2 = ch.filter(col("seq") > col("k"))
-        .withColumn("props_len", length(col("props")).cast("long"))
-        .select("table", "rid", "cdc_action", "cdc_ts", "seq", "value",
-          "props", "props_len")
-      // few fat segment files and 16 state buckets: the measurement is
-      // the evolving-restart machinery, not file-count overhead (64
-      // buckets x 2 runs x staging was ~8s of mostly file ops at sf0.1)
-      v1.coalesce(4).write.mode("overwrite").parquet(src)
-      val q1 = streaming.CdcStream.runEvolving(s, src, v1.schema,
-        s"$tmp/state", s"$tmp/ckpt", nBuckets = 16,
-        trigger = Trigger.AvailableNow())
-      q1.awaitTermination() // "kill": the pre-ALTER deployment ends
-      v2.coalesce(4).write.mode("append").parquet(src) // post-ALTER lands
-      val q2 = streaming.CdcStream.runEvolving(s, src, v2.schema,
-        s"$tmp/state", s"$tmp/ckpt", nBuckets = 16,
-        trigger = Trigger.AvailableNow())
-      q2.awaitTermination()
-      val res = streaming.CdcStream.readState(s, s"$tmp/state")
-        .filter(col("cdc_action") =!= "none") // live rows; tombstones are
-                                              // the sink's replay guard
-        .select("table", "rid", "cdc_action", "seq", "cdc_ts", "value",
-          "props", "props_len")
-        .materializeForced() // the temp state dir is deleted next
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      res
-    }),
+    "cdc_state_sink_evolving" -> ((s, dir) =>
+      Materialize.scratch("graft_sink_ev") { tmp =>
+        import org.apache.spark.sql.streaming.Trigger
+        val src = s"$tmp/src"
+        val ch = changelogWithK(s, dir) // session-shared split-changelog
+                                        // artifact (see its scaladoc)
+        val v1 = ch.filter(col("seq") <= col("k"))
+          .select("table", "rid", "cdc_action", "cdc_ts", "seq", "value")
+        val v2 = ch.filter(col("seq") > col("k"))
+          .withColumn("props_len", length(col("props")).cast("long"))
+          .select("table", "rid", "cdc_action", "cdc_ts", "seq", "value",
+            "props", "props_len")
+        // few fat segment files and 16 state buckets: the measurement is
+        // the evolving-restart machinery, not file-count overhead (64
+        // buckets x 2 runs x staging was ~8s of mostly file ops at sf0.1)
+        v1.coalesce(4).write.mode("overwrite").parquet(src)
+        val q1 = streaming.CdcStream.runEvolving(s, src, v1.schema,
+          s"$tmp/state", s"$tmp/ckpt", nBuckets = 16,
+          trigger = Trigger.AvailableNow())
+        q1.awaitTermination() // "kill": the pre-ALTER deployment ends
+        v2.coalesce(4).write.mode("append").parquet(src) // post-ALTER lands
+        val q2 = streaming.CdcStream.runEvolving(s, src, v2.schema,
+          s"$tmp/state", s"$tmp/ckpt", nBuckets = 16,
+          trigger = Trigger.AvailableNow())
+        q2.awaitTermination()
+        streaming.CdcStream.readState(s, s"$tmp/state")
+          .filter(col("cdc_action") =!= "none") // live rows; tombstones are
+                                                // the sink's replay guard
+          .select("table", "rid", "cdc_action", "seq", "cdc_ts", "value",
+            "props", "props_len")
+      }),
     // K1 end-to-end for the THIRD tombstone strategy (r17 verdict #4):
     // the transformWithState merge wired through the SAME production
     // foreachBatch bucket sink, across a real checkpoint kill/restart.
@@ -317,45 +287,41 @@ object CdcQueries extends QueryRegistry {
     // cdc_compact). Drained by observable input-row count: TWS's
     // TimeMode.ProcessingTime schedules batches forever, so
     // processAllAvailable/AvailableNow cannot terminate it.
-    "cdc_state_sink_tws" -> ((s, dir) => {
-      val ss = streaming.CdcStream.stateScopedSession(s)
-      streaming.CdcStream.useRocksDBStateStore(ss)
-      // empty micro-batches cost a state commit each and fire a ~1.4 s
-      // replay batch on the checkpoint restart; the TWS tomb TTL never
-      // needs them (state-store TTL, not timer batches) — scoped here
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_sink_tws").toString
-      val src = s"$tmp/src"
-      val ch = changelogWithK(ss, dir) // session-shared split-changelog
-                                       // artifact (see its scaladoc)
-      val cols =
-        Seq("table", "rid", "cdc_action", "cdc_ts", "seq", "value", "props")
-      val v1 = ch.filter(col("seq") <= col("k"))
-        .select(cols.head, cols.tail: _*)
-      val v2 = ch.filter(col("seq") > col("k"))
-        .select(cols.head, cols.tail: _*)
-      v1.coalesce(4).write.mode("overwrite").parquet(src)
-      val schema = ss.read.parquet(src).schema
-      val n1 = ss.read.parquet(src).count()
-      import ss.implicits._
-      def start() = streaming.CdcStream.runTws(ss,
-        ss.readStream.schema(schema).parquet(src)
-          .as[streaming.CdcStream.Ch],
-        s"$tmp/state", s"$tmp/ckpt", nBuckets = 16)
-      val q1 = start()
-      try streaming.CdcStream.drainTws(q1, n1, 120000L) finally q1.stop()
-      v2.coalesce(4).write.mode("append").parquet(src) // post-kill changes
-      val n2 = ss.read.parquet(src).count() - n1
-      val q2 = start() // restart on the same checkpoint
-      try streaming.CdcStream.drainTws(q2, n2, 120000L) finally q2.stop()
-      val res = ss.read.parquet(s"$tmp/state")
-        .select("table", "rid", "cdc_action", "seq", "cdc_ts", "value",
-          "props")
-        .materializeForced() // the temp state dir is deleted next
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      res
-    }),
+    "cdc_state_sink_tws" -> ((s, dir) =>
+      Materialize.scratch("graft_sink_tws") { tmp =>
+        val ss = streaming.CdcStream.stateScopedSession(s)
+        streaming.CdcStream.useRocksDBStateStore(ss)
+        // empty micro-batches cost a state commit each and fire a ~1.4 s
+        // replay batch on the checkpoint restart; the TWS tomb TTL never
+        // needs them (state-store TTL, not timer batches) — scoped here
+        ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        val src = s"$tmp/src"
+        val ch = changelogWithK(ss, dir) // session-shared split-changelog
+                                         // artifact (see its scaladoc)
+        val cols =
+          Seq("table", "rid", "cdc_action", "cdc_ts", "seq", "value", "props")
+        val v1 = ch.filter(col("seq") <= col("k"))
+          .select(cols.head, cols.tail: _*)
+        val v2 = ch.filter(col("seq") > col("k"))
+          .select(cols.head, cols.tail: _*)
+        v1.coalesce(4).write.mode("overwrite").parquet(src)
+        val schema = ss.read.parquet(src).schema
+        val n1 = ss.read.parquet(src).count()
+        import ss.implicits._
+        def start() = streaming.CdcStream.runTws(ss,
+          ss.readStream.schema(schema).parquet(src)
+            .as[streaming.CdcStream.Ch],
+          s"$tmp/state", s"$tmp/ckpt", nBuckets = 16)
+        val q1 = start()
+        try streaming.CdcStream.drainTws(q1, n1, 120000L) finally q1.stop()
+        v2.coalesce(4).write.mode("append").parquet(src) // post-kill changes
+        val n2 = ss.read.parquet(src).count() - n1
+        val q2 = start() // restart on the same checkpoint
+        try streaming.CdcStream.drainTws(q2, n2, 120000L) finally q2.stop()
+        ss.read.parquet(s"$tmp/state")
+          .select("table", "rid", "cdc_action", "seq", "cdc_ts", "value",
+            "props")
+      }),
     // K2 drift loop CLOSED (dump2csv.py:78-87 quarantines and stops; the
     // reference TODOs the ALTER): a rename-forked changelog quarantines
     // whole to .tmp, replays through Csv.replayQuarantine's supplied
@@ -363,37 +329,34 @@ object CdcQueries extends QueryRegistry {
     // same per-(table, action) aggregate as the never-drifted log — the
     // oracle recomputes it straight from the parquet changelog, so the
     // equality proves quarantine → mapped replay → merge loses nothing.
-    "csv_quarantine_replay" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_qrgate").toString
-      val ch = changelogWithK(s, dir) // session-shared split-changelog
-                                      // artifact (see its scaladoc)
-      val drifted = ch
-        .withColumn("value2", when(col("seq") > col("k"), col("value")))
-        .withColumn("value", when(col("seq") <= col("k"), col("value")))
-        .withColumn("dt", lit("20260814"))
-      val fp = when(col("seq") <= col("k"), lit("base,value"))
-        .otherwise(lit("base,value2")) // a FORK — not an additive chain
-      sources.Csv.dumpCsvEvolved(drifted, fp, s"$tmp/dump", 1000000L)
-      val target = StructType(Seq(
-        StructField("table", StringType), StructField("rid", StringType),
-        StructField("cdc_action", StringType),
-        StructField("cdc_ts", LongType), StructField("seq", LongType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      val replayed = sources.Csv.replayQuarantine(s, s"$tmp/dump.tmp",
-        target, mapping = Map("value2" -> "value"),
-        dropped = Set("dt", "k")) // dt is the dump partition, k the
-                                  // drift-synthesis scalar — both scaffolding
-      val res = Merge.compact(replayed, Seq("table", "rid"))
-        .groupBy("table", "cdc_action")
-        .agg(count(lit(1)).as("n"),
-          sum(col("seq")).as("sum_seq"),
-          round(sum(col("value")), 2).as("sum_value"))
-        .materializeForced() // tmp is deleted next line
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      res
-    }),
+    "csv_quarantine_replay" -> ((s, dir) =>
+      Materialize.scratch("graft_qrgate") { tmp =>
+        import org.apache.spark.sql.types._
+        val ch = changelogWithK(s, dir) // session-shared split-changelog
+                                        // artifact (see its scaladoc)
+        val drifted = ch
+          .withColumn("value2", when(col("seq") > col("k"), col("value")))
+          .withColumn("value", when(col("seq") <= col("k"), col("value")))
+          .withColumn("dt", lit("20260814"))
+        val fp = when(col("seq") <= col("k"), lit("base,value"))
+          .otherwise(lit("base,value2")) // a FORK — not an additive chain
+        sources.Csv.dumpCsvEvolved(drifted, fp, s"$tmp/dump", 1000000L)
+        val target = StructType(Seq(
+          StructField("table", StringType), StructField("rid", StringType),
+          StructField("cdc_action", StringType),
+          StructField("cdc_ts", LongType), StructField("seq", LongType),
+          StructField("value", DoubleType), StructField("props", StringType)))
+        val replayed = sources.Csv.replayQuarantine(s, s"$tmp/dump.tmp",
+          target, mapping = Map("value2" -> "value"),
+          // dt is the dump partition, k the drift-synthesis scalar — both
+          // scaffolding
+          dropped = Set("dt", "k"))
+        Merge.compact(replayed, Seq("table", "rid"))
+          .groupBy("table", "cdc_action")
+          .agg(count(lit(1)).as("n"),
+            sum(col("seq")).as("sum_seq"),
+            round(sum(col("value")), 2).as("sum_value"))
+      }),
     // time travel: the compacted snapshot AS OF the log's midpoint seq —
     // point-in-time recovery over the same merge machinery; the cutoff is
     // a scalar subquery (broadcast single-row cross join, no driver

@@ -31,6 +31,10 @@ import org.apache.spark.sql.DataFrame
   * All driver-gate queries are oracle-green in every mode
   * (`MaterializeSpec` pins local ≡ reliable ≡ none on the iterative and
   * multi-branch representatives).
+  *
+  * [[scratch]] is the one delete-after-materialize site: a query that
+  * stages its work in a driver-local temp dir runs it there, and the dir
+  * is deleted only after the result has been cut loose from it.
   */
 object Materialize {
   /** Conf key selecting the mode: local (default) | reliable | none. */
@@ -70,6 +74,17 @@ object Materialize {
         // silently run every forced() site in local mode
         s"$ModeKey must be local|reliable|none, got '$other'")
     }
+
+  /** Run `body` on a fresh driver-local temp dir named `prefix…`, cut
+    * its result loose from the dir with [[forced]], and delete the dir in
+    * a `finally` — also when `body` or the materialization throws.
+    * Driver-local, so for local masters or gate scaffolding only.
+    */
+  def scratch(prefix: String)(body: String => DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try forced(body(dir.toString))
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir): Unit
+  }
 
   private def reliable(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -139,7 +154,9 @@ object Materialize {
   }
 
   /** `df.materialize()` postfix form — the call-site idiom.
-    * `df.materializeForced()` for delete-after-materialize sites.
+    * `df.materializeForced()` for sites whose inputs go away after the
+    * call in ways [[scratch]] does not own (dropped tables, work dirs
+    * on shared storage).
     */
   implicit class Ops(private val df: DataFrame) extends AnyVal {
     def materialize(): DataFrame = Materialize(df)

@@ -73,6 +73,18 @@ object GraftExtensions {
       BloomFilterMightContain(children.head, children(1))
     })
 
+  /** Add `st` to the session's planner strategies unless it is there —
+    * the one place a graft strategy is registered on a built session
+    * ([[register]], and the operators that plan a graft node directly).
+    * Public, not `private[graft]`: the strategies' own package is
+    * `org.apache.spark.sql.graft`, outside this one.
+    */
+  def addStrategy(spark: org.apache.spark.sql.SparkSession,
+      st: org.apache.spark.sql.execution.SparkStrategy): Unit =
+    if (!spark.experimental.extraStrategies.contains(st))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ st
+
   /** Imperative registration for an already-built session (tests, REPL). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     // Idempotent: register() is called defensively by every query that
@@ -104,10 +116,8 @@ object GraftExtensions {
   private def registerPlanRules(
       spark: org.apache.spark.sql.SparkSession): Unit = {
     import org.apache.spark.sql.graft.{CompactFoldStrategy, TopKStrategy, WindowToTopK}
-    for (st <- Seq(TopKStrategy, CompactFoldStrategy)
-        if !spark.experimental.extraStrategies.contains(st))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ st
+    addStrategy(spark, TopKStrategy)
+    addStrategy(spark, CompactFoldStrategy)
     if (!spark.experimental.extraOptimizations.contains(WindowToTopK))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ WindowToTopK

@@ -28,30 +28,17 @@ object DedupQueries extends QueryRegistry {
   /** Session-scoped identity for the shared persisted LSH index backing
     * `dedup_incremental` (the [[SimilarityQueries]] sharedVecIndex
     * pattern): one (table, storage dir) pair per (session, corpus dir),
-    * storage reclaimed at JVM exit. The table name folds the session +
-    * corpus key through a hex digest so it stays a valid SQL identifier.
+    * storage reclaimed at JVM exit. The table name folds the storage dir
+    * through a hex digest so it stays a valid SQL identifier.
     */
-  private val sharedLsh =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private def sharedLshParts(s: SparkSession, dir: String): (String, String) =
+  private def sharedLshPath(s: SparkSession, dir: String): String =
     // the key folds in a fingerprint of the corpus file, not just the dir:
     // a fixture regenerated mid-session (the round-7 failure class) must
     // trigger a rebuild, not a silent probe of a stale index
-    sharedLsh.computeIfAbsent(s.sparkContext.applicationId + "|" +
-        TrainedCache.fingerprint(s"$dir/documents.parquet"), k => {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(k.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lshidx_shared").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(tmp)): Unit))
-      (s"graft_lsh_shared_$tag", s"$tmp/index")
-    })
+    TrainedCache.sessionDir(s, "lshidx", Seq(s"$dir/documents.parquet"))(
+      tmp => s"$tmp/index")
   private def sharedLshTable(s: SparkSession, dir: String): String =
-    sharedLshParts(s, dir)._1
-  private def sharedLshPath(s: SparkSession, dir: String): String =
-    sharedLshParts(s, dir)._2
+    s"graft_lsh_shared_${TrainedCache.tableTag(sharedLshPath(s, dir))}"
 
   /** Session-shared VERIFIED near-dup pair snapshot: the full LSH chain
     * (shingle → signature → band join → exact-Jaccard) runs ONCE per

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryRegistry
+import graft.{Materialize, QueryRegistry}
 import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,20 +21,11 @@ object LakeQueries extends QueryRegistry {
   // every later invocation pays one O(diff) ingest cycle (repeat-ingest
   // output invariance is the operator's pinned contract, so gate passes
   // sharing the index hash-match the single-cycle result).
-  private val sharedDiffLsh =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private def diffLshParts(s: SparkSession, dir: String): (String, String) =
-    sharedDiffLsh.computeIfAbsent(s.sparkContext.applicationId + "|" +
-        TrainedCache.fingerprint(s"$dir/documents.parquet"), k => {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(k.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lshidx_diff").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(tmp)): Unit))
-      (s"graft_lsh_diff_$tag", s"$tmp/index")
-    })
+  private def diffLshParts(s: SparkSession, dir: String): (String, String) = {
+    val path = TrainedCache.sessionDir(s, "lshidx_diff",
+      Seq(s"$dir/documents.parquet"))(tmp => s"$tmp/index")
+    (s"graft_lsh_diff_${TrainedCache.tableTag(path)}", path)
+  }
 
   /** Stage `df` as ONE named file under `srcDir` — the file-source drop
     * unit of the streaming-publisher gate queries (path-ordered names =
@@ -77,6 +68,16 @@ object LakeQueries extends QueryRegistry {
       .union(v1.filter(col("doc_id") % 50 === 0)
         .select((col("doc_id") + 3000000L).as("doc_id"), col("text"),
           col("lang")))
+
+  /** Per-lang (n_docs, sum_len, min_id, max_id) of `df`, tagged `which`
+    * — the read-back every publish-lifecycle gate hashes per version.
+    */
+  private def langAgg(df: DataFrame, which: String): DataFrame = df
+    .groupBy("lang")
+    .agg(count(lit(1)).as("n_docs"), sum(length(col("text"))).as("sum_len"),
+      min("doc_id").as("min_id"), max("doc_id").as("max_id"))
+    .select(lit(which).as("which"), col("lang"), col("n_docs"),
+      col("sum_len"), col("min_id"), col("max_id"))
 
   /** The shared full→delta→merge three-generation feed scenario
     * (`lake_change_feed`, `lake_feed_paged`, `lake_follow_changes` —
@@ -146,11 +147,9 @@ object LakeQueries extends QueryRegistry {
     // keyed by the batch id, the stream advances, and the audit is the
     // oracle-checked output here (the violating half of the corpus,
     // named rule, replay-stable key).
-    "lake_refused_quarantine" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_refq").toString
-      val root = s"$work/lake"
-      try {
+    "lake_refused_quarantine" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_refq") { work =>
+        val root = s"$work/lake"
         val d = docs(s, dir).select("doc_id", "text", "lang")
         val expect = Seq("even_id" -> (col("doc_id") % 2 === 0))
         Lake.publishBatch(d.filter(col("doc_id") % 2 === 0), root,
@@ -163,16 +162,10 @@ object LakeQueries extends QueryRegistry {
         // the stream advanced: the clean half is still current (v=0)
         require(Lake.currentVersion(s, root).contains(0L),
           "poison batch moved the pointer")
-        import graft.Materialize.Ops
         Lake.readRefusedQuarantine(s, root)
           .select(col("doc_id"), col("_graft_violated").as("violated"),
             col("_graft_refusal").as("refusal"))
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+      }),
     // [EXT] paged long-range drain (r16): the DR/catch-up shape —
     // changesBetweenPaged over the same three-generation lake the
     // lake_change_feed query builds, page width 1, pages unioned. The
@@ -194,29 +187,22 @@ object LakeQueries extends QueryRegistry {
     // Shares lake_change_feed's oracle, so the hash proves the standing
     // loop delivers exactly the feed, no page lost or duplicated, with
     // the cursor landing on the current version.
-    "lake_follow_changes" -> ((s, dir) => {
-      // shared feed lake READ-ONLY (the standing CONSUMPTION shape);
-      // only the cursor is this gate's own state, in its own work dir
-      val root = sharedFeedLake(s, dir)
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_flw").toString
-      try {
+    "lake_follow_changes" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_flw") { work =>
+        // shared feed lake READ-ONLY (the standing CONSUMPTION shape);
+        // only the cursor is this gate's own state, in its own work dir
+        val root = sharedFeedLake(s, dir)
         val cursor = s"$work/cursor"
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(cursor), "0")
-        import graft.Materialize.Ops
         val pages = scala.collection.mutable.ArrayBuffer[DataFrame]()
         val n = Lake.followChanges(s, root, cursor, "doc_id", "text",
-          maxPlanSteps = 1) { (df, _) => pages += df.materializeForced() }
+          maxPlanSteps = 1) { (df, _) => pages += df }
         require(n == 2 && java.nio.file.Files
             .readString(java.nio.file.Paths.get(cursor)).trim == "2",
           s"standing loop delivered $n pages / cursor off")
         pages.reduce(_.unionByName(_))
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+      }),
     // [EXT] snapshot diff: v2 is derived deterministically from the
     // fixture so both engines diff the same two versions. Output = the
     // added/removed/changed ledger only.
@@ -257,10 +243,8 @@ object LakeQueries extends QueryRegistry {
     // and O(touched) assertions live in LakeCompactSpec (not
     // SQL-expressible). The staging dir is gate-local scaffolding; the
     // operator itself takes any Hadoop-FS path.
-    "lake_compact" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_compact").toString
-      try {
+    "lake_compact" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_compact") { work =>
         docs(s, dir)
           .repartition(col("lang"))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -268,9 +252,6 @@ object LakeQueries extends QueryRegistry {
           .partitionBy("lang").parquet(work)
         Lake.compact(s, work, Seq("lang"), Seq("doc_id"),
           targetBytes = 32L * 1024 * 1024)
-        import graft.Materialize.Ops
-        // materializeForced: the temp staging dir is deleted below, so the
-        // returned plan must not retain lineage over it
         s.read.parquet(work)
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
@@ -279,12 +260,7 @@ object LakeQueries extends QueryRegistry {
             sum(length(col("text"))).as("sum_len"),
             min("doc_id").as("min_id"),
             max("doc_id").as("max_id"))
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+      }),
     // [EXT] versioned publishing (MVCC-lite): v1 and a deterministic v2
     // are published as immutable generations behind the atomic _CURRENT
     // pointer; the output proves (a) the pinned OLD generation still
@@ -295,11 +271,9 @@ object LakeQueries extends QueryRegistry {
     // match pins the whole version lifecycle, not just "rows came back".
     // The staging root is gate-local scaffolding; the operator takes any
     // Hadoop-FS path.
-    "lake_publish_versions" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_ver").toString
-      val root = s"$work/lake"
-      try {
+    "lake_publish_versions" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_ver") { work =>
+        val root = s"$work/lake"
         val v1 = docs(s, dir).select("doc_id", "text", "lang")
         val v2 = derivedV2Lang(v1)
         val ver1 = Lake.publishVersion(v1, root, Seq("lang"), Seq("doc_id"),
@@ -319,14 +293,8 @@ object LakeQueries extends QueryRegistry {
         val current = agg(Lake.readVersion(s, root), "current_v2")
         Lake.rollbackTo(s, root, ver1)
         val rolledBack = agg(Lake.readVersion(s, root), "rolled_back")
-        import graft.Materialize.Ops
-        // the staging root is deleted below — lineage must not reach it
-        pinnedOld.unionAll(current).unionAll(rolledBack).materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+        pinnedOld.unionAll(current).unionAll(rolledBack)
+      }),
     // [EXT] the audit a pipeline runs before moving its data dependency
     // from one PUBLISHED version to another: both diff sides come back
     // through readVersion (pinned, immutable generations) — proving the
@@ -334,25 +302,16 @@ object LakeQueries extends QueryRegistry {
     // writes published. The oracle recomputes the same ledger from the
     // fixture, so the hash match pins publish → readVersion → diff
     // end-to-end, not just "rows came back".
-    "lake_version_diff" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_vdiff").toString
-      val root = s"$work/lake"
-      try {
+    "lake_version_diff" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_vdiff") { work =>
+        val root = s"$work/lake"
         val v1 = docs(s, dir).select("doc_id", "text", "lang")
         val ver1 = Lake.publishVersion(v1, root, Seq("lang"), Seq("doc_id"),
           maxRecordsPerFile = 1000000L)
         val ver2 = Lake.publishVersion(derivedV2Lang(v1), root, Seq("lang"),
           Seq("doc_id"), maxRecordsPerFile = 1000000L)
-        import graft.Materialize.Ops
-        // the staging root is deleted below — lineage must not reach it
         Lake.diffVersions(s, root, ver1, ver2, "doc_id", "text")
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+      }),
     // [EXT] change data feed: v0 = full corpus, v1 = a DELTA touching
     // only the 'fr' partition (+ a brand-new 'zz' partition), v2 = a
     // CDC MERGE into de/es (deletes, edits, inserts). The feed stacks
@@ -368,20 +327,12 @@ object LakeQueries extends QueryRegistry {
     // LakeChangeFeedSpec/LakeDigestSpec; at 100 TB the feed is how
     // downstream dedup/decontam tails a maintained lake without
     // re-reading the settled corpus.
-    "lake_change_feed" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_cdf").toString
-      val root = s"$work/lake"
-      try {
+    "lake_change_feed" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_cdf") { work =>
+        val root = s"$work/lake"
         buildFeedLake(s, dir, root)
-        import graft.Materialize.Ops
         Lake.changesBetween(s, root, 0L, 2L, "doc_id", "text")
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+      }),
     // [EXT] publish-time data-quality expectations under the driver
     // hash: malformed rows are injected deterministically (empty text,
     // unknown lang), the publish runs in drop mode, and the output is
@@ -391,11 +342,9 @@ object LakeQueries extends QueryRegistry {
     // the hash pins that exactly the violating rows — and ALL of them —
     // were quarantined with the right names, and that the published
     // generation is exactly the clean subset.
-    "lake_publish_expect" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_exp").toString
-      val root = s"$work/lake"
-      try {
+    "lake_publish_expect" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_exp") { work =>
+        val root = s"$work/lake"
         val d = docs(s, dir).select("doc_id", "text", "lang")
         val m = d.select(col("doc_id"),
           when(col("doc_id") % 53 === 0, lit("")).otherwise(col("text"))
@@ -419,13 +368,8 @@ object LakeQueries extends QueryRegistry {
             sum(length(col("text"))).cast("long").as("sum_len"))
           .select(concat(lit("quarantined:"), col("_graft_violated"))
             .as("which"), col("lang"), col("n_docs"), col("sum_len"))
-        import graft.Materialize.Ops
-        pub.unionByName(qr).materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+        pub.unionByName(qr)
+      }),
     // [EXT] explicit retention GC under the driver hash: three full
     // publishes (publish-time pruning disabled via keep=10), a rollback
     // to v1, then vacuum(keep=1) — the horizon covers only v2, so the
@@ -435,11 +379,9 @@ object LakeQueries extends QueryRegistry {
     // readVersion AFTER the vacuum, so the hash also pins that pruning
     // deleted nothing a survivor needs. The oracle recomputes the
     // decision constants and both corpus counts from the fixture.
-    "lake_vacuum" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_vac").toString
-      val root = s"$work/lake"
-      try {
+    "lake_vacuum" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_vac") { work =>
+        val root = s"$work/lake"
         val v1 = docs(s, dir).select("doc_id", "text", "lang")
         val v2 = derivedV2Lang(v1)
         for (df <- Seq(v1, v2, v2))
@@ -460,37 +402,25 @@ object LakeQueries extends QueryRegistry {
         }.toSeq
         import s.implicits._
         rows.toDF("v", "action", "reason", "n_rows")
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+      }),
     // [EXT] the version ledger (DESCRIBE HISTORY): after publishing v1
     // and the derived v2, the history must name both generations
     // published, exactly one current, with the exact fixture row counts
     // — the oracle recomputes both counts, so the hash pins the ledger's
     // bookkeeping (pointer flags + per-generation accounting), not just
     // its shape.
-    "lake_history" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_hist").toString
-      val root = s"$work/lake"
-      try {
+    "lake_history" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_hist") { work =>
+        val root = s"$work/lake"
         val v1 = docs(s, dir).select("doc_id", "text", "lang")
         Lake.publishVersion(v1, root, Seq("lang"), Seq("doc_id"),
           maxRecordsPerFile = 1000000L)
         Lake.publishVersion(derivedV2Lang(v1), root, Seq("lang"),
           Seq("doc_id"), maxRecordsPerFile = 1000000L)
-        import graft.Materialize.Ops
         Lake.history(s, root)
           .select(col("v"), col("published"),
             col("current").as("is_current"), col("n_rows"))
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+      }),
     // [EXT] continuous publishing E2E: the corpus streams through a file
     // source as two ordered micro-batches (curated drops), each published
     // as an immutable generation by the streaming publisher. The output
@@ -498,12 +428,10 @@ object LakeQueries extends QueryRegistry {
     // current drop through the pointer — so the hash pins the
     // stream→generation→pointer lifecycle, including that batch 0's drop
     // is still exactly reproducible after batch 1 shipped.
-    "lake_stream_publish" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_spub").toString
-      val src = s"$work/src"; val root = s"$work/lake"
-      new java.io.File(src).mkdirs()
-      try {
+    "lake_stream_publish" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_spub") { work =>
+        val src = s"$work/src"; val root = s"$work/lake"
+        new java.io.File(src).mkdirs()
         val d = docs(s, dir).select("doc_id", "text", "lang")
         // two single-file drops in path order: the file source (ordered
         // by mtime then path, one file per trigger) delivers b0 then b1
@@ -516,22 +444,9 @@ object LakeQueries extends QueryRegistry {
           maxRecordsPerFile = 1000000L,
           trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
         q.awaitTermination()
-        def agg(df: DataFrame, which: String): DataFrame = df
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(length(col("text"))).as("sum_len"),
-            min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-          .select(lit(which).as("which"), col("lang"), col("n_docs"),
-            col("sum_len"), col("min_id"), col("max_id"))
-        import graft.Materialize.Ops
-        agg(Lake.readVersion(s, root, Some(0L)), "drop0_pinned")
-          .unionAll(agg(Lake.readVersion(s, root), "drop1_current"))
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+        langAgg(Lake.readVersion(s, root, Some(0L)), "drop0_pinned")
+          .unionAll(langAgg(Lake.readVersion(s, root), "drop1_current"))
+      }),
     // [EXT] the two axes composed — CONTINUOUS DELTA publishing: the
     // full base ships once, then each micro-batch of the stream ships as
     // a delta generation touching only its partitions (the production
@@ -539,12 +454,10 @@ object LakeQueries extends QueryRegistry {
     // id). The output reads the INTERMEDIATE version pinned (base +
     // drop 0 only — proving each drop is its own reproducible
     // generation) and the current resolution (both drops applied).
-    "lake_stream_delta" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_sdelta").toString
-      val src = s"$work/src"; val root = s"$work/lake"
-      new java.io.File(src).mkdirs()
-      try {
+    "lake_stream_delta" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_sdelta") { work =>
+        val src = s"$work/src"; val root = s"$work/lake"
+        new java.io.File(src).mkdirs()
         val d = docs(s, dir).select("doc_id", "text", "lang")
         Lake.publishVersion(d, root, Seq("lang"), Seq("doc_id"),
           maxRecordsPerFile = 1000000L) // the full base, v0
@@ -567,22 +480,9 @@ object LakeQueries extends QueryRegistry {
           trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
           delta = true)
         q.awaitTermination()
-        def agg3(df: DataFrame, which: String): DataFrame = df
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(length(col("text"))).as("sum_len"),
-            min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-          .select(lit(which).as("which"), col("lang"), col("n_docs"),
-            col("sum_len"), col("min_id"), col("max_id"))
-        import graft.Materialize.Ops
-        agg3(Lake.readVersion(s, root, Some(1L)), "after_drop0")
-          .unionAll(agg3(Lake.readVersion(s, root), "current"))
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+        langAgg(Lake.readVersion(s, root, Some(1L)), "after_drop0")
+          .unionAll(langAgg(Lake.readVersion(s, root), "current"))
+      }),
     // [EXT] delta publishing (versioned dynamic partition overwrite):
     // the base is published in full, then ONE lang partition is
     // rewritten and a new one added by a delta whose physical payload is
@@ -592,11 +492,9 @@ object LakeQueries extends QueryRegistry {
     // both the reference resolution and that the base stayed intact
     // underneath it. At 100 TB this is what makes a daily publish cost
     // O(changed), not O(corpus).
-    "lake_publish_delta" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_delta").toString
-      val root = s"$work/lake"
-      try {
+    "lake_publish_delta" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_delta") { work =>
+        val root = s"$work/lake"
         val d = docs(s, dir).select("doc_id", "text", "lang")
         Lake.publishVersion(d, root, Seq("lang"), Seq("doc_id"),
           maxRecordsPerFile = 1000000L)
@@ -612,22 +510,10 @@ object LakeQueries extends QueryRegistry {
               lit("zz").as("lang")))
         Lake.publishDelta(delta, root, Seq("lang"), Seq("doc_id"),
           maxRecordsPerFile = 1000000L)
-        def agg2(df: DataFrame, which: String): DataFrame = df
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(length(col("text"))).as("sum_len"),
-            min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-          .select(lit(which).as("which"), col("lang"), col("n_docs"),
-            col("sum_len"), col("min_id"), col("max_id"))
-        import graft.Materialize.Ops
-        agg2(Lake.readVersion(s, root), "current_delta")
-          .unionAll(agg2(Lake.readVersion(s, root, Some(0L)), "pinned_base"))
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+        langAgg(Lake.readVersion(s, root), "current_delta")
+          .unionAll(
+            langAgg(Lake.readVersion(s, root, Some(0L)), "pinned_base"))
+      }),
     // [EXT] CDC MERGE into the versioned lake: a keyed changelog
     // (upsert/delete, deliberately containing SUPERSEDED rows so the
     // seq-netting is gated end-to-end) applies to the published base as
@@ -638,11 +524,9 @@ object LakeQueries extends QueryRegistry {
     // semantics, netting, inheritance, and base immutability at once.
     // At 100 TB this is applying a binlog hour at O(touched), not
     // rewriting the lake.
-    "lake_merge_cdc" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_merge").toString
-      val root = s"$work/lake"
-      try {
+    "lake_merge_cdc" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_merge") { work =>
+        val root = s"$work/lake"
         val d = docs(s, dir).select("doc_id", "text", "lang")
         Lake.publishVersion(d, root, Seq("lang"), Seq("doc_id"),
           maxRecordsPerFile = 1000000L)
@@ -670,62 +554,40 @@ object LakeQueries extends QueryRegistry {
         Lake.mergeDelta(changes, root, Seq("doc_id"), Seq("lang"),
           Seq("doc_id"), maxRecordsPerFile = 1000000L,
           seqCol = Some("seq"))
-        def aggM(df: DataFrame, which: String): DataFrame = df
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(length(col("text"))).as("sum_len"),
-            min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-          .select(lit(which).as("which"), col("lang"), col("n_docs"),
-            col("sum_len"), col("min_id"), col("max_id"))
-        import graft.Materialize.Ops
-        aggM(Lake.readVersion(s, root), "current")
-          .unionAll(aggM(Lake.readVersion(s, root, Some(0L)), "pinned_base"))
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+        langAgg(Lake.readVersion(s, root), "current")
+          .unionAll(
+            langAgg(Lake.readVersion(s, root, Some(0L)), "pinned_base"))
+      }),
     // [EXT] z-ordered publish under the driver hash: the generation is
     // clustered on (doc_id, n_chars) — quantile-bucketed, bit-
     // interleaved, sorted, layout column dropped — and the aggregate
     // must equal the plain corpus exactly: layout moved, content
     // didn't. (The skipping win is measured in ZOrderSpec; a hash gate
     // can only pin the content-neutrality half of the contract.)
-    "lake_zorder_publish" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_zpub").toString
-      val root = s"$work/lake"
-      try {
+    "lake_zorder_publish" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_zpub") { work =>
+        val root = s"$work/lake"
         val d = s.read.parquet(s"$dir/documents.parquet")
           .select("doc_id", "text", "lang", "n_chars")
         Lake.publishVersion(d, root, Seq("lang"), Nil,
           maxRecordsPerFile = 1000000L,
           zOrderCols = Seq("doc_id", "n_chars"),
           bloomFilterCols = Seq("doc_id"))
-        import graft.Materialize.Ops
         Lake.readVersion(s, root)
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
             sum("n_chars").cast("long").as("sum_chars"),
             sum(length(col("text"))).cast("long").as("sum_len"),
             min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+      }),
     // [EXT] the mover path under the driver hash: an upsert that CHANGES
     // a key's partition value (every 30th de-doc re-curated into lang
     // 'xx') with probeMovers=true — the column-pruned holder probe must
     // find the old partition and merge the stale copy away, leaving
     // exactly one row per moved key.
-    "lake_merge_movers" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_movers").toString
-      val root = s"$work/lake"
-      try {
+    "lake_merge_movers" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_movers") { work =>
+        val root = s"$work/lake"
         val d = docs(s, dir).select("doc_id", "text", "lang")
         Lake.publishVersion(d, root, Seq("lang"), Seq("doc_id"),
           maxRecordsPerFile = 1000000L)
@@ -735,18 +597,12 @@ object LakeQueries extends QueryRegistry {
         Lake.mergeDelta(moves, root, Seq("doc_id"), Seq("lang"),
           Seq("doc_id"), maxRecordsPerFile = 1000000L,
           probeMovers = true)
-        import graft.Materialize.Ops
         Lake.readVersion(s, root)
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
             sum(length(col("text"))).cast("long").as("sum_len"),
             min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+      }),
     // [EXT] the reference's whole pipeline at the lake surface,
     // composed end-to-end and hash-gated: the event stream's FIRST half
     // folds to a keyed state (last-write-wins per user, deletes drop the
@@ -758,11 +614,9 @@ object LakeQueries extends QueryRegistry {
     // two-phase fold in SQL, so the hash proves split-fold ≡ direct fold
     // — the associativity a CDC replica needs to bootstrap from a
     // snapshot and then tail the log.
-    "cdc_replica_lake" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_cdc_replake").toString
-      val root = s"$work/lake"
-      try {
+    "cdc_replica_lake" -> ((s, dir) =>
+      Materialize.scratch("graft_cdc_replake") { work =>
+        val root = s"$work/lake"
         val ev = graft.CdcBatch.readEvents(s, dir)
           .select("event_id", "user_id", "event_type", "value")
         val thr = ev.agg(
@@ -799,15 +653,9 @@ object LakeQueries extends QueryRegistry {
             min("user_id").as("min_uid"), max("user_id").as("max_uid"))
           .select(lit(which).as("which"), col("bucket"), col("n_users"),
             col("sum_eid"), col("max_eid"), col("min_uid"), col("max_uid"))
-        import graft.Materialize.Ops
         aggR(Lake.readVersion(s, root), "replica")
           .unionAll(aggR(Lake.readVersion(s, root, Some(0L)), "pinned_base"))
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }),
+      }),
     // [EXT] continuous CDC MERGE: the changelog STREAMS through
     // mergeStream — drop 0 edits one lang, drop 1 deletes another lang
     // ENTIRELY (the merged generation must drop that partition, not
@@ -815,12 +663,10 @@ object LakeQueries extends QueryRegistry {
     // current resolution: the hash pins per-batch atomic visibility,
     // exactly-once application, and delete-to-empty partition removal
     // under the streaming path.
-    "lake_merge_stream" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_lake_mstream").toString
-      val src = s"$work/src"; val root = s"$work/lake"
-      new java.io.File(src).mkdirs()
-      try {
+    "lake_merge_stream" -> ((s, dir) =>
+      Materialize.scratch("graft_lake_mstream") { work =>
+        val src = s"$work/src"; val root = s"$work/lake"
+        new java.io.File(src).mkdirs()
         val d = docs(s, dir).select("doc_id", "text", "lang")
         Lake.publishVersion(d, root, Seq("lang"), Seq("doc_id"),
           maxRecordsPerFile = 1000000L) // the full base, v0
@@ -840,22 +686,9 @@ object LakeQueries extends QueryRegistry {
           maxRecordsPerFile = 1000000L,
           trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
         q.awaitTermination()
-        def aggS(df: DataFrame, which: String): DataFrame = df
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(length(col("text"))).as("sum_len"),
-            min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-          .select(lit(which).as("which"), col("lang"), col("n_docs"),
-            col("sum_len"), col("min_id"), col("max_id"))
-        import graft.Materialize.Ops
-        aggS(Lake.readVersion(s, root, Some(1L)), "after_drop0")
-          .unionAll(aggS(Lake.readVersion(s, root), "current"))
-          .materializeForced()
-      } finally {
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(work))
-      }
-    }))
+        langAgg(Lake.readVersion(s, root, Some(1L)), "after_drop0")
+          .unionAll(langAgg(Lake.readVersion(s, root), "current"))
+      }))
 
   // shared by lake_snapshot_diff and lake_version_diff: the versioned
   // query publishes the same two corpora and must produce the same ledger

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Materialize.Ops
-import graft.QueryRegistry
+import graft.{Materialize, QueryRegistry}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,15 +34,12 @@ object MultimodalQueries extends QueryRegistry {
     // the hash proves the write→binaryFile→table path loses nothing.
     // Gate-local staging dir (local master); a deployment reads the
     // object-store landing prefix directly.
-    "mm_binary_ingest" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_media").toString
-      Multimodal.writeMediaFiles(
-        Multimodal.mediaTable(s, dir).filter(col("doc_id") % 41 === 0), tmp)
-      val res = Multimodal.ingestMediaFiles(s, tmp).materializeForced()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      res
-    }),
+    "mm_binary_ingest" -> ((s, dir) =>
+      Materialize.scratch("graft_media") { tmp =>
+        Multimodal.writeMediaFiles(
+          Multimodal.mediaTable(s, dir).filter(col("doc_id") % 41 === 0), tmp)
+        Multimodal.ingestMediaFiles(s, tmp)
+      }),
     // X5/X4/X3 fusion: cross-modal curation scorecard — text-side signals
     // (token/stopword quality) joined with embedding-side signals
     // (coordinate concentration of the unit vector) into one per-item keep

@@ -123,20 +123,17 @@ object SimilarityQueries extends QueryRegistry {
     * victim already gone touches no cell), so re-invocations converge to
     * the same post-delete index and the probe result is stable.
     */
-  private val refreshIdx =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def refreshReplica(s: SparkSession, dir: String): String =
-    refreshIdx.computeIfAbsent(corpusKey(s, dir),
-      _ => TrainedCache.recordBuild("vec_index_replica") {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_vecidx_replica").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(tmp)): Unit))
+  private def refreshReplica(s: SparkSession, dir: String): String = {
+    // resolved first: a build must not update the shared-path map it
+    // runs under (ConcurrentHashMap.computeIfAbsent forbids it)
+    val index = sharedVecIndex(s, dir)
+    TrainedCache.sharedPath(s, "vec_index_replica",
+        Seq(s"$dir/embeddings.parquet")) { tmp =>
       org.apache.commons.io.FileUtils.copyDirectory(
-        new java.io.File(sharedVecIndex(s, dir)), new java.io.File(tmp))
+        new java.io.File(index), new java.io.File(tmp))
       tmp
-    })
+    }
+  }
 
   private val PcaDims = 8
   private val PcaSquarings = 7

@@ -137,20 +137,36 @@ object TrainedCache {
     */
   def sharedPath(spark: SparkSession, name: String,
       fixturePaths: Seq[String])(build: String => String): String =
+    sessionDir(spark, name, fixturePaths)(tmp => recordBuild(name)(build(tmp)))
+
+  /** The dir half of [[sharedPath]], untimed: a temp dir made once per
+    * (`kind`, applicationId, corpus fingerprint of `fixturePaths`) and
+    * deleted at JVM exit; `init` runs once on it and the path it returns
+    * is served to every later caller. For session-long dirs that a
+    * caller fills itself (a persisted index a gate ingests into).
+    */
+  def sessionDir(spark: SparkSession, kind: String,
+      fixturePaths: Seq[String])(init: String => String): String =
     sharedPaths.computeIfAbsent(
-      name + "|" + spark.sparkContext.applicationId + "|" +
+      kind + "|" + spark.sparkContext.applicationId + "|" +
         fingerprint(fixturePaths: _*),
-      _ => recordBuild(name) {
+      _ => {
         val tmp = java.nio.file.Files
-          .createTempDirectory(s"graft_${name}_shared").toString
+          .createTempDirectory(s"graft_${kind}_shared").toString
         Runtime.getRuntime.addShutdownHook(new Thread(() =>
           org.apache.commons.io.FileUtils
             .deleteQuietly(new java.io.File(tmp)): Unit))
-        build(tmp)
+        init(tmp)
       })
 
   private val sharedPaths =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** A SQL-identifier-safe hex digest of `path`: names the catalog table
+    * over a [[sessionDir]]. */
+  def tableTag(path: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(path.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
 
   /** Register `table` in THIS session's catalog over pre-written
     * bucketed parquet files at `path` — the mount half of serving a

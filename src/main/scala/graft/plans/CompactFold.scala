@@ -2,6 +2,7 @@
 // (Dataset.ofRows) — same packaging as TopKPerKey.
 package org.apache.spark.sql.graft
 
+import _root_.graft.functions.GraftExtensions
 import scala.collection.mutable.ArrayBuffer
 
 import _root_.graft.{Merge, Types}
@@ -246,9 +247,7 @@ object CompactFold {
       payloadCols: Seq[String],
       keepNone: Boolean): DataFrame = {
     val spark = changes.sparkSession
-    if (!spark.experimental.extraStrategies.contains(CompactFoldStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ CompactFoldStrategy
+    GraftExtensions.addStrategy(spark, CompactFoldStrategy)
     val lp = changes.select(
       (keyCols ++ Seq(seqCol, actionCol) ++ payloadCols).map(changes.col): _*)
       .queryExecution.analyzed

@@ -2,6 +2,7 @@
 // (Dataset.ofRows, ExpressionUtils) — standard third-party plan packaging.
 package org.apache.spark.sql.graft
 
+import _root_.graft.functions.GraftExtensions
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
@@ -282,9 +283,7 @@ object TopK {
       orderBy: Seq[(String, Boolean)],
       k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+    GraftExtensions.addStrategy(spark, TopKStrategy)
     val lp = df.queryExecution.analyzed
     def attr(n: String): Attribute = lp.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(s"no column $n in ${lp.output.map(_.name)}"))

@@ -1753,7 +1753,9 @@ object Lake {
       refs: Map[String, Long],
       precomputedOwn: Option[(String, Seq[(String, (Long, Long))])] = None)
       : Unit = {
-    val ownRels = graft.GenSwap.leaves(fs, genPath)
+    // the read-back path alone walks the generation's own dirs: the
+    // in-write path has its entries already, and runs under the lock
+    lazy val ownRels = graft.GenSwap.leaves(fs, genPath)
       .collect { case (rel, true) => rel }
     val ownEntries: Seq[(String, (Long, Long), String)] =
       if (precomputedOwn.isDefined) {

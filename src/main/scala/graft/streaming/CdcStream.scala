@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Materialize.Ops
-import graft.{Merge, Types}
+import graft.{Materialize, Merge, Types}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -727,17 +727,17 @@ object CdcStream {
         "on the DRIVER's local disk, which executors on a non-local " +
         "master cannot reach — pass workDir on shared storage " +
         "(hdfs://, s3a://, cluster mount)")
-    val root = new Path(workDir.getOrElse(java.nio.file.Files
-      .createTempDirectory("graft_ssj").toString))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = new Path(root, "out")
-    def batchDirs(): Seq[(Long, Path)] =
-      fs.listStatus(out).toSeq.collect {
-        case st if st.isDirectory &&
-            st.getPath.getName.startsWith(s"$BatchCol=") =>
-          st.getPath.getName.stripPrefix(s"$BatchCol=").toLong -> st.getPath
-      }
-    def drained(): DataFrame = {
+    def drained(rootDir: String): DataFrame = {
+      val root = new Path(rootDir)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val out = new Path(root, "out")
+      def batchDirs(): Seq[(Long, Path)] =
+        fs.listStatus(out).toSeq.collect {
+          case st if st.isDirectory &&
+              st.getPath.getName.startsWith(s"$BatchCol=") =>
+            st.getPath.getName.stripPrefix(s"$BatchCol=").toLong ->
+              st.getPath
+        }
       // a drain whose batches all carried zero rows still reads back as
       // an empty frame of the right schema
       fs.mkdirs(out)
@@ -781,15 +781,10 @@ object CdcStream {
         else batchDirs().maxByOption(_._1).fold(out)(_._2)
       spark.read.schema(result.schema).parquet(from.toString).drop(BatchCol)
     }
-    if (workDir.isDefined) drained()
-    else {
-      // temp fallback: materializeForced severs lineage from the dir
-      // before it is deleted — repeated gate invocations must not leak
-      // /tmp dirs holding the full join ledger, INCLUDING when the drain
-      // itself throws (hence the finally)
-      try drained().materializeForced()
-      finally { fs.delete(root, true): Unit }
-    }
+    // temp fallback: scratch cuts the result loose from the dir before it
+    // is deleted — repeated gate invocations must not leak /tmp dirs
+    // holding the full join ledger, INCLUDING when the drain throws
+    workDir.fold(Materialize.scratch("graft_ssj")(drained))(drained)
   }
 
   /** Partition column of the update and complete drains' batchId-keyed

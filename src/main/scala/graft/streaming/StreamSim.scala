@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import graft.Materialize.Ops
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -295,7 +296,8 @@ object StreamSim {
     * see, so the fallback refuses to run on a non-local master. The
     * fallback cleans up after itself — the result is materialized
     * (executor storage, or the checkpoint dir in `reliable` mode) and
-    * both temp dirs are deleted before returning.
+    * both temp dirs are deleted before returning, also when the run
+    * throws.
     */
   def nearDupStreamed(
       spark0: org.apache.spark.sql.SparkSession, sfDir: String,
@@ -317,105 +319,101 @@ object StreamSim {
         "(hdfs://, s3a://, cluster mount)")
     val localTmp = workDir.isEmpty
     val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(workDir.getOrElse(java.nio.file.Files
-      .createTempDirectory("graft_ss").toString))
-    val fs = root.getFileSystem(hconf)
-    val path = s"$sfDir/embeddings.parquet"
-    val embStatic = spark.read.parquet(path)
-    // a caller-supplied centroid frame may be bound to the ORIGINAL
-    // session — re-emit its (tiny, trained-artifact-sized) rows on the
-    // scoped session so the stream plan never mixes sessions
-    val cent = centOpt
-      .map(c =>
-        if (c.sparkSession eq spark) c
-        else spark.createDataFrame(
-          java.util.Arrays.asList(c.collect(): _*), c.schema))
-      .getOrElse(
-        Similarity.kmeansCentroids(embStatic, 16, 2).materialize())
-    // the file stream source requires a DIRECTORY; the fixture is a single
-    // parquet file — stage a copy of it under the work root (a production
-    // lake is a directory already and skips this). Local fallback links
-    // instead of copying when the filesystem allows.
-    val streamDir = new Path(root, "stream")
-    fs.mkdirs(streamDir)
-    val srcFile = new Path(path)
-    val staged = new Path(streamDir, "part-0.parquet")
-    def hadoopCopy(): Unit = {
-      org.apache.hadoop.fs.FileUtil.copy(
-        srcFile.getFileSystem(hconf), srcFile, fs, staged, false, hconf)
-      ()
-    }
-    if (localTmp) {
-      try java.nio.file.Files.createSymbolicLink(
-        java.nio.file.Paths.get(staged.toUri.getPath),
-        java.nio.file.Paths.get(path))
-      catch { case _: Exception => hadoopCopy() }
-    } else hadoopCopy()
-    val src = spark.readStream.schema(embStatic.schema)
-      .parquet(streamDir.toString)
-    // hier assignment kicks in only at production C (≥ flatBelow); the
-    // C = 16 gate run falls back to the exact flat fold, so the oracle
-    // geometry is untouched
-    //
-    // Verification runs INSIDE foreachBatch (the stream-static join per
-    // micro-batch, as the scaladoc above describes) and NOTHING reaches
-    // the driver. The r10 shape parked raw candidates in a memory sink
-    // and verified once at the end — at 100× scaled-C that is ~78M
-    // candidate rows (Σ occupancy²/2 across C cells) collected
-    // driver-side, which broke spark.driver.maxResultSize; r11 verified
-    // in-batch but still collect()ed the VERIFIED pairs into a driver
-    // queue — O(true dups) is fine at fixture scale but at 100 TB the
-    // verified set is itself data-sized. Each batch's verified pairs
-    // append to the run's pairs dir executor-side (the sink a real
-    // pipeline has anyway) and the result is a scan of that dir: the
-    // driver holds file paths, never rows, at any corpus dirtiness —
-    // PROVIDED the dir is executor-reachable, which is what `workDir`
-    // makes true off local[*]. Candidates are emitted exactly once per
-    // pair (BucketState.pairArrivals), so per-batch verify ∪ = the
-    // end-of-stream verify of the old shape.
-    val pairsDir = new Path(root, "pairs").toString
-    // seed the sink with the (empty) schema so the final scan works even
-    // when the stream verified nothing. mode=overwrite also TRUNCATES a
-    // pre-existing pairs dir (a reused workDir) — the seed and the
-    // overwrite must stay paired, or stale pairs from a prior run would
-    // pollute this one's result.
-    spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "va BIGINT, vb BIGINT, sim DOUBLE"))
-      .write.mode("overwrite").parquet(pairsDir)
-    val assigned =
-      if (probes >= 2) cellRowsHierMulti(src, cent)
-      else cellRowsHier(src, cent)
-    val q = candidates(assigned)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (b: Dataset[CandPair], _: Long) =>
-        verifyPairs(b.toDF(), embStatic, 0.4)
-          .write.mode("append").parquet(pairsDir)
+    def run(rootDir: String): DataFrame = {
+      val root = new Path(rootDir)
+      val fs = root.getFileSystem(hconf)
+      val path = s"$sfDir/embeddings.parquet"
+      val embStatic = spark.read.parquet(path)
+      // a caller-supplied centroid frame may be bound to the ORIGINAL
+      // session — re-emit its (tiny, trained-artifact-sized) rows on the
+      // scoped session so the stream plan never mixes sessions
+      val cent = centOpt
+        .map(c =>
+          if (c.sparkSession eq spark) c
+          else spark.createDataFrame(
+            java.util.Arrays.asList(c.collect(): _*), c.schema))
+        .getOrElse(
+          Similarity.kmeansCentroids(embStatic, 16, 2).materialize())
+      // the file stream source requires a DIRECTORY; the fixture is a single
+      // parquet file — stage a copy of it under the work root (a production
+      // lake is a directory already and skips this). Local fallback links
+      // instead of copying when the filesystem allows.
+      val streamDir = new Path(root, "stream")
+      fs.mkdirs(streamDir)
+      val srcFile = new Path(path)
+      val staged = new Path(streamDir, "part-0.parquet")
+      def hadoopCopy(): Unit = {
+        org.apache.hadoop.fs.FileUtil.copy(
+          srcFile.getFileSystem(hconf), srcFile, fs, staged, false, hconf)
         ()
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // multi-probe can verify a both-cells pair twice within a batch
-    // (collapsed by verifyPairs' candidate distinct) — the final
-    // distinct guards the cross-batch composition too
-    val pairs = spark.read.parquet(pairsDir)
-      .select(col("va"), col("vb"), col("sim")).distinct()
-    if (localTmp) {
-      // temp fallback: sever lineage from the dirs, then remove them —
-      // repeated invocations must not leak /tmp dirs holding the full
-      // verified pair set
-      val out = pairs.materializeForced()
-      fs.delete(root, true)
-      out
-    } else {
-      // the staged source copy is scratch; the pairs dir is the caller's
-      // durable output and the lazy scan's backing store — keep it
+      if (localTmp) {
+        try java.nio.file.Files.createSymbolicLink(
+          java.nio.file.Paths.get(staged.toUri.getPath),
+          java.nio.file.Paths.get(path))
+        catch { case _: Exception => hadoopCopy() }
+      } else hadoopCopy()
+      val src = spark.readStream.schema(embStatic.schema)
+        .parquet(streamDir.toString)
+      // hier assignment kicks in only at production C (≥ flatBelow); the
+      // C = 16 gate run falls back to the exact flat fold, so the oracle
+      // geometry is untouched
+      //
+      // Verification runs INSIDE foreachBatch (the stream-static join per
+      // micro-batch, as the scaladoc above describes) and NOTHING reaches
+      // the driver. The r10 shape parked raw candidates in a memory sink
+      // and verified once at the end — at 100× scaled-C that is ~78M
+      // candidate rows (Σ occupancy²/2 across C cells) collected
+      // driver-side, which broke spark.driver.maxResultSize; r11 verified
+      // in-batch but still collect()ed the VERIFIED pairs into a driver
+      // queue — O(true dups) is fine at fixture scale but at 100 TB the
+      // verified set is itself data-sized. Each batch's verified pairs
+      // append to the run's pairs dir executor-side (the sink a real
+      // pipeline has anyway) and the result is a scan of that dir: the
+      // driver holds file paths, never rows, at any corpus dirtiness —
+      // PROVIDED the dir is executor-reachable, which is what `workDir`
+      // makes true off local[*]. Candidates are emitted exactly once per
+      // pair (BucketState.pairArrivals), so per-batch verify ∪ = the
+      // end-of-stream verify of the old shape.
+      val pairsDir = new Path(root, "pairs").toString
+      // seed the sink with the (empty) schema so the final scan works even
+      // when the stream verified nothing. mode=overwrite also TRUNCATES a
+      // pre-existing pairs dir (a reused workDir) — the seed and the
+      // overwrite must stay paired, or stale pairs from a prior run would
+      // pollute this one's result.
+      spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          org.apache.spark.sql.types.StructType.fromDDL(
+            "va BIGINT, vb BIGINT, sim DOUBLE"))
+        .write.mode("overwrite").parquet(pairsDir)
+      val assigned =
+        if (probes >= 2) cellRowsHierMulti(src, cent)
+        else cellRowsHier(src, cent)
+      val q = candidates(assigned)
+        .writeStream
+        .outputMode("append")
+        .foreachBatch { (b: Dataset[CandPair], _: Long) =>
+          verifyPairs(b.toDF(), embStatic, 0.4)
+            .write.mode("append").parquet(pairsDir)
+          ()
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // multi-probe can verify a both-cells pair twice within a batch
+      // (collapsed by verifyPairs' candidate distinct) — the final
+      // distinct guards the cross-batch composition too
+      val pairs = spark.read.parquet(pairsDir)
+        .select(col("va"), col("vb"), col("sim")).distinct()
+      // the staged source copy is scratch; the pairs dir is the run's
+      // output and the lazy scan's backing store — keep it
       fs.delete(streamDir, true)
       pairs
     }
+    // temp fallback: scratch cuts the pair set loose from the dirs and
+    // removes them, also when the run throws — repeated invocations must
+    // not leak /tmp dirs holding the full verified pair set
+    workDir.fold(Materialize.scratch("graft_ss")(run))(run)
   }
 
   /** Exact-cosine verification of (deduped) candidates against the

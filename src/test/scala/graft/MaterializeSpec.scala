@@ -68,13 +68,40 @@ class MaterializeSpec extends SparkSuite {
     }
   }
 
+  test("scratch deletes its dir when the body throws") {
+    var seen = ""
+    intercept[IllegalStateException] {
+      Materialize.scratch("graft_scratch_spec") { dir =>
+        seen = dir
+        spark.range(3).write.parquet(s"$dir/t")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(seen.nonEmpty && !new java.io.File(seen).exists(),
+      s"a throwing body left $seen behind")
+  }
+
+  test("scratch deletes its dir on success; the frame collects in none mode") {
+    inMode("none") {
+      var seen = ""
+      val df = Materialize.scratch("graft_scratch_spec") { dir =>
+        seen = dir
+        spark.range(5).toDF("x").write.parquet(s"$dir/t")
+        spark.read.parquet(s"$dir/t")
+      }
+      assert(!new java.io.File(seen).exists(), s"success left $seen behind")
+      assert(df.collect().map(_.getLong(0)).sorted.toSeq === (0L until 5L))
+    }
+  }
+
   test("delete-after-materialize queries survive none mode (forced sites)") {
     // these queries delete their temp inputs (roundtrip dirs, dropped
     // bucketed tables) right after materializing — in `none` mode a plain
     // pass-through would leave lineage over deleted files and the first
     // action would throw FileNotFound. materializeForced() must sever
     // lineage in EVERY mode.
-    for (name <- Seq("csv_roundtrip", "q30_bucket_join", "dedup_incremental")) {
+    for (name <- Seq("csv_roundtrip", "q30_bucket_join", "dedup_incremental",
+        "cdc_state_sink", "lake_change_feed", "mm_binary_ingest")) {
       val none = inMode("none") {
         rows(SparkEntry.queries(name)(spark, sf0001))
       }

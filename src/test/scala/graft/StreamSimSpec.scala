@@ -147,6 +147,20 @@ class StreamSimSpec extends SparkSuite {
       .deleteDirectory(new java.io.File(root))
   }
 
+  test("nearDupStreamed: temp fallback leaks no work dir when it throws") {
+    def tmpDirs(): Set[String] =
+      new java.io.File(sys.props("java.io.tmpdir")).listFiles()
+        .filter(_.getName.startsWith("graft_ss")).map(_.getName).toSet
+    val noEmb = java.nio.file.Files.createTempDirectory("graft_noemb")
+    try {
+      val before = tmpDirs()
+      intercept[Exception] {
+        StreamSim.nearDupStreamed(spark, noEmb.toString)
+      }
+      assert(tmpDirs() === before, "a failed run leaked its work dir")
+    } finally java.nio.file.Files.delete(noEmb)
+  }
+
   test("cell cap bounds fan-out and counts drops into the accumulator") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
