@@ -159,7 +159,6 @@ object Bench {
           concat(lit("w"), pmod(col("id") % 3 + lit(i), lit(7)))): _*).as("text"))
       val pairs = TextDedup.minhashLshPairs(docs, "doc_id", "text")
       TextDedup.connectedComponents(pairs, "doc_a", "doc_b").count()
-      TextDedup.connectedComponentsStar(pairs, "doc_a", "doc_b").count()
       TextDedup.simhashHammingPairs(docs, "doc_id", "text").count()
       docs.select(TextAnalysis.winnowFingerprint(col("text"))).count()
       // 40 synthetic 64-dim embeddings (covers the vec_id < 32 PQ seed and

@@ -33,8 +33,8 @@ object ExplainInner {
     val ops: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
       "streamsim_cellRows" ->
         (() => streaming.StreamSim.cellRows(emb, cent).toDF()),
-      "streamsim_cellRowsMulti" ->
-        (() => streaming.StreamSim.cellRowsMulti(emb, cent).toDF()))
+      "streamsim_cellRows_mp" ->
+        (() => streaming.StreamSim.cellRows(emb, cent, probes = 2).toDF()))
     args.foreach { n =>
       println(s"\n===== $n =====")
       ops.get(n) match {

@@ -102,7 +102,7 @@ object ScaleSmoke {
       val c = graft.operators.Similarity.autoCells(e)
       // sample-trained quantizer (the sim_cent@scaledC row measured flat
       // training quadratic in n at C ∝ n); per-arrival assignment goes
-      // through the hierarchical two-hop fold (cellRowsHier, O(batch·√C))
+      // through cellRows' two-hop fold (O(batch·√C))
       // once C ≥ 128 — the flat O(batch·C) fold at C ∝ n was the last
       // family member carrying the quadratic
       graft.streaming.StreamSim.nearDupStreamed(s, dir,
@@ -441,11 +441,11 @@ object ScaleSmoke {
         // rows so the mp delta isolates the probe count, not training
         val cent = Similarity.kmeansCentroids(e, c, 2)
         val flat = pairs(Similarity.nearDupPairsWith(e, cent, thr))
-        val mp = pairs(Similarity.nearDupPairsMultiProbe(e, cent, thr))
+        val mp = pairs(Similarity.nearDupPairsWith(e, cent, thr, probes = 2))
         val scaled = pairs(Similarity.nearDupPairsScaled(e, c, thr,
           nRows = n))
-        val scaledMp = pairs(Similarity.nearDupPairsScaledMultiProbe(
-          e, c, thr, nRows = n))
+        val scaledMp = pairs(Similarity.nearDupPairsScaled(
+          e, c, thr, probes = 2, nRows = n))
         // STRONG pairs (≥ thr+0.05) are boundary-free candidates; DUP
         // pairs (≥ 0.7) are the true near-duplicates the operator exists
         // to find; the band [thr, thr+0.05) is boundary churn
@@ -506,14 +506,14 @@ object ScaleSmoke {
         var prevScaled = Set.empty[(Long, Long)]
         var mass1 = 0L
         for (p <- Seq(1, 2, 4, 8)) {
-          val asn = Similarity.assignMultiProbe(v, cent, p).materialize()
+          val asn = Similarity.assignCells(v, cent, p).materialize()
           val mass = asn.groupBy("cid").agg(count(lit(1)).as("m"))
             .agg(sum(col("m") * (col("m") - 1)).cast("long")).head()
             .getLong(0) / 2
           if (p == 1) mass1 = mass
-          val mp = keys(Similarity.nearDupPairsMultiProbe(
+          val mp = keys(Similarity.nearDupPairsWith(
             e, cent, thr, probes = p))
-          val sMp = keys(Similarity.nearDupPairsScaledMultiProbe(
+          val sMp = keys(Similarity.nearDupPairsScaled(
             e, c, thr, probes = p, nRows = n))
           val contained = prevFlat.subsetOf(mp) && prevScaled.subsetOf(sMp)
           prevFlat = mp; prevScaled = sMp

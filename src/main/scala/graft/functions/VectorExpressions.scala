@@ -251,110 +251,21 @@ case class NearestCode(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
-/** IVF nearest-cell argmax over a flattened centroid table: `cids(i)`
-  * whose subvector (rows of `flat`, `dim` doubles each in `cids` order)
-  * maximizes cosine similarity to `v`, ties → the EARLIEST (= lowest,
-  * callers pass cid-sorted arrays) cell via strict `>`.
+/** IVF top-2 cells over a flattened centroid table: the two `cids(i)`
+  * whose subvectors (rows of `flat`, `dim` doubles each in `cids` order)
+  * have the highest cosine similarity to `v`, in rank order; strict `>`
+  * keeps the EARLIER (= lowest, callers pass cid-sorted arrays) cell on
+  * ties. The first element is the nearest cell, so one expression
+  * serves single- and two-probe assignment (StreamSim's per-row
+  * streaming fold slices it).
   *
   * Cosine per cell is the single-pass dot/√·√ loop of [[CosineSim]] —
   * the identical IEEE accumulation tree, truncated to the shorter of the
-  * two vectors — so assignments are bitwise-equal to the HOF left fold
-  * `aggregate(cents, (-∞,-1), keep-strictly-greater)` this replaces
-  * (StreamSim's per-row streaming assignment). HigherOrderFunction
-  * lambdas are interpreted per element and outside whole-stage codegen;
-  * this compiles to one tight primitive loop (guide §4). An empty
-  * centroid array yields -1 (the fold's zero accumulator); a NaN cosine
-  * (zero vector) never beats the accumulator in either form (`NaN > x`
-  * is false).
-  */
-case class NearestCell(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType), ArrayType(LongType), ArrayType(DoubleType))
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val cids = b.asInstanceOf[ArrayData]
-    val flat = c.asInstanceOf[ArrayData]
-    val n = cids.numElements()
-    val dim = if (n == 0) 0 else flat.numElements() / n
-    require(flat.numElements() == n * dim,
-      s"NearestCell: flat centroids have ${flat.numElements()} doubles, " +
-        s"not divisible into $n cells")
-    val m = math.min(v.numElements(), dim)
-    var best = Double.NegativeInfinity
-    var bestCid = -1L
-    var i = 0
-    while (i < n) {
-      val off = i * dim
-      var dot = 0.0; var aa = 0.0; var bb = 0.0
-      var j = 0
-      while (j < m) {
-        val x = v.getDouble(j); val y = flat.getDouble(off + j)
-        dot += x * y; aa += x * x; bb += y * y
-        j += 1
-      }
-      val s = dot / (math.sqrt(aa) * math.sqrt(bb))
-      if (s > best) { best = s; bestCid = cids.getLong(i) }
-      i += 1
-    }
-    bestCid
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) => {
-      val n = ctx.freshName("n"); val dim = ctx.freshName("dim")
-      val m = ctx.freshName("m")
-      val best = ctx.freshName("best"); val bestCid = ctx.freshName("bestCid")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val off = ctx.freshName("off")
-      val dot = ctx.freshName("dot"); val aa = ctx.freshName("aa")
-      val bb = ctx.freshName("bb")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = $b.numElements();
-         |int $dim = $n == 0 ? 0 : $c.numElements() / $n;
-         |if ($c.numElements() != $n * $dim) {
-         |  throw new IllegalArgumentException(
-         |    "NearestCell: flat centroids have " + $c.numElements() +
-         |    " doubles, not divisible into " + $n + " cells");
-         |}
-         |int $m = java.lang.Math.min($a.numElements(), $dim);
-         |double $best = Double.NEGATIVE_INFINITY;
-         |long $bestCid = -1L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  int $off = $i * $dim;
-         |  double $dot = 0.0; double $aa = 0.0; double $bb = 0.0;
-         |  for (int $j = 0; $j < $m; $j++) {
-         |    double $x = $a.getDouble($j);
-         |    double $y = $c.getDouble($off + $j);
-         |    $dot += $x * $y; $aa += $x * $x; $bb += $y * $y;
-         |  }
-         |  double $s = $dot / (java.lang.Math.sqrt($aa) * java.lang.Math.sqrt($bb));
-         |  if ($s > $best) { $best = $s; $bestCid = $b.getLong($i); }
-         |}
-         |${ev.value} = $bestCid;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): NearestCell =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** Top-2 cells by cosine over the same flattened centroid table as
-  * [[NearestCell]]: the two highest-similarity cids in rank order,
-  * strictly-greater keeps earlier (lower-cid) elements on ties — the
-  * codegen'd twin of StreamSim's `top2Cids` running-pair HOF fold
-  * (multi-probe assignment). Emits exactly the fold's finish lambda:
-  * the ids with sim > -∞ (so ≤ 2, possibly 0 for an empty table),
-  * never a duplicate (each cell enters the ranking once).
+  * two vectors — in one tight primitive loop instead of an interpreted
+  * HigherOrderFunction fold (guide §4). Emits the ids scored above -∞:
+  * at most 2, none for an empty table, never a duplicate (each cell
+  * enters the ranking once). A NaN cosine (zero vector) never beats the
+  * -∞ start (`NaN > x` is false), so a zero vector gets no cell.
   */
 case class Top2Cells(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
@@ -467,12 +378,6 @@ object VectorFunctions {
     ExpressionUtils.column(
       NearestCode(ExpressionUtils.expression(sv),
         ExpressionUtils.expression(codes), ExpressionUtils.expression(flat)))
-
-  /** IVF cosine argmax `nearestCell(v, cids, flat)` as a Column. */
-  def nearestCell(v: Column, cids: Column, flat: Column): Column =
-    ExpressionUtils.column(
-      NearestCell(ExpressionUtils.expression(v),
-        ExpressionUtils.expression(cids), ExpressionUtils.expression(flat)))
 
   /** Top-2 cells by cosine `top2Cells(v, cids, flat)` as a Column. */
   def top2Cells(v: Column, cids: Column, flat: Column): Column =

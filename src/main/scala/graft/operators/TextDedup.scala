@@ -166,66 +166,22 @@ object TextDedup {
       .select("doc_a", "doc_b", "hamming")
   }
 
-  /** Connected components over a near-dup pair set by min-label
-    * propagation: every doc's cluster id converges to the smallest doc_id
-    * in its component — the grouping step of near-dedup ("keep one doc per
-    * cluster").
+  /** Connected components over a near-dup pair set: every doc's
+    * cluster id is the smallest doc_id in its component — the grouping
+    * step of near-dedup ("keep one doc per cluster").
     *
-    * The driver loop iterates to fixpoint (diameter-bounded, tiny for
-    * near-dup graphs; labels localCheckpoint'd per round to keep lineage
-    * flat). At 100 TB component sizes stay small for dedup workloads; for
-    * adversarial graphs swap in large-star/small-star (Kiveris et al.,
-    * "Connected Components in MapReduce"), which is the same join shape.
-    */
-  def connectedComponents(
-      pairs: DataFrame, aCol: String, bCol: String, maxIters: Int = 50): DataFrame = {
-    // materialize the pair set ONCE: it appears in both union branches, and
-    // Spark recomputes each branch's full lineage — for LSH input that
-    // would re-run the candidate-verify join per branch
-    val p = pairs.materialize()
-    val edges = p.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(p.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct().materialize()
-    var labels = edges.select(col("src").as("doc")).distinct()
-      .withColumn("label", col("doc")).materialize()
-    var changed = 1L
-    var iters = 0
-    while (changed > 0 && iters < maxIters) {
-      val neigh = edges
-        .join(labels.withColumnRenamed("doc", "src"), "src")
-        .groupBy(col("dst").as("doc")).agg(min("label").as("nlabel"))
-      // one heavy action per round: the convergence flag rides along in the
-      // propagation pass itself (null nlabel -> no improvement), so the
-      // follow-up count only scans the just-checkpointed local blocks
-      // instead of re-joining next against the previous labels.
-      val next = labels.join(neigh, Seq("doc"), "left")
-        .select(col("doc"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
-          (col("nlabel") < col("label")).as("chg"))
-        .materialize()
-      changed = next.filter(col("chg")).count()
-      labels = next.drop("chg")
-      iters += 1
-    }
-    if (changed > 0)
-      Console.err.println(
-        s"[graft] connectedComponents: stopped at maxIters=$maxIters with " +
-          s"$changed labels still moving — component diameter exceeds the cap")
-    labels.select(col("doc").as("doc_id"), col("label").as("cluster_id"))
-  }
-
-  /** Connected components by alternating large-star / small-star rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * the adversarial-graph fallback to [[connectedComponents]]: min-label
-    * propagation needs O(diameter) rounds, the star algorithm O(log n),
-    * so a pathological chain converges in a handful of shuffles instead
-    * of hitting the iteration cap.
+    * Alternating large-star / small-star rounds (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond"): O(log n) rounds, so
+    * an adversarial high-diameter graph (a long chain) converges in a
+    * handful of shuffles, where min-label propagation needs O(diameter)
+    * rounds and hits its iteration cap. `DedupSpec` pins a 400-node
+    * chain and a driver-side union-find reference.
     *
     * Each round is two grouped-min joins over the edge list; convergence
     * is detected from a (count, hash-sum) signature of the checkpointed
     * edge set — one cheap action per round.
     */
-  def connectedComponentsStar(
+  def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String, maxIters: Int = 50): DataFrame = {
     // one materialization of the pair set for the three lineage consumers
     // below (two `nodes` union branches + the edge canonicalization)
@@ -277,7 +233,7 @@ object TextDedup {
     }
     if (!converged)
       Console.err.println(
-        s"[graft] connectedComponentsStar: stopped at maxIters=$maxIters " +
+        s"[graft] connectedComponents: stopped at maxIters=$maxIters " +
           "without signature convergence — emitted labels may not be the " +
           "component minimum")
     nodes.join(e.select(col("u").as("doc"), col("v").as("label")), Seq("doc"), "left")

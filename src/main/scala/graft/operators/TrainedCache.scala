@@ -46,10 +46,10 @@ object TrainedCache {
 
   /** Seconds already attributed to NESTED recordBuild calls on this
     * thread — subtracted from the enclosing build so the registry's
-    * entries are additive, not overlapping (e.g. the IVF-PQ codebook's
-    * first build invokes the centroid first build; without the exclusion
-    * the centroid seconds would land in BOTH entries and shared_builds
-    * would overstate the total first-build cost).
+    * entries are additive, not overlapping (e.g. the persisted vector
+    * index's first build invokes the centroid first build; without the
+    * exclusion the centroid seconds would land in BOTH entries and
+    * shared_builds would overstate the total first-build cost).
     */
   private val nestedSecs = new ThreadLocal[Double] {
     override def initialValue(): Double = 0.0
@@ -92,15 +92,31 @@ object TrainedCache {
     * results that are small by construction (trained artifacts) — never
     * for data-sized tables. `name` (optional) attributes the first-build
     * cost in [[buildTimes]].
+    *
+    * `f` runs inside `computeIfAbsent`, and a `ConcurrentHashMap` mapping
+    * function must not update its own map: a nested `memoDf` throws
+    * "Recursive update" only when both keys share a bin, and is undefined
+    * otherwise. So a `memoDf` call made while this thread runs a build
+    * is refused every time, naming both keys; a build resolves the
+    * artifacts it needs before its own `memoDf`.
     */
   def memoDf(spark: SparkSession, key: String, name: String = "")(
       f: => DataFrame): DataFrame = {
-    val (schema, rows) = cache.computeIfAbsent(key, _ => recordBuild(name) {
-      val df = f
-      (df.schema, df.collect())
+    Option(building.get()).foreach(outer => throw new IllegalStateException(
+      s"TrainedCache.memoDf: '$key' requested while building '$outer'; " +
+        "resolve it before the enclosing memoDf"))
+    val (schema, rows) = cache.computeIfAbsent(key, _ => {
+      building.set(key)
+      try recordBuild(name) {
+        val df = f
+        (df.schema, df.collect())
+      } finally building.remove()
     })
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
+
+  /** The key whose [[memoDf]] build runs on this thread, or null. */
+  private val building = new ThreadLocal[String]
 
   /** Cheap corpus identity for cache keys: (path, length, mtime) of every
     * file under the given paths, digested. Catches the fixture-

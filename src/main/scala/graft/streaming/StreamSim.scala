@@ -31,10 +31,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * compaction window); the shared [[BucketState.pairArrivals]] step keeps
   * the cap/TTL/emit semantics identical to the text stream's.
   *
-  * Assignment arithmetic: a per-row left fold over the cid-sorted packed
-  * centroids keeping the strictly-greater cosine — identical winner and
-  * lowest-cid tie-break to the batch `min(struct(-cosine, cid))` hash
-  * aggregate (`StreamSimSpec` pins fold ≡ ivfAssignTo on the fixture).
+  * Assignment arithmetic: a per-row fold over the cid-sorted packed
+  * centroids keeping the strictly-greater cosine — identical winners and
+  * lowest-cid tie-break to the batch [[Similarity.assignCells]] heap
+  * (`StreamSimSpec` pins fold ≡ batch on the fixture; see [[cellRows]]).
   * The fold needs no pre-shuffle: the only exchange in the stream is the
   * groupByKey on cell id, matching StreamDedup's latency-bound shape.
   */
@@ -45,32 +45,60 @@ object StreamSim {
   case class CandPair(va: Long, vb: Long)
 
   /** Per-row IVF cell assignment against an explicit (cid, cv) centroid
-    * table: broadcast the packed cid-sorted centroid table (ids +
-    * flattened vectors), argmax via the codegen'd [[org.apache.spark.sql
-    * .graft.NearestCell]] expression. No shuffle, no aggregate — one row
-    * in, one row out, one primitive loop per row (guide §4; the previous
-    * `aggregate()` HOF fold was interpreted per element and sat outside
-    * whole-stage codegen in the streaming assignment hot path — r18
-    * headroom item 3). NearestCell's cosine is CosineSim's exact IEEE
-    * loop and its strictly-greater/-1-zero semantics are the fold's, so
-    * assignments are bitwise identical (StreamSimSpec pins ≡ batch
-    * ivfAssignTo).
+    * table — the streaming form of the batch [[Similarity.assignCells]]
+    * with the same `probes` and `flatBelow`: each arrival lands in its
+    * top-`probes` cells' keyed state (one row in, up to `probes`
+    * (cid, vec_id) rows out). No shuffle, no aggregate, no per-row join:
+    * one broadcast row and one fold per row. Multi-probe is the batch
+    * form's recall knob — boundary-split pairs are recovered because
+    * both members share at least one probed cell; a pair sharing BOTH
+    * cells is emitted twice by the cell states and collapses in the
+    * verify stage's distinct.
+    *
+    * Below `flatBelow` centroids (the C = 16 gate geometry) the fold is
+    * the codegen'd [[org.apache.spark.sql.graft.Top2Cells]] loop over the
+    * packed cid-sorted table: CosineSim's exact IEEE loop, strictly
+    * greater keeps the lower cid on ties — the batch heap's (msim desc,
+    * cid asc). A vector with no finite cosine (a zero vector) scores
+    * NaN against every cell, never beats the -∞ start, and yields no row.
+    *
+    * From `flatBelow` on (the production C ∝ n geometry, where the flat
+    * O(batch·C) fold would re-introduce per arrival the quadratic the
+    * batch path killed) the fold is two-hop, O(√C + 2·occupancy) per
+    * row: a top-2 over the ~√C super-centroids (the batch hop 1's
+    * two-super probe), then a top-2 over only those supers' member
+    * centroids. Parity with the batch two-hop is structural: the super
+    * geometry is the SAME [[Similarity.trainSupers]] artifact, supers are
+    * scid-sorted so hop 1 tie-breaks like the batch TopK's (ssim desc,
+    * scid asc), hop 2 carries an explicit lowest-cid tie clause (its two
+    * member lists are each cid-sorted, not their concatenation), and only
+    * member-having supers are packed (the batch's memberless-super
+    * pruning). `StreamSimSpec` pins row-for-row equality with
+    * [[Similarity.assignCells]] in both geometries and at both probe
+    * counts.
     */
-  def cellRows(emb: DataFrame, cent: DataFrame): Dataset[CellRow] = {
+  def cellRows(emb: DataFrame, cent: DataFrame, probes: Int = 1,
+      flatBelow: Int = 128): Dataset[CellRow] = {
+    require(probes == 1 || probes == 2,
+      s"cellRows: probes must be 1 or 2, got $probes")
     import emb.sparkSession.implicits._
-    val best = org.apache.spark.sql.graft.VectorFunctions.nearestCell(
-      col("v"), col("cids"), col("flat"))
-    emb.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .crossJoin(broadcast(packedFlat(cent)))
-      .select(best.as("cid"), col("vec_id"))
+    val v = emb.select(col("vec_id").cast("long").as("vec_id"),
+      col("embedding").cast("array<double>").as("v"))
+    val (packed, top2) = Similarity.hierCells(cent, flatBelow) match {
+      case None => (packedFlat(cent),
+        org.apache.spark.sql.graft.VectorFunctions.top2Cells(
+          col("v"), col("cids"), col("flat")))
+      case Some(centRows) => (packedSupers(cent, centRows), hierTop2)
+    }
+    v.crossJoin(broadcast(packed))
+      .select(explode(slice(top2, 1, probes)).as("cid"), col("vec_id"))
       .as[CellRow]
   }
 
-  /** The broadcast row shared by the flat folds: cid-sorted centroid ids
-    * + their vectors flattened into one doubles array (the NearestCode
-    * packing shape — ids and offsets align because both derive from the
-    * SAME sorted array).
+  /** The broadcast row of the flat fold: cid-sorted centroid ids + their
+    * vectors flattened into one doubles array (the NearestCode packing
+    * shape — ids and offsets align because both derive from the SAME
+    * sorted array).
     */
   private def packedFlat(cent: DataFrame): DataFrame =
     cent.agg(
@@ -79,146 +107,49 @@ object StreamSim {
         expr("transform(cents, c -> CAST(c.cid AS BIGINT))").as("cids"),
         flatten(expr("transform(cents, c -> c.cv)")).as("flat"))
 
-  /** Hierarchical per-row assignment — the streaming twin of the batch
-    * [[Similarity.assignToHier]], for the production C ∝ n geometry. The
-    * flat [[cellRows]] fold is O(batch·C) per micro-batch: with C ∝ n
-    * that re-introduces per-arrival the quadratic the batch path killed
-    * (the r10 scaled-C fix). Here each row folds the ~√C super-centroids
-    * (top-2 kept, matching the batch hop-1's superProbe=2 boundary
-    * coverage), then argmins only those two supers' member centroids —
-    * O(√C + 2·occupancy) ≈ O(√C) per row, still with NO per-row joins or
-    * shuffles: one broadcast of the nested (scid, scv, members) table.
-    *
-    * Parity with the batch two-hop is structural, not coincidental: the
-    * super geometry comes from the SAME [[Similarity.trainSupers]]
-    * artifact, supers are scid-sorted so the strictly-greater fold
-    * tie-breaks like the batch TopK's (ssim desc, scid asc), members are
-    * cid-sorted with an explicit lowest-cid tie clause like the batch
-    * argmin over struct(-sim, cid), and only member-having supers are
-    * packed (the batch's memberless-super pruning). `StreamSimSpec` pins
-    * row-for-row equality against [[Similarity.assignToHier]]. Below
-    * `flatBelow` centroids this falls back to the exact flat fold — the
-    * C = 16 gate query keeps its oracle-pinned geometry.
+  /** The two-hop fold over [[packedSupers]]' `supers`: the top-2 member
+    * cids of the row's two probed supers, in rank order. The hop-1
+    * result is wrapped in a one-element array and transformed over, so
+    * the √C fold evaluates once per row, not once per reference (the
+    * inline-HOF re-eval hazard). With a single live super both probes
+    * point at index 0; its members then enter once, since a duplicated
+    * argmax would displace the true second cell, so the two cids always
+    * differ. The finish lambda keeps the cids scored above -∞ — NaN
+    * counts as above here, as in the batch heap's ordering.
     */
-  def cellRowsHier(emb: DataFrame, cent: DataFrame,
-      flatBelow: Int = 128): Dataset[CellRow] = {
-    import emb.sparkSession.implicits._
-    val centRows = cent.count() // driver action — cent is C rows, tiny
-    if (centRows < flatBelow) return cellRows(emb, cent)
-    val packed = packedSupers(cent, centRows)
+  private def hierTop2: org.apache.spark.sql.Column = {
+    val supers = col("supers")
     val negInf = lit(Double.NegativeInfinity)
-    val top2 = superTop2(col("supers"))
-    // hop 2 references BOTH probed supers — wrap the hop-1 result in a
-    // one-element array and transform over it so the √C fold evaluates
-    // once per row, not once per reference (the inline-HOF re-eval
-    // hazard). With a single live super b2 still points at index 0; the
-    // duplicated members cannot change an argmin.
-    val zeroBest = struct(negInf.as("sim"), lit(Long.MaxValue).as("cid"))
-    val assigned = transform(array(top2), t =>
+    val none = struct(negInf.as("sim"), lit(Long.MaxValue).as("cid"))
+    val cids = transform(array(superTop2(supers)), t => {
+      val b1 = t("b1")("idx"); val b2 = t("b2")("idx")
       aggregate(
-        concat(
-          element_at(col("supers"), t("b1")("idx") + 1)("members"),
-          element_at(col("supers"), t("b2")("idx") + 1)("members")),
-        zeroBest,
+        concat(element_at(supers, b1 + 1)("members"),
+          filter(element_at(supers, b2 + 1)("members"), _ => b2 =!= b1)),
+        struct(none.as("b1"), none.as("b2")),
         (acc, m) => {
           val sm = Similarity.cosine(col("v"), m("cv"))
-          when(sm > acc("sim") ||
-              (sm === acc("sim") && m("cid") < acc("cid")),
-            struct(sm.as("sim"), m("cid").as("cid"))).otherwise(acc)
-        }))
-    emb.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .crossJoin(broadcast(packed))
-      .select(element_at(assigned, 1)("cid").as("cid"), col("vec_id"))
-      .as[CellRow]
+          def beats(b: org.apache.spark.sql.Column) =
+            sm > b("sim") || (sm === b("sim") && m("cid") < b("cid"))
+          val cand = struct(sm.as("sim"), m("cid").cast("long").as("cid"))
+          when(beats(acc("b1")), struct(cand.as("b1"), acc("b1").as("b2")))
+            .otherwise(when(beats(acc("b2")),
+              struct(acc("b1").as("b1"), cand.as("b2")))
+              .otherwise(acc))
+        },
+        acc => transform(
+          filter(array(acc("b1"), acc("b2")), b => b("sim") > negInf),
+          b => b("cid")))
+    })
+    element_at(cids, 1)
   }
 
-  /** Multi-probe per-row assignment: each arrival lands in its TOP-2
-    * cells' keyed state instead of only the argmax cell — the streaming
-    * twin of [[Similarity.nearDupPairsMultiProbe]]'s assignment, and the
-    * same recall knob (boundary-split pairs are recovered because both
-    * members share at least one probed cell). One row in, up to two
-    * (cid, vec_id) rows out; a pair sharing BOTH cells is emitted twice
-    * by the cell states and collapses in the verify stage's distinct.
-    * Tie-breaks mirror the batch TopK ((csim desc, cid asc)): the packed
-    * centroids are cid-sorted and the fold keeps strictly-greater.
-    */
-  def cellRowsMulti(emb: DataFrame, cent: DataFrame): Dataset[CellRow] = {
-    import emb.sparkSession.implicits._
-    // codegen'd top-2 (guide §4) — emits exactly the running-pair HOF
-    // fold's finish lambda (rank order, strictly-greater tie-break,
-    // ≥0-filtered), one primitive loop per row instead of an interpreted
-    // per-element fold
-    val top2 = org.apache.spark.sql.graft.VectorFunctions.top2Cells(
-      col("v"), col("cids"), col("flat"))
-    emb.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .crossJoin(broadcast(packedFlat(cent)))
-      .select(col("vec_id"), explode(top2).as("cid"))
-      .select(col("cid"), col("vec_id")).as[CellRow]
-  }
-
-  /** Hierarchical multi-probe: [[cellRowsHier]]'s two-hop fold with the
-    * hop-2 argmin widened to a top-2 — the per-row O(√C) twin of
-    * [[Similarity.assignToHierMulti]]. Falls back to the flat
-    * [[cellRowsMulti]] below `flatBelow` (the gate geometry).
-    */
-  def cellRowsHierMulti(emb: DataFrame, cent: DataFrame,
-      flatBelow: Int = 128): Dataset[CellRow] = {
-    import emb.sparkSession.implicits._
-    val centRows = cent.count() // driver action — cent is C rows, tiny
-    if (centRows < flatBelow) return cellRowsMulti(emb, cent)
-    val packed = packedSupers(cent, centRows)
-    val top2 = superTop2(col("supers"))
-    // both probed supers' members, deduped (single-live-super edge) —
-    // evaluated through the one-element-array transform so the hop-1
-    // fold runs once per row (see cellRowsHier)
-    val cids = transform(array(top2), t =>
-      top2Cids(
-        concat(
-          element_at(col("supers"), t("b1")("idx") + 1)("members"),
-          element_at(col("supers"), t("b2")("idx") + 1)("members")),
-        m => m("cv"), m => m("cid")))
-    emb.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .crossJoin(broadcast(packed))
-      .select(col("vec_id"), explode(element_at(cids, 1)).as("cid"))
-      .select(col("cid"), col("vec_id")).as[CellRow]
-  }
-
-  /** Top-2 (id) fold over a packed (…, vec, id) array by cosine against
-    * the row's `v` — strictly-greater keeps the earlier (lower-id, since
-    * inputs are id-sorted) element on ties, matching the batch TopK's
-    * (sim desc, id asc). The 4-arg aggregate's finish lambda emits the
-    * deduped id array directly, so the fold is referenced exactly once.
-    */
-  private def top2Cids(arr: org.apache.spark.sql.Column,
-      vecOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      idOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    val negInf = lit(Double.NegativeInfinity)
-    val zero2 = struct(
-      struct(negInf.as("sim"), lit(-1L).as("cid")).as("b1"),
-      struct(negInf.as("sim"), lit(-1L).as("cid")).as("b2"))
-    aggregate(arr, zero2, (acc, e) => {
-      val sm = Similarity.cosine(col("v"), vecOf(e))
-      val cand = struct(sm.as("sim"), idOf(e).cast("long").as("cid"))
-      when(sm > acc("b1")("sim"),
-        struct(cand.as("b1"), acc("b1").as("b2")))
-        .otherwise(when(sm > acc("b2")("sim"),
-          struct(acc("b1").as("b1"), cand.as("b2")))
-          .otherwise(acc))
-    }, acc => array_distinct(filter(
-      array(acc("b1")("cid"), acc("b2")("cid")), x => x >= 0L)))
-  }
-
-  /** The nested (scid, scv, members) broadcast row shared by the hier
-    * folds: supers scid-sorted, members cid-sorted, memberless supers
-    * excluded (see [[cellRowsHier]]).
+  /** The nested (scid, scv, members) broadcast row of the two-hop fold:
+    * supers scid-sorted, members cid-sorted, memberless supers excluded
+    * (see [[cellRows]]).
     */
   private def packedSupers(cent: DataFrame, centRows: Long): DataFrame = {
-    val nSuper = math.max(4, math.round(math.sqrt(centRows.toDouble)).toInt)
-    val (superCent, centSuper) = Similarity.trainSupers(cent, nSuper)
+    val (superCent, centSuper) = Similarity.trainSupers(cent, centRows)
     cent.join(centSuper, "cid")
       .groupBy("scid")
       .agg(array_sort(collect_list(struct(col("cid"), col("cv"))))
@@ -355,9 +286,9 @@ object StreamSim {
       } else hadoopCopy()
       val src = spark.readStream.schema(embStatic.schema)
         .parquet(streamDir.toString)
-      // hier assignment kicks in only at production C (≥ flatBelow); the
-      // C = 16 gate run falls back to the exact flat fold, so the oracle
-      // geometry is untouched
+      // the two-hop fold kicks in only at production C (≥ flatBelow); the
+      // C = 16 gate run keeps the exact flat fold, so the oracle geometry
+      // is untouched
       //
       // Verification runs INSIDE foreachBatch (the stream-static join per
       // micro-batch, as the scaladoc above describes) and NOTHING reaches
@@ -386,10 +317,7 @@ object StreamSim {
           org.apache.spark.sql.types.StructType.fromDDL(
             "va BIGINT, vb BIGINT, sim DOUBLE"))
         .write.mode("overwrite").parquet(pairsDir)
-      val assigned =
-        if (probes >= 2) cellRowsHierMulti(src, cent)
-        else cellRowsHier(src, cent)
-      val q = candidates(assigned)
+      val q = candidates(cellRows(src, cent, probes))
         .writeStream
         .outputMode("append")
         .foreachBatch { (b: Dataset[CandPair], _: Long) =>
@@ -430,7 +358,7 @@ object StreamSim {
       .join(v.select(col("vec_id").as("vb"), col("v").as("xb")), "vb")
       .select(col("va"), col("vb"),
         Similarity.cosine(col("xa"), col("xb")).as("sim"))
-      .filter(col("sim") >= threshold)
+      .filter(Similarity.atLeast(col("sim"), threshold))
       .select(col("va"), col("vb"), round(col("sim"), 6).as("sim"))
   }
 }

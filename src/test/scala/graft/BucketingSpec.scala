@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSuite {
 
   test("bucketed-by-key tables join without a shuffle exchange") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_wh").toString
     spark.sql("DROP TABLE IF EXISTS li_b")
     spark.sql("DROP TABLE IF EXISTS o_b")
 

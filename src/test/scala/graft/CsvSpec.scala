@@ -16,7 +16,8 @@ class CsvSpec extends SparkSuite {
 
   test("dump layout: dt/table partitions, sorted header, row cap per file") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csvspec").toString
+    val tmp = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_csvspec").toString
     val df = (1 to 250).map(i =>
       ("db_test.task_test", s"r$i", "insert", 1465372800L + i, "20160608"))
       .toDF("table", "rid", "cdc_action", "cdc_ts", "dt")
@@ -41,7 +42,8 @@ class CsvSpec extends SparkSuite {
 
   test("drift quarantine: mixed-schema table goes to .tmp (dump2csv.py:78-87)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val tmp = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_drift").toString
     // table A clean; table B has two field-set fingerprints
     val df = Seq(
       ("db.a", "1", "f1,f2", "20160608"),
@@ -68,7 +70,8 @@ class CsvSpec extends SparkSuite {
 
   test("dump → load roundtrip preserves rows and recovers table column") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rt").toString
+    val tmp = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_rt").toString
     val df = Seq(
       ("db.t", "1", "insert", "10", "20160608"),
       ("db.t", "2", "delete", "11", "20160608"))

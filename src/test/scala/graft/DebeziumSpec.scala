@@ -59,7 +59,8 @@ class DebeziumSpec extends SparkSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_dbz").toString
+    val dir = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_dbz").toString
     val state = s"$dir/state"
     val mem = MemoryStream[String]
     // deploy-time composition: Kafka-shaped value column -> envelope parse

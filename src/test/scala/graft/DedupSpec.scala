@@ -54,21 +54,44 @@ class DedupSpec extends SparkSuite {
     assert(cc === Map(3L -> 3L, 5L -> 3L, 7L -> 3L, 10L -> 10L, 12L -> 10L))
   }
 
-  test("large-star/small-star CC == min-label propagation; beats diameter cap") {
+  test("large-star/small-star CC == driver union-find; beats diameter cap") {
     import spark.implicits._
-    // fixture-shaped graph: equivalence with the propagation algorithm
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L),
-      (22L, 10L)).toDF("doc_a", "doc_b")
     def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = labels(TextDedup.connectedComponents(pairs, "doc_a", "doc_b"))
-    val star = labels(TextDedup.connectedComponentsStar(pairs, "doc_a", "doc_b"))
-    assert(star === prop)
-    // adversarial 400-node chain: diameter >> the propagation iteration
-    // cap, but the star algorithm converges logarithmically
+    // reference: union-find on the driver, each component labelled by its
+    // smallest member
+    def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      for ((a, b) <- edges) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(x => x -> find(x)).toMap
+    }
+    def check(edges: Seq[(Long, Long)], label: String): Unit =
+      assert(labels(TextDedup.connectedComponents(
+        edges.toDF("doc_a", "doc_b"), "doc_a", "doc_b")) === unionFind(edges),
+        label)
+    // fixture-shaped graph
+    check(Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L),
+      (22L, 10L)), "fixture-shaped graph")
+    // seeded random graphs of ~200 nodes: sparse enough to leave several
+    // components, with self-pairs and repeated pairs mixed in
+    for (seed <- Seq(7L, 11L, 23L)) {
+      val rnd = new scala.util.Random(seed)
+      val edges = Seq.fill(150)(
+        (rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+      check(edges, s"random graph, seed $seed")
+    }
+    // adversarial 400-node chain: diameter >> a label-propagation
+    // iteration cap, but the star algorithm converges logarithmically
     val chain = (0L until 400L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val starChain = labels(
-      TextDedup.connectedComponentsStar(chain, "doc_a", "doc_b", maxIters = 12))
+      TextDedup.connectedComponents(chain, "doc_a", "doc_b", maxIters = 12))
     assert(starChain.values.toSet === Set(0L), "chain did not collapse to root 0")
     assert(starChain.size === 401)
   }

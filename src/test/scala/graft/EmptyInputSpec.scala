@@ -19,8 +19,6 @@ class EmptyInputSpec extends SparkSuite {
   test("connected components over an empty pair set") {
     assert(TextDedup.connectedComponents(emptyPairs, "doc_a", "doc_b")
       .count() === 0)
-    assert(TextDedup.connectedComponentsStar(emptyPairs, "doc_a", "doc_b")
-      .count() === 0)
   }
 
   test("LSH finds no pairs among unique documents") {

@@ -94,6 +94,20 @@ class MaterializeSpec extends SparkSuite {
     }
   }
 
+  test("TrainedCache.memoDf refuses a nested memoDf, naming both keys") {
+    import graft.operators.TrainedCache
+    val err = intercept[IllegalStateException] {
+      TrainedCache.memoDf(spark, "memo_spec|outer") {
+        TrainedCache.memoDf(spark, "memo_spec|inner")(spark.range(1).toDF())
+      }
+    }
+    assert(err.getMessage.contains("memo_spec|outer") &&
+      err.getMessage.contains("memo_spec|inner"), err.getMessage)
+    // the refused build cached nothing, and this thread builds again
+    assert(TrainedCache.memoDf(spark, "memo_spec|outer")(
+      spark.range(2).toDF()).count() === 2)
+  }
+
   test("delete-after-materialize queries survive none mode (forced sites)") {
     // these queries delete their temp inputs (roundtrip dirs, dropped
     // bucketed tables) right after materializing — in `none` mode a plain

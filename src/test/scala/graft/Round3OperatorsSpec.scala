@@ -162,7 +162,8 @@ class Round3OperatorsSpec extends SparkSuite {
 
   test("linear classifier scores follow the weights") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_clf").toString
+    val dir = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_clf").toString
     // doc 1: long, no stopwords -> high score; doc 2: stopword-heavy -> low
     val good = (1 to 200).map(i => s"token$i").mkString(" ")
     val bad = Seq.fill(50)("the a").mkString(" ")
@@ -179,7 +180,8 @@ class Round3OperatorsSpec extends SparkSuite {
 
   test("fluency score ranks repetitive text above unique text") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_lm").toString
+    val dir = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_lm").toString
     val repetitive = "aa " * 40        // bigrams shared across the corpus
     val unique = ('a' to 'z').map(c => s"$c${c}q$c").mkString(" ")
     (Seq((1L, repetitive.trim, "en"), (2L, repetitive.trim, "en"),

@@ -69,7 +69,7 @@ class ScaledRecallSpec extends SparkSuite {
       df.select("va", "vb").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val flat = pairs(Similarity.nearDupPairsWith(emb, cent, 0.4))
-    val mp = pairs(Similarity.nearDupPairsMultiProbe(emb, cent, 0.4))
+    val mp = pairs(Similarity.nearDupPairsWith(emb, cent, 0.4, probes = 2))
     // superset by construction: a pair sharing an argmax cell shares it
     // in both top-2 sets too
     assert(flat.subsetOf(mp),
@@ -101,8 +101,8 @@ class ScaledRecallSpec extends SparkSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val scaled = spairs(
       Similarity.nearDupPairsScaled(emb, c, 0.4, perCell = 16, nRows = n))
-    val scaledMp = spairs(Similarity.nearDupPairsScaledMultiProbe(
-      emb, c, 0.4, perCell = 16, nRows = n))
+    val scaledMp = spairs(Similarity.nearDupPairsScaled(
+      emb, c, 0.4, probes = 2, perCell = 16, nRows = n))
     assert(scaled.subsetOf(scaledMp),
       s"scaled multi-probe lost ${(scaled -- scaledMp).size} pairs")
     val rScaled = (scaled & truth).size.toDouble / truth.size
@@ -133,8 +133,7 @@ class ScaledRecallSpec extends SparkSuite {
       .filter(col("sim") >= 0.4))
     assert(truth.nonEmpty)
     val byProbes = Seq(1, 2, 4, 8).map(p =>
-      p -> pairs(Similarity.nearDupPairsMultiProbe(emb, cent, 0.4,
-        probes = p)))
+      p -> pairs(Similarity.nearDupPairsWith(emb, cent, 0.4, probes = p)))
     for (Seq((pLo, lo), (pHi, hi)) <- byProbes.sliding(2))
       assert(lo.subsetOf(hi),
         s"probes=$pHi lost ${(lo -- hi).size} pairs probes=$pLo found")

@@ -71,7 +71,7 @@ class SimilaritySpec extends SparkSuite {
     val flat = Similarity.ivfAssignTo(emb, cent)
       .select("vec_id", "cid").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hier = Similarity.assignToHier(v, cent, flatBelow = 0)
+    val hier = Similarity.assignCells(v, cent, flatBelow = 0)
       .select("vec_id", "cid").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hier.keySet === flat.keySet)
@@ -113,7 +113,7 @@ class SimilaritySpec extends SparkSuite {
       col("embedding").cast("array<double>").as("v"))
     val cent = Similarity.kmeansCentroids(
       Similarity.trainSample(emb, 16, perCell = 8), 16, 2)
-    val asn = Similarity.assignToHier(v, cent, flatBelow = 0)
+    val asn = Similarity.assignCells(v, cent, flatBelow = 0)
     assert(asn.count() === emb.count(),
       "hierarchical assignment lost vectors")
   }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 class SnapshotSpec extends SparkSuite {
 
   test("snapshot write partitions by table; reads prune; overwrite idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_snap").toString
+    val dir = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_snap").toString
     val snap = CdcBatch.compactedSnapshot(spark, sf0001)
     CdcBatch.writeSnapshot(snap, dir)
 

@@ -19,64 +19,103 @@ class StreamSimSpec extends SparkSuite {
   private lazy val emb =
     spark.read.parquet(s"$sf0001/embeddings.parquet").materialize()
 
+  private def vecs = emb.select(col("vec_id").cast("long").as("vec_id"),
+    col("embedding").cast("array<double>").as("v"))
+
+  private def batchCells(cent: org.apache.spark.sql.DataFrame, probes: Int,
+      flatBelow: Int): Set[(Long, Long)] =
+    Similarity.assignCells(vecs, cent, probes, flatBelow)
+      .select("vec_id", "cid").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def foldCells(cent: org.apache.spark.sql.DataFrame, probes: Int)
+      : Set[(Long, Long)] =
+    StreamSim.cellRows(emb, cent, probes).collect()
+      .map(r => (r.vec_id, r.cid)).toSet
+
   test("fold assignment == batch ivfAssignTo (same winner, same tie-break)") {
-    val cent = Similarity.kmeansCentroids(emb, 16, 2)
+    // C = 16 sits below the fold's default flatBelow (128): the gate
+    // geometry keeps the exact flat fold, equal to the batch flat heap
+    // whether or not the batch side is given the same flatBelow
+    val cent = Similarity.kmeansCentroids(emb, 16, 2).materialize()
     val batch = Similarity.ivfAssignTo(emb, cent)
       .select("vec_id", "cid").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fold = StreamSim.cellRows(emb, cent)
-      .collect().map(r => r.vec_id -> r.cid).toMap
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val fold = foldCells(cent, 1)
     assert(fold.size === batch.size)
-    for ((id, cid) <- batch)
-      assert(fold(id) === cid, s"vec $id: fold=${fold(id)} batch=$cid")
+    assert(fold === batch, s"fold diverged on ${(fold -- batch).size} vectors")
+    assert(batchCells(cent, 1, 128) === batch)
   }
 
-  test("hier fold assignment == batch assignToHier at production C " +
+  test("hier fold assignment == batch assignCells at production C " +
       "(same winner, same tie-breaks, no drops)") {
     val cent = Similarity.kmeansCentroids(emb, 192, 2).materialize()
     assert(cent.count() >= 128,
       "fixture must keep enough cells to engage the hier path")
-    val v = emb.select(col("vec_id").cast("long").as("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-    val batch = Similarity.assignToHier(v, cent)
-      .select("vec_id", "cid").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fold = StreamSim.cellRowsHier(emb, cent)
-      .collect().map(r => r.vec_id -> r.cid).toMap
-    assert(fold.size === batch.size, "hier fold dropped or duplicated rows")
-    for ((id, cid) <- batch)
-      assert(fold(id) === cid, s"vec $id: fold=${fold(id)} batch=$cid")
+    val batch = batchCells(cent, 1, 128)
+    val fold = foldCells(cent, 1)
+    assert(fold.size === emb.count(), "hier fold dropped or duplicated rows")
+    assert(fold === batch,
+      s"hier fold diverged on ${(fold -- batch).size} vectors")
   }
 
-  test("cellRowsHier below flatBelow falls back to the exact flat fold — " +
-      "the C = 16 gate geometry is untouched") {
-    val cent = Similarity.kmeansCentroids(emb, 16, 2).materialize()
-    val flat = StreamSim.cellRows(emb, cent)
-      .collect().map(r => r.vec_id -> r.cid).toMap
-    val hier = StreamSim.cellRowsHier(emb, cent)
-      .collect().map(r => r.vec_id -> r.cid).toMap
-    assert(hier === flat)
-  }
-
-  test("multi-probe fold assignment == batch assignToHierMulti, flat " +
-      "(C=16) and hier (C=192) regimes") {
-    for (c <- Seq(16, 192)) {
-      val cent = Similarity.kmeansCentroids(emb, c, 2).materialize()
-      val v = emb.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      val batch = Similarity.assignToHierMulti(v, cent)
-        .select("vec_id", "cid").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val fold = StreamSim.cellRowsHierMulti(emb, cent)
-        .collect().map(r => (r.vec_id, r.cid)).toSet
+  test("multi-probe fold assignment == batch assignCells(probes = 2), " +
+      "flat (C=16), hier (C=192) and single-super regimes") {
+    // 128 identical centroids train ONE super, so both hop-1 probes
+    // point at it; every cosine ties and the top 2 are cids 0 and 1
+    val one = emb.filter(col("vec_id") === 0)
+      .select(col("embedding").cast("array<double>").as("cv"))
+    val oneSuper = spark.range(128).select(col("id").as("cid"))
+      .crossJoin(one).materialize()
+    for ((c, cent) <- Seq(16, 192).map(c =>
+        c -> Similarity.kmeansCentroids(emb, c, 2).materialize()) :+
+        (128 -> oneSuper)) {
+      val batch = batchCells(cent, 2, 128)
+      val fold = foldCells(cent, 2)
       assert(fold === batch, s"C=$c: stream multi-probe diverged " +
         s"(missing=${(batch -- fold).size}, extra=${(fold -- batch).size})")
       // and it contains the single-probe assignment (the recall-knob
       // superset property, streamed)
-      val single = StreamSim.cellRowsHier(emb, cent)
-        .collect().map(r => (r.vec_id, r.cid)).toSet
-      assert(single.subsetOf(fold))
+      assert(foldCells(cent, 1).subsetOf(fold))
     }
+  }
+
+  test("cellRows accepts only probes 1 or 2") {
+    val cent = Similarity.kmeansCentroids(emb, 16, 2)
+    intercept[IllegalArgumentException](StreamSim.cellRows(emb, cent, 3))
+  }
+
+  test("a zero vector gets no streamed cell, and the streamed pair set " +
+      "still equals batch nearDupPairsWith") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val cent = Similarity.kmeansCentroids(emb, 16, 2).materialize()
+    val zeroId = 900000L
+    val withZero = emb.select(col("vec_id").cast("long").as("vec_id"),
+        col("embedding").cast("array<double>").as("embedding"))
+      .union(Seq((zeroId, Seq.fill(64)(0.0))).toDF("vec_id", "embedding"))
+      .materialize()
+    val cells = StreamSim.cellRows(withZero, cent).collect()
+    assert(!cells.exists(_.vec_id == zeroId), "zero vector got a cell")
+    assert(cells.length === emb.count())
+
+    val mem = MemoryStream[EmbIn]
+    val cand = StreamSim.candidates(StreamSim.cellRows(mem.toDF(), cent))
+    val verified = scala.collection.mutable.Set[(Long, Long, Double)]()
+    val q = cand.writeStream.outputMode("append")
+      .trigger(Trigger.ProcessingTime(0))
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamSim.CandPair], _: Long) =>
+        StreamSim.verifyPairs(b.toDF(), withZero, 0.4).collect()
+          .foreach(r => verified += ((r.getLong(0), r.getLong(1), r.getDouble(2))))
+        ()
+      }
+      .start()
+    mem.addData(withZero.as[EmbIn].collect().toSeq)
+    q.processAllAvailable(); q.stop()
+    val batchPairs = Similarity.nearDupPairsWith(withZero, cent, 0.4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(batchPairs.nonEmpty, "fixture must produce near-dup pairs")
+    assert(verified.toSet === batchPairs)
   }
 
   test("streamed cell candidates + verify == batch nearDupPairs") {

@@ -326,7 +326,8 @@ class StreamSpec extends SparkSuite {
   test("foreachBatch state sink upserts and deletes across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_state").toString
+    val dir = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_state").toString
     val state = s"$dir/state"
 
     // key -> state bucket (must mirror the sink's hash) — the fixture keys
@@ -371,7 +372,8 @@ class StreamSpec extends SparkSuite {
   test("state sink replays a batch that crashed between staging and commit") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_state_crash").toString
+    val dir = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_state_crash").toString
     val state = s"$dir/state"
 
     def bucket(r: String): Int = spark.range(1)
@@ -444,7 +446,7 @@ class StreamSpec extends SparkSuite {
     // leaf with output computed without them: silent key drop. Both state
     // writers must therefore recover before their first listing/read.
     val dir = java.nio.file.Files
-      .createTempDirectory("graft_midcommit").toString
+      .createTempDirectory(SparkSuite.scratch, "graft_midcommit").toString
     // two rids sharing a bucket (k1 touched, k2 the cohabitant that a
     // pre-recovery listing would drop) + one rid elsewhere
     val bk = (0 until 64).map(i => s"r$i").toDF("rid")
@@ -490,7 +492,8 @@ class StreamSpec extends SparkSuite {
   test("state sink survives a batch annihilating EVERY live key") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_state_empty").toString
+    val dir = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_state_empty").toString
     val state = s"$dir/state"
     val mem = MemoryStream[Ch]
     val q = CdcStream.run(spark, mem.toDS(), state, s"$dir/ckpt")

@@ -12,7 +12,8 @@ class TextQueriesSpec extends SparkSuite {
 
   test("text_decontam handles docs with fewer than 8 tokens") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_shortdoc").toString
+    val dir = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_shortdoc").toString
     val long1 = (1 to 12).map(i => s"alpha$i").mkString(" ")
     val long2 = (1 to 12).map(i => s"beta$i").mkString(" ")
     Seq(
@@ -47,7 +48,8 @@ class TextQueriesSpec extends SparkSuite {
 
   test("repetition signals emit NULL ratio for 1-token docs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rep").toString
+    val dir = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_rep").toString
     Seq((1L, "single"), (2L, "a a a a a a"), (3L, "x y z w v u"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
