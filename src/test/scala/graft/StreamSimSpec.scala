@@ -47,6 +47,19 @@ class StreamSimSpec extends SparkSuite {
     assert(batchCells(cent, 1, 128) === batch)
   }
 
+  test("cellRowsHier below flatBelow falls back to the exact flat fold — " +
+      "the C = 16 gate geometry is untouched") {
+    // cellRowsHier is cellRows with its default flatBelow gate (128);
+    // flatBelow = Int.MaxValue is the ungated exact flat fold
+    val cent = Similarity.kmeansCentroids(emb, 16, 2).materialize()
+    assert(Similarity.hierCells(cent, 128) === None)
+    val flat = StreamSim.cellRows(emb, cent, 1, Int.MaxValue)
+      .collect().map(r => r.vec_id -> r.cid).toMap
+    val hier = StreamSim.cellRows(emb, cent)
+      .collect().map(r => r.vec_id -> r.cid).toMap
+    assert(hier === flat)
+  }
+
   test("hier fold assignment == batch assignCells at production C " +
       "(same winner, same tie-breaks, no drops)") {
     val cent = Similarity.kmeansCentroids(emb, 192, 2).materialize()
