@@ -102,10 +102,36 @@ object GenSwap {
           "ABFS, GCS preconditions).")
   }
 
+  /** Failure-injection seam: invoked inside [[rewrite]] after the
+    * generation is fully staged but before the swap commits — the widest
+    * window in which a real crash leaves computed-but-uncommitted output.
+    * Specs swap in a throwing hook; production never touches it.
+    */
+  private[graft] var afterStageHook: () => Unit = () => ()
+
+  /** The one staged partition rewrite: [[begin]], run `write` into the
+    * staging dir, list the written leaves, fire [[afterStageHook]], then
+    * [[commit]] — dropping every `owned` leaf (relative path, e.g.
+    * `bucket=3`) the rewrite left without a replacement. Any throw
+    * aborts, leaving the root untouched. Returns the written leaves'
+    * relative paths.
+    */
+  def rewrite(spark: SparkSession, dir: String, owned: Seq[String] = Nil)(
+      write: String => Unit): Seq[String] = {
+    val g = begin(spark, dir)
+    try {
+      write(g.genDir)
+      val written = leaves(g.fs, g.gen).map(_._1)
+      afterStageHook()
+      commit(g, dropLeaves = owned.filterNot(written.toSet))
+      written
+    } catch { case t: Throwable => abort(g); throw t }
+  }
+
   /** Heal leftovers of any crashed prior run, then mint fresh staging
     * paths. The root need not exist yet (first write).
     */
-  def begin(spark: SparkSession, dir: String): Gen = {
+  private[graft] def begin(spark: SparkSession, dir: String): Gen = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireAtomicFs(fs, root, "GenSwap (per-leaf atomic rename swap)")
@@ -182,7 +208,7 @@ object GenSwap {
     * recovery: staging dirs gone = recover is a no-op, and the
     * should-have-been-deleted leaf survives with no converging replay.
     */
-  def commit(g: Gen, dropLeaves: Seq[String] = Nil): Unit = {
+  private[graft] def commit(g: Gen, dropLeaves: Seq[String] = Nil): Unit = {
     val Gen(fs, root, gen, old) = g
     if (!fs.exists(root)) fs.mkdirs(root)
     val genLeaves = leaves(fs, gen)
@@ -231,7 +257,7 @@ object GenSwap {
   }
 
   /** Drop the staging dirs without touching the root (error paths). */
-  def abort(g: Gen): Unit = {
+  private[graft] def abort(g: Gen): Unit = {
     g.fs.delete(g.gen, true)
     g.fs.delete(g.old, true)
   }

@@ -76,6 +76,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val cand = v.join(broadcast(q), col("qid") =!= col("vec_id"))
       .select(col("qid"), col("vec_id"), cosine(col("qv"), col("v")).as("sim"))
+      .filter(!isnan(col("sim"))) // zero vector: no neighbour at all
     // heap top-k (ordering total: vec_id unique per qid) — the n × q
     // similarity table is pruned map-side instead of fully sorted
     rankedTopKPerKey(cand, Seq("qid"), Seq(("sim", true), ("vec_id", false)), k)
@@ -336,6 +337,7 @@ object Similarity {
     val cand = asn.join(q, Seq("cid"))
       .filter(col("qid") =!= col("vec_id"))
       .select(col("qid"), col("vec_id"), cosine(col("qv"), col("v")).as("sim"))
+      .filter(!isnan(col("sim"))) // zero vector: no neighbour at all
     // heap top-k (total ordering: a candidate lives in ONE cell, so each
     // (qid, vec_id) appears once even under multi-probe) — prunes the
     // Σ probed-cell candidate table map-side instead of sorting it
@@ -649,7 +651,7 @@ object Similarity {
       .join(v.select(col("vec_id").as("va"), col("v").as("av")), "va")
       .join(v.select(col("vec_id").as("vb"), col("v").as("bv")), "vb")
       .select(col("va"), col("vb"), cosine(col("av"), col("bv")).as("sim"))
-      .filter(col("sim") >= threshold)
+      .filter(atLeast(col("sim"), threshold))
       .select(col("va"), col("vb"), round(col("sim"), 6).as("sim"))
   }
 
@@ -667,7 +669,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     v.join(broadcast(q), col("qid") =!= col("vec_id"))
       .select(col("qid"), col("vec_id"), cosine(col("qv"), col("v")).as("sim"))
-      .filter(col("sim") >= threshold)
+      .filter(atLeast(col("sim"), threshold))
       .select(col("qid"), col("vec_id"), round(col("sim"), 6).as("sim"))
   }
 
@@ -695,6 +697,7 @@ object Similarity {
     val cand = asn.join(nbr, Seq("cid"))
       .filter(col("vec_id") =!= col("nbr"))
       .select(col("vec_id"), col("nbr"), cosine(col("v"), col("nv")).as("sim"))
+      .filter(!isnan(col("sim"))) // zero vector: no neighbour at all
     // heap top-k over the Σ cell² candidate table (total ordering: nbr
     // unique per vec_id) — map-side prune replaces the full sort
     rankedTopKPerKey(cand, Seq("vec_id"), Seq(("sim", true), ("nbr", false)), k)

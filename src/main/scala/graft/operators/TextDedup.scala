@@ -187,7 +187,7 @@ object TextDedup {
     // below (two `nodes` union branches + the edge canonicalization)
     val p = pairs.materialize()
     val nodes = p.select(col(aCol).as("doc"))
-      .union(p.select(col(bCol).as("doc"))).distinct().materialize()
+      .union(p.select(col(bCol).as("doc"))).distinct()
     var e = p
       .select(greatest(col(aCol), col(bCol)).as("u"),
         least(col(aCol), col(bCol)).as("v"))

@@ -141,7 +141,7 @@ object VecIndex {
     // heal a crashed prior pass BEFORE the victim scan resolves its
     // parquet listing: a cell evacuated in .graft-old-* is invisible to
     // the join, so its victims would be silently skipped (they come back
-    // when begin()'s later recovery restores the dir)
+    // when the rewrite's own, later recovery restores the dir)
     graft.GenSwap.recover(
       codesPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
       codesPath)
@@ -155,28 +155,17 @@ object VecIndex {
     // stage survivors in a hidden generation dir inside codes/, then swap
     // ([[graft.GenSwap]]): the scan's source cell files stay untouched on
     // disk for the whole write — no checkpoint needed, no overwrite-of-
-    // own-source window, and concurrent probes see whole cells only
-    val g = graft.GenSwap.begin(spark, codesDir)
-    val fs = g.fs
-    try {
+    // own-source window, and concurrent probes see whole cells only.
+    // All-victim cells write no survivor rows; the rewrite drops them
+    // through the commit.
+    graft.GenSwap.rewrite(spark, codesDir,
+        owned = touched.toSeq.sorted.map(c => s"cid=$c")) { gen =>
       codes
         .filter(col("cid").isin(touched.toSeq: _*)) // partition-pruned scan
         .join(victims, Seq("vec_id"), "left_anti")
         .select(col("vec_id"), col("m"), col("code"), col("cid"))
-        .write.mode("overwrite").partitionBy("cid").parquet(g.genDir)
-      // cells with survivors = the generation's partition dirs — a pure
-      // listing, no second Spark job over the survivor plan
-      val outCells = graft.GenSwap
-        .leaves(fs, new org.apache.hadoop.fs.Path(g.genDir))
-        .collect { case (rel, true) if rel.startsWith("cid=") =>
-          rel.stripPrefix("cid=").toInt }
-        .toSet
-      // all-victim cells have no survivor rows, so no gen leaf to swap
-      // in — drop them THROUGH the commit (evacuate + recover coverage),
-      // not a post-commit fs.delete that a crash would strand live
-      graft.GenSwap.commit(g,
-        dropLeaves = (touched -- outCells).toSeq.sorted.map(c => s"cid=$c"))
-    } catch { case t: Throwable => graft.GenSwap.abort(g); throw t }
+        .write.mode("overwrite").partitionBy("cid").parquet(gen)
+    }
   }
 
   /** ADC top-k for `queries` (emb-format: vec_id, embedding) against the

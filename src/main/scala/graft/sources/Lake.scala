@@ -3077,17 +3077,15 @@ object Lake {
       // the source files stay on disk untouched for the whole write, so
       // the plan is pure lineage over stable files — no checkpoint, no
       // dependency on executor-pinned blocks while the corpus mutates
-      val g = graft.GenSwap.begin(spark, dir)
-      try {
+      graft.GenSwap.rewrite(spark, dir) { gen =>
         val writer = touchedRows
           .repartitionByRange(nTasks, keys: _*)
           .sortWithinPartitions(keys: _*)
           .drop("_graft_z")
           .write.mode(SaveMode.Overwrite)
         (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-         else writer).parquet(g.genDir)
-        graft.GenSwap.commit(g)
-      } catch { case t: Throwable => graft.GenSwap.abort(g); throw t }
+         else writer).parquet(gen)
+      }
     }
 
     val after = stats()

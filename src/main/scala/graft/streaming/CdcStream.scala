@@ -935,13 +935,11 @@ object CdcStream {
       checkpointDir, nBuckets, trigger)
 
   /** The bucket sink both typed merges feed: per micro-batch, upsert the
-    * emitted rows into the bucketed state dir ([[upsertBatch]]).
-    * preDeduped: [[step]] runs once per key per micro-batch and emits
-    * ≤ 1 row, so the batch can never carry two rows of one (table, rid) —
-    * the latest-per-key window (a full exchange + per-key sort of the
-    * batch, every micro-batch) would re-derive what the operator already
-    * guarantees (MergeSpec pins the ≤1-row-per-key-per-batch invariant;
-    * optimization guide §2.4).
+    * emitted rows into the bucketed state dir ([[upsertBatch]]). [[step]]
+    * runs once per key per micro-batch and emits ≤ 1 row, so the batch
+    * never carries two rows of one (table, rid) — MergeSpec pins that
+    * invariant, which is what lets [[upsertBatch]] skip a latest-per-key
+    * pass.
     */
   private def startBucketSink(mergedDs: Dataset[Ch], stateDir: String,
       checkpointDir: String, nBuckets: Int, trigger: Trigger)
@@ -951,7 +949,7 @@ object CdcStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Ch], _: Long) =>
-        upsertBatch(batch.toDF(), stateDir, nBuckets, preDeduped = true)
+        upsertBatch(batch.toDF(), stateDir, nBuckets)
       }
       .start()
 
@@ -1055,6 +1053,33 @@ object CdcStream {
     }
   }
 
+  /** The bucket of a (table, rid) key under an `nBuckets` geometry. */
+  private def bucketOf(nBuckets: Int) =
+    pmod(hash(col("table"), col("rid")), lit(nBuckets))
+
+  /** Open a state dir for a write; returns whether it holds state (at
+    * least one `bucket=*` dir — a batch that annihilates every live key
+    * deletes all bucket dirs but leaves the dir itself, and reading that
+    * would fail schema inference).
+    *
+    * Heals a crashed prior swap FIRST, before any listing or read: after
+    * a crash between a leaf's two commit renames, a bucket sits evacuated
+    * in `.graft-old-*` — a parquet listing resolved now would miss it,
+    * and the rewrite's own recovery (inside the write) would restore it
+    * AFTER the plan was built without its rows, silently dropping that
+    * bucket's untouched keys on the swap. `nBuckets`, where the caller
+    * knows it, is checked against the recorded geometry.
+    */
+  private def openState(spark: SparkSession, stateDir: String,
+      nBuckets: Option[Int]): Boolean = {
+    val statePath = new org.apache.hadoop.fs.Path(stateDir)
+    val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.GenSwap.recover(fs, statePath)
+    nBuckets.foreach(checkGeometry(fs, statePath, _))
+    fs.exists(statePath) && fs.listStatus(statePath).exists(st =>
+      st.isDirectory && st.getPath.getName.startsWith("bucket="))
+  }
+
   /** One micro-batch of the untyped evolving path: fold the batch's
     * changes into stored state THROUGH the action state machine.
     *
@@ -1090,19 +1115,7 @@ object CdcStream {
       nBuckets: Int): Option[Long] = {
     val spark = batchDf.sparkSession
     val keys = Seq("table", "rid")
-    val statePath = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // heal a crashed prior swap BEFORE listing or reading the state dir:
-    // after a crash between a leaf's two commit renames, a bucket sits
-    // evacuated in .graft-old-* — an eagerly-resolved listing taken now
-    // would miss it, and begin()'s recovery (which runs later, inside the
-    // write) would restore it AFTER the plan was built without its rows,
-    // silently dropping that bucket's untouched keys on the swap
-    graft.GenSwap.recover(fs, statePath)
-    checkGeometry(fs, statePath, nBuckets)
-    val hasState = fs.exists(statePath) &&
-      fs.listStatus(statePath).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("bucket="))
+    val hasState = openState(spark, stateDir, Some(nBuckets))
     // the batch is deliberately NOT materialized: its three consumers
     // (probe aggregate, high-water join, fold union) re-read the source's
     // micro-batch slice — a small, page-cached parquet segment — which is
@@ -1114,8 +1127,7 @@ object CdcStream {
     // seq (the replay low-water the auto-sweep needs) — the r12 shape
     // paid three driver round-trips for the same facts
     val probe = described(spark, "graft: fold probe") { batch
-      .groupBy(pmod(hash(col("table"), col("rid")), lit(nBuckets))
-        .as("bucket"))
+      .groupBy(bucketOf(nBuckets).as("bucket"))
       .agg(min(col("seq").cast("long")).as("mn"))
       .collect() } // bounded by nBuckets — tiny
     if (probe.isEmpty) return None
@@ -1124,7 +1136,7 @@ object CdcStream {
     val touchedKeys = batch.select("table", "rid").distinct()
     // ONE read of the touched buckets' state serves the whole batch: the
     // touched-key restriction below (fold seed + high-water guard) AND
-    // upsertBatch's carry-through of the buckets' other keys — the r12
+    // the rewrite's carry-through of the buckets' other keys — the r12
     // shape scanned the same buckets twice per micro-batch
     val bucketRows =
       if (!hasState) None
@@ -1153,7 +1165,7 @@ object CdcStream {
     // high-water union + a re-join: three extra shuffles whose answer the
     // fold already computed.) A key whose fresh changes ALL fall below
     // the stored high-water contributes nothing here and its stored row
-    // — live or tombstone — survives upsertBatch's anti-join untouched,
+    // — live or tombstone — survives the rewrite's anti-join untouched,
     // which is exactly the replayed-batch no-op.
     val merged = storedOpt match {
       case None => graft.Merge.compact(fresh, keys, keepNone = true)
@@ -1162,20 +1174,19 @@ object CdcStream {
         graft.Merge.compact(graft.Evolve.additiveUnion(Seq(seed, fresh)),
           keys, keepNone = true)
     }
-    upsertBatch(merged, stateDir, nBuckets, keepTombstones = true,
-      preDeduped = true,
-      precomputedOld = bucketRows.map(br => (br, touched)))
+    rewriteBuckets(stateDir, merged.withColumn("bucket", bucketOf(nBuckets)),
+      bucketRows, touched, keepTombstones = true)
     Some(minSeq)
   }
 
   /** Which buckets of a state dir hold tombstones, and each bucket's
     * minimum live tombstone seq — maintained by every state write in
-    * this JVM (upsertBatch and the sweep both learn it from the per-
-    * bucket aggregate they already collect) so the per-batch sweep probe
-    * can skip settled buckets WITHOUT scanning them. A state dir not in
-    * the map is unknown (cold start / restart): the first sweep seeds it
-    * with one full probe, after which the steady-state sweep of a
-    * tombstone-free stream is ZERO Spark jobs (the r13 @state smoke
+    * this JVM (the bucket rewrite and the sweep both learn it from the
+    * per-bucket stats observed on their write job) so the per-batch
+    * sweep probe can skip settled buckets WITHOUT scanning them. A state
+    * dir not in the map is unknown (cold start / restart): the first
+    * sweep seeds it with one full probe, after which the steady-state
+    * sweep of a tombstone-free stream is ZERO Spark jobs (the r13 @state smoke
     * measured the uncached probe reading the whole tombstone column
     * family per micro-batch — per-batch I/O linear in state, the exact
     * class this sink exists to avoid). Soundness rides on the sink's
@@ -1206,6 +1217,31 @@ object CdcStream {
       else (Option(prev).getOrElse(Map.empty) -- touched) ++
         stats.collect { case (b, (nt, mn)) if nt > 0 => b -> mn })
 
+  /** Per-bucket tombstone stats — (count, min seq) of the `none` rows of
+    * each of `buckets` — observed ON the job that writes `df`: one
+    * CollectMetrics node with two conditional aggregates per bucket, so
+    * the stats cost no readback job (~180 ms of the per-batch constant
+    * the r12/r13 asks chased). Returns the observed frame and the stats
+    * reader, valid once that job has run. A bucket with no tombstone
+    * reads (0, Long.MaxValue).
+    */
+  private def observeTombstones(df: DataFrame, buckets: Seq[Int])
+      : (DataFrame, () => Map[Int, (Long, Long)]) = {
+    if (buckets.isEmpty) return (df, () => Map.empty)
+    val o = new org.apache.spark.sql.Observation(
+      "graft_tomb_stats_" + java.util.UUID.randomUUID())
+    val exprs = buckets.flatMap { b =>
+      val isTomb = col("cdc_action") === Types.None_ && col("bucket") === b
+      Seq(count(when(isTomb, 1)).as(s"nt_$b"),
+        min(when(isTomb, col("seq"))).as(s"mn_$b"))
+    }
+    (df.observe(o, exprs.head, exprs.tail: _*), () => {
+      val m = o.get
+      buckets.map(b => b -> ((m(s"nt_$b").asInstanceOf[Long],
+        Option(m(s"mn_$b")).fold(Long.MaxValue)(_.asInstanceOf[Long])))).toMap
+    })
+  }
+
   /** Retention sweep for the `none` tombstones [[foldBatch]] persists.
     *
     * A tombstone carrying high-water seq H exists to make a REPLAY of the
@@ -1230,16 +1266,7 @@ object CdcStream {
     */
   def sweepTombstones(spark: SparkSession, stateDir: String,
       olderThanSeq: Long): Long = {
-    val statePath = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // heal a crashed prior swap BEFORE the stats scan: an evacuated
-    // bucket invisible to this listing would make the sweep's rewrite
-    // plan (and the cache reseed) run without that bucket's rows
-    graft.GenSwap.recover(fs, statePath)
-    val hasState = fs.exists(statePath) &&
-      fs.listStatus(statePath).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("bucket="))
-    if (!hasState) return 0L
+    if (!openState(spark, stateDir, None)) return 0L
     def isAged = col("cdc_action") === Types.None_ &&
       col("seq") < olderThanSeq
     // probe scope from the cache: only buckets whose min live tombstone
@@ -1265,71 +1292,33 @@ object CdcStream {
         .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
       tombMins.put(stateDir, stats.map { case (b, (_, mn)) => b -> mn })
       stats.collect { case (b, (_, mn)) if mn < olderThanSeq => b }.toSeq
-    }
+    }.sorted
     if (agedBuckets.isEmpty) return 0L
-    // stage the survivors in a hidden generation dir, then swap
-    // ([[graft.GenSwap]], same discipline as upsertBatch): the plan reads
-    // the touched bucket files while they sit untouched on disk — no
-    // checkpoint, no overwrite-of-own-source window; a crash at any point
-    // is healed by the next begin()'s recovery sweep and the sweep simply
-    // re-runs (it is idempotent on the retained set).
-    val g = graft.GenSwap.begin(spark, stateDir)
-    val (dropped, post) = try {
-      // dropped count + surviving-tombstone stats observed ON the rewrite
-      // job (the upsertBatch Observation discipline): one CollectMetrics
-      // node placed BEFORE the aged filter sees every scoped row — 3
-      // conditional aggregates per aged bucket, bounded by nBuckets.
-      // This replaced a separate probe job AND a generation-readback job
-      // per sweeping micro-batch (the r12→r15 evolving-constant chase).
-      val o = new org.apache.spark.sql.Observation(
-        "graft_sweep_stats_" + java.util.UUID.randomUUID())
-      val exprs = agedBuckets.sorted.flatMap { b =>
-        val tomb = col("cdc_action") === Types.None_ && col("bucket") === b
-        Seq(count(when(tomb && col("seq") < olderThanSeq, 1)).as(s"ag_$b"),
-          count(when(tomb && col("seq") >= olderThanSeq, 1)).as(s"nt_$b"),
-          min(when(tomb && col("seq") >= olderThanSeq, col("seq")))
-            .as(s"mn_$b"))
-      }
+    // stage the survivors, then swap ([[graft.GenSwap.rewrite]], as the
+    // bucket rewrite does): the plan reads the touched bucket files while
+    // they sit untouched on disk; a crash at any point is healed by the
+    // next open and the sweep simply re-runs (it is idempotent on the
+    // retained set). The dropped count and the surviving-tombstone stats
+    // are observed ON the rewrite job — the count before the aged filter,
+    // the stats after it — replacing a separate probe job AND a
+    // generation-readback job per sweeping micro-batch (the r12→r15
+    // evolving-constant chase). A bucket holding ONLY aged tombstones
+    // writes no rows and is dropped through the commit.
+    val agedObs = new org.apache.spark.sql.Observation(
+      "graft_sweep_aged_" + java.util.UUID.randomUUID())
+    val (survivors, post) = observeTombstones(
+      readState(spark, stateDir)
+        .filter(col("bucket").isin(agedBuckets: _*))
+        .observe(agedObs, count(when(isAged, 1)).as("aged"))
+        .filter(!isAged), agedBuckets)
+    graft.GenSwap.rewrite(spark, stateDir,
+        owned = agedBuckets.map(b => s"bucket=$b")) { gen =>
       described(spark, "graft: sweep rewrite") {
-        readState(spark, stateDir)
-          .filter(col("bucket").isin(agedBuckets: _*))
-          .observe(o, exprs.head, exprs.tail: _*)
-          .filter(!isAged)
-          .write.mode("overwrite").partitionBy("bucket").parquet(g.genDir) }
-      val m = o.get
-      val drop = agedBuckets.map(b => m(s"ag_$b").asInstanceOf[Long]).sum
-      val stats0 = agedBuckets.map { b =>
-        val nt = m(s"nt_$b").asInstanceOf[Long]
-        val mn = Option(m(s"mn_$b")).map(_.asInstanceOf[Long])
-          .getOrElse(Long.MaxValue)
-        b -> ((nt, mn))
-      }
-      // a bucket holding ONLY aged tombstones has no surviving rows —
-      // absent from the generation (pure listing, no job); its directory
-      // is dropped THROUGH the commit, so the delete is crash-covered
-      // like any leaf replacement (see GenSwap.commit dropLeaves)
-      val genPath = new org.apache.hadoop.fs.Path(g.genDir)
-      val outBuckets =
-        if (!fs.exists(genPath)) Set.empty[Int]
-        else fs.listStatus(genPath)
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("bucket="))
-          .map(_.getPath.getName.stripPrefix("bucket=").toInt).toSet
-      graft.GenSwap.commit(g, dropLeaves = (agedBuckets.toSet -- outBuckets)
-        .toSeq.sorted.map(b => s"bucket=$b"))
-      (drop, stats0)
-    } catch { case t: Throwable => graft.GenSwap.abort(g); throw t }
-    learnTombstones(stateDir, agedBuckets.toSet, post.toMap, seed = false)
-    dropped
+        survivors.write.mode("overwrite").partitionBy("bucket").parquet(gen) }
+    }
+    learnTombstones(stateDir, agedBuckets.toSet, post(), seed = false)
+    agedObs.get("aged").asInstanceOf[Long]
   }
-
-  /** Failure-injection seam for the replay spec: invoked after the
-    * replacement generation is fully staged but before the swap commits —
-    * the widest window in which a real crash leaves computed-but-
-    * uncommitted batch output. Tests swap in a throwing hook; production
-    * never touches it.
-    */
-  private[graft] var afterStageHook: () => Unit = () => ()
 
   /** Read the bucketed state dir with parquet schema MERGING: buckets
     * written before an additive schema evolution carry the narrow schema,
@@ -1343,9 +1332,11 @@ object CdcStream {
     spark.read.option("mergeSchema", "true").parquet(stateDir)
 
   /** One micro-batch's state upsert (the foreachBatch body of [[run]]).
+    * The batch must carry at most one row per (table, rid), as the typed
+    * merges emit.
     *
     * Idempotent under replay AT ANY FAILURE POINT: the state dir is only
-    * mutated by the final dynamic overwrite (+ annihilated-dir delete), and
+    * mutated by the final swap of the touched buckets, and
     * re-running the batch against either the pre-overwrite state or a
     * partially-overwritten state converges — `old` rows of an already-
     * rewritten bucket equal the batch output, the anti-join removes the
@@ -1362,166 +1353,68 @@ object CdcStream {
     * `Evolve.additiveUnion` is the batch-side gate for that class.
     */
   private[graft] def upsertBatch(batchDf: DataFrame, stateDir: String,
-      nBuckets: Int, keepTombstones: Boolean = false,
-      preDeduped: Boolean = false,
-      precomputedOld: Option[(DataFrame, Set[Int])] = None): Unit = {
+      nBuckets: Int): Unit = {
     val spark = batchDf.sparkSession
-    // preDeduped: foldBatch's compact already emits ≤ 1 row per key, so
-    // the latest-per-key window (a full sort shuffle per micro-batch)
-    // would re-derive what the compact fold guarantees
-    val deduped =
-      if (preDeduped) batchDf
-      else Merge.latestPerKey(batchDf, Seq("table", "rid"), "seq")
-    val updatesPlan = deduped
-      .withColumn("bucket", pmod(hash(col("table"), col("rid")), lit(nBuckets)))
-    // default path: one computation feeds the touched-bucket collect, the
-    // anti-join, and the union — materialize. precomputedOld path: the
-    // caller already supplies the touched set, so BOTH remaining
-    // consumers live inside the single staged-write job — evaluating the
-    // (small, pre-deduped) batch fold twice there is cheaper than one
-    // more per-micro-batch checkpoint job (the job count, not the bytes,
-    // is the dominant evolving-sink constant — r14 fold profile)
-    val updates =
-      if (precomputedOld.isDefined) updatesPlan else updatesPlan.materialize()
-    // typed path (default): a `none` tombstone only REMOVES the stored row
-    // (the checkpointed GroupState carries the replay guard). Untyped
-    // foldBatch keeps tombstone rows — the sink is its only state.
-    def liveOf(df: DataFrame): DataFrame =
-      if (keepTombstones) df else df.filter(col("cdc_action") =!= Types.None_)
-    val statePath = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // heal a crashed prior swap BEFORE the listing / state read below —
-    // begin()'s own recovery runs too late for a plan that eagerly
-    // resolved the parquet listing while a bucket sat evacuated in
-    // .graft-old-* (its untouched keys would be dropped by the swap).
-    // precomputedOld is exempt only because foldBatch (the sole supplier)
-    // now recovers before ITS read of the same dir.
-    if (precomputedOld.isEmpty) {
-      graft.GenSwap.recover(fs, statePath)
-      checkGeometry(fs, statePath, nBuckets)
-    }
-    // precomputedOld: the caller already read the touched buckets' state
-    // (foldBatch reads it for its seed anyway) — reuse it instead of a
-    // second scan of the same buckets, and take the caller's touched set
-    // (a superset is fine: its extra buckets rewrite identically)
-    val (next, touched, freshDir) = precomputedOld match {
-      case Some((old, tb)) =>
-        (old.join(updates.select("table", "rid"), Seq("table", "rid"),
-            "left_anti")
-          .unionByName(liveOf(updates), allowMissingColumns = true), tb,
-          false)
-      case None =>
-        val tb = updates.select("bucket").distinct()
-          .collect().map(_.getInt(0)).toSet // bounded by nBuckets — tiny
-        // "has state" = at least one bucket=* partition dir remains. A
-        // batch that annihilates every live key deletes all bucket dirs
-        // but leaves stateDir itself — reading that empty dir would fail
-        // schema inference, so treat it the same as a missing dir.
-        // Checked through the Hadoop FileSystem (same as the deletion
-        // path below), so hdfs://, s3a://, and local state dirs all
-        // behave identically.
-        val hasState = fs.exists(statePath) &&
-          fs.listStatus(statePath).exists(st =>
-            st.isDirectory && st.getPath.getName.startsWith("bucket="))
-        val n =
-          if (hasState) {
-            // partition-pruned: only the touched buckets are scanned
-            val old = readState(spark, stateDir)
-              .filter(col("bucket").isin(tb.toSeq: _*))
-            old.join(updates.select("table", "rid"), Seq("table", "rid"),
-                "left_anti")
-              .unionByName(liveOf(updates), allowMissingColumns = true)
-          } else liveOf(updates)
-        (n, tb, !hasState)
-    }
-    // stage the touched-bucket replacement in a hidden generation dir
-    // inside the state dir, then swap it in ([[graft.GenSwap]]): the
-    // plan's source bucket files stay on disk untouched for the whole
-    // write, so NO checkpoint of any kind is needed — the r13 design
-    // (forced localCheckpoint → dynamic overwrite of the same files) made
-    // the state rewrite depend on executor-pinned, non-fault-tolerant
-    // blocks mid-overwrite, the exact stage→overwrite-own-source pattern
-    // that went intermittently nondeterministic in lake_compact. The swap
-    // is two metadata renames per touched bucket; a crash at any point is
-    // healed by the next batch's recovery sweep, and the streaming
-    // checkpoint replays the batch convergently exactly as before (the
-    // state dir still mutates only at commit).
-    val g = graft.GenSwap.begin(spark, stateDir)
-    val outStats = try {
-      // untyped/evolving path: tombstones are stored (the sink is the only
-      // state), so the sweep cache needs real per-bucket counts — observed
-      // ON the write job itself (conditional aggregates per touched
-      // bucket, one codegen'd pass, bounded by nBuckets ≤ 64 × 2 exprs)
-      // instead of a separate readback job per micro-batch (~180 ms of
-      // the per-batch constant the r12/r13 asks chased).
-      val obs =
-        if (!keepTombstones || touched.isEmpty) None
-        else Some((new org.apache.spark.sql.Observation(
-          "graft_sink_stats_" + java.util.UUID.randomUUID()),
-          touched.toSeq.sorted))
-      val toWrite = obs match {
-        case None => next
-        case Some((o, tb)) =>
-          val exprs = tb.flatMap { b =>
-            val isTomb = col("cdc_action") === Types.None_ &&
-              col("bucket") === b
-            Seq(count(when(isTomb, 1)).as(s"nt_$b"),
-              min(when(isTomb, col("seq"))).as(s"mn_$b"))
-          }
-          next.observe(o, exprs.head, exprs.tail: _*)
-      }
+    val hasState = openState(spark, stateDir, Some(nBuckets))
+    // one computation feeds the touched-bucket collect and the rewrite's
+    // anti-join and union — materialize
+    val updates = batchDf.withColumn("bucket", bucketOf(nBuckets))
+      .materialize()
+    val touched = updates.select("bucket").distinct()
+      .collect().map(_.getInt(0)).toSet // bounded by nBuckets — tiny
+    // partition-pruned: only the touched buckets are scanned
+    val old =
+      if (!hasState) None
+      else Some(readState(spark, stateDir)
+        .filter(col("bucket").isin(touched.toSeq: _*)))
+    rewriteBuckets(stateDir, updates, old, touched, keepTombstones = false)
+  }
+
+  /** The state write behind [[upsertBatch]] and [[foldBatch]]: rewrite
+    * the `touched` buckets as `old` (their stored rows; None for a state
+    * dir with no buckets yet) minus the updated keys, plus the bucketed
+    * `updates`. The caller supplies both because [[foldBatch]] already
+    * read the touched buckets for its seed — a superset of the written
+    * buckets is fine: its extra buckets rewrite identically, or drop if
+    * left empty.
+    *
+    * `keepTombstones`: the typed sink stores live rows only — a `none`
+    * row just REMOVES the stored row (the checkpointed GroupState carries
+    * the replay guard); the untyped fold keeps tombstone rows, because
+    * the sink is its only state, and observes their per-bucket stats for
+    * the sweep cache.
+    *
+    * The replacement is staged in a hidden generation dir and swapped in
+    * ([[graft.GenSwap.rewrite]]): the plan's source bucket files stay on
+    * disk untouched for the whole write, so NO checkpoint of any kind is
+    * needed — the r13 design (forced localCheckpoint → dynamic overwrite
+    * of the same files) made the state rewrite depend on executor-pinned,
+    * non-fault-tolerant blocks mid-overwrite, the exact stage→overwrite-
+    * own-source pattern that went intermittently nondeterministic in
+    * lake_compact. A bucket whose keys ALL annihilated writes no rows and
+    * is dropped through the commit (crash-covered evacuation, not a
+    * post-commit delete a crash could strand).
+    */
+  private def rewriteBuckets(stateDir: String, updates: DataFrame,
+      old: Option[DataFrame], touched: Set[Int],
+      keepTombstones: Boolean): Unit = {
+    val spark = updates.sparkSession
+    val live =
+      if (keepTombstones) updates
+      else updates.filter(col("cdc_action") =!= Types.None_)
+    val next = old.fold(live)(_
+      .join(updates.select("table", "rid"), Seq("table", "rid"), "left_anti")
+      .unionByName(live, allowMissingColumns = true))
+    val owned = touched.toSeq.sorted
+    val (toWrite, stats) =
+      if (keepTombstones) observeTombstones(next, owned)
+      else (next, () => Map.empty[Int, (Long, Long)])
+    graft.GenSwap.rewrite(spark, stateDir,
+        owned = owned.map(b => s"bucket=$b")) { gen =>
       described(spark, "graft: sink stage write") {
-        toWrite.write.mode("overwrite").partitionBy("bucket")
-          .parquet(g.genDir) }
-      // per-bucket tombstone stats from the freshly-written generation (a
-      // cheap scan of small local files — replaces the second pass over
-      // the checkpointed plan). A bucket whose keys ALL annihilated has
-      // no output rows — absent from the generation, its old directory
-      // is dropped below. The same pass teaches the sweep cache which
-      // rewritten buckets now hold tombstones (a write into a FRESH dir
-      // is complete knowledge and seeds the cache outright).
-      val genPath = new org.apache.hadoop.fs.Path(g.genDir)
-      // written buckets from the generation's partition dirs — a pure
-      // listing, no Spark job (also the read roots below: a dot-named
-      // root makes DataSource emit a spurious "All paths were ignored"
-      // WARN per batch)
-      val bucketDirs =
-        if (!fs.exists(genPath)) Array.empty[org.apache.hadoop.fs.Path]
-        else fs.listStatus(genPath)
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("bucket="))
-          .map(_.getPath)
-      val stats0 =
-        if (bucketDirs.isEmpty) Array.empty[(Int, (Long, Long))]
-        else obs match {
-          case None =>
-            // typed path: liveOf filtered every tombstone out of `next`,
-            // so the stored generation PROVABLY holds none — synthesize
-            // the per-bucket stats from the listing, zero extra jobs
-            bucketDirs.map(p =>
-              p.getName.stripPrefix("bucket=").toInt ->
-                ((0L, Long.MaxValue)))
-          case Some((o, _)) =>
-            // observed metrics from the completed write job
-            val m = o.get
-            bucketDirs.map { p =>
-              val b = p.getName.stripPrefix("bucket=").toInt
-              val nt = m(s"nt_$b").asInstanceOf[Long]
-              val mn = Option(m(s"mn_$b")).map(_.asInstanceOf[Long])
-                .getOrElse(Long.MaxValue)
-              b -> ((nt, mn))
-            }
-        }
-      afterStageHook()
-      // buckets whose keys ALL annihilated have no generation leaf — drop
-      // their directories THROUGH the commit (crash-covered evacuation,
-      // not a post-commit delete a crash could strand; the streaming
-      // replay converged either way, but recovery now needs no replay)
-      val outB = stats0.map(_._1).toSet
-      graft.GenSwap.commit(g, dropLeaves = (touched -- outB)
-        .toSeq.sorted.map(b => s"bucket=$b"))
-      stats0
-    } catch { case t: Throwable => graft.GenSwap.abort(g); throw t }
-    learnTombstones(stateDir, touched, outStats.toMap, seed = freshDir)
+        toWrite.write.mode("overwrite").partitionBy("bucket").parquet(gen) }
+    }
+    // a write into a FRESH dir is complete knowledge: seed the cache
+    learnTombstones(stateDir, touched, stats(), seed = old.isEmpty)
   }
 }

@@ -19,8 +19,38 @@ class GenSwapSpec extends SparkSuite {
     spark.read.parquet(dir).select("id", "k").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
 
-  private def tmp(tag: String) =
-    java.nio.file.Files.createTempDirectory(s"graft_gs_$tag").toString
+  private def tmp(tag: String) = java.nio.file.Files
+    .createTempDirectory(SparkSuite.scratch, s"graft_gs_$tag").toString
+
+  /** relative path -> MD5 of every regular file under `dir`. */
+  private def fileDigests(dir: String): Map[String, String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val it = java.nio.file.Files.walk(root).iterator()
+    val b = Map.newBuilder[String, String]
+    while (it.hasNext) {
+      val p = it.next()
+      if (java.nio.file.Files.isRegularFile(p))
+        b += root.relativize(p).toString ->
+          md.digest(java.nio.file.Files.readAllBytes(p))
+            .map("%02x".format(_)).mkString
+    }
+    b.result()
+  }
+
+  private def stagingDirs(dir: String): Seq[String] = {
+    val it = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator()
+    val b = Seq.newBuilder[String]
+    while (it.hasNext) {
+      val p = it.next()
+      if (p.getFileName.toString.startsWith(".graft-")) b += p.toString
+    }
+    b.result()
+  }
+
+  private def sortedJson(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(to_json(struct(df.columns.toSeq.map(col): _*))).as[String]
+      .collect().toSeq.sorted
 
   private def writePartitioned(dir: String, ids: Range, k: Long => String,
       mode: String = "overwrite"): Unit =
@@ -329,5 +359,61 @@ class GenSwapSpec extends SparkSuite {
       assert(got === Set((10L, "a", "x"), (2L, "a", "y"), (3L, "b", "x")))
     } finally org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(dir))
+  }
+
+  test("a crash after staging leaves the root byte-identical for every " +
+      "staged rewrite; the rerun cleans up and equals the no-fault run") {
+    import streaming.CdcStream
+    final case class Writer(name: String, setup: String => Unit,
+        run: String => Any, contents: String => Seq[String])
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val writers = Seq(
+      Writer("CdcStream.sweepTombstones",
+        dir => {
+          def fold(rows: Seq[(String, String, String, Long, Double)]) =
+            CdcStream.foldBatch(
+              rows.toDF("table", "rid", "cdc_action", "seq", "value"), dir, 8)
+          fold((1 to 20).map(i => ("t", s"k$i", "insert", i.toLong, i * 1.0)))
+          fold((1 to 10).map(i => ("t", s"k$i", "delete", 100L + i, 0.0)))
+        },
+        dir => CdcStream.sweepTombstones(spark, dir, 200L),
+        dir => sortedJson(CdcStream.readState(spark, dir))),
+      Writer("VecIndex.remove",
+        dir => operators.VecIndex.build(emb, dir, 4, 4, 8),
+        dir => operators.VecIndex.remove(spark, dir,
+          emb.filter(col("vec_id") < 30).select("vec_id")),
+        dir => sortedJson(spark.read.parquet(s"$dir/codes"))),
+      Writer("Lake.compact",
+        dir => spark.read.parquet(s"$sf0001/documents.parquet")
+          .select("doc_id", "lang", "n_chars").repartition(col("lang"))
+          .write.mode("overwrite").option("maxRecordsPerFile", 25L)
+          .partitionBy("lang").parquet(dir),
+        dir => sources.Lake.compact(spark, dir, Seq("lang"), Seq("doc_id"),
+          targetBytes = 32L * 1024 * 1024).collect().map(_.toString).toSeq
+          .sorted,
+        dir => sortedJson(spark.read.parquet(dir))))
+    for (w <- writers) {
+      val base = tmp("crash")
+      try {
+        val (crashed, clean) = (s"$base/crashed", s"$base/clean")
+        w.setup(crashed)
+        org.apache.commons.io.FileUtils.copyDirectory(
+          new java.io.File(crashed), new java.io.File(clean))
+        val expected = (w.run(clean), w.contents(clean))
+        val before = fileDigests(crashed)
+        GenSwap.afterStageHook =
+          () => throw new RuntimeException("injected crash after staging")
+        try {
+          val ex = intercept[RuntimeException](w.run(crashed))
+          assert(ex.getMessage.contains("injected crash"), w.name)
+        } finally GenSwap.afterStageHook = () => ()
+        assert(fileDigests(crashed) === before,
+          s"${w.name}: the crash mutated the root")
+        val rerun = (w.run(crashed), w.contents(crashed))
+        assert(stagingDirs(crashed) === Nil, s"${w.name}: staging residue")
+        assert(rerun === expected, s"${w.name}: rerun != no-fault run")
+      } finally org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(base))
+    }
   }
 }

@@ -38,7 +38,8 @@ class LakeCompactSpec extends SparkSuite {
       .toSeq
 
   test("compact: fragmented dirs collapse, data exact, second pass no-op") {
-    val out = java.nio.file.Files.createTempDirectory("graft_cpt1").toString
+    val out = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_cpt1").toString
     try {
       docs.repartition(col("lang"))
         .write.mode("overwrite").option("maxRecordsPerFile", 25L)
@@ -71,7 +72,8 @@ class LakeCompactSpec extends SparkSuite {
 
   test("compact: only degenerate partitions rewrite; settled files stay " +
       "byte-identical in place") {
-    val out = java.nio.file.Files.createTempDirectory("graft_cpt2").toString
+    val out = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_cpt2").toString
     try {
       // settled corpus: everything except 'en', one file per lang
       docs.filter(col("lang") =!= "en").repartition(col("lang"))
@@ -101,7 +103,8 @@ class LakeCompactSpec extends SparkSuite {
   }
 
   test("compact: oversized file splits into range-disjoint ~target files") {
-    val out = java.nio.file.Files.createTempDirectory("graft_cpt3").toString
+    val out = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_cpt3").toString
     try {
       docs.coalesce(1).write.mode("overwrite").parquet(out)
       val oneFile = listing(out)
@@ -136,7 +139,8 @@ class LakeCompactSpec extends SparkSuite {
   test("compact: escaped partition values round trip; nulls map to the " +
       "Hive default partition") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_cpt4").toString
+    val out = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_cpt4").toString
     try {
       val df = Seq(
         (1L, "a b/c"), (2L, "a b/c"), (3L, "a b/c"), (4L, "plain"),
@@ -181,7 +185,7 @@ class LakeCompactSpec extends SparkSuite {
     try {
       def cycle(): Seq[String] = {
         val work = java.nio.file.Files
-          .createTempDirectory("graft_cpt_rep").toString
+          .createTempDirectory(SparkSuite.scratch, "graft_cpt_rep").toString
         try {
           docs.repartition(col("lang"))
             .write.mode("overwrite").option("maxRecordsPerFile", 40L)
@@ -208,7 +212,8 @@ class LakeCompactSpec extends SparkSuite {
   }
 
   test("compact: crashed prior pass heals on the next run") {
-    val out = java.nio.file.Files.createTempDirectory("graft_cpt5").toString
+    val out = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_cpt5").toString
     try {
       docs.repartition(col("lang"))
         .write.mode("overwrite").option("maxRecordsPerFile", 25L)

@@ -61,7 +61,8 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("csv dump: additive-chain table dumps clean; non-chain quarantines") {
-    val root = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val root = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_evo").toString
     // additive drift on t1 (second version adds a field); FORK on t2
     // (disjoint field sets — a rename) must still quarantine
     val df = Seq(
@@ -81,7 +82,8 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSuite {
         === Set("t2"))
       // the round-5-style regression guard: NO drift at all → everything
       // clean, no .tmp dir
-      val root2 = java.nio.file.Files.createTempDirectory("graft_evo2").toString
+      val root2 = java.nio.file.Files
+        .createTempDirectory(SparkSuite.scratch, "graft_evo2").toString
       try {
         sources.Csv.dumpCsvEvolved(
           df.withColumn("fp", lit("a,b")), col("fp"), s"$root2/dump", 1000L)
@@ -96,7 +98,8 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSuite {
       "replays through the supplied mapping, and merges to the clean " +
       "run's state; unaccounted columns fail loudly") {
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("graft_qr").toString
+    val root = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_qr").toString
     try {
       // the CLEAN history: what the log would have been had the upstream
       // ALTER never renamed the column
@@ -154,7 +157,8 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSuite {
   test("streaming sink: a widened batch upserts against narrow state, a " +
       "narrow replay upserts against widened state, untouched buckets " +
       "stay narrow on disk but read wide") {
-    val root = java.nio.file.Files.createTempDirectory("graft_evos").toString
+    val root = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_evos").toString
     val state = s"$root/state"
     def stateDf() = streaming.CdcStream.readState(spark, state)
     try {
@@ -203,7 +207,8 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSuite {
       "→ v2 batches on the same checkpoint compact the widened union " +
       "without state loss or segment re-reads") {
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("graft_evor").toString
+    val root = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_evor").toString
     val src = s"$root/src"; new java.io.File(src).mkdirs()
     val state = s"$root/state"; val ckpt = s"$root/ckpt"
     val v1Schema = StructType(Seq(
@@ -300,7 +305,8 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSuite {
   test("untyped foldBatch: cross-batch state machine parity — " +
       "delete+insert resurrects as update, replays drop below the " +
       "high-water seq, conflicting drift fails the batch") {
-    val root = java.nio.file.Files.createTempDirectory("graft_fold").toString
+    val root = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_fold").toString
     val state = s"$root/state"
     def fold(df: org.apache.spark.sql.DataFrame): Unit =
       streaming.CdcStream.foldBatch(df, state, nBuckets = 8)
@@ -370,7 +376,8 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSuite {
       "manual sweep, an in-horizon replay after an automatic sweep is " +
       "still a no-op, and staging dirs are deleted after commit") {
     import org.apache.spark.sql.streaming.Trigger
-    val root = java.nio.file.Files.createTempDirectory("graft_asw").toString
+    val root = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_asw").toString
     val src = s"$root/src"; new java.io.File(src).mkdirs()
     val state = s"$root/state"; val ckpt = s"$root/ckpt"
     val schema = Seq(("t", "r", "insert", 1L, 1.0))
@@ -442,7 +449,8 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSuite {
   test("sweep tombstone cache survives a simulated JVM restart: the cold " +
       "probe reseeds exact knowledge, drops nothing early, keeps nothing " +
       "dead") {
-    val root = java.nio.file.Files.createTempDirectory("graft_tcache").toString
+    val root = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_tcache").toString
     val state = s"$root/state"
     def fold(rows: Seq[(String, String, String, Long, Double)]): Unit =
       streaming.CdcStream.foldBatch(
@@ -481,7 +489,8 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSuite {
   test("sweepTombstones: drops only tombstones below the replay horizon, " +
       "keeps the live replay guard working, leaves settled buckets " +
       "untouched, and returns state to live rows after churn") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sweep").toString
+    val root = java.nio.file.Files
+      .createTempDirectory(SparkSuite.scratch, "graft_sweep").toString
     val state = s"$root/state"
     val nB = 8
     def fold(rows: Seq[(String, String, String, Long, Double)]): Unit =

@@ -216,4 +216,32 @@ class SimilaritySpec extends SparkSuite {
     assert(kmRecall > seedRecall,
       f"kmeans+multiprobe did not improve recall: $kmRecall%.3f <= $seedRecall%.3f")
   }
+
+  test("a zero vector (cosine NaN) is no range hit, rp-LSH pair or " +
+      "top-k neighbour") {
+    val zero = 100000L
+    val corpus = emb.union(emb.filter(col("vec_id") === 0)
+      .withColumn("vec_id", lit(zero))
+      .withColumn("embedding", expr("transform(embedding, x -> x * 0)")))
+    val pred = col("vec_id") < 5
+    def ids(df: DataFrame, cols: String*): Set[Long] =
+      df.select(cols.map(col): _*).collect()
+        .flatMap(r => cols.indices.map(r.getLong)).toSet
+    val cent = Similarity.kmeansCentroids(emb, 1, 1) // one cell holds all
+    val got = Map(
+      "rangeSearch" -> ids(Similarity.rangeSearch(corpus, pred, 0.0),
+        "vec_id"),
+      // 1 bit per band: the zero vector's all-ones sketch shares a band
+      // with nearly every vector, so it IS a candidate
+      "rpLshPairs" -> ids(Similarity.rpLshPairs(corpus, 8, 1, 0.0),
+        "va", "vb"),
+      "topK" -> ids(Similarity.topK(corpus, pred, 3), "vec_id"),
+      "ivfTopKWith" -> ids(
+        Similarity.ivfTopKWith(corpus, cent, pred, 3, nprobe = 1), "vec_id"),
+      "knnGraphWith" -> ids(Similarity.knnGraphWith(corpus, cent, 3),
+        "vec_id", "nbr"))
+    assert(got.filter(_._2.isEmpty).keys.toSeq === Nil, "found nothing")
+    assert(got.filter(_._2.contains(zero)).keys.toSeq.sorted === Nil,
+      "matched the zero vector")
+  }
 }

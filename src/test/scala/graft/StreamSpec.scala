@@ -398,7 +398,7 @@ class StreamSpec extends SparkSuite {
     // crash the NEXT batch after the replacement is materialized but
     // before the dynamic overwrite — the widest computed-but-uncommitted
     // window
-    CdcStream.afterStageHook =
+    GenSwap.afterStageHook =
       () => throw new RuntimeException("injected crash after staging")
     try {
       val q2 = CdcStream.run(spark, mem.toDS(), state, s"$dir/ckpt")
@@ -409,7 +409,7 @@ class StreamSpec extends SparkSuite {
         || Option(ex.getCause).exists(_.getMessage.contains("injected crash")))
       // the crash must not have mutated committed state
       assert(stateRows() === preCrash, "state mutated by an uncommitted batch")
-    } finally CdcStream.afterStageHook = () => ()
+    } finally GenSwap.afterStageHook = () => ()
 
     // restart from the checkpoint: Spark replays the failed batchId; the
     // sink must converge to exactly the batch recompute
@@ -478,7 +478,7 @@ class StreamSpec extends SparkSuite {
       "evacuated bucket's untouched key was dropped (upsertBatch)")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s1, ".graft-old-crashed")))
 
-    // untyped/evolving fold path (foldBatch → upsertBatch(precomputedOld))
+    // untyped/evolving fold path (foldBatch's own stored read)
     val s2 = s"$dir/state_fold"
     CdcStream.foldBatch(Seq(ch(k1, "insert", 1, 1.0),
       ch(k2, "insert", 2, 2.0), ch(other, "insert", 3, 3.0)).toDF(), s2, 64)

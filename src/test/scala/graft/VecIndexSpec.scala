@@ -31,7 +31,8 @@ class VecIndexSpec extends SparkSuite {
     spark.read.parquet(s"$sf0001/embeddings.parquet")
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft_vecidx_spec").toString
+    Files.createTempDirectory(SparkSuite.scratch, "graft_vecidx_spec")
+      .toString
 
   private def rows(df: DataFrame): Set[(Long, Long, Double, Int)] =
     df.collect().map(r =>
