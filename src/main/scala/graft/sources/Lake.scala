@@ -144,7 +144,11 @@ object Lake {
   //    corruption) — recovers by adopting the highest on-disk generation
   //    rather than ever treating a populated root as empty: orphan
   //    cleanup is NOT allowed to run when the pointer state is
-  //    irrecoverable, so no crash shape wipes published history.
+  //    irrecoverable, so no crash shape wipes published history;
+  //  - a merge's `_NET.staging` (its net set, written before the data
+  //    and moved into `v=<next>` as `_NET` before `_HIGH` flips): a
+  //    staged dir left by a crash is an orphan — every writer's pointer
+  //    recovery deletes it under the lock, and readers never list it.
   //
   // The pointer files are underscore-named, so no Spark listing ever
   // sees them; generation dirs use the `v=<n>` partition-dir convention,
@@ -269,7 +273,8 @@ object Lake {
 
   /** Writer-side crash recovery, run before any publish/rollback mutates
     * the root. Completes a flip interrupted between its delete and
-    * rename (the tmp holds the committed value); if the current pointer
+    * rename (the tmp holds the committed value) and deletes a crashed
+    * merge's `_NET.staging`; if the current pointer
     * is gone with no tmp either — a loss outside the protocol — adopts
     * the highest on-disk generation instead of ever treating a populated
     * root as version-less, because the caller's orphan cleanup would
@@ -282,6 +287,8 @@ object Lake {
       val tmp = new org.apache.hadoop.fs.Path(root, "." + name + ".tmp")
       if (!fs.exists(ptr) && fs.exists(tmp)) fs.rename(tmp, ptr): Unit
     }
+    // a merge's staged net set is an orphan once its writer is gone
+    fs.delete(new org.apache.hadoop.fs.Path(root, NetStaging), true)
     val ptr = new org.apache.hadoop.fs.Path(root, CurrentPointer)
     if (!fs.exists(ptr)) {
       val gens = genDirs(fs, root)
@@ -395,12 +402,28 @@ object Lake {
     * base's resolved map: its own leaf dirs plus what it already
     * inherited, each naming its physical owner) minus the dirs it writes
     * and minus `replaced`: base dirs it must not inherit even where it
-    * wrote nothing.
+    * wrote nothing. A merge's delta (`net`) also takes in the net set
+    * [[mergeDelta]] staged at `_NET.staging` as its `_NET`.
     */
   private sealed trait GenKind
   private case object Full extends GenKind
   private final case class Delta(baseMap: Map[String, Long],
-      replaced: Set[String]) extends GenKind
+      replaced: Set[String], net: Boolean = false) extends GenKind
+
+  /** A merge's net set: staged under the root by [[mergeDelta]], moved
+    * into the generation by [[commitGeneration]] before the high-water
+    * flip. `_NET/_BASE` names the base version the merge read, then the
+    * key columns, one a line. */
+  private val NetStaging = "_NET.staging"
+  private val NetDir = "_NET"
+  private val NetBase = "_BASE"
+
+  /** Failure-injection seam: invoked with "staged" once [[mergeDelta]]
+    * has staged its net set and with "moved" once [[commitGeneration]]
+    * moved it into the generation — the two crash windows the sidecar
+    * adds. Specs swap in a throwing hook; production never touches it.
+    */
+  private[graft] var netCrashHook: String => Unit = _ => ()
 
   /** The one generation commit behind [[publishVersion]],
     * [[publishDelta]] and [[mergeDelta]], in the order the "Versioned
@@ -501,7 +524,7 @@ object Lake {
         }
         // a full generation's resolved schema is exactly its input's
         (Some(df.schema), Map.empty[String, Long])
-      case Delta(baseMap, replaced) =>
+      case Delta(baseMap, replaced, _) =>
         val changed = graft.GenSwap.leaves(fs, nextPath)
           .collect { case (rel, true) => rel }.toSet
         val inherited = baseMap -- changed -- replaced
@@ -528,6 +551,17 @@ object Lake {
       new org.apache.hadoop.fs.Path(nextPath, BatchMarker), m.toString)
     // size ledger inside the generation before it counts as published
     writeSizeFile(spark, fs, nextPath, obs.rows)
+    // the merge's net set joins its generation last: every job that
+    // reads it (the data write, the quarantine) has run
+    kind match {
+      case Delta(_, _, true) =>
+        val stage = new org.apache.hadoop.fs.Path(root, NetStaging)
+        if (!fs.rename(stage, new org.apache.hadoop.fs.Path(nextPath, NetDir)))
+          throw new java.io.IOException(
+            s"Lake: could not move the merge's net set into v=$next")
+        netCrashHook("moved")
+      case _ => ()
+    }
     // high-water first: from here v=next is complete-and-published even
     // if the _CURRENT flip below never runs (it just never became
     // current — the next publish allocates above it)
@@ -567,11 +601,14 @@ object Lake {
     * Additive schema drift rides the delta reader: upserts may carry
     * new columns; inherited/surviving rows read them as NULL.
     *
-    * Cost model per merge: the netted changelog is materialized once
-    * and its partition tuples collected; the base read is driver
-    * metadata (its `_SCHEMA` is the reader schema — no inference job);
-    * the write job lands the touched partitions and observes their row
-    * count (and digest) for the `_SIZE` ledger — no footer reads.
+    * Cost model per merge: the netted changelog is written once, as the
+    * generation's `_NET` sidecar, and that write job observes its
+    * partition tuples; the base read is driver metadata (its `_SCHEMA`
+    * is the reader schema — no inference job); the write job lands the
+    * touched partitions and observes their row count (and digest) for
+    * the `_SIZE` ledger — no footer reads. `_NET` (keys, op, payload,
+    * plus the base version the merge read) later scopes this
+    * generation's change-feed step to its keys ([[stepChanges]]).
     *
     * Partition-stability contract: a change row's partition value names
     * the partition the key LIVES in. With the default
@@ -610,9 +647,9 @@ object Lake {
       throw new IllegalStateException(
         s"Lake: mergeDelta needs a published base in $rootDir — " +
           "publish a full version first"))
-    // net the changelog to one action per key, then materialize: the net
-    // set feeds three consumers (touched-partition collect, anti-join,
-    // upsert rows) and must not recompute per consumer
+    // net the changelog to one action per key, then write it once: the net
+    // set feeds the anti-join and the upsert rows and must not recompute
+    // per consumer, and it stays with the generation as `_NET`
     val keyed = pkCols.map(col)
     // ANY changelog row with an op outside the vocabulary must fail the
     // job loudly, not silently upsert — and the check runs BEFORE
@@ -636,24 +673,34 @@ object Lake {
           .filter(col("_graft_rn") === 1).drop("_graft_rn", sc)
       case None => checked
     }
-    // materialize the netted set: it feeds three consumers (touched-
-    // partition collect, anti-join, upsert rows) and must not recompute
-    // per consumer
-    val net = graft.Materialize(netted)
-    // the touched partition set: bounded by the changelog's distinct
-    // partition values (partitions are coarse — lang, date — so this
-    // driver-side list is small at any corpus scale)
-    def tuples(df: DataFrame): Seq[Seq[Option[String]]] =
-      df.select(partitionCols.map(c => col(c).cast("string")): _*)
-        .distinct().collect().toSeq
-        .map(r => partitionCols.indices.map(i =>
-          Option(r.getString(i))).toSeq)
+    // the net set's one write, staged under the root until the commit
+    // moves it into the generation: the touched partition set (the
+    // changelog's distinct partition values — partitions are coarse,
+    // so this driver-side list is small at any corpus scale) is
+    // observed on the same job, and the rows read back with the schema
+    // they were written with, so no inference job runs
+    val stage = new org.apache.hadoop.fs.Path(root, NetStaging)
+    def tuples(rows: Iterable[org.apache.spark.sql.Row]) = rows.toSeq
+      .map(r => partitionCols.indices.map(i => Option(r.getString(i))))
+    val touchedObs = new org.apache.spark.sql.Observation(
+      "graft_touched_" + java.util.UUID.randomUUID())
+    netted.observe(touchedObs, collect_set(struct(partitionCols.map(c =>
+        col(c).cast("string")): _*)).as("t"))
+      .write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    writeUtf8(fs, new org.apache.hadoop.fs.Path(stage, NetBase),
+      (cur.toString +: pkCols).mkString("\n"))
+    netCrashHook("staged")
+    val net = schemaReader(spark, Some(netted.schema), Set.empty)
+      .parquet(stage.toString)
     // the base's resolved map, listed once: it plans the base read here
     // and the replaced dirs below, and is the commit's delta base
     val baseMap = resolved(fs, root, cur)
     val baseAll = readResolved(spark, fs, root, cur, baseMap)
-    val touched: Seq[Seq[Option[String]]] =
-      if (!probeMovers) tuples(net)
+    val touched: Seq[Seq[Option[String]]] = {
+      // no metric = the optimizer removed an empty input's observation
+      val own = tuples(touchedObs.get.get("t").toSeq.flatMap(
+        _.asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]))
+      if (!probeMovers) own
       else {
         // key+partition projection of the whole base — column-pruned, so
         // the probe reads two thin columns, not the corpus — semi-joined
@@ -661,8 +708,10 @@ object Lake {
         val holders = baseAll
           .select((pkCols ++ partitionCols).map(col): _*)
           .join(net.select(keyed: _*).distinct(), pkCols, "left_semi")
-        (tuples(net) ++ tuples(holders)).distinct
+          .select(partitionCols.map(c => col(c).cast("string")): _*)
+        (own ++ tuples(holders.distinct().collect())).distinct
       }
+    }
     // partition predicate from literals — the literal is cast to the
     // column's NATIVE type (never the column to string), so the filter
     // stays the pure `attr = literal` shape static partition pruning
@@ -721,7 +770,7 @@ object Lake {
       val missing = baseSchema.map(_.name).filterNot(carried.contains)
       // deletes don't write payloads — only complain when an upsert
       // would actually null the column (cheap limit-1 probe on the
-      // already-materialized net)
+      // already-written net)
       if (missing.nonEmpty && !net.filter(col(opCol) === "upsert").isEmpty)
         throw new IllegalArgumentException(
           s"Lake.mergeDelta: changelog lacks base column(s) " +
@@ -744,7 +793,7 @@ object Lake {
     val replaced = baseDirs.keySet.filter(rel =>
       relPartitionValues(rel, partitionCols).exists(touchedSet.contains))
     if (digest) validateDigestArgs(partitionCols, merged.columns.toSeq)
-    commitGeneration(merged, rootDir, Delta(baseDirs, replaced),
+    commitGeneration(merged, rootDir, Delta(baseDirs, replaced, net = true),
       partitionCols, sortCols, maxRecordsPerFile, keep, genMarker, Nil, Nil,
       "additive", digest, expect, onViolation)
     }
@@ -1924,12 +1973,18 @@ object Lake {
     */
   private def ownerReader(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, genPath: org.apache.hadoop.fs.Path,
+      partNames: Set[String]): org.apache.spark.sql.DataFrameReader =
+    schemaReader(spark, readSchemaFile(fs, genPath), partNames)
+
+  /** [[ownerReader]] with the recorded schema already in hand. */
+  private def schemaReader(spark: SparkSession,
+      recorded: Option[org.apache.spark.sql.types.StructType],
       partNames: Set[String]): org.apache.spark.sql.DataFrameReader = {
     def keepsCharVarchar(s: org.apache.spark.sql.types.StructType) =
       org.apache.spark.sql.catalyst.util.CharVarcharUtils.hasCharVarchar(s) &&
         spark.conf.get("spark.sql.preserveCharVarcharTypeInfo", "false")
           .toBoolean
-    readSchemaFile(fs, genPath).filterNot(keepsCharVarchar) match {
+    recorded.filterNot(keepsCharVarchar) match {
       case Some(s) => spark.read.schema(org.apache.spark.sql.types.StructType(
         normalizedSchema(s).fields.filterNot(f => partNames(f.name))))
       case None => spark.read
@@ -2179,6 +2234,15 @@ object Lake {
     * Side reads use each owner's `_SCHEMA` as the reader schema, so a
     * step runs no schema-inference job.
     *
+    * A step into a [[mergeDelta]] generation from the base that merge
+    * read is KEY-scoped: both sides are broadcast-semi-joined to the
+    * merge's `_NET` keys before the diff hashes or shuffles anything
+    * (exact — the merge copied every other row byte for byte), so the
+    * step costs its changed keys plus one column-pruned scan of the
+    * changed dirs. Steps into other generations, a merge after a
+    * rollback, one whose drop-mode gate quarantined rows, and a feed
+    * keyed on a column that is not a merge key stay unscoped.
+    *
     * Every generation in `[fromVersion, toVersion]` must be published
     * and within the retention horizon — a pruned step fails loudly in
     * the retention contract's words (size `keep` to the slowest
@@ -2318,7 +2382,9 @@ object Lake {
   }
 
   /** One feed step: diff generation `a` → `b` reading only the partition
-    * dirs whose physical owner differs between the two resolved maps.
+    * dirs whose physical owner differs between the two resolved maps —
+    * and, when `b` is a merge of `a` whose `_NET` is keyed on `idCol`,
+    * only those dirs' rows whose key is in `_NET`.
     */
   private def stepChanges(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
@@ -2349,13 +2415,40 @@ object Lake {
               dirs0.filterNot(d => da.get(d).exists(x => db.get(d).contains(x)))
             case _ => dirs0
           }
-        def side(v: Long, m: Map[String, Long]): Option[DataFrame] = {
+        // key scope: a merge copies every row outside its net set byte
+        // for byte from the base it read, so when `b` is a merge of `a`
+        // only `_NET`'s keys can differ. Not when a drop-mode gate
+        // quarantined rows: those may be survivors outside the net set
+        val bPath = new org.apache.hadoop.fs.Path(root, s"v=$b")
+        val netDir = new org.apache.hadoop.fs.Path(bPath, NetDir)
+        val scoped = readUtf8(fs, new org.apache.hadoop.fs.Path(netDir, NetBase))
+          .map(_.linesIterator.toList)
+          .exists(rec => rec.headOption.contains(a.toString) &&
+            rec.tail.contains(idCol) &&
+            !fs.exists(new org.apache.hadoop.fs.Path(bPath, QuarantineDir)))
+        def read(v: Long, m: Map[String, Long]): Option[DataFrame] = {
           val mine = m.filter { case (d, _) => dirs(d) }
           if (mine.isEmpty) None
           else Some(readOwned(spark, fs, root, v, mine)
             .select(col(idCol), col(contentCol)))
         }
-        (side(a, ma), side(b, mb)) match {
+        val (ra, rb) = (read(a, ma), read(b, mb))
+        val (sa, sb) = ra.orElse(rb).filter(_ => scoped).fold((ra, rb)) {
+          rows =>
+            // `_NET`'s key column, read with the sides' type; null-safe,
+            // with one null key: the diff's full-outer join never pairs a
+            // null id, so it reports every such row
+            val k = normalizedSchema(org.apache.spark.sql.types.StructType(
+              Seq(rows.schema(idCol))))
+            val ks = broadcast(spark.read.schema(k).parquet(netDir.toString)
+              .union(spark.createDataFrame(java.util.List.of(
+                org.apache.spark.sql.Row(null)), k))
+              .toDF("_graft_k"))
+            def scope(df: DataFrame) =
+              df.join(ks, df(idCol) <=> ks("_graft_k"), "left_semi")
+            (ra.map(scope), rb.map(scope))
+        }
+        (sa, sb) match {
           // physically identical generations (e.g. a re-pointed or
           // pure-metadata step): no changes by construction
           case (None, None) => noChanges(spark, rootDir, b, idCol, contentCol)

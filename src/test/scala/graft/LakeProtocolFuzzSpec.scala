@@ -220,6 +220,17 @@ class LakeProtocolFuzzSpec extends SparkSuite {
           assert(feed === want,
             s"step $step: feed $from..$to != model")
         }
+        // every retained consecutive step — key-scoped into a merge of
+        // its predecessor, unscoped otherwise — equals the full diff of
+        // its two generations, hashes included
+        def feedRows(df: DataFrame): Seq[String] =
+          df.select("v", "id", "change", "old_hash", "new_hash").collect()
+            .map(_.toString).toSeq.sorted
+        for (v <- readables if readable(v - 1))
+          assert(feedRows(Lake.changesBetween(spark, root, v - 1, v, "id",
+              "text")) === feedRows(Lake.diffVersions(spark, root, v - 1, v,
+              "id", "text").withColumn("v", lit(v))),
+            s"step $step: feed step ${v - 1} -> $v != diffVersions")
         // every on-disk generation's recorded metadata equals the model:
         // `_REFS` (n_refs = partitions another generation owns) and
         // `_SIZE` (n_rows = rows of the partitions it owns itself), for
