@@ -2235,11 +2235,12 @@ object Lake {
     * step runs no schema-inference job.
     *
     * A step into a [[mergeDelta]] generation from the base that merge
-    * read is KEY-scoped: both sides are broadcast-semi-joined to the
-    * merge's `_NET` keys before the diff hashes or shuffles anything
-    * (exact — the merge copied every other row byte for byte), so the
-    * step costs its changed keys plus one column-pruned scan of the
-    * changed dirs. Steps into other generations, a merge after a
+    * read is KEY-scoped: both sides are semi-joined to the merge's
+    * `_NET` keys (broadcast when their files are under the broadcast
+    * threshold, shuffled otherwise) before the diff hashes or shuffles
+    * anything (exact — the merge copied every other row byte for byte),
+    * so the step costs its changed keys plus one column-pruned scan of
+    * the changed dirs. Steps into other generations, a merge after a
     * rollback, one whose drop-mode gate quarantined rows, and a feed
     * keyed on a column that is not a merge key stay unscoped.
     *
@@ -2440,10 +2441,10 @@ object Lake {
             // null id, so it reports every such row
             val k = normalizedSchema(org.apache.spark.sql.types.StructType(
               Seq(rows.schema(idCol))))
-            val ks = broadcast(spark.read.schema(k).parquet(netDir.toString)
+            val ks = spark.read.schema(k).parquet(netDir.toString)
               .union(spark.createDataFrame(java.util.List.of(
                 org.apache.spark.sql.Row(null)), k))
-              .toDF("_graft_k"))
+              .toDF("_graft_k")
             def scope(df: DataFrame) =
               df.join(ks, df(idCol) <=> ks("_graft_k"), "left_semi")
             (ra.map(scope), rb.map(scope))

@@ -27,7 +27,7 @@ class LakeNetScopeSpec extends SparkSuite {
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def tmp() = java.nio.file.Files
-    .createTempDirectory("graft_lakenet").toString + "/lake"
+    .createTempDirectory(SparkSuite.scratch, "graft_lakenet").toString + "/lake"
 
   private def cleanup(root: String): Unit =
     org.apache.commons.io.FileUtils.deleteDirectory(
