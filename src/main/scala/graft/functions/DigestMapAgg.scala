@@ -14,27 +14,24 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Per-partition-dir digest aggregate for the lake's IN-WRITE digest
   * (optimization guide §6: one pass instead of write + full read-back):
   * observed ON the publish's write job, it folds every written row into
-  * `dir-rel-path → (row count, bit_xor(row hash))` — exactly the entries
-  * `Lake.writeDigest`'s read-back scan derives, so the digest costs zero
-  * extra jobs and zero re-read of the written bytes.
+  * `dir-rel-path → (row count, bit_xor(row hash))`, so the digest costs
+  * zero extra jobs and zero re-read of the written bytes.
   *
-  * The rel key is rendered from the row's PARTITION VALUES with the same
-  * functions the parquet writer itself uses to name the dir —
-  * `ExternalCatalogUtils.getPartitionPathString` over the value's string
-  * form (`Cast(v, string)` for the supported types is plain `toString`),
-  * null/empty → `__HIVE_DEFAULT_PARTITION__` — so the keys match the
-  * physical dir names byte-for-byte. Callers RESTRICT the in-write path
-  * to string/integral/boolean partition columns (timestamp/date/decimal
-  * renderings carry timezone/format subtleties) and fall back to the
-  * read-back scan otherwise; a key that somehow failed to match a dir
-  * name only costs a digest-lookup miss (a full diff — the safe
-  * direction), never a wrong skip, because cross-generation comparisons
-  * go through the feed's OWN dir listing.
+  * The rel key is rendered exactly as the parquet writer names the dir:
+  * the children are the partition columns cast to string (`Cast(v,
+  * string)` in the session time zone — the writer's own rendering, for
+  * every partition type), joined by [[DigestMapAgg.relPath]] through
+  * `ExternalCatalogUtils.getPartitionPathString` (Hive escaping,
+  * null/empty → `__HIVE_DEFAULT_PARTITION__`). The keys therefore match
+  * the physical dir names byte-for-byte; a key that somehow failed to
+  * would only cost a digest-lookup miss (a full diff — the safe
+  * direction), never a wrong skip, because cross-generation
+  * comparisons go through the feed's OWN dir listing.
   *
-  * Children: the partition value expressions (in partitionCols order)
-  * followed by the row-hash expression. Hash inputs are xxhash64 outputs
-  * — never null. Output: map<string, struct<n: long, x: long>>, keys
-  * sorted for determinism.
+  * Children: the partition values cast to string (in partitionCols
+  * order) followed by the row-hash expression. Hash inputs are xxhash64
+  * outputs — never null. Output: map<string, struct<n: long, x: long>>,
+  * keys sorted for determinism.
   */
 case class DigestMapAgg(
     children: Seq[Expression],
@@ -58,24 +55,16 @@ case class DigestMapAgg(
   override def createAggregationBuffer(): java.util.HashMap[String, Array[Long]] =
     new java.util.HashMap[String, Array[Long]]()
 
-  /** The writer's value rendering for the supported types: Cast(v,
-    * string) ≡ toString. Unsupported types must be rejected by the
-    * caller (supportedPartType), not rendered approximately here.
-    */
-  private def render(v: Any): String = v match {
-    case null => null
-    case s: UTF8String => s.toString
-    case other => other.toString // Int/Long/Short/Byte/Boolean
-  }
-
   override def update(buffer: java.util.HashMap[String, Array[Long]],
       input: InternalRow): java.util.HashMap[String, Array[Long]] = {
+    // relPath's rendering, without its per-row collections
     val sb = new java.lang.StringBuilder
     var i = 0
     while (i < partExprs.length) {
       if (i > 0) sb.append('/')
+      val v = partExprs(i).eval(input)
       sb.append(ExternalCatalogUtils.getPartitionPathString(
-        partNames(i), render(partExprs(i).eval(input))))
+        partNames(i), if (v == null) null else v.toString))
       i += 1
     }
     val h = hashExpr.eval(input).asInstanceOf[Long]
@@ -155,25 +144,25 @@ case class DigestMapAgg(
 }
 
 object DigestMapAgg {
-  /** Partition column types whose dir-name rendering is exactly
-    * `toString` (== Cast to string) — the in-write digest's support set;
-    * anything else falls back to the read-back digest scan.
+  /** The relative dir path the parquet writer names for partition
+    * values already rendered as strings (`Cast(v, string)`; null for a
+    * null value): `name=escaped(value)` per column, joined by '/'.
     */
-  def supportedPartType(dt: DataType): Boolean = dt match {
-    case StringType | IntegerType | LongType | ShortType | ByteType |
-         BooleanType => true
-    case _ => false
-  }
+  def relPath(partNames: Seq[String], values: Seq[String]): String =
+    partNames.zip(values).map { case (n, v) =>
+      ExternalCatalogUtils.getPartitionPathString(n, v)
+    }.mkString("/")
 
-  /** The aggregate as a Column (for `Dataset.observe`): partition value
-    * columns in partitionCols order + the row-hash column.
+  /** The aggregate as a Column (for `Dataset.observe`) over the
+    * partition columns `partNames` (cast to string, in order) and the
+    * row-hash column.
     */
-  def column(partCols: Seq[org.apache.spark.sql.Column],
-      partNames: Seq[String],
+  def column(partNames: Seq[String],
       rowHash: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.classic.ExpressionUtils
     ExpressionUtils.column(DigestMapAgg(
-      partCols.map(ExpressionUtils.expression) :+
+      partNames.map(c => ExpressionUtils.expression(
+        org.apache.spark.sql.functions.col(c).cast(StringType))) :+
         ExpressionUtils.expression(rowHash),
       partNames).toAggregateExpression())
   }

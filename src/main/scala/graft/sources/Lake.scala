@@ -60,7 +60,8 @@ object Lake {
       sortCols: Seq[String],
       maxRecordsPerFile: Long,
       zOrderCols: Seq[String] = Nil,
-      bloomFilterCols: Seq[String] = Nil): Unit = {
+      bloomFilterCols: Seq[String] = Nil,
+      observe: DataFrame => DataFrame = identity): Unit = {
     // z-clustering rides the same single write pass: the z-value is a
     // pure projection (quantile buckets from one approx pass, bits
     // interleaved), the in-file sort uses it, and the projection after
@@ -72,7 +73,9 @@ object Lake {
       if (zOrderCols.isEmpty) (df, partitionCols ++ sortCols)
       else (graft.operators.ZOrder.withZ(df, zOrderCols),
         (partitionCols ++ sortCols) :+ "_graft_z")
-    val sorted = d.repartition(partitionCols.map(col): _*)
+    // `observe` goes on after withZ's quantile pass, so the write is the
+    // one action that fills its metrics
+    val sorted = observe(d).repartition(partitionCols.map(col): _*)
       .sortWithinPartitions(sort.map(col): _*)
     val w0 = (if (zOrderCols.isEmpty) sorted else sorted.drop("_graft_z"))
       .write.mode(SaveMode.Overwrite)
@@ -187,8 +190,8 @@ object Lake {
         .mkString("\n"))
 
   /** The one writer of the lake's small metadata files (pointers, `_REFS`,
-    * `_SCHEMA`, `_DIGEST`, `_BATCH`, `_SIZE`): `text` as UTF-8, replacing
-    * any file already at `p`. */
+    * `_SCHEMA`, `_DIGEST`, `_BATCH`, `_SIZE`, [[followChanges]]' cursor):
+    * `text` as UTF-8, replacing any file already at `p`. */
   private def writeUtf8(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path, text: String): Unit = {
     val os = fs.create(p, true)
@@ -386,15 +389,31 @@ object Lake {
     guarded(spark, rootDir) {
     val (fs, root) = fsOf(spark, rootDir)
     recoverPointers(fs, root)
-    val cur = readPointer(fs, root, CurrentPointer).getOrElse(
-      throw new IllegalStateException(
-        s"Lake: publishDelta needs a published base in $rootDir — " +
-          "publish a full version first"))
     commitGeneration(df, rootDir,
-      Delta(resolved(fs, root, cur).getOrElse(Map.empty), Set.empty),
+      Delta(deltaBase(fs, root, rootDir, "publishDelta")._2, Set.empty),
       partitionCols, sortCols, maxRecordsPerFile, keep, genMarker, Nil, Nil,
       schemaPolicy, digest, expect, onViolation)
     }
+  }
+
+  /** The current version and its resolved map: the base a delta
+    * ([[publishDelta]], [[mergeDelta]]) inherits from. Refused without a
+    * published base, and over an unpartitioned one — root-level data
+    * files are no dir a delta could inherit or replace, so the delta
+    * would silently drop them.
+    */
+  private def deltaBase(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, rootDir: String, op: String)
+      : (Long, Map[String, Long]) = {
+    val cur = readPointer(fs, root, CurrentPointer).getOrElse(
+      throw new IllegalStateException(
+        s"Lake: $op needs a published base in $rootDir — " +
+          "publish a full version first"))
+    cur -> resolved(fs, root, cur).getOrElse(
+      throw new IllegalStateException(
+        s"Lake: $op needs a partitioned base in $rootDir — v=$cur has " +
+          "root-level data files, which a delta can neither inherit nor " +
+          "replace; publish a partitioned full version first"))
   }
 
   /** What a [[commitGeneration]] records beside its own rows. A `Full`
@@ -464,10 +483,9 @@ object Lake {
       expectationGate(df, expect, onViolation)
     // the in-write digest and the ledger's row count ride the write
     // job's metrics (zero extra jobs)
-    val obs = new WriteObs(toWrite, partitionCols, digest,
-      zOrder = zOrderCols.nonEmpty)
-    writeLayout(obs.frame, s"$rootDir/v=$next", partitionCols, sortCols,
-      maxRecordsPerFile, zOrderCols, bloomFilterCols)
+    val obs = new WriteObs(toWrite.schema, partitionCols, digest)
+    writeLayout(toWrite, s"$rootDir/v=$next", partitionCols, sortCols,
+      maxRecordsPerFile, zOrderCols, bloomFilterCols, obs.observe)
     for (o <- expectObs) enforceExpectations(fs, nextPath, o)
     for (q <- quarantine) {
       val qDir = new org.apache.hadoop.fs.Path(nextPath, QuarantineDir)
@@ -541,8 +559,7 @@ object Lake {
     }
     for (s <- schema) writeSchemaFile(fs, nextPath, s)
     // digest donors: the inherited dirs' entries copy from their owners
-    if (digest) writeDigest(spark, fs, root, nextPath, refs,
-      precomputedOwn = obs.ownDigest)
+    for (own <- obs.ownDigest) writeDigest(fs, root, nextPath, refs, own)
     // the caller's provenance marker (e.g. [[publishStream]]'s batch id)
     // lands INSIDE the generation before the high-water flip, so a
     // generation counted published always carries it — the replay-dedup
@@ -578,8 +595,8 @@ object Lake {
     * every key named by the changelog is replaced/removed and every
     * untouched partition is inherited by reference. Cost is
     * O(touched partitions + changelog), never O(corpus): the base read
-    * is partition-pruned to the changelog's partitions, the anti-join
-    * shuffles only their rows, and the write lands only them — at
+    * lists and reads only the touched dirs, the anti-join shuffles only
+    * their rows, and the write lands only them — at
     * 100 TB this is the difference between applying a binlog hour in
     * minutes and rewriting the lake nightly. The full versioned
     * contract holds: the merge is one immutable generation behind the
@@ -597,16 +614,21 @@ object Lake {
     * every row is deleted is REMOVED from the new generation, not
     * inherited back: the merge owns the replacement rule — every base
     * dir of a touched partition is replaced by what the merge wrote
-    * there, possibly nothing.
+    * there, possibly nothing. A touched partition is a dir: the
+    * changelog's partition values rendered as the writer names dirs
+    * (`Cast(v, string)` in the session time zone, Hive-escaped), so it
+    * matches the base dir exactly for every partition type. The base
+    * must be partitioned: over root-level data files the merge is
+    * refused.
     * Additive schema drift rides the delta reader: upserts may carry
     * new columns; inherited/surviving rows read them as NULL.
     *
     * Cost model per merge: the netted changelog is written once, as the
     * generation's `_NET` sidecar, and that write job observes its
-    * partition tuples; the base read is driver metadata (its `_SCHEMA`
-    * is the reader schema — no inference job); the write job lands the
-    * touched partitions and observes their row count (and digest) for
-    * the `_SIZE` ledger — no footer reads. `_NET` (keys, op, payload,
+    * touched dirs; the base read is driver metadata (each owner's
+    * `_SCHEMA` is the reader schema — no inference job); the write job
+    * lands the touched partitions and observes their row count (and
+    * digest) for the `_SIZE` ledger. `_NET` (keys, op, payload,
     * plus the base version the merge read) later scopes this
     * generation's change-feed step to its keys ([[stepChanges]]).
     *
@@ -617,9 +639,9 @@ object Lake {
     * are immutable per key (the overwhelmingly common layout: partition
     * by a key-derived or write-once column). `probeMovers=true` lifts
     * the contract at a declared cost: one column-pruned scan of the
-    * base's (key, partition) projection finds every partition currently
-    * holding a changed key and widens the touched set — O(corpus) in
-    * rows but only the key+partition columns in bytes.
+    * base's key column finds every dir currently holding a changed key
+    * (named by the files the key lives in) and widens the touched set —
+    * O(corpus) in rows but only the key columns in bytes.
     */
   def mergeDelta(
       changes: DataFrame, rootDir: String,
@@ -643,10 +665,9 @@ object Lake {
     guarded(spark, rootDir) {
     val (fs, root) = fsOf(spark, rootDir)
     recoverPointers(fs, root)
-    val cur = readPointer(fs, root, CurrentPointer).getOrElse(
-      throw new IllegalStateException(
-        s"Lake: mergeDelta needs a published base in $rootDir — " +
-          "publish a full version first"))
+    // the base's resolved map, listed once: it names the replaced dirs,
+    // plans the survivors' read and is the commit's delta base
+    val (cur, baseDirs) = deltaBase(fs, root, rootDir, "mergeDelta")
     // net the changelog to one action per key, then write it once: the net
     // set feeds the anti-join and the upsert rows and must not recompute
     // per consumer, and it stays with the generation as `_NET`
@@ -675,13 +696,12 @@ object Lake {
     }
     // the net set's one write, staged under the root until the commit
     // moves it into the generation: the touched partition set (the
-    // changelog's distinct partition values — partitions are coarse,
-    // so this driver-side list is small at any corpus scale) is
-    // observed on the same job, and the rows read back with the schema
-    // they were written with, so no inference job runs
+    // changelog's distinct partition values, rendered as the writer
+    // renders them — partitions are coarse, so this driver-side list is
+    // small at any corpus scale) is observed on the same job, and the
+    // rows read back with the schema they were written with, so no
+    // inference job runs
     val stage = new org.apache.hadoop.fs.Path(root, NetStaging)
-    def tuples(rows: Iterable[org.apache.spark.sql.Row]) = rows.toSeq
-      .map(r => partitionCols.indices.map(i => Option(r.getString(i))))
     val touchedObs = new org.apache.spark.sql.Observation(
       "graft_touched_" + java.util.UUID.randomUUID())
     netted.observe(touchedObs, collect_set(struct(partitionCols.map(c =>
@@ -692,82 +712,50 @@ object Lake {
     netCrashHook("staged")
     val net = schemaReader(spark, Some(netted.schema), Set.empty)
       .parquet(stage.toString)
-    // the base's resolved map, listed once: it plans the base read here
-    // and the replaced dirs below, and is the commit's delta base
-    val baseMap = resolved(fs, root, cur)
-    val baseAll = readResolved(spark, fs, root, cur, baseMap)
-    val touched: Seq[Seq[Option[String]]] = {
+    // the touched partitions as rel dirs — the key the writer names each
+    // dir with, so base dirs match exactly, whatever the partition type
+    val touched: Set[String] = {
       // no metric = the optimizer removed an empty input's observation
-      val own = tuples(touchedObs.get.get("t").toSeq.flatMap(
-        _.asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]))
-      if (!probeMovers) own
+      val own = touchedObs.get.get("t").toSeq.flatMap(
+          _.asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]])
+        .map(r => org.apache.spark.sql.graft.DigestMapAgg.relPath(
+          partitionCols, partitionCols.indices.map(r.getString)))
+      if (!probeMovers) own.toSet
       else {
-        // key+partition projection of the whole base — column-pruned, so
-        // the probe reads two thin columns, not the corpus — semi-joined
-        // with the changed keys: every partition still holding one
-        val holders = baseAll
-          .select((pkCols ++ partitionCols).map(col): _*)
+        // key + file projection of the whole base — column-pruned, so the
+        // probe reads one thin column, not the corpus — semi-joined with
+        // the changed keys: every dir still holding one, named by the
+        // files it lives in (`_metadata` resolves per owner branch, below
+        // the union)
+        val qualifiedRoot = fs.makeQualified(root).toUri.getPath
+        val holders = baseDirs.groupBy(_._2).values.map(m =>
+            readOwned(spark, fs, root, cur, m).select(
+              keyed :+ col("_metadata.file_path").as("_graft_file"): _*))
+          .reduce(_.unionByName(_))
           .join(net.select(keyed: _*).distinct(), pkCols, "left_semi")
-          .select(partitionCols.map(c => col(c).cast("string")): _*)
-        (own ++ tuples(holders.distinct().collect())).distinct
+          .select("_graft_file").distinct().collect()
+          .map { r =>
+            // <root>/v=<owner>/<rel>/<file>: strip the root and the owner
+            val dir = new org.apache.hadoop.fs.Path(
+              new java.net.URI(r.getString(0))).getParent.toUri.getPath
+            dir.stripPrefix(qualifiedRoot + "/").dropWhile(_ != '/').drop(1)
+          }
+        own.toSet ++ holders
       }
-    }
-    // partition predicate from literals — the literal is cast to the
-    // column's NATIVE type (never the column to string), so the filter
-    // stays the pure `attr = literal` shape static partition pruning
-    // needs, for string and non-string partition columns alike. The
-    // single-column case (the common layout) uses isin: it plans as
-    // In/InSet — still statically prunable, and O(1)-lookup at high
-    // touched counts instead of an OR tree that grows the predicate
-    // per partition; multi-column layouts keep the OR of conjunctions
-    // (partitions are coarse — the tuple count stays small)
-    val baseSchema = baseAll.schema
-    def parseNative(s: String,
-        dt: org.apache.spark.sql.types.DataType): Option[Any] = {
-      import org.apache.spark.sql.types._
-      try dt match {
-        case StringType => Some(s)
-        case LongType => Some(s.toLong)
-        case IntegerType => Some(s.toInt)
-        case ShortType => Some(s.toShort)
-        case ByteType => Some(s.toByte)
-        case DoubleType => Some(s.toDouble)
-        case FloatType => Some(s.toFloat)
-        case BooleanType => Some(s.toBoolean)
-        case DateType => Some(java.sql.Date.valueOf(s))
-        case TimestampType => Some(java.sql.Timestamp.valueOf(s))
-        case _: DecimalType => Some(new java.math.BigDecimal(s))
-        case _ => None
-      } catch { case _: IllegalArgumentException => None }
-    }
-    lazy val orPred = touched.map { vals =>
-      partitionCols.zip(vals).map { case (c, v) =>
-        v.map(s => col(c) === lit(s).cast(baseSchema(c).dataType))
-          .getOrElse(col(c).isNull)
-      }.reduce(_ && _)
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    val pred = partitionCols match {
-      case Seq(c) if touched.nonEmpty =>
-        val (nulls, vals) = touched.map(_.head).partition(_.isEmpty)
-        val native = vals.flatten.map(parseNative(_, baseSchema(c).dataType))
-        if (native.exists(_.isEmpty)) orPred // unparseable type: OR form
-        else {
-          val inSet =
-            if (native.isEmpty) lit(false)
-            else col(c).isin(native.flatten: _*)
-          if (nulls.nonEmpty) inSet || col(c).isNull else inSet
-        }
-      case _ => orPred
     }
     // an upsert REPLACES the whole row, so the changelog must carry
     // every base column — a projected changelog (a binlog missing a
     // column the base has) would otherwise silently NULL that column on
     // every merged key, and the schema policy could not catch it
     // (survivors still carry the column). Loud by default; NULL-fill is
-    // an explicit opt-in.
+    // an explicit opt-in. The base's columns come from its `_SCHEMA`
     if (!fillMissing) {
       val carried = net.columns.toSet -- Set(opCol)
-      val missing = baseSchema.map(_.name).filterNot(carried.contains)
+      val baseCols = readSchemaFile(fs,
+          new org.apache.hadoop.fs.Path(root, s"v=$cur"))
+        .getOrElse(readResolved(spark, fs, root, cur, Some(baseDirs)).schema)
+        .fieldNames
+      val missing = baseCols.filterNot(carried.contains)
       // deletes don't write payloads — only complain when an upsert
       // would actually null the column (cheap limit-1 probe on the
       // already-written net)
@@ -779,21 +767,21 @@ object Lake {
             "changed key; project them into the changelog, or pass " +
             "fillMissing=true to null-fill deliberately")
     }
-    // survivors: touched partitions minus every changed key; upserts
-    // bring the replacement rows (and any brand-new keys/partitions)
-    val survivors = baseAll.filter(pred)
-      .join(net.select(keyed: _*), pkCols, "left_anti")
+    // every base dir the merge touches is REPLACED by whatever the merge
+    // wrote there (possibly nothing — all-deleted partitions vanish
+    // instead of being inherited back). Survivors: exactly those dirs'
+    // rows minus every changed key; upserts bring the replacement rows
+    // (and any brand-new keys/partitions)
+    val replaced = baseDirs.filter { case (rel, _) => touched(rel) }
     val upserts = net.filter(col(opCol) === "upsert").drop(opCol)
-    val merged = survivors.unionByName(upserts, allowMissingColumns = true)
-    // every base partition dir matching a touched tuple is REPLACED by
-    // whatever the merge wrote there (possibly nothing — all-deleted
-    // partitions vanish instead of being inherited back)
-    val baseDirs = baseMap.getOrElse(Map.empty)
-    val touchedSet = touched.toSet
-    val replaced = baseDirs.keySet.filter(rel =>
-      relPartitionValues(rel, partitionCols).exists(touchedSet.contains))
+    val merged =
+      if (replaced.isEmpty) upserts
+      else readOwned(spark, fs, root, cur, replaced)
+        .join(net.select(keyed: _*), pkCols, "left_anti")
+        .unionByName(upserts, allowMissingColumns = true)
     if (digest) validateDigestArgs(partitionCols, merged.columns.toSeq)
-    commitGeneration(merged, rootDir, Delta(baseDirs, replaced, net = true),
+    commitGeneration(merged, rootDir,
+      Delta(baseDirs, replaced.keySet, net = true),
       partitionCols, sortCols, maxRecordsPerFile, keep, genMarker, Nil, Nil,
       "additive", digest, expect, onViolation)
     }
@@ -1616,56 +1604,54 @@ object Lake {
 
   /** Per-partition content fingerprints (opt-in `digest = true` at
     * publish): one entry per partition dir, KEYED BY THE DIR’S RELATIVE
-    * PATH (the one form both generations and the feed’s dir plan share
-    * exactly — partition VALUES are deliberately never parsed or
-    * re-inferred, so no type-inference or escaping form can desync the
-    * keys). Each entry is a row count plus an order-independent
-    * `bit_xor` of per-row `xxhash64` over the DATA columns (the dir
-    * path already pins the partition values; atomic schemas hash
-    * columns directly with an explicit null-mask — Spark’s hash
-    * functions SKIP null inputs, which would conflate a null in column
-    * A with a null in column B and with the empty string — while
+    * PATH — the lake's one partition key, the string the writer names
+    * the dir with (`Cast(v, string)` in the session time zone,
+    * Hive-escaped), never a parsed or re-inferred value, so no typing or
+    * escaping form can desync the keys. Each entry is a row count plus
+    * an order-independent `bit_xor` of per-row `xxhash64` over the DATA
+    * columns (the dir path already pins the partition values; atomic
+    * schemas hash columns directly with an explicit null-mask — Spark’s
+    * hash functions SKIP null inputs, which would conflate a null in
+    * column A with a null in column B and with the empty string — while
     * nested array/map/struct schemas take a canonical-json slow path,
     * because the skip problem recurs INSIDE such values where a mask
-    * cannot reach; measured ~3.7× publish read-back at 100× for json
-    * vs near-free for the atomic path). Written as a small `_DIGEST`
-    * text file inside the generation before the high-water flip — a
-    * text file, not a parquet, because Spark’s hidden-path filtering
-    * ignores parquet files under an underscore-named dir on some read
-    * paths, and a metadata read this small should not cost a Spark job.
+    * cannot reach — the costlier path, kept for nested schemas only).
+    * Written as a small `_DIGEST` text file inside the generation before
+    * the high-water flip — a text file, not a parquet, because Spark’s
+    * hidden-path filtering ignores parquet files under an
+    * underscore-named dir on some read paths, and a metadata read this
+    * small should not cost a Spark job.
     *
     * The change feed uses digests to SKIP partitions whose content is
     * value-identical across a step even when both sides physically
     * rewrote them — the FULL-republish case owner-map pruning cannot
-    * see through. Cost model: one read-back aggregate of the
-    * generation’s OWN dirs per publish (one scan branch per dir —
-    * partition dirs are coarse by the layout’s design, the same
-    * O(dirs) bound as manifest/vacuum). Deltas copy donor entries for
-    * inherited dirs instead of reading them — O(changed) preserved —
-    * dropping entries whose column fingerprint differs (schema drift
-    * disables cross-generation skipping, conservatively). Equality is
-    * a 64-bit fingerprint: a false "identical" needs an xxhash64 xor
-    * collision (~2⁻⁶⁴ per dir pair) — the standard
-    * content-addressing trade, stated rather than hidden. Float zeros:
-    * Spark's hash normalizes -0.0 == 0.0, so the atomic path folds each
-    * float/double column's zero-sign into the mask words (the nested
-    * json path renders "-0.0" textually) — a dir differing only in zero
-    * sign digests as DIFFERENT, closing the one unsafe-skip hole; NaN
-    * stays canonicalized (any NaN == any NaN, deliberately). Timestamps
-    * in the json path render with a pinned UTC timeZone so digests
-    * agree across sessions. (Digests written before these pins hash
-    * differently — cross-upgrade steps fall back to full diffs, the
-    * safe direction.)
+    * see through. Cost model: the generation's own entries are observed
+    * on its write job ([[WriteObs]]) — no extra job and no re-read of
+    * the written bytes, for every partition type and for zOrder
+    * publishes alike. Deltas copy donor entries for inherited dirs
+    * instead of reading them — O(changed) preserved — dropping entries
+    * whose column fingerprint differs (schema drift disables
+    * cross-generation skipping, conservatively). Equality is a 64-bit
+    * fingerprint: a false "identical" needs an xxhash64 xor collision
+    * (~2⁻⁶⁴ per dir pair) — the standard content-addressing trade,
+    * stated rather than hidden. Float zeros: Spark's hash normalizes
+    * -0.0 == 0.0, so the atomic path folds each float/double column's
+    * zero-sign into the mask words (the nested json path renders "-0.0"
+    * textually) — a dir differing only in zero sign digests as
+    * DIFFERENT, closing the one unsafe-skip hole; NaN stays canonicalized
+    * (any NaN == any NaN, deliberately). Timestamps in the json path
+    * render with a pinned UTC timeZone so digests agree across sessions.
+    * (Digests written before these pins hash differently —
+    * cross-upgrade steps fall back to full diffs, the safe direction.)
     */
   /** The digest row hash + column fingerprint over `schema`'s data
-    * columns (everything except `exclude` — partition cols on the
-    * in-write path, the `_rel` tag on the read-back path): ONE shared
-    * construction so the two digest paths are bit-identical by
-    * construction. Types come from the normalized schema (char/varchar
-    * as string), so the same rows digest alike whether the publishing
-    * session types a column varchar or string. Returns (fp, rowHash).
+    * columns (everything except `exclude`, the partition columns): the
+    * one construction behind every `_DIGEST` entry. Types come from the
+    * normalized schema (char/varchar as string), so the same rows digest
+    * alike whether the publishing session types a column varchar or
+    * string. Returns (fp, rowHash).
     */
-  private def digestHash(written: org.apache.spark.sql.types.StructType,
+  private[graft] def digestHash(written: org.apache.spark.sql.types.StructType,
       exclude: Set[String]): (String, Column) = {
     val schema = normalizedSchema(written)
     val dataCols = schema.fieldNames.filterNot(exclude).sorted.toSeq
@@ -1714,146 +1700,61 @@ object Lake {
     (fp, rowHash)
   }
 
-  /** Test seam: forces the read-back digest path when false — the
-    * in-write/read-back parity spec flips it to prove both paths land
-    * identical `_DIGEST` entries on the same input.
+  /** What a publish observes on its own write job, through
+    * [[writeLayout]]'s `observe` (after any zOrder quantile pass, so the
+    * write is the one action that fills it): with `digest`, the per-dir
+    * digest map ([[org.apache.spark.sql.graft.DigestMapAgg]], keyed by
+    * the dir the writer names from the same partition values), whose
+    * `n` summed is the written row count; without, a row count alone.
+    * Either way `_DIGEST` and the `_SIZE` ledger need no job after the
+    * write. Read `ownDigest`/`rows` only after the write.
     */
-  private[graft] var inWriteDigestEnabled = true
-
-  /** IN-WRITE digest (guide §6/§2.4 — the write job carries the digest
-    * aggregate through an [[org.apache.spark.sql.Observation]], so a
-    * digest-enabled publish costs ZERO extra jobs and never re-reads the
-    * bytes it just wrote; the prior shape paid one full read-back scan
-    * of the generation per publish — O(written bytes) at scale). Only
-    * when every partition column's dir-name rendering is exact
-    * (DigestMapAgg.supportedPartType); anything else returns None and
-    * the caller falls back to the read-back scan. The returned frame
-    * REPLACES the written one (same rows, plus the metrics collector);
-    * the fp + observation map feed [[writeDigest]]'s `precomputedOwn`.
-    */
-  private def inWriteDigest(toWrite: DataFrame, partitionCols: Seq[String])
-      : Option[(org.apache.spark.sql.Observation, DataFrame, String)] = {
-    val schema = toWrite.schema
-    if (!inWriteDigestEnabled || !partitionCols.forall(c =>
-        org.apache.spark.sql.graft.DigestMapAgg
-          .supportedPartType(schema(c).dataType))) None
-    else {
-      val (fp, rowHash) = digestHash(schema, partitionCols.toSet)
-      val obs = new org.apache.spark.sql.Observation(
-        "graft_digest_" + java.util.UUID.randomUUID())
-      val wrapped = toWrite.observe(obs,
-        org.apache.spark.sql.graft.DigestMapAgg
-          .column(partitionCols.map(col), partitionCols, rowHash)
-          .as("digest"))
-      Some((obs, wrapped, fp))
-    }
-  }
-
-  /** The observed digest map, as writeDigest's own-entry list (sorted
-    * for a deterministic `_DIGEST` body). Blocks only until the write
-    * action that carried the observation completed — which it has, the
-    * caller reads this after writeLayout returned.
-    */
-  private def obsDigestEntries(obs: org.apache.spark.sql.Observation)
-      : Seq[(String, (Long, Long))] =
-    obs.get.get("digest") match {
-      case Some(m: scala.collection.Map[_, _]) =>
-        m.toSeq.map { case (k, v) =>
-          val r = v.asInstanceOf[org.apache.spark.sql.Row]
-          (k.toString, (r.getLong(0), r.getLong(1)))
-        }.sortBy(_._1)
-      case _ => Nil
-    }
-
-  /** What a publish observes on its own write job: the in-write digest
-    * ([[inWriteDigest]]) and the written row count for the `_SIZE`
-    * ledger — the digest map's `n` summed when there is a digest, else
-    * a count observation — so the ledger needs no footer reads. A
-    * zOrder publish observes neither: withZ's quantile pass is a second
-    * action over the observed plan, which would race the observation
-    * (its digest takes the read-back path, its ledger the footers).
-    * Write `frame`; read `ownDigest`/`rows` only after the write.
-    */
-  private final class WriteObs(toWrite: DataFrame,
-      partitionCols: Seq[String], digest: Boolean, zOrder: Boolean) {
-    private val inw =
-      if (digest && !zOrder) inWriteDigest(toWrite, partitionCols) else None
-    private val counter = if (inw.isEmpty && !zOrder) Some(
-      new org.apache.spark.sql.Observation(
-        "graft_rows_" + java.util.UUID.randomUUID())) else None
-    val frame: DataFrame = inw.map(_._2)
-      .orElse(counter.map(o => toWrite.observe(o, count(lit(1)).as("n"))))
-      .getOrElse(toWrite)
+  private final class WriteObs(schema: org.apache.spark.sql.types.StructType,
+      partitionCols: Seq[String], digest: Boolean) {
+    private val obs = new org.apache.spark.sql.Observation(
+      "graft_write_" + java.util.UUID.randomUUID())
+    private val hash =
+      if (digest) Some(digestHash(schema, partitionCols.toSet)) else None
+    def observe(df: DataFrame): DataFrame = df.observe(obs, hash match {
+      case Some((_, rowHash)) => org.apache.spark.sql.graft.DigestMapAgg
+        .column(partitionCols, rowHash).as("digest")
+      case None => count(lit(1)).as("n")
+    })
+    // sorted for a deterministic `_DIGEST` body
+    private lazy val entries: Seq[(String, (Long, Long))] =
+      obs.get.get("digest") match {
+        case Some(m: scala.collection.Map[_, _]) =>
+          m.toSeq.map { case (k, v) =>
+            val r = v.asInstanceOf[org.apache.spark.sql.Row]
+            (k.toString, (r.getLong(0), r.getLong(1)))
+          }.sortBy(_._1)
+        case _ => Nil
+      }
     lazy val ownDigest: Option[(String, Seq[(String, (Long, Long))])] =
-      inw.map { case (o, _, fp) => (fp, obsDigestEntries(o)) }
+      hash.map { case (fp, _) => (fp, entries) }
     // no metric at all = the optimizer removed the observed subtree (an
-    // empty input); unknown, so the ledger falls back to the footers
-    lazy val rows: Option[Long] = inw match {
-      case Some((o, _, _)) =>
-        o.get.get("digest").map(_ => ownDigest.get._2.map(_._2._1).sum)
-      case None => counter.flatMap(_.get.get("n"))
-        .map(_.asInstanceOf[Number].longValue())
-    }
+    // empty input); unknown, so the ledger falls back to a count
+    lazy val rows: Option[Long] =
+      if (digest) obs.get.get("digest").map(_ => entries.map(_._2._1).sum)
+      else obs.get.get("n").map(_.asInstanceOf[Number].longValue())
   }
 
-  private def writeDigest(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      genPath: org.apache.hadoop.fs.Path,
+  /** Generation `genPath`'s `_DIGEST`: its own dirs' entries as observed
+    * on its write (`own` = fingerprint, entries), plus the entries of the
+    * dirs it inherits (`refs`), copied from their owners.
+    */
+  private def writeDigest(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, genPath: org.apache.hadoop.fs.Path,
       refs: Map[String, Long],
-      precomputedOwn: Option[(String, Seq[(String, (Long, Long))])] = None)
-      : Unit = {
-    // the read-back path alone walks the generation's own dirs: the
-    // in-write path has its entries already, and runs under the lock
-    lazy val ownRels = graft.GenSwap.leaves(fs, genPath)
-      .collect { case (rel, true) => rel }
-    val ownEntries: Seq[(String, (Long, Long), String)] =
-      if (precomputedOwn.isDefined) {
-        // in-write path: entries observed ON the write job (zero extra
-        // jobs). Mirror the read-back path's empty-own semantics: with
-        // no own dirs the effective fp comes from the donors below.
-        val (fp, entries) = precomputedOwn.get
-        entries.map { case (rel, nx) => (rel, nx, fp) }
-      }
-      else if (ownRels.isEmpty) Nil
-      else {
-        // one scan branch per dir, tagged with its rel path — partition
-        // columns never enter the read, so the key is exactly the dir.
-        // (input_file_name() could tag in one branch, but its URI form
-        // vs the raw dir-name form is ambiguous for escaped names —
-        // exactly the key-desync class the rel keying exists to kill.)
-        // Branch count = dir count, coarse by the layout's design; the
-        // union folds as a balanced tree so plan depth is O(log dirs),
-        // not O(dirs)
-        def unionAll(dfs: Seq[DataFrame]): DataFrame =
-          if (dfs.size == 1) dfs.head
-          else {
-            val (l, r) = dfs.splitAt(dfs.size / 2)
-            unionAll(l).unionByName(unionAll(r),
-              allowMissingColumns = true)
-          }
-        val own = unionAll(ownRels.sorted.map { rel =>
-          spark.read.parquet(
-              new org.apache.hadoop.fs.Path(genPath, rel).toString)
-            .withColumn("_rel", lit(rel))
-        })
-        // fp carries DigestAlgVersion beside the names:types (r16
-        // advice) so hash-algorithm changes self-describe; the hash
-        // itself is the ONE shared digestHash construction — identical
-        // to the in-write path's by construction
-        val (fp, rowHash) = digestHash(own.schema, Set("_rel"))
-        own.withColumn("_h", rowHash)
-          .groupBy(col("_rel"))
-          .agg(count(lit(1)).as("n"), expr("bit_xor(_h)").as("x"))
-          .collect().toSeq
-          .map(r => (r.getString(0), (r.getLong(1), r.getLong(2)), fp))
-      }
+      own: (String, Seq[(String, (Long, Long))])): Unit = {
+    val (ownFp, ownEntries) = own
     // donors: same frozen files, same digest — copy entries for the
     // inherited dirs instead of re-reading them (keeps deltas
     // O(changed)). One fingerprint per digest table: own rows set it;
     // with no own rows (an all-delete delta) the first donor’s fp
     // becomes the table’s; donors disagreeing with the effective fp
     // are dropped (drift = no cross-generation skipping)
-    var effFp = ownEntries.headOption.map(_._3)
+    var effFp = if (ownEntries.nonEmpty) Some(ownFp) else None
     val donorEntries = refs.groupBy(_._2).toSeq.sortBy(_._1).flatMap {
       case (o, m) =>
         readDigest(fs,
@@ -1862,19 +1763,17 @@ object Lake {
             if (effFp.isEmpty) effFp = Some(fp)
             val wanted = m.keySet
             entries.filter { case (rel, _) => wanted(rel) }
-              .map { case (rel, nx) => (rel, nx, fp) }
           case _ => Nil
         }
     }
-    // sorted: the _DIGEST body is deterministic regardless of which path
-    // produced the entries (consumers parse it into a map; the order is
-    // purely for reproducible artifacts and the parity spec)
+    // sorted: the _DIGEST body is deterministic (consumers parse it into
+    // a map; the order is purely for reproducible artifacts)
     val all = (ownEntries ++ donorEntries).sortBy(_._1)
     for (fp <- effFp if all.nonEmpty) {
       // line 1 = the column fingerprint; then one `n \t x \t rel` row per
       // dir, rel URL-encoded so any dir path round-trips through the file
       val body = (java.net.URLEncoder.encode(fp, "UTF-8") +: all.map {
-        case (rel, (n, x), _) =>
+        case (rel, (n, x)) =>
           s"$n\t$x\t${java.net.URLEncoder.encode(rel, "UTF-8")}"
       }).mkString("\n")
       writeUtf8(fs, new org.apache.hadoop.fs.Path(genPath, DigestFile), body)
@@ -2040,26 +1939,6 @@ object Lake {
     (files.size.toLong, files.map(_.getLen).sum)
   }
 
-  /** Total row count by driver-side parquet FOOTER reads — no Spark job.
-    * The ledger stamp runs inside the guarded publish critical section
-    * (per micro-batch on the streaming path), where a scheduled count()
-    * job's submission latency would lengthen every lock hold (r18
-    * review-3 #7); footers carry the exact record count, so this is the
-    * same number with pure metadata I/O. None on any unreadable footer —
-    * the caller falls back to the count() job. */
-  private def footerRowCount(fs: org.apache.hadoop.fs.FileSystem,
-      files: Seq[org.apache.hadoop.fs.FileStatus]): Option[Long] =
-    try {
-      val conf = fs.getConf
-      var n = 0L
-      for (st <- files) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-        try n += r.getRecordCount finally r.close()
-      }
-      Some(n)
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   /** Size ledger, written ONCE at publish (and refreshed by [[compact]]):
     * `n_files n_bytes n_rows`. [[vacuum]] and [[history]] read this one
     * small file per generation instead of re-walking every file of every
@@ -2068,22 +1947,18 @@ object Lake {
     * count() job per generation per history() call (r17 verdict #2); the
     * ledger makes both O(generations) tiny reads. Generations without a
     * ledger (pre-upgrade) fall back to the walk. The row count is the
-    * publish write's own observation (`observedRows`, [[WriteObs]]) when
-    * there is one, else driver-side footer reads ([[footerRowCount]]) —
-    * either way the stamp adds zero Spark jobs to the publish critical
-    * section; a footer a parquet reader cannot open falls back to one
-    * footer-only count() job. */
+    * publish write's own observation (`observedRows`, [[WriteObs]]), so
+    * the stamp adds no Spark job to the publish critical section; only
+    * without one (compact healing an unparseable ledger, or an
+    * observation the optimizer removed) does it count the rows in a job. */
   private def writeSizeFile(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
       genPath: org.apache.hadoop.fs.Path,
       observedRows: Option[Long] = None): Unit = {
-    val files = physicalFiles(fs, genPath)
-    val nf = files.size.toLong
-    val nb = files.map(_.getLen).sum
+    val (nf, nb) = physicalSize(fs, genPath)
     val nRows =
       if (nf == 0) 0L
-      else observedRows.orElse(footerRowCount(fs, files)).getOrElse(
-        spark.read.parquet(genPath.toString).count())
+      else observedRows.getOrElse(spark.read.parquet(genPath.toString).count())
     writeSizeEntries(fs, genPath, nf, nb, nRows)
   }
 
@@ -2500,23 +2375,14 @@ object Lake {
     graft.GenSwap.requireAtomicFs(cfs, cPath.getParent,
       "Lake.followChanges (cursor temp+rename)")
     def writeCursor(v: Long): Unit = {
-      val os = cfs.create(tmpPath, true)
       // trailing "\n" is the payload TERMINATOR: a crash mid-write can
       // leave a truncated decimal prefix that still parses ("15" cut to
       // "1"), and the lone-tmp recovery below must be able to tell a
       // complete value from a prefix (r17 advice)
-      try os.write((v.toString + "\n").getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally os.close()
+      writeUtf8(cfs, tmpPath, v.toString + "\n")
       if (cfs.exists(cPath)) cfs.delete(cPath, false): Unit
       if (!cfs.rename(tmpPath, cPath)) throw new java.io.IOException(
         s"Lake.followChanges: cursor rename failed ($tmpPath -> $cPath)")
-    }
-    def readLongFile(p: org.apache.hadoop.fs.Path): Long = {
-      val in = cfs.open(p)
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      finally in.close()
     }
     val cur = currentVersion(spark, rootDir).getOrElse(
       throw new IllegalStateException(
@@ -2550,13 +2416,7 @@ object Lake {
       // silently skip its undelivered range, the one direction the
       // delivery contract forbids (r18 review-2 #3). The caller's next
       // poll retries against the still-present tmp.
-      val text: Option[String] =
-        try {
-          val in = cfs.open(tmpPath)
-          try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8))
-          finally in.close()
-        } catch { case _: java.io.FileNotFoundException => None }
+      val text = readUtf8(cfs, tmpPath)
       val parses = text.flatMap(_.trim.toLongOption)
       if (parses.isDefined && text.exists(!_.endsWith("\n")))
         System.err.println(
@@ -2572,15 +2432,17 @@ object Lake {
       } else if (!cfs.rename(tmpPath, cPath)) throw new java.io.IOException(
         s"Lake.followChanges: cursor recovery failed ($tmpPath -> $cPath)")
     }
-    if (!cfs.exists(cPath)) { writeCursor(cur); return 0 }
-    val seen = readLongFile(cPath)
-    if (cur == seen) 0
-    else feedPages(spark, rootDir, seen, cur, idCol, contentCol,
-        maxPlanSteps).foldLeft(0) { case (pages, (page, end)) =>
-      // after a rollback the one catch-down page moves the cursor DOWN
-      handler(page, end)
-      writeCursor(end) // per PAGE: a crash re-delivers only this page
-      pages + 1
+    readLong(cfs, cPath) match {
+      case None => writeCursor(cur); 0 // tail from now
+      case Some(seen) if seen == cur => 0
+      case Some(seen) => feedPages(spark, rootDir, seen, cur, idCol,
+          contentCol, maxPlanSteps).foldLeft(0) {
+        case (pages, (page, end)) =>
+          // after a rollback the one catch-down page moves the cursor DOWN
+          handler(page, end)
+          writeCursor(end) // per PAGE: a crash re-delivers only this page
+          pages + 1
+      }
     }
   }
 
@@ -3036,10 +2898,11 @@ object Lake {
     *    (+1 for range-boundary tasks, see below), or when any single file
     *    is > 2× target (the unsplittable-hot-spot case — rewriting splits
     *    it back into parallel-scannable units).
-    *  - **rewrite is O(touched bytes)**: only degenerate partitions are
-    *    read (partition-pruned scan) and re-landed — settled partitions'
-    *    files are never opened, moved, or rewritten (byte-identity is
-    *    spec-pinned).
+    *  - **rewrite is O(touched bytes)**: only degenerate partition dirs
+    *    are read (by path, partition columns typed string, so every row
+    *    lands back in the dir it came from) and re-landed — settled
+    *    partitions' files are never opened, moved, or rewritten
+    *    (byte-identity is spec-pinned).
     *  - **the rewrite is a versioned generation + atomic swap**
     *    ([[graft.GenSwap]]): the compacted output lands in a hidden
     *    sibling dir inside the root while the source files stay untouched
@@ -3099,11 +2962,13 @@ object Lake {
     // dir must neither pollute the stats nor shadow restored partitions
     graft.GenSwap.recover(fs, root)
 
-    def stats(): Map[Seq[Option[String]], (Long, Long, Long)] = {
+    // per leaf dir, keyed by its path relative to `dir` — the dir a
+    // rewrite must land each row back in
+    def stats(): Map[String, (Long, Long, Long)] = {
       val rootUri = fs.makeQualified(root).toUri
       val it = fs.listFiles(root, /* recursive = */ true)
       val acc = scala.collection.mutable.Map
-        .empty[Seq[Option[String]], (Long, Long, Long)]
+        .empty[String, (Long, Long, Long)]
       while (it.hasNext) {
         val st = it.next()
         val name = st.getPath.getName
@@ -3115,16 +2980,13 @@ object Lake {
           // skip anything inside hidden/metadata dirs (staging leftovers)
           // — Spark's own listing ignores them, so must the accounting
           if (!dirsOnPath.exists(d => d.startsWith(".") || d.startsWith("_"))) {
-            val vals = partitionCols.map { c =>
-              dirsOnPath.collectFirst {
-                case seg if seg.startsWith(c + "=") =>
-                  unescapePartitionValue(seg.substring(c.length + 1))
-              }.getOrElse(throw new IllegalStateException(
+            for (c <- partitionCols if !dirsOnPath.exists(_.startsWith(c + "=")))
+              throw new IllegalStateException(
                 s"compact: file $rel has no '$c=' dir — partitionCols do " +
-                  "not match the layout"))
-            }
-            val (n, bytes, mx) = acc.getOrElse(vals, (0L, 0L, 0L))
-            acc(vals) = (n + 1, bytes + st.getLen, math.max(mx, st.getLen))
+                  "not match the layout")
+            val leaf = dirsOnPath.mkString("/")
+            val (n, bytes, mx) = acc.getOrElse(leaf, (0L, 0L, 0L))
+            acc(leaf) = (n + 1, bytes + st.getLen, math.max(mx, st.getLen))
           }
         }
       }
@@ -3142,17 +3004,22 @@ object Lake {
     val touched = before.filter { case (_, s) => degenerate(s) }
 
     if (touched.nonEmpty) {
-      // partition-pruned read of ONLY the degenerate partitions: the
-      // predicate references partition columns alone, so
-      // PruneFileSourcePartitions drops settled dirs before any task runs
-      val all = spark.read.parquet(dir)
-      val pred =
-        if (partitionCols.isEmpty) lit(true)
-        else touched.keys.map { vals =>
-          partitionCols.zip(vals).map { case (c, v) =>
-            v.map(col(c).cast("string") === lit(_)).getOrElse(col(c).isNull)
-          }.reduce(_ && _)
-        }.reduce(_ || _)
+      // read ONLY the degenerate dirs, by path — settled dirs are never
+      // listed or opened — with every partition column typed string: the
+      // dir's own value, so each row is written back into the dir it
+      // came from whatever the partition type (an inferred type can
+      // render differently: `p=05` reads back int 5)
+      val paths = touched.keys.toSeq.sorted.map(rel =>
+        (if (rel.isEmpty) root else new org.apache.hadoop.fs.Path(root, rel))
+          .toString)
+      def reader = spark.read.option("basePath", dir)
+      val dataFields = reader.parquet(paths: _*).schema.fields
+        .filterNot(f => partitionCols.contains(f.name))
+      val all = reader.schema(org.apache.spark.sql.types.StructType(
+          dataFields ++ partitionCols.map(c =>
+            org.apache.spark.sql.types.StructField(c,
+              org.apache.spark.sql.types.StringType))))
+        .parquet(paths: _*)
       val touchedBytes = touched.valuesIterator.map(_._2).sum
       val nTasks = math.max(1L, ideal(touchedBytes)).toInt
       // OPTIMIZE ZORDER: the maintenance pass is where re-clustering
@@ -3162,8 +3029,8 @@ object Lake {
       // plain sort keys; the boundaries pass reads only the z columns
       // of the touched partitions
       val touchedRows =
-        if (zOrderCols.isEmpty) all.filter(pred)
-        else graft.operators.ZOrder.withZ(all.filter(pred), zOrderCols)
+        if (zOrderCols.isEmpty) all
+        else graft.operators.ZOrder.withZ(all, zOrderCols)
       val keys =
         if (zOrderCols.isEmpty) (partitionCols ++ sortCols).map(col)
         else partitionCols.map(col) :+ col("_graft_z")
@@ -3217,11 +3084,12 @@ object Lake {
           org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("bytes_after",
           org.apache.spark.sql.types.LongType, nullable = false)))
-    val rows = before.toSeq.map { case (vals, (nF, nB, _)) =>
-      val (aF, aB, _) = after.getOrElse(vals, (0L, 0L, 0L))
-      val action = if (touched.contains(vals)) "compacted" else "kept"
+    val rows = before.toSeq.map { case (rel, (nF, nB, _)) =>
+      val (aF, aB, _) = after.getOrElse(rel, (0L, 0L, 0L))
+      val action = if (touched.contains(rel)) "compacted" else "kept"
       org.apache.spark.sql.Row.fromSeq(
-        vals.map(_.orNull) ++ Seq(action, nF, nB, aF, aB))
+        relPartitionValues(rel, partitionCols).get.map(_.orNull) ++
+          Seq(action, nF, nB, aF, aB))
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)

@@ -161,6 +161,34 @@ class LakeDeltaSpec extends SparkSuite {
       new java.io.File(root).getParentFile)
   }
 
+  test("a delta over an unpartitioned base is refused, naming the root; " +
+      "the pointer and the base's rows are unchanged") {
+    val root = tmp()
+    try {
+      val base = Seq((1L, "a", "a0"), (2L, "b", "b0"), (3L, "c", "c0"))
+        .toDF("id", "k", "text")
+      Lake.publishVersion(base, root, Nil, Seq("id"), 1000L)
+      val change = Seq((1L, "a", "a1", "upsert")).toDF("id", "k", "text", "op")
+      for (e <- Seq(
+          intercept[IllegalStateException] {
+            Lake.mergeDelta(change, root, Seq("id"), Seq("k"), Seq("id"),
+              1000L)
+          },
+          intercept[IllegalStateException] {
+            Lake.publishDelta(change.drop("op"), root, Seq("k"), Seq("id"),
+              1000L)
+          })) {
+        assert(e.getMessage.contains(s"needs a partitioned base in $root"),
+          e.getMessage)
+        assert(Lake.currentVersion(spark, root) === Some(0L))
+        assert(Lake.publishedHighWater(spark, root) === Some(0L))
+        assert(readAll(root) === base.as[(Long, String, String)].collect().toSet)
+      }
+      assert(!fsOf(root).exists(new Path(root, "v=1")))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(root).getParentFile)
+  }
+
   test("delta-mode publishBatch is exactly-once on batch id across " +
       "replay crash windows") {
     val root = tmp()

@@ -270,29 +270,26 @@ class LakeDigestSpec extends SparkSuite {
       ("d", null, 2L, Some(0.0), Seq("w")),
       ("e", "", 3L, Some(2.5), null)
     ).toDF("id", "k", "b", "score", "tags")
-    val rootA = tmp(); val rootB = tmp()
+    // the read-back reference, split as digestBody splits a `_DIGEST`
+    def reference(root: String, v: Long): (String, Set[String]) = {
+      val lines = DigestReference.body(spark, root, v).linesIterator.toSeq
+      (lines.head, lines.tail.toSet)
+    }
+    val root = tmp()
     try {
-      Lake.publishVersion(corpus, rootA, Seq("k", "b"), Seq("id"), 1000L,
-        keep = 3, digest = true) // in-write (seam on)
-      assert(Lake.inWriteDigestEnabled)
-      Lake.inWriteDigestEnabled = false
-      try Lake.publishVersion(corpus, rootB, Seq("k", "b"), Seq("id"),
-        1000L, keep = 3, digest = true) // read-back
-      finally Lake.inWriteDigestEnabled = true
-      assert(digestBody(rootA, 0L) === digestBody(rootB, 0L),
-        "the two digest paths disagree")
+      Lake.publishVersion(corpus, root, Seq("k", "b"), Seq("id"), 1000L,
+        keep = 3, digest = true) // in-write
+      assert(digestBody(root, 0L) === reference(root, 0L),
+        "the in-write digest and the read-back reference disagree")
       // and deltas: own entries in-write, donors inherited — parity again
       val delta = corpus.filter(col("k") === "plain")
         .withColumn("score", lit(9.5))
-      Lake.publishDelta(delta, rootA, Seq("k", "b"), Seq("id"), 1000L,
+      Lake.publishDelta(delta, root, Seq("k", "b"), Seq("id"), 1000L,
         keep = 3, digest = true)
-      Lake.inWriteDigestEnabled = false
-      try Lake.publishDelta(delta, rootB, Seq("k", "b"), Seq("id"), 1000L,
-        keep = 3, digest = true)
-      finally Lake.inWriteDigestEnabled = true
-      assert(digestBody(rootA, 1L) === digestBody(rootB, 1L),
-        "the two digest paths disagree on a delta")
-    } finally { cleanup(rootA); cleanup(rootB) }
+      assert(digestBody(root, 1L) === reference(root, 1L),
+        "the in-write digest and the read-back reference disagree on a " +
+          "delta")
+    } finally cleanup(root)
   }
 
   test("varchar fingerprints as string: a session that keeps varchar " +
@@ -315,24 +312,24 @@ class LakeDigestSpec extends SparkSuite {
       .withColumn("text", col("text").cast("varchar(20)"))
     // policy "any": the schema policy itself calls varchar -> string a
     // type change
-    def publish(root: String, inWrite: Boolean): Long = {
-      Lake.inWriteDigestEnabled = inWrite
-      try Lake.publishVersion(corpus(), root, Seq("k"), Seq("id"), 1000L,
+    def publish(root: String): Long =
+      Lake.publishVersion(corpus(), root, Seq("k"), Seq("id"), 1000L,
         keep = 10, schemaPolicy = "any", digest = true)
-      finally Lake.inWriteDigestEnabled = true
-    }
     val rootA = tmp(); val rootB = tmp()
     try {
       spark.conf.set(key, "true")
       assert(corpus().schema("text").dataType ===
         org.apache.spark.sql.types.VarcharType(20))
-      publish(rootA, inWrite = true) // v0
-      publish(rootB, inWrite = false) // read-back path, varchar inferred
+      publish(rootA) // v0
+      publish(rootB)
+      // the read-back reference, varchar inferred from the files
+      val readBack = DigestReference.body(spark, rootA, 0L)
       spark.conf.set(key, "false")
       assert(corpus().schema("text").dataType ===
         org.apache.spark.sql.types.StringType)
-      publish(rootA, inWrite = true) // v1: the same rows, typed string
+      publish(rootA) // v1: the same rows, typed string
       assert(digestBody(rootA, 1L) === digestBody(rootA, 0L))
+      assert(readBack === digestBody(rootA, 0L))
       assert(digestBody(rootB, 0L) === digestBody(rootA, 0L))
       assert(feedRows(rootA, 0L, 1L).isEmpty)
       assert(Lake.readVersion(spark, rootA, Some(0L)).schema("text")
